@@ -34,7 +34,6 @@ def pagerank(
     iters: int = 3,
     scale: int = PR_SCALE,
     damping_pct: int = 85,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank with exact integer arithmetic.
 
@@ -59,15 +58,10 @@ def pagerank(
 
     Returns (node, pr_scaled BIGINT), all nodes.
 
-    Cache ownership: the node set and degree-attached edge set are
-    persisted (lazily — no job at construction) because every
-    unrolled iteration references them. The returned DataFrame's
-    plan reads those caches, so they cannot be released inside this
-    function; pass ``cache_handles=[]`` and unpersist each handle
-    after the result is materialized (collect/write). Without the
-    list, each call pins two cached tables for the session's
-    lifetime — acceptable for a run-once job, a leak in a long-lived
-    driver.
+    The node set and degree-attached edge set are persisted (lazily —
+    no job at construction) because every unrolled iteration reads
+    them; ``session.release_blocks`` frees them after the caller's
+    action.
     """
     from pyspark import StorageLevel
 
@@ -86,8 +80,6 @@ def pagerank(
     # exchange reuse only applies within structurally identical
     # subtrees. Lazy persist: no job runs at construction time.
     ed = e.join(deg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_handles is not None:
-        cache_handles.extend([nodes, ed])
     n1 = nodes.agg(F.count("*").alias("__n"))
 
     ranks = nodes.crossJoin(F.broadcast(n1)).select(
@@ -141,9 +133,8 @@ def bounded_shortest_paths(
     a convergence check, i.e. an action per iteration) and weighted
     salting on hub nodes (relational.salted_join).
 
-    Callers iterating many hops should persist ``edges`` and release
-    it after materializing (the pagerank cache_handles contract);
-    this function does not persist.
+    Callers iterating many hops should persist ``edges``; this
+    function does not persist.
 
     Returns (node, dist) for every node reachable within ``hops``.
     """
@@ -185,7 +176,6 @@ def label_propagation(
     src: str,
     dst: str,
     iters: int = 3,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (LPA, Raghavan et al. 2007) for
     community detection — fixed ``iters`` unrolled into one lazy DAG.
@@ -216,9 +206,7 @@ def label_propagation(
     execution for 3 iterations over a 2000-edge graph. Each
     iteration therefore ends in ``localCheckpoint(eager=True)``, the
     connected-components contract (dedup.py:534): lineage truncated,
-    plan size constant per iteration. Checkpoint blocks are freed by
-    GC; ``cache_handles`` is accepted for signature parity but the
-    only persisted frame is gone once the eager checkpoints run.
+    plan size constant per iteration.
 
     Returns (node, community) for every node in the edge set —
     already materialized (the eager checkpoints run the iterations
@@ -265,7 +253,6 @@ def random_walks(
     dst: str,
     steps: int = 4,
     walks_per_node: int = 1,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Deterministic random-walk sampling — the walk-corpus stage of
     DeepWalk/node2vec (Perozzi et al. 2014; Grover & Leskovec 2016,
@@ -283,10 +270,10 @@ def random_walks(
 
     Plan: the ranked adjacency table (src, dst, rn, deg — one
     row_number window keyed on src) is built once and persisted
-    (``cache_handles``; every step re-reads it — the pagerank
-    edge-table contract); each step is ONE node-keyed hash join
-    (frontier ⋈ adjacency, ≤ deg(v) fan-out collapsed by the rn =
-    hash-pick filter) and the frontier chain is linear (each step
+    (every step re-reads it — the pagerank edge-table shape); each
+    step is ONE node-keyed hash join (frontier ⋈ adjacency, ≤ deg(v)
+    fan-out collapsed by the rn = hash-pick filter) and the frontier
+    chain is linear (each step
     references the previous once — no lineage doubling, no
     checkpoint needed, unlike LPA). At 100 TB: frontiers shuffle on
     node id, walk count scales linearly in executors, hub adjacency
@@ -301,8 +288,6 @@ def random_walks(
         .withColumn("d", F.count("*").over(Window.partitionBy("s1")))
         .persist()
     )
-    if cache_handles is not None:
-        cache_handles.append(adj)
     # derive starts from the persisted adjacency, not the raw edge
     # subtree — otherwise the (possibly expensive) edge derivation
     # runs a second time just to list the nodes
@@ -364,7 +349,6 @@ def node2vec_walks(
     w_return: int = 500,
     w_near: int = 1000,
     w_far: int = 2000,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Second-order (p, q)-biased walks — full node2vec sampling
     (Grover & Leskovec 2016), deterministic. At node v, having
@@ -387,8 +371,8 @@ def node2vec_walks(
     on (prev, x) → per-walk cumulative-weight window (partitions
     are ≤ deg rows) → interval filter. Both joins hash-partition on
     node-id-shaped keys; nothing is ever quadratic. The adjacency
-    AND the raw edge set are persisted once (``cache_handles``);
-    frontier lineage is linear.
+    AND the raw edge set are persisted once; frontier lineage is
+    linear.
     """
     from pyspark.sql import Window
 
@@ -403,8 +387,6 @@ def node2vec_walks(
         .withColumn("d", F.count("*").over(Window.partitionBy("s1")))
         .persist()
     )
-    if cache_handles is not None:
-        cache_handles.extend([e, adj])
 
     def _pick_hash(t: int, salt_cols) -> "F.Column":
         return F.conv(
@@ -504,7 +486,6 @@ def personalized_pagerank(
     iters: int = 3,
     scale: int = PR_SCALE,
     damping_pct: int = 85,
-    cache_handles: list | None = None,
 ) -> DataFrame:
     """Personalized PageRank / random-walk-with-restart (Haveliwala
     2002; Tong et al. 2006): identical integer arithmetic to
@@ -514,9 +495,9 @@ def personalized_pagerank(
     related to these") and seed-expansion primitive. Seeds get the
     initial mass ``scale div |S|`` and teleport
     ``(100−d)·scale div (100·|S|)``; non-seeds get zero. Same plan
-    shape, cache contract (persisted node set + degree-attached
-    edges via ``cache_handles``), and exact-integer reproducibility
-    as pagerank — the DuckDB oracle unrolls identical iterations.
+    shape, persisted node set + degree-attached edges, and
+    exact-integer reproducibility as pagerank — the DuckDB oracle
+    unrolls identical iterations.
 
     ``seeds`` is a single-column DataFrame of node ids (small — it
     broadcasts onto the node set as a left-join flag).
@@ -534,15 +515,11 @@ def personalized_pagerank(
     )
     deg = e.groupBy("__src").agg(F.count("*").alias("__deg"))
     ed = e.join(deg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
-    if cache_handles is not None:
-        cache_handles.extend([nodes, ed])
     sd = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
     flagged = (
         nodes.join(sd.withColumn("__is_seed", F.lit(1)), "node", "left")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if cache_handles is not None:
-        cache_handles.append(flagged)
     ns = F.broadcast(sd.agg(F.count("*").alias("__k")))
 
     ranks = flagged.join(ns).select(

@@ -541,9 +541,7 @@ def streaming_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("kmv_distinct_setops", _kmv_setops_sql())
-def kmv_distinct_setops(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def kmv_distinct_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values) distinct sketch with SET OPERATIONS
     (Beyer et al. 2007): per-event-type distinct-user estimates,
     plus the union AND intersection estimate for the click/view
@@ -559,14 +557,12 @@ def kmv_distinct_setops(
     a partial per-partition top-k below the group Exchange —
     contract-locked), so only ≤ k rows per (partition, group) ever
     shuffle; sketches are ≤ k rows — merge and intersect cost
-    nothing. Sketch rows persist once (cache_handles contract)
-    because the union/intersect legs re-read them."""
+    nothing. Sketch rows persist once because the union/intersect
+    legs re-read them."""
     from .operators.profiling import kmv_estimate, kmv_setops, kmv_sketch
 
     events = load_table(spark, sf_dir, "events")
     sk = kmv_sketch(events, "user_id", ["event_type"], k=_KMV_K).persist()
-    if cache_handles is not None:
-        cache_handles.append(sk)
     per = kmv_estimate(sk, ["event_type"], k=_KMV_K).select(
         F.concat(F.lit("type:"), F.col("event_type")).alias("scope"),
         F.col("est").cast("long").alias("est"),

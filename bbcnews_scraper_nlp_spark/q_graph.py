@@ -63,12 +63,9 @@ _STRONG_TIE_CTES = (
 )
 
 
-def _strong_tie_edges(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def _strong_tie_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _STRONG_TIE_CTES: (s1, s2) with s1 < s2,
-    persisted (downstream graph ops re-read the cut several times;
-    release via cache_handles — the pagerank contract)."""
+    persisted (downstream graph ops re-read the cut several times)."""
     e0 = cap_hot_keys(_supplier_projection(spark, sf_dir), "c", 10_000)
     deg = e0.groupBy("s").agg(F.count("*").alias("d"))
     # renames above one explicit customer-keyed repartition: both
@@ -94,8 +91,6 @@ def _strong_tie_edges(
         .select("s1", "s2")
         .persist()
     )
-    if cache_handles is not None:
-        cache_handles.append(e)
     return e
 
 
@@ -143,9 +138,7 @@ def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
 
 
 @register("pagerank_copurchase", _pagerank_oracle_sql())
-def pagerank_copurchase(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Node importance over the customer↔supplier co-purchase graph:
     3 fixed PageRank iterations (operators/graph.py), top-20 hubs.
 
@@ -166,7 +159,7 @@ def pagerank_copurchase(
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    pr = pagerank(edges, "src", "dst", iters=3, cache_handles=cache_handles)
+    pr = pagerank(edges, "src", "dst", iters=3)
     return pr.orderBy(F.desc("pr_scaled"), "node").limit(20)
 
 
@@ -239,9 +232,7 @@ def _ppr_oracle_sql(
 
 
 @register("ppr_related_entities", _ppr_oracle_sql())
-def ppr_related_entities(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank / random-walk-with-restart from a seed
     set (graph.personalized_pagerank): proximity of every
     customer/supplier node to the 3 smallest-key suppliers over the
@@ -273,9 +264,7 @@ def ppr_related_entities(
         .limit(3)
         .select(F.concat(F.lit("s"), F.col("s")).alias("node"))
     )
-    pr = personalized_pagerank(
-        edges, "src", "dst", seeds, iters=3, cache_handles=cache_handles
-    )
+    pr = personalized_pagerank(edges, "src", "dst", seeds, iters=3)
     return pr.orderBy(F.desc("ppr_scaled"), "node").limit(20)
 
 
@@ -324,7 +313,7 @@ def _lpa_oracle_sql(
 
 @register("community_detection_suppliers", _lpa_oracle_sql())
 def community_detection_suppliers(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Community detection over the strong-tie supplier graph: 3
     synchronous label-propagation iterations (operators/graph.py::
@@ -348,9 +337,7 @@ def community_detection_suppliers(
     from .operators.graph import label_propagation
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    lp = label_propagation(
-        edges, "s1", "s2", iters=3, cache_handles=cache_handles
-    )
+    lp = label_propagation(edges, "s1", "s2", iters=3)
     return lp.groupBy("community").agg(
         F.count("*").cast("long").alias("n_members")
     )
@@ -418,9 +405,7 @@ _MODULARITY_FINAL = (
 
 
 @register("community_modularity", _lpa_oracle_sql(final=_MODULARITY_FINAL))
-def community_modularity(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity contribution per LPA community — community
     QUALITY, not just labels: for each community c over the same
     mutual-kNN supplier graph, q_c = e_c/2m − (deg_c/2m)², emitted
@@ -441,9 +426,7 @@ def community_modularity(
     # otherwise each re-derive the Σdeg² pair join (measured ~6 s of
     # the 11 s total at sf0.1)
     edges = _supplier_knn_edges(spark, sf_dir).localCheckpoint(eager=True)
-    lab = label_propagation(
-        edges, "s1", "s2", iters=3, cache_handles=cache_handles
-    )
+    lab = label_propagation(edges, "s1", "s2", iters=3)
     dg = edges.groupBy(F.col("s1").alias("node")).agg(
         F.count("*").alias("d")
     )
@@ -525,9 +508,7 @@ def _rw_oracle_sql(steps: int = 4, final: str | None = None) -> str:
 
 
 @register("graph_random_walks", _rw_oracle_sql())
-def graph_random_walks(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic random-walk corpus over the mutual-kNN supplier
     graph (graph.random_walks): one 4-hop walk per node, step t
     picking the md5("rw-v1:walk:t:node") mod deg ranked neighbor —
@@ -547,14 +528,7 @@ def graph_random_walks(
     from .operators.graph import random_walks
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    out = random_walks(
-        edges,
-        "s1",
-        "s2",
-        steps=4,
-        walks_per_node=1,
-        cache_handles=cache_handles,
-    )
+    out = random_walks(edges, "s1", "s2", steps=4, walks_per_node=1)
     return out.select(
         "walk",
         F.col("step").cast("int").alias("step"),
@@ -627,9 +601,7 @@ def _n2v_oracle_sql(
 
 
 @register("node2vec_biased_walks", _n2v_oracle_sql())
-def node2vec_biased_walks(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full second-order node2vec sampling over the mutual-kNN
     supplier graph (graph.node2vec_walks): the (p, q)-biased
     transition — return weight 1/p, triangle-closing weight 1,
@@ -648,9 +620,7 @@ def node2vec_biased_walks(
     from .operators.graph import node2vec_walks
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    out = node2vec_walks(
-        edges, "s1", "s2", steps=4, cache_handles=cache_handles
-    )
+    out = node2vec_walks(edges, "s1", "s2", steps=4)
     return out.select(
         "walk",
         F.col("step").cast("int").alias("step"),
@@ -1561,9 +1531,7 @@ def _textrank_sql(iters: int = 3, scale: int = 10**12) -> str:
 
 
 @register("textrank_keywords", _textrank_sql())
-def textrank_keywords(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank
     over the word co-occurrence graph — the graph-NLP composition the
     reference's keyword/topic-labeling stage (operators/topics P20)
@@ -1602,7 +1570,7 @@ def textrank_keywords(
     # edge repartition made the query SLOWER (13.8s vs 10.1s) — the
     # extra materialization barriers and their stage boundaries cost
     # more than the re-run narrow scans. At 100 TB the calculus
-    # flips: pass cache_handles and persist the EDGE set upstream.
+    # flips: persist the EDGE set upstream.
     vocab = wc.orderBy(F.desc("cnt"), "word").limit(500).select("word")
     idx = F.sequence(F.lit(1), F.size("t") - 1)
     pair_arr = F.transform(
@@ -1627,7 +1595,7 @@ def textrank_keywords(
     edges = adj.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         adj.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    ranks = pagerank(edges, "src", "dst", iters=3, cache_handles=cache_handles)
+    ranks = pagerank(edges, "src", "dst", iters=3)
     return (
         ranks.select(F.col("node").alias("word"), "pr_scaled")
         .orderBy(F.desc("pr_scaled"), "word")
@@ -2241,9 +2209,7 @@ _TRIANGLE_SQL = (
 
 
 @register("triangle_count_suppliers", _TRIANGLE_SQL)
-def triangle_count_suppliers(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def triangle_count_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the strong-tie supplier
     projection graph (clustering-structure metric — the third graph
     primitive next to connected components and PageRank). The dense
@@ -2258,10 +2224,8 @@ def triangle_count_suppliers(
 
     The triangle joins re-read the 2000-row edge cut 3x;
     _strong_tie_edges keeps it persisted instead of re-running the
-    projection build (cache ownership: released via cache_handles —
-    without it the call pins one 2000-row cache, acceptable run-once,
-    a leak in a long-lived driver)."""
-    e = _strong_tie_edges(spark, sf_dir, cache_handles)
+    projection build."""
+    e = _strong_tie_edges(spark, sf_dir)
     ab = e.select(F.col("s1").alias("a"), F.col("s2").alias("b"))
     bc = e.select(F.col("s1").alias("b"), F.col("s2").alias("c"))
     ac = e.select(F.col("s1").alias("a"), F.col("s2").alias("c"))
@@ -2304,9 +2268,7 @@ _SSSP_SQL = (
 
 
 @register("shortest_paths_suppliers", _SSSP_SQL)
-def shortest_paths_suppliers(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def shortest_paths_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hop-bounded single-source shortest paths (unrolled
     Bellman-Ford, ``graph.bounded_shortest_paths``) over the
     strong-tie supplier graph — the fourth graph primitive next to
@@ -2347,12 +2309,9 @@ def shortest_paths_suppliers(
         )
         # each of the 4 unrolled hops re-reads the 2000-row edge cut;
         # persist it rather than re-running the projection build per
-        # hop (cache ownership: released via cache_handles, the
-        # pagerank/triangle contract)
+        # hop
         .persist()
     )
-    if cache_handles is not None:
-        cache_handles.append(cut)
     e = cut.selectExpr("s1 AS src", "s2 AS dst", "w").unionByName(
         cut.selectExpr("s2 AS src", "s1 AS dst", "w")
     )
@@ -3598,11 +3557,9 @@ def kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers = rerun per k or bucket by binary search."""
     from .operators.graph import kcore_peel
 
-    handles: list = []
-    e = _strong_tie_edges(spark, sf_dir, cache_handles=handles)
+    e = _strong_tie_edges(spark, sf_dir)
     out = kcore_peel(e, "s1", "s2", k=2, rounds=4)
-    for h in handles:
-        h.unpersist()
+    e.unpersist()
     return out
 
 
@@ -3633,9 +3590,7 @@ _ASSORT_SQL = (
 
 
 @register("degree_assortativity", _ASSORT_SQL)
-def degree_assortativity(
-    spark: SparkSession, sf_dir: str, cache_handles: list | None = None
-) -> DataFrame:
+def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the strong-tie supplier graph (Newman
     2002 §II: the Pearson correlation of degrees at either end of an
     edge — do hubs link to hubs?). The textbook estimator reduces to
@@ -3648,7 +3603,7 @@ def degree_assortativity(
     float anywhere. At 100 TB: degrees are a node-keyed agg, the
     joins are node-keyed hash joins, and the final fold is map-side
     combined into one row."""
-    e = _strong_tie_edges(spark, sf_dir, cache_handles=cache_handles)
+    e = _strong_tie_edges(spark, sf_dir)
     und = e.select(F.col("s1").alias("a")).unionByName(
         e.select(F.col("s2").alias("a"))
     )

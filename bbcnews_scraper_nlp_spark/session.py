@@ -11,6 +11,8 @@ timezone is pinned UTC so timestamp semantics are environment-free.
 from __future__ import annotations
 
 import os
+import sys
+import traceback
 
 from pyspark.sql import SparkSession
 
@@ -90,3 +92,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_blocks(spark: SparkSession) -> None:
+    """Free every cached and checkpointed block in the session.
+
+    Block lifetime is owned by the caller that runs the action, not by
+    the operators:
+
+    - operators may ``persist`` or ``localCheckpoint`` whatever their
+      lazy plan re-reads, and never release it themselves (the returned
+      plan still reads those blocks);
+    - the blocks live until the caller has finished its action
+      (collect, count, write) and calls ``release_blocks``;
+    - no DataFrame obtained before the call may be used after it:
+      checkpointed lineage is gone with the blocks.
+
+    Order: ``clearCache()`` drops catalog-cached relations; a blocking
+    unpersist of every persistent RDD drops ``localCheckpoint`` blocks,
+    which ContextCleaner would otherwise free only after a JVM GC
+    notices the dead RDD (its periodic GC fires every 30 min); the
+    final ``System.gc()`` lets ContextCleaner drop broadcast blocks of
+    executed joins. Cleanup is untimed housekeeping, so a failure is
+    logged to stderr rather than raised: one bad release must not end
+    a multi-query run.
+    """
+    try:
+        spark.catalog.clearCache()
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist(True)
+        spark.sparkContext._jvm.System.gc()
+    except Exception:  # noqa: BLE001
+        traceback.print_exc(file=sys.stderr)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from bbcnews_scraper_nlp_spark.operators.graph import PR_SCALE, pagerank
 
 
@@ -119,18 +121,29 @@ def test_cap_hot_keys_bounds_fanout_and_noop_below_cap(spark):
     assert cap_hot_keys(df, "c", 10_000).count() == df.count()
 
 
-def test_pagerank_cache_handles_release(spark):
-    edges = [("a", "b"), ("b", "c"), ("c", "a"), ("d", "c")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
-    handles: list = []
-    pr = pagerank(df, "src", "dst", iters=2, cache_handles=handles)
-    pr.collect()
-    assert len(handles) == 2  # nodes + degree-attached edges
-    for h in handles:
-        h.unpersist()
-    assert jsc.getPersistentRDDs().size() == before
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank_copurchase",  # lazy persists read by the returned plan
+        "kcore_suppliers",  # persist + eager localCheckpoints
+        "kmv_distinct_setops",  # persisted sketch rows
+    ],
+)
+def test_release_blocks_empties_storage_and_query_reruns(spark, sf_dir, name):
+    from bbcnews_scraper_nlp_spark.queries import REGISTRY
+    from bbcnews_scraper_nlp_spark.session import release_blocks
+
+    fn = REGISTRY[name].fn
+    try:
+        first = sorted(fn(spark, sf_dir).collect())
+        release_blocks(spark)
+        assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        # blocks are owned by the caller, not by the query: a fresh
+        # call rebuilds them and returns the same rows
+        assert sorted(fn(spark, sf_dir).collect()) == first
+    finally:
+        release_blocks(spark)
 
 
 def test_bounded_shortest_paths_matches_dijkstra_within_hops(spark):

@@ -20,14 +20,7 @@ different plans would attribute one revision's time to another's.
 from __future__ import annotations
 
 import json
-import os
 import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from bench_groups import (  # noqa: E402
-    LEGACY_34, NEW_R5, NEW_R6, NEW_R7, NEW_R7_REST, NEW_R8, NEW_R9,
-    NEW_R10, NEW_R11, NEW_R12,
-)
 
 
 def main() -> None:
@@ -52,27 +45,15 @@ def main() -> None:
     }
 
     # Build the artifact ONLY from fields recomputed over the merged
-    # timings — never copy an input's derived sub-aggregates forward
+    # timings — never copy an input's derived aggregates forward
     # (they were computed from that single run's raw timings and would
     # contradict the merged per-query values).
-    def _group(qnames):
-        return round(sum(timings.get(n, 0.0) for n in qnames), 3)
-
     merged = {
         "metric": arts[-1].get("metric", "headline_queries_total"),
         "unit": arts[-1].get("unit", "sec"),
         "sf": arts[-1].get("sf"),
         "queries": timings,
         "value": round(sum(timings.values()), 3),
-        "legacy34_value": _group(LEGACY_34),
-        "r5_value": _group(NEW_R5),
-        "r6_value": _group(NEW_R6),
-        "r7_value": _group(NEW_R7 + NEW_R7_REST),
-        "r8_value": _group(NEW_R8),
-        "r9_value": _group(NEW_R9),
-        "r10_value": _group(NEW_R10),
-        "r11_value": _group(NEW_R11),
-        "r12_value": _group(NEW_R12),
         "n_queries": len(timings),
         # cumulative run provenance: an input that is itself a merge
         # carries its own ``runs`` count forward

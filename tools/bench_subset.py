@@ -19,7 +19,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bbcnews_scraper_nlp_spark.queries import REGISTRY  # noqa: E402
-from bbcnews_scraper_nlp_spark.session import get_spark  # noqa: E402
+from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
+    get_spark,
+    release_blocks,
+)
 
 
 def main() -> None:
@@ -43,17 +46,12 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             print(f"# {name}: FAILED ({errors[name][:160]})", file=sys.stderr)
+        finally:
+            release_blocks(spark)
         # a finite best means at least one repetition succeeded —
         # keep that timing even if a later repetition raised
         if best != float("inf"):
             timings[name] = round(best, 3)
-        spark.catalog.clearCache()
-        # match bench.py: also drop dead localCheckpoint blocks and
-        # collect broadcast garbage between queries (clearCache only
-        # covers catalog-cached relations)
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-        spark.sparkContext._jvm.System.gc()
     out = {
         "metric": "subset_queries_total",
         "value": round(sum(timings.values()), 3),

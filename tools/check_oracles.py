@@ -19,7 +19,10 @@ import duckdb
 sys.path.insert(0, ".")
 
 from bbcnews_scraper_nlp_spark.catalog import TABLES  # noqa: E402
-from bbcnews_scraper_nlp_spark.session import get_spark  # noqa: E402
+from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
+    get_spark,
+    release_blocks,
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -94,11 +97,18 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            complex_cols = [
+                f.name
+                for f in sdf.schema.fields
+                if f.dataType.typeName() in ("array", "map", "struct", "udt")
+            ]
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
             continue
+        finally:
+            release_blocks(spark)
         if name not in oracles:
             print(f"ROWS  {name}: {len(srows)} rows (rows-only) "
                   f"[{time.time()-t0:.1f}s]")
@@ -117,11 +127,6 @@ def main() -> int:
             n_fail += 1
             continue
         problems = []
-        complex_cols = [
-            f.name
-            for f in sdf.schema.fields
-            if f.dataType.typeName() in ("array", "map", "struct", "udt")
-        ]
         if complex_cols:
             problems.append(f"non-atomic spark columns {complex_cols}")
         if len(srows) != len(drows):

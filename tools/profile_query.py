@@ -23,7 +23,10 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bbcnews_scraper_nlp_spark.queries import REGISTRY  # noqa: E402
-from bbcnews_scraper_nlp_spark.session import get_spark  # noqa: E402
+from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
+    get_spark,
+    release_blocks,
+)
 
 
 def jobs_since(ui: str, app_id: str, min_job: int):
@@ -58,26 +61,28 @@ def main() -> None:
     spark.range(32).groupBy("id").count().count()
     for name in names:
         q = REGISTRY[name]
-        for run in (1, 2):
-            t0 = time.perf_counter()
-            df = q.fn(spark, sf_dir)
-            t_build = time.perf_counter() - t0
-            t1 = time.perf_counter()
-            if os.environ.get("PROFILE_SINK") == "noop":
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
-            t_exec = time.perf_counter() - t1
-            print(
-                f"## {name} run{run}: build={t_build:.2f}s "
-                f"exec={t_exec:.2f}s total={t_build + t_exec:.2f}s"
-            )
+        try:
+            for run in (1, 2):
+                t0 = time.perf_counter()
+                df = q.fn(spark, sf_dir)
+                t_build = time.perf_counter() - t0
+                t1 = time.perf_counter()
+                if os.environ.get("PROFILE_SINK") == "noop":
+                    df.write.format("noop").mode("overwrite").save()
+                else:
+                    df.count()
+                t_exec = time.perf_counter() - t1
+                print(
+                    f"## {name} run{run}: build={t_build:.2f}s "
+                    f"exec={t_exec:.2f}s total={t_build + t_exec:.2f}s"
+                )
+        finally:
+            release_blocks(spark)
         try:
             for j in jobs_since(ui, app_id, 0)[-40:]:
                 print(f"   job {j[0]:>4} tasks={j[3]:>4} {j[1]}")
         except Exception as e:  # noqa: BLE001
             print(f"   (REST API unavailable: {e})")
-        spark.catalog.clearCache()
 
 
 if __name__ == "__main__":

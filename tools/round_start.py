@@ -1,17 +1,16 @@
 """Round-start housekeeping in one scripted step.
 
-Every round the driver's close-of-round bench run overwrites
-``BENCH_FULL.json`` in the worktree with a single-run artifact (no
-``runs`` provenance), and ``CORRECTNESS_r{N}.json`` lands after the
-round-close commit, leaving ``EVIDENCE.json`` one round stale. Rounds
-9-12 each re-did this cleanup by hand; this script is the fix the
-round-12 verdict asked for ("consider making round-N-start
-regeneration a scripted step"). It:
+``bench.py`` writes each run's raw per-query timings to
+``BENCH_RAW.json``; ``BENCH_FULL.json`` is only ever the min-merged
+floor, with ``runs`` provenance. ``CORRECTNESS_r{N}.json`` lands
+after the round-close commit, leaving ``EVIDENCE.json`` one round
+stale. This script:
 
-1. Folds the driver's single-run ``BENCH_FULL.json`` into the last
-   committed provenance-carrying merge (``runs: N`` -> ``runs: N+1``)
-   via ``tools/bench_merge.py`` — the driver ran the committed HEAD
-   code, so the identical-code precondition of the min-merge holds.
+1. Folds ``BENCH_RAW.json`` (if present) into ``BENCH_FULL.json``
+   (``runs: N`` -> ``runs: N+1``) via ``tools/bench_merge.py``, then
+   deletes the raw file so the same run is never folded twice. Only
+   fold a run of the code that produced the floor: the min-merge
+   assumes identical plans.
 2. Regenerates ``EVIDENCE.json`` over ALL CORRECTNESS rounds on disk
    (``tools/evidence_manifest.py``).
 3. Regenerates ``SCALING.md``'s derived tables from the merged
@@ -24,50 +23,25 @@ Run from the repo root at the top of each round:
 
 from __future__ import annotations
 
-import json
 import os
 import subprocess
 import sys
-import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BENCH = os.path.join(ROOT, "BENCH_FULL.json")
-
-
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", "-C", ROOT, *args], check=True, capture_output=True, text=True
-    ).stdout
+RAW = os.path.join(ROOT, "BENCH_RAW.json")
 
 
 def fold_bench() -> None:
-    with open(BENCH) as f:
-        cur = json.load(f)
-    if "runs" in cur:
-        print(f"BENCH_FULL.json already merged (runs: {cur['runs']}) — skip")
+    if not os.path.exists(RAW):
+        print("no BENCH_RAW.json to fold — skip")
         return
-    # Find the most recent committed BENCH_FULL.json that carries
-    # provenance (the last builder-committed min-merge).
-    for line in _git("log", "--format=%H", "--", "BENCH_FULL.json").splitlines():
-        blob = _git("show", f"{line}:BENCH_FULL.json")
-        prev = json.loads(blob)
-        if "runs" in prev:
-            break
-    else:
-        raise SystemExit("no committed BENCH_FULL.json with runs provenance")
-    with tempfile.NamedTemporaryFile(
-        "w", suffix=".json", delete=False
-    ) as tmp:
-        tmp.write(blob)
-        prev_path = tmp.name
-    try:
-        subprocess.run(
-            [sys.executable, os.path.join(ROOT, "tools", "bench_merge.py"),
-             BENCH, prev_path, BENCH],
-            check=True,
-        )
-    finally:
-        os.unlink(prev_path)
+    subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "bench_merge.py"),
+         BENCH, BENCH, RAW],
+        check=True,
+    )
+    os.unlink(RAW)
 
 
 def main() -> None:
