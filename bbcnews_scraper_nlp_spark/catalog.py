@@ -2,9 +2,15 @@
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet per table under a
-scale-factor directory. All reads are plain ``spark.read.parquet`` so
-Catalyst gets full pushdown/pruning; no schema inference cost (parquet
-carries its schema).
+scale-factor directory. All reads are plain parquet scans so Catalyst
+gets full pushdown/pruning.
+
+Schema inference is NOT free: parquet carries its schema, but
+``spark.read.parquet(path)`` reads it back with a footer-merge Spark
+job (~40 ms) plus ~50 ms of planning on every call, and a query that
+re-reads three tables paid it three times per run. ``read_parquet``
+infers each file's schema once per process and hands it to
+``spark.read.schema(...)`` afterwards, which starts no job.
 """
 
 from __future__ import annotations
@@ -13,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -28,6 +35,46 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# Session confs that change the types parquet inference produces: a
+# schema inferred under one setting must not serve a read under another.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_schemas: dict[tuple, T.StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read one parquet FILE, inferring its schema only on first sight.
+
+    The cache key is the absolute path, the file's ``st_mtime_ns`` and
+    ``st_size``, and the session confs that change inferred types, so
+    a rewritten file is re-inferred as long as its size or mtime moved.
+    For files the local stat cannot see (remote filesystems) the read
+    falls back to plain inference. Only for immutable inputs: a
+    directory that grows (stage tables, sinks, index dirs) must keep
+    inferring, since a new part file leaves the directory's own stat
+    unchanged.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        st.st_mtime_ns,
+        st.st_size,
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    schema = _schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def widen_scan(
@@ -89,11 +136,11 @@ def load_table(
         # double's 2^53 exact-integer range) — matching DuckDB's
         # truncating nanos->micros conversion.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

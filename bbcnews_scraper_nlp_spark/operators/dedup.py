@@ -23,7 +23,7 @@ beyond is the 100 TB extension mandated by BASELINE.json.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -580,16 +580,15 @@ def connected_components(
         # `moved` flag (p changed iff the parent-of-parent lookup hit
         # a different value), so each jump is ONE join + checkpoint;
         # the old separate nxt-vs-parent comparison join re-shuffled
-        # both tables once more per jump for the same bit. The probe
-        # fires after EVERY jump: reading the flag is one narrow scan
-        # of the just-checkpointed blocks (no shuffle, no recompute),
-        # while skipping it costs a full extra doubling join +
-        # checkpoint whenever the fixpoint lands on the unprobed
-        # parity — star-contracted forests usually flatten in ONE
-        # jump, so the every-second cadence paid that extra join on
-        # almost every outer round (r13 driver run: minhash_clusters
-        # 3.4s -> 7.0s).
+        # both tables once more per jump for the same bit. The flag
+        # is counted by an Observation on the eager checkpoint, so
+        # Spark delivers it with the checkpoint's own job: probing
+        # every jump costs no extra action, while skipping a probe
+        # costs a full extra doubling join + checkpoint whenever the
+        # fixpoint lands on the unprobed parity (star-contracted
+        # forests usually flatten in ONE jump).
         for j in range(max_jumps):
+            jump = Observation()
             nxt = (
                 parent.alias("a")
                 .join(
@@ -607,10 +606,11 @@ def connected_components(
                         & (F.col("pp") != F.col("a.p"))
                     ).alias("moved"),
                 )
+                .observe(jump, F.count_if("moved").alias("moved"))
                 .localCheckpoint(eager=True)
             )
             parent = nxt.select("x", "p")
-            if nxt.filter("moved").limit(1).count() == 0:
+            if jump.get["moved"] == 0:
                 break
         # (3) fold into the global labels and contract the edges.
         labels = (
@@ -634,11 +634,14 @@ def connected_components(
             .filter(F.col("cu") != F.col("cv"))
             .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
         )
-        e = e.union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-        e = e.localCheckpoint(eager=True)
-        if e.limit(1).count() == 0:
+        left = Observation()
+        e = (
+            e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+            .distinct()
+            .observe(left, F.count(F.lit(1)).alias("edges"))
+            .localCheckpoint(eager=True)
+        )
+        if left.get["edges"] == 0:
             break
     return labels.select(F.col("x").alias("node"), "comp")
 

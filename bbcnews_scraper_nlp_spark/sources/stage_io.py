@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,6 +86,21 @@ def append_stage(df: DataFrame, root: str, name: str) -> None:
     df.write.mode("append").parquet(os.path.join(root, name))
 
 
+def _read_existing(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """The table at ``path``, or None if the path does not exist. Every
+    other read failure raises: a writer that took it for "no table yet"
+    would append or overwrite blindly."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return None
+
+
 def upsert_skip(
     spark: SparkSession, df: DataFrame, root: str, name: str, key: str
 ) -> None:
@@ -92,14 +108,17 @@ def upsert_skip(
     against the existing table (bbc_news_dag.py:34-38's
     DuplicateKeyError skip). Idempotent re-runs append nothing.
 
+    Only a missing table counts as empty. Any other read failure (a
+    corrupt part file, a stored key of another type) raises:
+    treating it as empty would append every row again. The existing
+    keys are read under the key's own schema, so the read plans
+    without a schema-inference job.
+
     Scale: the anti-join shuffles on the key; with a Delta/Iceberg
     sink this becomes MERGE WHEN NOT MATCHED (jar not in this image).
     """
     path = os.path.join(root, name)
-    try:
-        existing = spark.read.parquet(path).select(key)
-    except Exception:
-        existing = None
+    existing = _read_existing(spark, path, df.select(key).schema)
     out = df if existing is None else df.join(existing, key, "left_anti")
     out = out.dropDuplicates([key])
     out.write.mode("append").parquet(path)
@@ -350,9 +369,8 @@ def upsert_replace(
 
     path = os.path.join(root, name)
     incoming = df.dropDuplicates([key])
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
+    existing = _read_existing(spark, path)
+    if existing is None:
         incoming.write.mode("overwrite").parquet(path)
         return
     merged = existing.join(

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..catalog import read_parquet
+
 # State partitions for the bounded certification drains below. A
 # stateful streaming operator opens, commits, and snapshots ONE state
 # store per shuffle partition per micro-batch — a fixed per-partition
@@ -308,7 +310,7 @@ def event_stream(spark: SparkSession, sf_dir: str, ts_col: str = "ts") -> DataFr
     as NTZ in Spark 4. Session timezone is pinned UTC
     (session.get_spark), so the cast relabels the same wall clock."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -1150,13 +1152,13 @@ def static_join_view_stream(
     state."""
     import tempfile
 
-    schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/orders.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "orders.parquet")
         .parquet(sf_dir)
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         F.col("l_orderkey").alias("o_orderkey"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )

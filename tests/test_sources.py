@@ -49,6 +49,30 @@ def test_upsert_skip_idempotent(spark, tmp_path):
     assert spark.read.parquet(os.path.join(root, "links")).count() == 3
 
 
+def test_upsert_skip_raises_on_unreadable_table(spark, tmp_path):
+    import pytest
+
+    root = str(tmp_path)
+    path = os.path.join(root, "links")
+    df = spark.createDataFrame([("u1", "a"), ("u2", "b")], "url string, v string")
+    stage_io.upsert_skip(spark, df, root, "links", key="url")
+    # two identical upserts: the second appends no row
+    stage_io.upsert_skip(spark, df, root, "links", key="url")
+    assert spark.read.parquet(path).count() == 2
+    # a corrupt part file (sorting first, so schema inference would
+    # touch it too) must fail the upsert, not turn it into an append
+    with open(os.path.join(path, "part-0-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    new = spark.createDataFrame([("u3", "c")], "url string, v string")
+    with pytest.raises(Exception):
+        stage_io.upsert_skip(spark, new, root, "links", key="url")
+    os.remove(os.path.join(path, "part-0-corrupt.parquet"))
+    assert sorted(r["url"] for r in spark.read.parquet(path).collect()) == [
+        "u1",
+        "u2",
+    ]
+
+
 def test_export_csv_projection(spark, tmp_path):
     df = spark.createDataFrame([(1, "x", "drop")], "a int, b string, c string")
     out = str(tmp_path / "csv")

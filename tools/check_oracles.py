@@ -20,7 +20,9 @@ sys.path.insert(0, ".")
 
 from bbcnews_scraper_nlp_spark.catalog import TABLES  # noqa: E402
 from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
+    codegen_stats,
     get_spark,
+    metaspace_used_bytes,
     release_blocks,
 )
 
@@ -160,6 +162,13 @@ def main() -> int:
             print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
+    compiles, compile_s = codegen_stats(spark)
+    print(
+        f"codegen: {compiles} classes compiled in {compile_s:.1f}s "
+        f"(cache maxEntries "
+        f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')}); "
+        f"driver Metaspace used {metaspace_used_bytes(spark) / 2**20:.0f} MiB"
+    )
     return 1 if n_fail else 0
 
 
