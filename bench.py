@@ -1,10 +1,12 @@
 """Benchmark runner (driver contract).
 
 Runs every registry query, in registry order, at $SPARK_GRAFT_SF_DIR
-(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS]. Writes the
-raw per-query timings to BENCH_RAW.json (``tools/round_start.py``
-min-merges it into the BENCH_FULL.json floor) and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], each
+through ``time_query``. Writes the raw per-query timings to
+BENCH_RAW.json (``tools/round_start.py`` min-merges its ``queries``
+map into the BENCH_FULL.json floor), with each query's full
+``time_query`` record under ``records``, and prints ONE JSON line:
+{"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 The set covers every execution shape the engine claims: scan-heavy
@@ -19,16 +21,77 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from bbcnews_scraper_nlp_spark.queries import REGISTRY  # noqa: E402
 from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
+    codegen_stats,
     get_spark,
     release_blocks,
 )
+from perfbench.counters import last_job_id  # noqa: E402
+
+# Best of 2 full executions per query: single-shot times swing 1.5-2x
+# from JIT/GC/AQE noise in one JVM, and the first run also pays
+# first-touch JIT and class loading for its operators; the min keeps
+# the warm run and measures the plan. Each run re-executes end to end
+# (operator-internal caches are per-invocation DataFrames, never
+# reused across runs).
+REPS = 2
+
+
+def time_query(spark, name: str, sf_dir: str) -> dict:
+    """Time registry query ``name``: ``REPS`` runs, keep the fastest.
+
+    Each run times ``fn(spark, sf_dir)`` as ``build_s`` (Python, Catalyst
+    analysis, eager checkpoint jobs) and ``.count()`` as ``exec_s``; it
+    also records ``rows``, the ``jobs`` it started (the job-id range
+    from ``first_job``, which counts streaming micro-batch jobs too) and
+    the codegen ``compiles``/``compile_s`` it paid. The record is the
+    best run's fields plus ``best_s`` = build_s + exec_s and every run
+    under ``runs``. If any run raises, the record is ``{"error": ...}``
+    with no timing: a query that fails half the time is not benched.
+    Bookkeeping runs outside the timed regions. The query's blocks are
+    released (untimed) in a ``finally`` so the next query starts from an
+    empty storage pool: accumulated blocks otherwise push mid-run
+    queries into eviction thrash (observed 5x on dedup_minhash_lsh
+    mid-run vs fresh-JVM). A release that raises is reported and does
+    not end the caller's loop.
+    """
+    sc = spark.sparkContext
+    runs = []
+    try:
+        for _ in range(REPS):
+            job0, (compiles0, compile_s0) = last_job_id(sc), codegen_stats(spark)
+            t0 = time.perf_counter()
+            df = REGISTRY[name].fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            rows = df.count()
+            t2 = time.perf_counter()
+            compiles, compile_s = codegen_stats(spark)
+            runs.append({
+                "build_s": round(t1 - t0, 3),
+                "exec_s": round(t2 - t1, 3),
+                "rows": rows,
+                "first_job": job0 + 1,
+                "jobs": last_job_id(sc) - job0,
+                "compiles": compiles - compiles0,
+                "compile_s": round(compile_s - compile_s0, 3),
+            })
+        best = min(runs, key=lambda r: r["build_s"] + r["exec_s"])
+        rec = {**best, "best_s": round(best["build_s"] + best["exec_s"], 3), "runs": runs}
+        print(f"# {name}: {rec['best_s']:.3f}s ({rec['rows']} rows)", file=sys.stderr)
+    except Exception as e:  # noqa: BLE001
+        rec = {"error": f"{type(e).__name__}: {e}"[:300]}
+        print(f"# {name}: FAILED ({rec['error'][:160]})", file=sys.stderr)
+    finally:
+        try:
+            release_blocks(spark)
+        except Exception:  # noqa: BLE001
+            traceback.print_exc(file=sys.stderr)
+    return rec
 
 
 def main() -> None:
@@ -36,100 +99,14 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
 
-    # Warm the JVM once so per-query times measure the plans, not
-    # first-touch JIT: a tiny aggregate (codegen paths), a tiny
-    # online-LDA fit (MLlib/breeze JIT — otherwise the first fit pays
-    # ~3s of compilation), and a tiny pandas-UDF roundtrip (Arrow
-    # serialization path).
-    spark.range(32).groupBy((F.col("id") % 4).alias("g")).count().count()
-    tiny = spark.range(32).select(
-        F.col("id"), F.array(F.lit("a"), F.lit("b")).alias("tokens")
-    )
-    try:
-        from bbcnews_scraper_nlp_spark.operators.topics import lda_pipeline
-
-        lda_pipeline(tiny, "id", "tokens", k=2, max_iter=2, min_df=1.0).count()
-    except Exception:
-        pass
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        kmdf = spark.range(8).select(
-            array_to_vector(
-                F.array((F.col("id") % 2).cast("double"), F.lit(0.0))
-            ).alias("__v")
-        )
-        KMeans(k=2, seed=1, featuresCol="__v", maxIter=2).fit(kmdf)
-    except Exception:
-        pass
-    tiny.mapInPandas(lambda it: it, "id long, tokens array<string>").count()
-    # ... and one miniature stream-stream join drain: the first
-    # streaming query of that shape pays ~3-4s of state-store
-    # provider/class init that otherwise lands on whichever
-    # streaming_* entry runs first (measured: 9.4s first vs 2.6s
-    # steady for the same drain).
-    try:
-        import tempfile
-
-        from bbcnews_scraper_nlp_spark.streaming.ingest import (
-            interval_join_clicks_views,
-            scoped_state_partitions,
-        )
-
-        wdir = tempfile.mkdtemp(prefix="bench_warm_")
-        spark.createDataFrame(
-            [(1, "2024-01-01 00:00:00")], "user_id int, ts string"
-        ).selectExpr("user_id", "CAST(ts AS TIMESTAMP) AS ts").write.mode(
-            "overwrite"
-        ).parquet(f"{wdir}/ev")
-        sch = spark.read.parquet(f"{wdir}/ev").schema
-        s = spark.readStream.schema(sch).parquet(f"{wdir}/ev")
-        c = s.select(F.col("user_id").alias("c_user_id"), F.col("ts").alias("click_ts"))
-        v = s.select(F.col("user_id").alias("v_user_id"), F.col("ts").alias("view_ts"))
-        with scoped_state_partitions(spark):
-            q = (
-                interval_join_clicks_views(c, v)
-                .writeStream.outputMode("append")
-                .format("memory")
-                .queryName("bench_warm_ssj")
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_w_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    except Exception:
-        pass
-
-    # Best of 2 full executions per query: single-shot times swing
-    # 1.5-2x from JIT/GC/AQE noise in one JVM; the min measures the
-    # plan. Each run re-executes end to end (operator-internal caches
-    # are per-invocation DataFrames, never reused across runs).
     # Per-query fault isolation: one red query must never zero out
     # the round's perf evidence (rounds 2-3 produced NO bench JSON
     # because the runner died at the first failing query). Failures
     # are reported in an "errors" key; timing totals cover the
-    # queries that ran. Each query's blocks are released (untimed) so
-    # the next one starts from an empty storage pool: accumulated
-    # blocks otherwise push mid-run queries into eviction thrash
-    # (observed 5x on dedup_minhash_lsh mid-run vs fresh-JVM).
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name, q in REGISTRY.items():
-        best, n = float("inf"), 0
-        try:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = q.fn(spark, sf_dir)
-                n = df.count()
-                best = min(best, time.perf_counter() - t0)
-            timings[name] = round(best, 3)
-            print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = f"{type(e).__name__}: {e}"[:300]
-            print(f"# {name}: FAILED ({errors[name][:120]})", file=sys.stderr)
-        finally:
-            release_blocks(spark)
+    # queries that ran.
+    records = {name: time_query(spark, name, sf_dir) for name in REGISTRY}
+    timings = {n: r["best_s"] for n, r in records.items() if "error" not in r}
+    errors = {n: r["error"] for n, r in records.items() if "error" in r}
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -145,6 +122,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        "records": records,
     }
     if errors:
         full["errors"] = errors

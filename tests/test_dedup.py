@@ -454,12 +454,10 @@ def test_cc_empty_edges_returns_empty_labels(spark):
 
 # Measured at sf0.001 on 4 cores, with the other analyst_graph
 # benchmark ops run in between (as the benchmark interleaves them):
-# the repeat compiled 4 classes at this cache size and 61 at Spark's
-# default of 100 entries. The 4 are not evictions. Whole-stage classes
-# carry their codegen stage id in the class name
-# (spark.sql.codegen.useIdInClassName), and the ids AQE hands out can
-# differ between two runs of one plan: with that conf off, a repeat
-# after other CC tests compiled 0 instead of 4.
+# the first repeat compiles 0 or 4 classes from run to run, and 61 at
+# Spark's default cache of 100 entries; further repeats compile 0. The
+# 4 are neither evictions nor codegen stage ids in class names
+# (get_spark turns spark.sql.codegen.useIdInClassName off).
 MAX_REPEAT_COMPILES = 4
 INTERLEAVED = ("tpch_q3_top_revenue", "tpch_q21_waiting_suppliers", "kcore_suppliers")
 

@@ -1,10 +1,13 @@
 """Bench a named subset of registry queries at an arbitrary sf dir.
 
-The sf1 rehearsal driver: bench.py is the driver contract (full
-registry at $SPARK_GRAFT_SF_DIR) and stays untouched; this tool runs
-only the queries named on the command line — the volume-bound heavy
-tail — against a generated directory (tools/make_sf1.py), best-of-2
-per query like bench.py, one JSON line on stdout.
+The sf1 rehearsal driver and the per-query profiler: bench.py is the
+driver contract (full registry at $SPARK_GRAFT_SF_DIR); this tool runs
+only the queries named on the command line (the volume-bound heavy
+tail, or one query under study) against any sf directory, e.g. one
+generated by tools/make_sf1.py. Each query goes through
+``bench.time_query``, the same best-of-2 loop bench.py uses. Stdout is
+one JSON line; stderr shows, per query, each run's build/exec split,
+jobs and codegen compiles, then the job list of the best run.
 
     python tools/bench_subset.py <sf_dir> <query> [query ...]
 """
@@ -14,44 +17,38 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bbcnews_scraper_nlp_spark.queries import REGISTRY  # noqa: E402
-from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
-    get_spark,
-    release_blocks,
-)
+from bench import time_query  # noqa: E402
+from bbcnews_scraper_nlp_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     sf_dir, *names = sys.argv[1:]
     spark = get_spark("bench_subset")
-    # tiny codegen warmup (bench.py's broader warmups are overkill
-    # here: best-of-2 already absorbs first-touch JIT per query)
-    spark.range(32).groupBy("id").count().count()
+    store = spark.sparkContext._jsc.sc().statusStore()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in names:
-        q = REGISTRY[name]
-        best, n = float("inf"), 0
-        try:
-            for _ in range(2):
-                t0 = time.perf_counter()
-                df = q.fn(spark, sf_dir)
-                n = df.count()
-                best = min(best, time.perf_counter() - t0)
-            print(f"# {name}: {best:.3f}s ({n} rows)", file=sys.stderr)
-        except Exception as e:  # noqa: BLE001
-            errors[name] = f"{type(e).__name__}: {e}"[:300]
-            print(f"# {name}: FAILED ({errors[name][:160]})", file=sys.stderr)
-        finally:
-            release_blocks(spark)
-        # a finite best means at least one repetition succeeded —
-        # keep that timing even if a later repetition raised
-        if best != float("inf"):
-            timings[name] = round(best, 3)
+        rec = time_query(spark, name, sf_dir)
+        if "error" in rec:
+            errors[name] = rec["error"]
+            continue
+        timings[name] = rec["best_s"]
+        for i, r in enumerate(rec["runs"], 1):
+            print(
+                f"## {name} run{i}: build={r['build_s']:.2f}s "
+                f"exec={r['exec_s']:.2f}s jobs={r['jobs']} "
+                f"compiles={r['compiles']} compile={r['compile_s']:.2f}s",
+                file=sys.stderr,
+            )
+        for job_id in range(rec["first_job"], rec["first_job"] + rec["jobs"]):
+            job = store.job(job_id)
+            print(
+                f"   job {job_id:>4} tasks={job.numTasks():>4} {job.name()[:70]}",
+                file=sys.stderr,
+            )
     out = {
         "metric": "subset_queries_total",
         "value": round(sum(timings.values()), 3),
