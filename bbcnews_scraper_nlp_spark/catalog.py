@@ -53,16 +53,14 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     The cache key is the absolute path, the file's ``st_mtime_ns`` and
     ``st_size``, and the session confs that change inferred types, so
     a rewritten file is re-inferred as long as its size or mtime moved.
-    For files the local stat cannot see (remote filesystems) the read
-    falls back to plain inference. Only for immutable inputs: a
-    directory that grows (stage tables, sinks, index dirs) must keep
-    inferring, since a new part file leaves the directory's own stat
-    unchanged.
+    Any other path (a directory, or a file the local stat cannot see
+    on a remote filesystem) falls back to plain inference: a dataset
+    directory can gain or rewrite part files without its own stat
+    telling.
     """
-    try:
-        st = os.stat(path)
-    except OSError:
+    if not os.path.isfile(path):
         return spark.read.parquet(path)
+    st = os.stat(path)
     key = (
         os.path.abspath(path),
         st.st_mtime_ns,
@@ -141,10 +139,6 @@ def load_table(
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -396,18 +396,3 @@ def make_lemmatize_udf(
         return texts.map(fn)
 
     return lemmatize
-
-
-def pos_filter_udf() -> Column:
-    """F10 alone: keep only whitelist-POS tokens, no lemmatization."""
-
-    @F.pandas_udf(T.StringType())
-    def pos_filter(texts: pd.Series) -> pd.Series:
-        def run(t: str) -> str:
-            return " ".join(
-                tok for tok in (t or "").split() if heuristic_pos(tok) in POS_WHITELIST
-            )
-
-        return texts.map(run)
-
-    return pos_filter

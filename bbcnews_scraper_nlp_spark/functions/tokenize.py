@@ -19,11 +19,6 @@ from pyspark.sql import functions as F
 BPE_ISH_PATTERN = r"('s|'t|'re|'ve|'m|'ll|'d|[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]+)"
 
 
-def whitespace_tokens(col: Column) -> Column:
-    """``text.split(' ')`` — the reference corpus tokenizer."""
-    return F.split(col, " ")
-
-
 def bpe_ish_tokens(col: Column) -> Column:
     """Regex token stream approximating a BPE pre-tokenizer."""
     return F.regexp_extract_all(col, F.lit(BPE_ISH_PATTERN), 1)

@@ -50,7 +50,6 @@ def umass_coherence(
             F.explode(F.array_distinct(F.col(tokens_col))).alias("term"),
         )
         .join(F.broadcast(wanted), "term", "left_semi")
-        .cache()
     )
 
     term_df = doc_term.groupBy("term").agg(F.count("*").alias("df"))
@@ -84,11 +83,9 @@ def umass_coherence(
             F.log((F.col("co_df") + 1) / F.col("df")),
         )
     )
-    out = scored.groupBy("topic").agg(
+    return scored.groupBy("topic").agg(
         F.avg("score").alias("coherence"), F.count("*").alias("n_pairs")
     )
-    doc_term.unpersist()
-    return out
 
 
 def umass_certificate(

@@ -84,26 +84,6 @@ def hashed_shingles(
     )
 
 
-def minhash_signature(hashed: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: for each affine h_i(x)=(a_i x + b_i) mod p,
-    the min over the doc's hashed shingles. Pure codegen — one pass
-    over the shingle array per hash function, no shuffle, no Python.
-
-    Empty shingle sets get signature value p (sentinel) so they never
-    collide with real minima.
-    """
-    def affine(a: int, b: int):
-        # one-arg closure: Spark introspects the lambda's signature,
-        # so default-arg tricks (lambda x, a=a: ...) break it
-        return lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE31))
-
-    parts = []
-    for a, b in _coeffs(num_hashes):
-        h = F.transform(hashed, affine(a, b))
-        parts.append(F.coalesce(F.array_min(h), F.lit(MERSENNE31)))
-    return F.array(*parts)
-
-
 def lsh_signatures(
     df: DataFrame,
     id_col: str,
@@ -535,7 +515,9 @@ def connected_components(
       doubling — ``p = p∘p`` — so every tree flattens to its root in
       O(log depth) self-joins; (3) edges are re-labeled by root and
       self-loops dropped. The contracted graph has ≥2x fewer nodes
-      per component per round, so O(log n) outer rounds total.
+      per component per round, so O(log n) outer rounds total. Edges
+      still left after ``max_rounds`` raise ``RuntimeError``: the
+      labels would be a partial fixpoint.
 
     A plain min-propagation loop needs O(diameter) shuffles — a
     10^6-doc duplicate *chain* (adversarial but real in scraped
@@ -643,6 +625,13 @@ def connected_components(
         )
         if left.get["edges"] == 0:
             break
+    else:
+        # labels are only a partial fixpoint while edges remain; an
+        # exhausted max_jumps is fine (later rounds keep flattening)
+        raise RuntimeError(
+            f"connected_components: {left.get['edges']} contracted edges "
+            f"left after max_rounds={max_rounds}"
+        )
     return labels.select(F.col("x").alias("node"), "comp")
 
 

@@ -453,16 +453,6 @@ def grouped_zscore_pandas(
     return df.groupBy(key).applyInPandas(per_group, schema)
 
 
-def daily_mean(df: DataFrame, ts_col: str, value_cols: list[str], extra_keys: list[str] | None = None) -> DataFrame:
-    """A3+P16: truncate to day, group-avg each value column.
-
-    Hash aggregation with map-side partial aggregation; output
-    cardinality = #days (* #extra_keys) — tiny at any input scale.
-    """
-    keys = [F.to_date(ts_col).alias("date"), *(extra_keys or [])]
-    return df.groupBy(*keys).agg(*[F.avg(v).alias(v) for v in value_cols])
-
-
 def range_join_binned(
     left: DataFrame,
     ts_col: str,

@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .dedup import MERSENNE31
 
 # Small high-frequency marker-word lists per language (public common
 # word lists). Enough signal for corpus bucketing; a real fastText
@@ -113,19 +112,6 @@ def quality_score(
     mwl_ok = F.when((mwl >= 2.5) & (mwl <= 10.0), 1.0).otherwise(0.0)
     punct_ok = F.when(punct_ratio(col) <= 0.2, 1.0).otherwise(0.0)
     return F.round(0.3 * len_ok + 0.3 * sw_ok + 0.2 * mwl_ok + 0.2 * punct_ok, 2)
-
-
-def rolling_fingerprint(tokens: Column, base: int = 31) -> Column:
-    """Order-sensitive polynomial rolling hash of the token stream:
-    h = fold(h * base + xxhash32(token)) mod 2^31-1. Distinguishes
-    permuted documents that bag-of-words hashes conflate. Sequential
-    fold over the array — deterministic everywhere."""
-    hashed = F.transform(tokens, lambda t: F.pmod(F.xxhash64(t), F.lit(MERSENNE31)))
-    return F.aggregate(
-        hashed,
-        F.lit(0).cast("long"),
-        lambda acc, h: F.pmod(acc * base + h, F.lit(MERSENNE31)),
-    )
 
 
 def repetition_stats(text: Column) -> tuple[Column, Column]:

@@ -1901,9 +1901,9 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     batch left join with the final-watermark cutoff applied to the
     unmatched side. Hash-oracled — the strongest driver-checkable
     evidence that watermark bookkeeping is correct."""
-    from .streaming.ingest import interval_join_left_outer_batch
+    from .streaming.ingest import interval_join_batch
 
-    return interval_join_left_outer_batch(spark, sf_dir)
+    return interval_join_batch(spark, sf_dir, how="left_outer")
 
 
 @register(

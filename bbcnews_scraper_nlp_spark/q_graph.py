@@ -2052,14 +2052,9 @@ def streaming_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order — certified cross-engine like every other drain.
     At 100 TB: dimension broadcast or pre-bucketed; agg state
     bounded by view cardinality (5 priorities)."""
-    from .streaming.ingest import (
-        scoped_state_partitions,
-        static_join_view_stream,
-    )
+    from .streaming.ingest import static_join_view_stream
 
-    load_table(spark, sf_dir, "orders")
-    with scoped_state_partitions(spark):
-        return static_join_view_stream(spark, sf_dir)
+    return static_join_view_stream(spark, sf_dir)
 
 
 @register(

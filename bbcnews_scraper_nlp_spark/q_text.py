@@ -261,7 +261,7 @@ _C4_BADWORDS = ("slow", "stale")
 def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """gopher_quality_flags INSIDE Structured Streaming — the
     production quality-gate shape: documents are scored by the
-    published Gopher word rules as they ARRIVE (readStream ->
+    published Gopher word rules as they ARRIVE (file stream ->
     per-row flags -> AvailableNow drain), before anything downstream
     sees them. The streaming formulation is deliberately a different
     PLAN for the same semantics: pure per-row HOF expressions

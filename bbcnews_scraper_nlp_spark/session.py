@@ -121,7 +121,8 @@ def get_spark(
 
 
 def release_blocks(spark: SparkSession) -> None:
-    """Free every cached and checkpointed block in the session.
+    """Free every cached and checkpointed block and every temp view in
+    the session.
 
     Block lifetime is owned by the caller that runs the action, not by
     the operators:
@@ -132,21 +133,26 @@ def release_blocks(spark: SparkSession) -> None:
     - the blocks live until the caller has finished its action
       (collect, count, write) and calls ``release_blocks``;
     - no DataFrame obtained before the call may be used after it:
-      checkpointed lineage is gone with the blocks.
+      checkpointed lineage is gone with the blocks, and a drained
+      stream's rows (``streaming.ingest.drain``) with its sink view.
 
     Order: ``clearCache()`` drops catalog-cached relations; a blocking
     unpersist of every persistent RDD drops ``localCheckpoint`` blocks,
     which ContextCleaner would otherwise free only after a JVM GC
-    notices the dead RDD (its periodic GC fires every 30 min); the
-    final ``System.gc()`` lets ContextCleaner drop broadcast blocks of
-    executed joins. Cleanup is untimed housekeeping, so a failure is
-    logged to stderr rather than raised: one bad release must not end
-    a multi-query run.
+    notices the dead RDD (its periodic GC fires every 30 min); temp
+    views are dropped, so the memory-sink views that drains register
+    do not pile up; the final ``System.gc()`` lets ContextCleaner drop
+    broadcast blocks of executed joins. Cleanup is untimed
+    housekeeping, so a failure is logged to stderr rather than raised:
+    one bad release must not end a multi-query run.
     """
     try:
         spark.catalog.clearCache()
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist(True)
+        for v in spark.sql("SHOW VIEWS").collect():
+            if v.isTemporary:
+                spark.catalog.dropTempView(v.viewName)
         spark.sparkContext._jvm.System.gc()
     except Exception:  # noqa: BLE001
         traceback.print_exc(file=sys.stderr)

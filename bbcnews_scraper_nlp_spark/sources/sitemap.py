@@ -16,19 +16,11 @@ Engine design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 URL_BLOCK_PATTERN = "(?s)<url>(.*?)</url>"
 NEWS_URL_SUBSTR = "www.bbc.com/news/"
-
-
-def read_sitemap_files(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Whole-file read of sitemap shards -> (shard_path, xml)."""
-    df = spark.read.text(paths, wholetext=True)
-    return df.select(
-        F.input_file_name().alias("shard_path"), F.col("value").alias("xml")
-    )
 
 
 def parse_sitemap(pages: DataFrame, xml_col: str = "xml") -> DataFrame:

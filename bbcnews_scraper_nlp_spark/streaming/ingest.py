@@ -4,7 +4,7 @@ The reference's 30-minute Airflow crawl with URL dedup is a
 micro-batch upsert stream (bbc_news_dag.py:78-84 + the unique-index
 skip at :34-38). Spark-native shape:
 
-  readStream (file source) -> withWatermark -> dropDuplicates(key)
+  file stream -> withWatermark -> dropDuplicates(key)
   -> sink, Trigger.AvailableNow for catch-up batch runs.
 
 - watermark bounds the dedup state store (the reference's unbounded
@@ -14,11 +14,22 @@ skip at :34-38). Spark-native shape:
   exact semantics of one cron tick (catchup=False).
 - checkpointLocation gives the cross-run state handoff the reference
   does through XCom + Mongo (bbc_news_dag.py:60-67).
+
+Every query here goes through three shared functions:
+
+- ``file_stream`` is the only parquet reader (file or directory);
+- ``drain`` is the only memory sink: it runs a query to completion,
+  deletes its throwaway checkpoint and returns the emitted rows;
+- ``_foreach_batch`` is the only foreachBatch start, for the sinks
+  that keep state across runs in a caller-owned checkpoint.
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,19 +51,63 @@ from ..catalog import read_parquet
 STATE_PARTITIONS = 8
 
 
-@contextmanager
-def scoped_state_partitions(spark: SparkSession, n: int = STATE_PARTITIONS):
-    """Pin spark.sql.shuffle.partitions (which fixes a NEW streaming
-    query's state-partition count at first checkpoint) for the
-    duration of a drain, restoring the session value after. The whole
-    start→awaitTermination must sit inside the scope — the count is
-    locked when the first batch plans."""
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` via the Hadoop FS API, so
+    probes work on s3a/hdfs as well as local paths."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def file_stream(
+    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """Parquet file stream over ``path``, a dataset directory or a
+    single file. A file source lists directories, so a single file is
+    streamed as its parent narrowed by ``pathGlobFilter`` to the
+    file's name. The schema comes from ``catalog.read_parquet``
+    (inferred once per file); ``max_files_per_trigger`` caps the files
+    per micro-batch (forces a multi-batch drain)."""
+    fs, p = _hadoop_path(spark, path)
+    reader = spark.readStream.schema(read_parquet(spark, path).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if fs.getFileStatus(p).isDirectory():
+        return reader.parquet(path)
+    parent, leaf = os.path.split(path.rstrip("/"))
+    return reader.option("pathGlobFilter", leaf).parquet(parent)
+
+
+def drain(spark: SparkSession, df: DataFrame, mode: str = "append") -> DataFrame:
+    """Run the streaming ``df`` to completion (``Trigger.AvailableNow``)
+    into a memory sink and return the emitted rows as a batch
+    DataFrame; ``mode`` is the output mode.
+
+    The query gets a unique name and a throwaway checkpoint, removed
+    once the query has stopped (the sink keeps its rows on the driver,
+    not in the checkpoint). From start to termination the session's
+    ``spark.sql.shuffle.partitions`` is pinned to ``STATE_PARTITIONS``
+    — a new query fixes its state-partition count from it when its
+    first batch plans — and restored afterwards. The returned frame
+    reads the sink's temp view, which the caller owns as it owns
+    cached blocks: ``session.release_blocks`` drops it."""
+    name = f"drain_{uuid.uuid4().hex[:12]}"
+    checkpoint = tempfile.mkdtemp(prefix="ckpt_")
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
-        yield
+        (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    return spark.table(name)
 
 
 def checkpoint_lineage(spark: SparkSession, checkpoint: str) -> str:
@@ -67,47 +122,51 @@ def checkpoint_lineage(spark: SparkSession, checkpoint: str) -> str:
     foreachBatch, not at stream-construction time."""
     import json as _json
 
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{checkpoint}/metadata")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _hadoop_path(spark, f"{checkpoint}/metadata")
     stream = fs.open(p)
     try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        raw = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
     return str(_json.loads(raw)["id"])
 
 
-def stream_events(
-    spark: SparkSession,
-    sf_dir: str,
-    key: str = "event_id",
-    ts_col: str = "ts",
-    watermark: str = "90 days",
-) -> DataFrame:
-    """Streaming dedup source over the events table.
+def _foreach_batch(stream: DataFrame, checkpoint: str, process) -> StreamingQuery:
+    """Start ``stream`` with ``Trigger.AvailableNow`` into
+    ``process(batch, batch_id, lineage)``, one call per non-empty
+    micro-batch. ``lineage`` is ``checkpoint_lineage`` of
+    ``checkpoint``, read once, at the first non-empty batch (the
+    metadata exists only after the query has started). Returns the
+    started query; the caller owns the checkpoint."""
+    lineage: list[str] = []
 
-    File-source streams need an explicit schema; we take it (and the
-    NANOS/NTZ timestamp fix-ups) from ``event_stream``.
-    """
-    stream = event_stream(spark, sf_dir, ts_col=ts_col)
-    return stream.withWatermark(ts_col, watermark).dropDuplicates([key])
+    def run(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        if not lineage:
+            lineage.append(checkpoint_lineage(batch.sparkSession, checkpoint))
+        process(batch, int(batch_id), lineage[0])
 
-
-def run_available_now(
-    deduped: DataFrame,
-    query_name: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Drain all available input into an in-memory sink (test/smoke
-    path; production sinks swap format for parquet/kafka)."""
     return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def _overwrite_batch(df: DataFrame, path: str, lineage: str, batch_id: int) -> None:
+    """Write ``df`` as the ``(__lineage, __batch)`` partition of the
+    parquet table at ``path`` by dynamic partition overwrite: a
+    replayed epoch replaces its own partition instead of appending a
+    second copy, and another lineage's partitions are never touched."""
+    (
+        df.withColumn("__lineage", F.lit(lineage))
+        .withColumn("__batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__lineage", "__batch")
+        .parquet(path)
     )
 
 
@@ -211,24 +270,8 @@ def user_stats_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched it; n_events only grows, so the final state is the
     max-(n_events, total_cents) struct per user — deterministic even
     when AvailableNow splits the input into several batches."""
-    import tempfile
-    import uuid
-
-    stream = event_stream(spark, sf_dir)
-    name = f"user_stats_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            running_user_stats(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        drain(spark, running_user_stats(event_stream(spark, sf_dir)), "update")
         .groupBy("user_id")
         .agg(F.max(F.struct("n_events", "total_cents")).alias("__s"))
         .select("user_id", "__s.n_events", "__s.total_cents")
@@ -263,23 +306,7 @@ def windowed_event_counts(
 def windowed_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the watermarked windowed aggregation with AvailableNow
     and return the emitted (closed) windows as a batch DataFrame."""
-    import tempfile
-    import uuid
-
-    stream = event_stream(spark, sf_dir)
-    name = f"win_counts_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            windowed_event_counts(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(spark, windowed_event_counts(event_stream(spark, sf_dir)))
 
 
 def incremental_dedup_batch(
@@ -287,16 +314,10 @@ def incremental_dedup_batch(
 ) -> DataFrame:
     """End-to-end: stream -> watermark -> dropDuplicates -> collect
     the drained micro-batches as a batch DataFrame (synchronous; used
-    by the rows-only driver check)."""
-    import tempfile
-    import uuid
-
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    with scoped_state_partitions(spark):
-        q = run_available_now(stream_events(spark, sf_dir, key=key), name, ckpt)
-        q.awaitTermination()
-    return spark.table(name)
+    by the rows-only driver check). The 90-day watermark bounds the
+    dedup state (see the module docstring)."""
+    stream = event_stream(spark, sf_dir).withWatermark("ts", "90 days")
+    return drain(spark, stream.dropDuplicates([key]))
 
 
 def event_stream(spark: SparkSession, sf_dir: str, ts_col: str = "ts") -> DataFrame:
@@ -310,12 +331,7 @@ def event_stream(spark: SparkSession, sf_dir: str, ts_col: str = "ts") -> DataFr
     as NTZ in Spark 4. Session timezone is pinned UTC
     (session.get_spark), so the cast relabels the same wall clock."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = file_stream(spark, f"{sf_dir}/events.parquet")
     if dict(stream.dtypes).get(ts_col) == "bigint":
         stream = stream.withColumn(
             ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000"))
@@ -350,9 +366,11 @@ def interval_join_clicks_views(
     views: DataFrame,
     lookback: str = "30 minutes",
     watermark: str = "1 hour",
+    how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream interval join: each click joins the
-    same user's views from the preceding ``lookback`` window.
+    same user's views from the preceding ``lookback`` window
+    (``how``: ``"inner"`` or ``"left_outer"``).
 
     Both sides carry watermarks so the state store can discard rows
     once no future match is possible (buffered-state bound =
@@ -368,16 +386,23 @@ def interval_join_clicks_views(
             "c_user_id = v_user_id AND "
             f"view_ts BETWEEN click_ts - INTERVAL {lookback} AND click_ts"
         ),
-        "inner",
+        how,
     )
 
 
-def interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+def interval_join_batch(
+    spark: SparkSession, sf_dir: str, how: str = "inner"
+) -> DataFrame:
     """Drain the stream-stream interval join over all available input
     (two independent file-stream readers over the same table, as a
-    real pipeline would read two topics)."""
-    import tempfile
-    import uuid
+    real pipeline would read two topics).
+
+    ``how="left_outer"``: matched rows emit immediately; unmatched
+    clicks emit null-padded only once the global watermark (min of
+    both sides' max event time minus the delay) passes their
+    timestamp — state for them can then never match. Tail clicks
+    above the final watermark stay withheld at drain end: that is the
+    API's contract, and the oracle encodes exactly this cutoff."""
 
     def side(event_type: str, ts_alias: str, cols: list) -> DataFrame:
         s = event_stream(spark, sf_dir)
@@ -395,19 +420,8 @@ def interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "view_ts",
         [F.col("user_id").alias("v_user_id"), F.col("value").alias("view_value")],
     )
-    joined = interval_join_clicks_views(clicks, views)
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    joined = interval_join_clicks_views(clicks, views, how=how)
+    return drain(spark, joined).select(
         "click_id", "c_user_id", "click_ts", "view_ts", "view_value"
     )
 
@@ -427,15 +441,10 @@ def upsert_foreach_batch(
     sink-side transactionality."""
     from ..sources.stage_io import upsert_skip
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_skip(batch_df.sparkSession, batch_df, root, name, key)
+    def sink(batch: DataFrame, batch_id: int, lineage: str) -> None:
+        upsert_skip(batch.sparkSession, batch, root, name, key)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint_dir, sink)
 
 
 def session_window_counts(
@@ -476,22 +485,7 @@ def session_window_counts(
 def session_counts_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the streaming sessionization with AvailableNow and return
     the emitted (closed) sessions as a batch DataFrame."""
-    import tempfile
-    import uuid
-
-    name = f"sess_counts_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            session_window_counts(event_stream(spark, sf_dir))
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain(spark, session_window_counts(event_stream(spark, sf_dir)))
 
 
 def enrich_stream_static(
@@ -516,9 +510,6 @@ def enrich_stream_static_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain a stream-static enrichment: the events file-stream joined
     to a small static user-segment dimension (broadcast per
     micro-batch, no stream shuffle, no join state)."""
-    import tempfile
-    import uuid
-
     from ..catalog import load_table
 
     users = (
@@ -539,72 +530,7 @@ def enrich_stream_static_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream["user_id"] == users["u_user_id"],
         ["segment"],
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def interval_join_left_outer_batch(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Drain the LEFT OUTER watermarked stream-stream interval join:
-    matched rows emit immediately; unmatched clicks emit null-padded
-    only once the global watermark (min of both sides' max event time
-    minus the delay) passes their timestamp — state for them can then
-    never match. Tail clicks above the final watermark stay withheld
-    at drain end: that is the API's contract, and the oracle encodes
-    exactly this cutoff."""
-    import tempfile
-    import uuid
-
-    def side(event_type: str, ts_alias: str, cols: list) -> DataFrame:
-        s = event_stream(spark, sf_dir)
-        return s.filter(F.col("event_type") == event_type).select(
-            *cols, F.col("ts").alias(ts_alias)
-        )
-
-    clicks = side(
-        "click",
-        "click_ts",
-        [F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user_id")],
-    )
-    views = side(
-        "view",
-        "view_ts",
-        [F.col("user_id").alias("v_user_id"), F.col("value").alias("view_value")],
-    )
-    c = clicks.withWatermark("click_ts", "1 hour")
-    v = views.withWatermark("view_ts", "1 hour")
-    joined = c.join(
-        v,
-        F.expr(
-            "c_user_id = v_user_id AND "
-            "view_ts BETWEEN click_ts - INTERVAL 30 minutes AND click_ts"
-        ),
-        "left_outer",
-    )
-    name = f"ssoj_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
-        "click_id", "c_user_id", "click_ts", "view_ts", "view_value"
-    )
+    return drain(spark, enriched)
 
 
 def near_dedup_stream(
@@ -654,26 +580,12 @@ def near_dedup_stream(
         save_lsh_index,
     )
 
-    schema = spark.read.parquet(docs_dir).schema
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
-
     def _index_exists() -> bool:
         # Hadoop FS probe, not os.path: index_path may be s3a://hdfs://
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta")
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, p = _hadoop_path(spark, f"{index_path}/meta")
         return fs.exists(p)
 
-    lineage_cache: dict[str, str] = {}
-
-    def _lineage() -> str:
-        if "id" not in lineage_cache:
-            lineage_cache["id"] = checkpoint_lineage(spark, checkpoint)
-        return lineage_cache["id"]
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def process(batch: DataFrame, batch_id: int, lineage: str) -> None:
         have_index = _index_exists()
         params = (
             lsh_index_meta(spark, index_path)
@@ -774,25 +686,18 @@ def near_dedup_stream(
             # these ids absent from the index, so the sink rewrite is
             # identical and the index catches up — the reverse order
             # would let the id-guard skip rows the sink never got.
-            (
-                kept.withColumn("__lineage", F.lit(_lineage()))
-                .withColumn("__batch", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__lineage", "__batch")
-                .parquet(out_path)
-            )
+            _overwrite_batch(kept, out_path, lineage, batch_id)
             if have_index:
                 append_lsh_index(
                     kept, id_col, text_col, index_path,
                     base=kept_base, base_params=params, batch_id=batch_id,
-                    lineage=_lineage(),
+                    lineage=lineage,
                 )
             else:
                 save_lsh_index(
                     kept, id_col, text_col, index_path, **params,
                     base=kept_base, base_params=params, batch_id=batch_id,
-                    lineage=_lineage(),
+                    lineage=lineage,
                 )
         finally:
             base.unpersist()
@@ -801,12 +706,7 @@ def near_dedup_stream(
             if dup_ids is not None:
                 dup_ids.unpersist()  # releases the localCheckpoint blocks
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(file_stream(spark, docs_dir), checkpoint, process)
 
 
 def cms_stream(
@@ -850,67 +750,60 @@ def cms_stream(
     """
     from ..operators.profiling import build_cms
 
-    import os
+    return _sketch_stream(
+        spark, input_dir, sketch_path, checkpoint, where,
+        lambda batch: build_cms(batch, key, depth=depth, width=width),
+    )
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema)
-    if input_dir.endswith(".parquet"):
-        # file streams require a directory: stream the parent with a
-        # glob pinned to this file (the event_stream convention)
-        parent, leaf = os.path.split(input_dir.rstrip("/"))
-        reader = reader.option("pathGlobFilter", leaf)
-        stream = reader.parquet(parent)
-    else:
-        stream = reader.parquet(input_dir)
+
+def _sketch_stream(
+    spark: SparkSession,
+    input_dir: str,
+    sketch_path: str,
+    checkpoint: str,
+    where: str | None,
+    delta,
+) -> StreamingQuery:
+    """The body of ``cms_stream`` and ``kmv_stream``: each non-empty
+    micro-batch's ``delta(batch)`` sketch is written as its
+    ``(__lineage, __batch)`` partition of ``sketch_path``."""
+    stream = file_stream(spark, input_dir)
     if where is not None:
         # pre-sketch row filter (e.g. one event_type per pipeline) —
         # a narrow predicate the scan absorbs, so each state scope
         # only ever sees its own slice
         stream = stream.filter(where)
 
-    lineage_cache: dict[str, str] = {}
+    def process(batch: DataFrame, batch_id: int, lineage: str) -> None:
+        _overwrite_batch(delta(batch), sketch_path, lineage, batch_id)
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if "id" not in lineage_cache:
-            lineage_cache["id"] = checkpoint_lineage(spark, checkpoint)
-        delta = build_cms(batch, key, depth=depth, width=width)
-        (
-            delta.withColumn("__lineage", F.lit(lineage_cache["id"]))
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__lineage", "__batch")
-            .parquet(sketch_path)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(stream, checkpoint, process)
 
 
-def read_cms_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """Merge the per-batch CMS deltas into the current sketch:
-    cell-wise integer sum (associative/commutative — any merge order
-    gives the identical counter table). Refuses a table holding
-    deltas from MORE than one checkpoint lineage: summing across
-    lineages double-counts any input drained by both (the silent-
-    corruption mode the lineage partition key exists to surface)."""
+def _single_lineage_deltas(spark: SparkSession, sketch_path: str) -> DataFrame:
+    """The per-batch deltas of a sketch table, refusing a table that
+    holds deltas from MORE than one checkpoint lineage: a merge across
+    lineages double-counts (CMS) or mixes the scopes (KMV) of any
+    input drained by both — the silent-corruption mode the lineage
+    partition key exists to surface."""
     deltas = spark.read.parquet(sketch_path)
     if "__lineage" in deltas.columns:
         n_lineages = deltas.select("__lineage").distinct().count()
         if n_lineages > 1:
             raise ValueError(
-                f"read_cms_sketch: {sketch_path} holds deltas from "
-                f"{n_lineages} checkpoint lineages; merging would "
-                "double-count re-drained input. Keep one sketch table "
-                "per pipeline lineage (clear the table when resetting "
-                "the checkpoint)."
+                f"{sketch_path} holds deltas from {n_lineages} checkpoint "
+                "lineages; keep one sketch table per pipeline lineage "
+                "(clear the table when resetting the checkpoint)."
             )
+    return deltas
+
+
+def read_cms_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
+    """Merge the per-batch CMS deltas into the current sketch:
+    cell-wise integer sum (associative/commutative — any merge order
+    gives the identical counter table). Refuses a mixed-lineage table
+    (``_single_lineage_deltas``)."""
+    deltas = _single_lineage_deltas(spark, sketch_path)
     return deltas.groupBy("row_i", "col_j").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -942,46 +835,11 @@ def kmv_stream(
 
     Sketch table size: n_batches × (≤ k rows per group per batch).
     """
-    import os
-
     from ..operators.profiling import kmv_sketch
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema)
-    if input_dir.endswith(".parquet"):
-        parent, leaf = os.path.split(input_dir.rstrip("/"))
-        reader = reader.option("pathGlobFilter", leaf)
-        stream = reader.parquet(parent)
-    else:
-        stream = reader.parquet(input_dir)
-    if where is not None:
-        # pre-sketch row filter (e.g. one event_type per pipeline) —
-        # a narrow predicate the scan absorbs, so each state scope
-        # only ever sees its own slice
-        stream = stream.filter(where)
-
-    lineage_cache: dict[str, str] = {}
-
-    def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if "id" not in lineage_cache:
-            lineage_cache["id"] = checkpoint_lineage(spark, checkpoint)
-        delta = kmv_sketch(batch, key, group_cols, k=k)
-        (
-            delta.withColumn("__lineage", F.lit(lineage_cache["id"]))
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__lineage", "__batch")
-            .parquet(sketch_path)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _sketch_stream(
+        spark, input_dir, sketch_path, checkpoint, where,
+        lambda batch: kmv_sketch(batch, key, group_cols, k=k),
     )
 
 
@@ -994,15 +852,7 @@ def read_kmv_sketch(
     as read_cms_sketch."""
     from pyspark.sql import Window
 
-    deltas = spark.read.parquet(sketch_path)
-    if "__lineage" in deltas.columns:
-        n_lineages = deltas.select("__lineage").distinct().count()
-        if n_lineages > 1:
-            raise ValueError(
-                f"read_kmv_sketch: {sketch_path} holds deltas from "
-                f"{n_lineages} checkpoint lineages; keep one sketch "
-                "table per pipeline lineage."
-            )
+    deltas = _single_lineage_deltas(spark, sketch_path)
     hv = deltas.select(*group_cols, "hv").distinct()
     w = Window.partitionBy(*group_cols).orderBy("hv")
     return (
@@ -1056,29 +906,11 @@ def versioned_sink_stream(
     ``(__lineage, __batch)`` partition-overwrite sinks used by
     near_dedup_stream / cms_stream — same idempotency, plus snapshot
     isolation and time travel per micro-batch."""
-    import os
 
-    schema = spark.read.parquet(input_dir).schema
-    reader = spark.readStream.schema(schema)
-    if input_dir.endswith(".parquet"):
-        parent, leaf = os.path.split(input_dir.rstrip("/"))
-        stream = reader.option("pathGlobFilter", leaf).parquet(parent)
-    else:
-        stream = reader.parquet(input_dir)
+    def sink(batch: DataFrame, batch_id: int, lineage: str) -> None:
+        commit_stream_batch(batch, table_root, batch_id, lineage=lineage)
 
-    lineage_cache: dict[str, str] = {}
-
-    def sink(b: DataFrame, bid: int) -> None:
-        if "id" not in lineage_cache:
-            lineage_cache["id"] = checkpoint_lineage(spark, checkpoint)
-        commit_stream_batch(b, table_root, bid, lineage=lineage_cache["id"])
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _foreach_batch(file_stream(spark, input_dir), checkpoint, sink)
 
 
 def streaming_decode_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1093,23 +925,12 @@ def streaming_decode_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. This is the shape of a production media-ingest
     pipeline: decode work rides the stream, no shuffle, bounded
     per-batch memory via Arrow batch sizing."""
-    import os
-    import tempfile
-    import uuid
-
     from ..operators.multimodal import (
         attach_gradient_image_payload,
         decode_image_pixels,
     )
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
-    parent, leaf = os.path.split(docs_path.rstrip("/"))
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", leaf)
-        .parquet(parent)
-    )
+    stream = file_stream(spark, os.path.join(sf_dir, "documents.parquet"))
     # spread the decode across the cluster: a single-file source
     # plans ONE input partition per micro-batch, which serialized the
     # whole Python decode stage onto one core (profiled: a 7.6 s
@@ -1123,21 +944,10 @@ def streaming_decode_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded = decode_image_pixels(
         attach_gradient_image_payload(stream, "doc_id")
     )
-    name = f"stream_decode_{uuid.uuid4().hex[:8]}"
-    q = (
-        decoded.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(spark, decoded)
 
-def static_join_view_stream(
-    spark: SparkSession, sf_dir: str, name: str = "stream_join_view"
-):
+
+def static_join_view_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC join + view aggregation: maintain a revenue-by-
     priority join view over an append-only orders stream against the
     static lineitem dimension — the native Structured Streaming form
@@ -1150,14 +960,7 @@ def static_join_view_stream(
     100 TB the static side is a real dimension table (broadcast or
     pre-bucketed); view cardinality (5 priorities) bounds the agg
     state."""
-    import tempfile
-
-    schema = read_parquet(spark, f"{sf_dir}/orders.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
+    stream = file_stream(spark, f"{sf_dir}/orders.parquet")
     li = read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         F.col("l_orderkey").alias("o_orderkey"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
@@ -1171,16 +974,7 @@ def static_join_view_stream(
             F.sum("cents").cast("long").alias("rev_cents"),
         )
     )
-    q = (
-        view.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_sjv_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(spark, view, "complete")
 
 
 def streaming_quality_gate_batch(
@@ -1198,42 +992,13 @@ def streaming_quality_gate_batch(
     — the BATCH gopher_quality_flags oracle applies unchanged (same
     integer truncating divisions, two plan shapes for one
     semantics)."""
-    import os
-    import tempfile
-    import uuid
-
     from ..operators.textstats import gopher_stats_columns
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(docs_path):
-        # documents.parquet is a dataset DIRECTORY: stream it directly
-        target = docs_path
-    else:
-        # single-file layout (the driver testdata): pathGlobFilter
-        # narrows the parent listing to that one file
-        parent, leaf = os.path.split(docs_path.rstrip("/"))
-        reader = reader.option("pathGlobFilter", leaf)
-        target = parent
-    if max_files_per_trigger is not None:
-        # forces a multi-micro-batch drain (split-invariance tests)
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(target)
-    flagged = stream.select(
-        "doc_id", *gopher_stats_columns(F.col("text"))
+    stream = file_stream(
+        spark, os.path.join(sf_dir, "documents.parquet"), max_files_per_trigger
     )
-    name = f"stream_qgate_{uuid.uuid4().hex[:8]}"
-    q = (
-        flagged.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    flagged = stream.select("doc_id", *gopher_stats_columns(F.col("text")))
+    return drain(spark, flagged)
 
 
 def streaming_hrw_route_batch(
@@ -1249,38 +1014,15 @@ def streaming_hrw_route_batch(
     BATCH per-doc assignment SQL is the oracle unchanged — the hash
     match certifies that the streaming router and the batch audit
     compute the identical placement."""
-    import os
-    import tempfile
-    import uuid
-
     from ..operators.relational import hrw_shard
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(docs_path):
-        target = docs_path
-    else:
-        parent, leaf = os.path.split(docs_path.rstrip("/"))
-        reader = reader.option("pathGlobFilter", leaf)
-        target = parent
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(target)
+    stream = file_stream(
+        spark, os.path.join(sf_dir, "documents.parquet"), max_files_per_trigger
+    )
     routed = stream.select(
         "doc_id", hrw_shard(F.col("doc_id"), n_shards).alias("shard")
     )
-    name = f"stream_hrw_{uuid.uuid4().hex[:8]}"
-    q = (
-        routed.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(spark, routed)
 
 
 def streaming_blocklist_gate_batch(
@@ -1297,34 +1039,10 @@ def streaming_blocklist_gate_batch(
     drain is append-mode and split-invariant and the BATCH
     position-scan SQL is the oracle unchanged — streaming gate and
     batch audit provably compute identical matches."""
-    import os
-    import tempfile
-    import uuid
-
     from ..operators.ahocorasick import automaton_frame, match_counts
 
-    docs_path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(docs_path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(docs_path):
-        target = docs_path
-    else:
-        parent, leaf = os.path.split(docs_path.rstrip("/"))
-        reader = reader.option("pathGlobFilter", leaf)
-        target = parent
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(target)
-    auto = automaton_frame(spark, patterns)
-    gated = match_counts(stream, "doc_id", "text", auto)
-    name = f"stream_ac_{uuid.uuid4().hex[:8]}"
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    stream = file_stream(
+        spark, os.path.join(sf_dir, "documents.parquet"), max_files_per_trigger
     )
-    q.awaitTermination()
-    return spark.table(name)
+    auto = automaton_frame(spark, patterns)
+    return drain(spark, match_counts(stream, "doc_id", "text", auto))

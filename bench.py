@@ -46,7 +46,11 @@ def time_query(spark, name: str, sf_dir: str) -> dict:
     """Time registry query ``name``: ``REPS`` runs, keep the fastest.
 
     Each run times ``fn(spark, sf_dir)`` as ``build_s`` (Python, Catalyst
-    analysis, eager checkpoint jobs) and ``.count()`` as ``exec_s``; it
+    analysis, eager checkpoint jobs) and ``.count()`` as ``exec_s``. A
+    ``streaming_*`` query runs its stream to completion inside ``fn``
+    (through ``streaming.ingest.drain``, the one memory sink, unless it
+    keeps foreachBatch state), so its ``build_s`` includes the drain
+    and ``exec_s`` only reads the result. It
     also records ``rows``, the ``jobs`` it started (the job-id range
     from ``first_job``, which counts streaming micro-batch jobs too) and
     the codegen ``compiles``/``compile_s`` it paid. The record is the

@@ -47,6 +47,17 @@ def test_rewritten_file_returns_new_schema(spark, tmp_path):
     assert df.count() == 3
 
 
+def test_directory_schema_is_never_cached(spark, tmp_path):
+    # rewriting a part file in place leaves the directory's own stat
+    # unchanged, so a directory must be inferred on every read
+    part = tmp_path / "ds" / "part-0.parquet"
+    part.parent.mkdir()
+    pq.write_table(pa.table({"a": [1]}), str(part))
+    assert read_parquet(spark, str(part.parent)).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"]}), str(part))
+    assert read_parquet(spark, str(part.parent)).columns == ["b"]
+
+
 def test_schema_cache_keys_on_type_confs(spark, tmp_path):
     path = str(tmp_path / "bin.parquet")
     pq.write_table(pa.table({"v": pa.array([b"ab"], pa.binary())}), path)

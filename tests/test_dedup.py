@@ -190,6 +190,23 @@ def test_cc_matches_union_find_on_random_graph(spark):
     assert got == expected
 
 
+def test_cc_raises_when_rounds_run_out(spark):
+    # A randomly permuted path has many local minima, so one
+    # contraction round leaves edges: the operator must fail loudly
+    # instead of returning a partial fixpoint.
+    import pytest
+
+    from bbcnews_scraper_nlp_spark.operators.dedup import connected_components
+
+    order = list(range(64))
+    random.Random(7).shuffle(order)
+    edges = spark.createDataFrame(
+        list(zip(order, order[1:])), "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        connected_components(edges, max_rounds=1)
+
+
 def test_keep_cluster_canonical_one_per_cluster(spark):
     from bbcnews_scraper_nlp_spark.operators.dedup import keep_cluster_canonical
 

@@ -127,6 +127,7 @@ def test_cap_hot_keys_bounds_fanout_and_noop_below_cap(spark):
         "pagerank_copurchase",  # lazy persists read by the returned plan
         "kcore_suppliers",  # persist + eager localCheckpoints
         "kmv_distinct_setops",  # persisted sketch rows
+        "streaming_dedup",  # memory-sink view of a drained stream
     ],
 )
 def test_release_blocks_empties_storage_and_query_reruns(spark, sf_dir, name):
@@ -139,6 +140,7 @@ def test_release_blocks_empties_storage_and_query_reruns(spark, sf_dir, name):
         release_blocks(spark)
         assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        assert not [v for v in spark.sql("SHOW VIEWS").collect() if v.isTemporary]
         # blocks are owned by the caller, not by the query: a fresh
         # call rebuilds them and returns the same rows
         assert sorted(fn(spark, sf_dir).collect()) == first

@@ -120,7 +120,7 @@ def test_watermark_path_both_flavors(spark, tmp_path, flavor):
     # stream over both flavors.
     from bbcnews_scraper_nlp_spark.streaming.ingest import (
         dedup_within_watermark,
-        run_available_now,
+        drain,
     )
 
     import pyarrow as pa
@@ -149,11 +149,7 @@ def test_watermark_path_both_flavors(spark, tmp_path, flavor):
     stream = event_stream(spark, str(src))
     assert dict(stream.dtypes)["ts"] == "timestamp"
     deduped = dedup_within_watermark(stream, key="event_id", watermark="1 hour")
-    q = run_available_now(
-        deduped, f"ntz_wm_{flavor}", str(tmp_path / f"ck_{flavor}")
-    )
-    q.awaitTermination()
-    assert spark.table(f"ntz_wm_{flavor}").count() == 5
+    assert drain(spark, deduped).count() == 5
 
 
 @pytest.mark.parametrize("flavor", FLAVORS)

@@ -9,6 +9,18 @@ from bbcnews_scraper_nlp_spark.catalog import load_table
 from bbcnews_scraper_nlp_spark.streaming.ingest import incremental_dedup_batch
 
 
+def test_drain_removes_its_checkpoint_and_stops(spark, sf_dir, tmp_path, monkeypatch):
+    import tempfile
+
+    from bbcnews_scraper_nlp_spark.streaming.ingest import drain, event_stream
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = drain(spark, event_stream(spark, sf_dir))
+    assert list(tmp_path.iterdir()) == []
+    assert spark.streams.active == []
+    assert out.count() == load_table(spark, sf_dir, "events").count()
+
+
 def test_stateful_user_stats_matches_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
