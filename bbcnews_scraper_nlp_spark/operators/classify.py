@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traindata import md5_int
+
 MILLI = 1000  # log-likelihood quantum: milli-nats
 
 HASH_SALT = "fh-v1:"
@@ -44,13 +46,7 @@ def feature_hash(token: Column, n_buckets: int) -> Column:
     of vocabulary — the 100 TB path where even a Heaps-bounded vocab
     table is unwelcome state: no vocab join, no OOV rows, a
     fixed-size broadcastable model."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(HASH_SALT), token)), 1, 12
-        ),
-        16,
-        10,
-    ).cast("long") % n_buckets
+    return md5_int(F.concat(F.lit(HASH_SALT), token), 12) % n_buckets
 
 
 def nb_train_predict(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.tokenize import char_shingles, word_shingles
+from .traindata import md5_int
 
 # Mersenne prime 2^31-1: keeps every affine-hash product within int64.
 MERSENNE31 = 2_147_483_647
@@ -76,7 +77,7 @@ def hashed_shingles(
     ``simhash64``)."""
     sh = word_shingles(F.split(col, " "), n) if mode == "word" else char_shingles(col, n)
     if shingle_hash == "md5":
-        base = lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")  # noqa: E731
+        base = lambda s: md5_int(s, 15)  # noqa: E731
     else:
         base = F.xxhash64
     return F.array_distinct(
@@ -236,9 +237,7 @@ def simhash64(tokens: Column, token_hash: str = "xxhash64") -> Column:
     if token_hash == "md5":
         hashed = F.transform(
             tokens,
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast(
-                "long"
-            ),
+            lambda t: md5_int(t, 15),
         )
     else:
         hashed = F.transform(tokens, lambda t: F.xxhash64(t))

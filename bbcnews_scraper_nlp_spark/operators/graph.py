@@ -24,44 +24,61 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .traindata import md5_int
+
 PR_SCALE = 10**12  # rank mass carried as integer micro-units
+PR_DAMPING_PCT = 85  # share of a node's rank that follows its out-edges
+
+# node2vec transition weights in milli-units: return 1/p, stay within
+# distance 1, explore 1/q — p=2, q=0.5, the paper's
+# community-oriented setting
+N2V_W_RETURN = 500
+N2V_W_NEAR = 1000
+N2V_W_FAR = 2000
 
 
 def pagerank(
     edges: DataFrame,
     src: str,
     dst: str,
+    seeds: DataFrame | None = None,
     iters: int = 3,
-    scale: int = PR_SCALE,
-    damping_pct: int = 85,
 ) -> DataFrame:
-    """Fixed-iteration PageRank with exact integer arithmetic.
+    """Fixed-iteration PageRank with exact integer arithmetic; with
+    ``seeds``, personalized PageRank / random-walk-with-restart
+    (Haveliwala 2002; Tong et al. 2006).
 
     ``edges`` is a directed edge list (symmetrize beforehand for an
-    undirected graph). Ranks are integers in units of ``1/scale``:
-    each node starts at ``scale div N``; an iteration sends
+    undirected graph). Ranks are integers in units of ``1/PR_SCALE``.
+    The restart set R is every node when ``seeds`` is None, else the
+    node ids in ``seeds``' first column (small — it broadcasts onto
+    the node set as a left-join flag). Each node of R starts at
+    ``PR_SCALE div |R|`` and every other node at 0; an iteration sends
     ``rank div out_degree`` along every out-edge, and the new rank is
-    ``teleport + (damping_pct * inbound_sum) div 100`` with
-    ``teleport = ((100 - damping_pct) * scale) div (100 * N)``.
-    All divisions are integral (`div`), all sums are BIGINT sums —
-    no floating point anywhere, so the result is independent of
-    partial-aggregation order and exactly reproducible in any engine
-    (the driver's DuckDB oracle unrolls the same iterations with
-    ``//``). Truncation loses < 1 micro-unit per edge per iteration —
-    ranking-irrelevant at scale=1e12.
+    ``teleport + (PR_DAMPING_PCT * inbound_sum) div 100`` with
+    ``teleport = ((100 - PR_DAMPING_PCT) * PR_SCALE) div (100 * |R|)``
+    on R and 0 elsewhere. Restarting at the seeds only makes rank
+    proximity TO the seeds instead of global importance (the
+    "entities related to these" recommender); with every node as a
+    seed the two are identical. All divisions are integral (`div`),
+    all sums are BIGINT sums — no floating point anywhere, so the
+    result is independent of partial-aggregation order and exactly
+    reproducible in any engine (the driver's DuckDB oracles unroll
+    the same iterations with ``//``). Truncation loses < 1 micro-unit
+    per edge per iteration — ranking-irrelevant at PR_SCALE=1e12.
 
     Plan shape per iteration: one hash join (ranks ⋈ out-edges, both
     keyed on the node id) + one hash aggregation (sum by dst) + one
-    left join back onto the node set for teleport-only nodes. N and
-    the teleport constant ride along as 1-row broadcast aggregates —
-    no driver-side action during plan construction.
+    left join back onto the node set for teleport-only nodes. |R|
+    and the teleport constant ride along as 1-row broadcast
+    aggregates — no driver-side action during plan construction.
 
     Returns (node, pr_scaled BIGINT), all nodes.
 
-    The node set and degree-attached edge set are persisted (lazily —
-    no job at construction) because every unrolled iteration reads
-    them; ``session.release_blocks`` frees them after the caller's
-    action.
+    The node set (seed-flagged under ``seeds``) and degree-attached
+    edge set are persisted (lazily — no job at construction) because
+    every unrolled iteration reads them; ``session.release_blocks``
+    frees them after the caller's action.
     """
     from pyspark import StorageLevel
 
@@ -80,12 +97,26 @@ def pagerank(
     # exchange reuse only applies within structurally identical
     # subtrees. Lazy persist: no job runs at construction time.
     ed = e.join(deg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
-    n1 = nodes.agg(F.count("*").alias("__n"))
+    if seeds is None:
+        restart = nodes
+    else:
+        restart = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+        nodes = nodes.join(
+            restart.withColumn("__is_seed", F.lit(1)), "node", "left"
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    ranks = nodes.crossJoin(F.broadcast(n1)).select(
-        "node", F.expr(f"{scale} div __n").alias("__r")
+    def on_restart(mass):
+        if seeds is None:
+            return mass
+        return F.when(F.col("__is_seed") == 1, mass).otherwise(F.lit(0))
+
+    n1 = F.broadcast(restart.agg(F.count("*").alias("__n")))
+    ranks = nodes.crossJoin(n1).select(
+        "node", on_restart(F.expr(f"{PR_SCALE} div __n")).alias("__r")
     )
-    teleport = F.expr(f"({100 - damping_pct} * {scale}) div (100 * __n)")
+    teleport = on_restart(
+        F.expr(f"({100 - PR_DAMPING_PCT} * {PR_SCALE}) div (100 * __n)")
+    )
     for _ in range(iters):
         inbound = (
             ed.join(ranks.withColumnRenamed("node", "__src"), "__src")
@@ -95,13 +126,13 @@ def pagerank(
         )
         ranks = (
             nodes.join(inbound.withColumnRenamed("__dst", "node"), "node", "left")
-            .crossJoin(F.broadcast(n1))
+            .crossJoin(n1)
             .select(
                 "node",
                 (
                     teleport
                     + F.expr(
-                        f"({damping_pct} * coalesce(__s, 0L)) div 100"
+                        f"({PR_DAMPING_PCT} * coalesce(__s, 0L)) div 100"
                     )
                 ).alias("__r"),
             )
@@ -308,22 +339,15 @@ def random_walks(
     frames = [cur]
     for t in range(1, steps + 1):
         pick = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(f"rw-v1:"),
-                            F.col("walk"),
-                            F.lit(f":{t}:"),
-                            F.col("node").cast("string"),
-                        )
-                    ),
-                    1,
-                    12,
+            md5_int(
+                F.concat(
+                    F.lit("rw-v1:"),
+                    F.col("walk"),
+                    F.lit(f":{t}:"),
+                    F.col("node").cast("string"),
                 ),
-                16,
-                10,
-            ).cast("long"),
+                12,
+            ),
             F.col("d"),
         )
         cur = (
@@ -346,22 +370,18 @@ def node2vec_walks(
     src: str,
     dst: str,
     steps: int = 4,
-    w_return: int = 500,
-    w_near: int = 1000,
-    w_far: int = 2000,
 ) -> DataFrame:
     """Second-order (p, q)-biased walks — full node2vec sampling
     (Grover & Leskovec 2016), deterministic. At node v, having
     arrived from t, neighbor x (id-ordered) gets integer weight
-    ``w_return`` if x = t (1/p), ``w_near`` if (t, x) is an edge
-    (distance 1), else ``w_far`` (1/q); the step draws
+    ``N2V_W_RETURN`` if x = t (1/p), ``N2V_W_NEAR`` if (t, x) is an
+    edge (distance 1), else ``N2V_W_FAR`` (1/q); the step draws
     md5("n2v-v1:walk:step:t:v") mod Σweights and picks the neighbor
     whose cumulative-weight interval contains it — exactly
     node2vec's alias-sampled transition with the PRNG swapped for
     the engine's md5 flavor, so the BFS-ish (q>1 in milli-units:
-    w_far<w_near) vs DFS-ish bias is reproducible and
-    hash-certifiable cross-engine. Defaults encode p=2, q=0.5 (the
-    paper's community-oriented setting). Step 1 has no predecessor
+    far < near weight) vs DFS-ish bias is reproducible and
+    hash-certifiable cross-engine. Step 1 has no predecessor
     and draws first-order (uniform rank pick, as random_walks).
 
     Returns (walk, step, node), walk = "<start>#0", step 0..steps.
@@ -388,14 +408,8 @@ def node2vec_walks(
         .persist()
     )
 
-    def _pick_hash(t: int, salt_cols) -> "F.Column":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("n2v-v1:"), *salt_cols)), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
+    def _pick_hash(salt_cols) -> "F.Column":
+        return md5_int(F.concat(F.lit("n2v-v1:"), *salt_cols), 12)
 
     starts = adj.select("s1").distinct().select(
         F.concat(F.col("s1").cast("string"), F.lit("#0")).alias("walk"),
@@ -405,9 +419,7 @@ def node2vec_walks(
         starts.select("walk", F.col("cur").alias("node"), F.lit(0).alias("step"))
     ]
     # step 1: first-order uniform pick
-    h1 = _pick_hash(
-        1, [F.col("walk"), F.lit(":1:"), F.col("cur").cast("string")]
-    )
+    h1 = _pick_hash([F.col("walk"), F.lit(":1:"), F.col("cur").cast("string")])
     state = (
         starts.join(adj, starts["cur"] == adj["s1"])
         .filter(F.col("rn") == F.pmod(h1, F.col("d")))
@@ -437,15 +449,14 @@ def node2vec_walks(
             "prev",
             "cur",
             "x",
-            F.when(F.col("x") == F.col("prev"), F.lit(w_return))
-            .when(F.col("nf") == 1, F.lit(w_near))
-            .otherwise(F.lit(w_far))
+            F.when(F.col("x") == F.col("prev"), F.lit(N2V_W_RETURN))
+            .when(F.col("nf") == 1, F.lit(N2V_W_NEAR))
+            .otherwise(F.lit(N2V_W_FAR))
             .alias("wt"),
         )
         cw = Window.partitionBy("walk").orderBy("x")
         tw = Window.partitionBy("walk")
         ht = _pick_hash(
-            t,
             [
                 F.col("walk"),
                 F.lit(f":{t}:"),
@@ -477,89 +488,6 @@ def node2vec_walks(
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
-
-def personalized_pagerank(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    seeds: DataFrame,
-    iters: int = 3,
-    scale: int = PR_SCALE,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Personalized PageRank / random-walk-with-restart (Haveliwala
-    2002; Tong et al. 2006): identical integer arithmetic to
-    ``pagerank`` except ALL teleport mass returns to the ``seeds``
-    set — rank becomes proximity TO the seeds instead of global
-    importance, the classic graph-based recommender ("entities
-    related to these") and seed-expansion primitive. Seeds get the
-    initial mass ``scale div |S|`` and teleport
-    ``(100−d)·scale div (100·|S|)``; non-seeds get zero. Same plan
-    shape, persisted node set + degree-attached edges, and
-    exact-integer reproducibility as pagerank — the DuckDB oracle
-    unrolls identical iterations.
-
-    ``seeds`` is a single-column DataFrame of node ids (small — it
-    broadcasts onto the node set as a left-join flag).
-
-    Returns (node, ppr_scaled BIGINT) for every node.
-    """
-    from pyspark import StorageLevel
-
-    e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"))
-    nodes = (
-        e.select(F.col("__src").alias("node"))
-        .union(e.select(F.col("__dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    deg = e.groupBy("__src").agg(F.count("*").alias("__deg"))
-    ed = e.join(deg, "__src").persist(StorageLevel.MEMORY_AND_DISK)
-    sd = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-    flagged = (
-        nodes.join(sd.withColumn("__is_seed", F.lit(1)), "node", "left")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ns = F.broadcast(sd.agg(F.count("*").alias("__k")))
-
-    ranks = flagged.join(ns).select(
-        "node",
-        F.when(
-            F.col("__is_seed") == 1, F.expr(f"{scale} div __k")
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("__r"),
-    )
-    for _ in range(iters):
-        inbound = (
-            ed.join(ranks.withColumnRenamed("node", "__src"), "__src")
-            .select(F.col("__dst"), F.expr("__r div __deg").alias("__c"))
-            .groupBy("__dst")
-            .agg(F.sum("__c").alias("__s"))
-        )
-        ranks = (
-            flagged.join(
-                inbound.withColumnRenamed("__dst", "node"), "node", "left"
-            )
-            .join(ns)
-            .select(
-                "node",
-                (
-                    F.when(
-                        F.col("__is_seed") == 1,
-                        F.expr(
-                            f"({100 - damping_pct} * {scale}) div (100 * __k)"
-                        ),
-                    ).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({damping_pct} * coalesce(__s, 0L)) div 100"
-                    )
-                ).alias("__r"),
-            )
-        )
-    return ranks.select("node", F.col("__r").alias("ppr_scaled"))
-
 
 def kcore_peel(
     edges: DataFrame, src: str, dst: str, k: int = 2, rounds: int = 4

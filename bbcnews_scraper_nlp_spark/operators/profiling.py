@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .traindata import md5_int
+
 
 def column_profile(
     df: DataFrame, cols: list[str], exact_distinct: bool = True
@@ -111,9 +113,7 @@ def _cms_col(key: Column, row_i: Column, width: int) -> Column:
     DuckDB — ``CAST('0x' || substr(md5(...),1,8) AS BIGINT) % w`` —
     which is what makes CMS estimates hash-certifiable cross-engine."""
     tagged = F.concat(F.lit("cms-r"), row_i.cast("string"), F.lit(":"), key)
-    return (
-        F.conv(F.substring(F.md5(tagged), 1, 8), 16, 10).cast("bigint") % width
-    )
+    return md5_int(tagged, 8) % width
 
 
 def build_cms(
@@ -243,11 +243,7 @@ def kmv_hash(key: Column) -> Column:
     oracled). 48 bits keep every downstream integer expression —
     including (k-1)·2⁴⁸ div h_k — inside BIGINT with no overflow
     (60-bit hashes overflow the estimator's multiply)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(KMV_SALT), key.cast("string"))), 1, 12),
-        16,
-        10,
-    ).cast("long")
+    return md5_int(F.concat(F.lit(KMV_SALT), key.cast("string")), 12)
 
 
 def kmv_sketch(

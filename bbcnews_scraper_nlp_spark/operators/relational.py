@@ -13,6 +13,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traindata import md5_int
+
 
 def epoch_us(col: str | Column) -> Column:
     """Epoch microseconds from ANY timestamp flavor.
@@ -776,20 +778,7 @@ def hrw_shard(id_col: Column, n_shards: int, tag: str = "hrw-v1") -> Column:
     if not 0 < n_shards <= 16:
         raise ValueError("hrw_shard packs shard ids into 4 bits")
     packs = [
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"{tag}:{s}:"), id_col.cast("string")
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("long")
-        * 16
+        md5_int(F.concat(F.lit(f"{tag}:{s}:"), id_col.cast("string")), 12) * 16
         + s
         for s in range(n_shards)
     ]

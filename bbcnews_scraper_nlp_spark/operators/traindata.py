@@ -38,14 +38,20 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------
 
 
+def md5_int(key: Column, hex_digits: int) -> Column:
+    """The engine's md5 draw: the first ``hex_digits`` hex digits of
+    md5(key) as a non-negative BIGINT (``hex_digits`` <= 15). DuckDB
+    computes the same value as ``('0x' || substr(md5(key), 1, n))``,
+    which is what makes every md5-seeded sample, pick and sketch in the
+    engine hash-certifiable by its oracle."""
+    return F.conv(F.substring(F.md5(key), 1, hex_digits), 16, 10).cast("long")
+
+
 def hash_bucket(key: Column, buckets: int = 100) -> Column:
     """Stable bucket in [0, buckets) from md5 of the key — identical
     bytes-in/bucket-out on any engine that has md5 (unlike xxhash64 or
     rand(seed), which are engine-private)."""
-    return F.pmod(
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("long"),
-        F.lit(buckets),
-    )
+    return F.pmod(md5_int(key.cast("string"), 8), F.lit(buckets))
 
 
 def deterministic_split(
@@ -260,10 +266,9 @@ def deterministic_shuffle(
     One shuffle on shard; ``shards`` bounds the per-window input
     (pick shards >> cores so no partition outgrows memory). Changing
     ``salt`` produces an independent permutation (new epoch order)."""
-    h = F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")))
-    shard = F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(shards)
-    )
+    salted = F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))
+    h = F.md5(salted)
+    shard = F.pmod(md5_int(salted, 8), F.lit(shards))
     w = Window.partitionBy("shard").orderBy("__h", key_col)
     return (
         df.withColumn("__h", h)
@@ -296,11 +301,9 @@ def mix_sources(
     Scale: no shuffle, no state; the filter pushes into the scan
     stage alongside any other narrow predicate.
     """
-    h = F.md5(
-        F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))
-    )
     bucket = F.pmod(
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(buckets)
+        md5_int(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")), 8),
+        F.lit(buckets),
     )
     expr = None
     for src, w in sorted(weights.items()):
@@ -553,15 +556,8 @@ def weighted_sample(
     """
     strata_cols = strata_cols or []
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("double")
+        md5_int(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")), 13)
+        .cast("double")
         + 1.0
     ) / F.lit(float((1 << 52) + 1))
     rk = F.round(F.log(u) / F.col(weight_col), 6)

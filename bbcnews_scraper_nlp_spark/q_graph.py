@@ -13,6 +13,14 @@ from .operators import relational as R
 from .operators import similarity as S
 from .operators.relational import cap_hot_keys
 from .operators import textstats as TS
+from .operators.graph import (
+    N2V_W_FAR,
+    N2V_W_NEAR,
+    N2V_W_RETURN,
+    PR_DAMPING_PCT,
+    PR_SCALE,
+)
+from .operators.traindata import md5_int
 from .queries_base import register, STOPWORDS_SQL
 from .q_traindata import _BUCKET_SQL  # noqa: F401
 
@@ -63,14 +71,24 @@ _STRONG_TIE_CTES = (
 )
 
 
-def _strong_tie_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark twin of _STRONG_TIE_CTES: (s1, s2) with s1 < s2,
-    persisted (downstream graph ops re-read the cut several times)."""
+# integer-ppm common-customer Jaccard of a supplier pair, over the
+# columns _supplier_pairs returns
+_JACCARD_PPM = "cn * 1000000 div (d1 + d2 - cn)"
+
+
+def _supplier_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Supplier pairs s1 < s2 that share a customer: common-customer
+    count ``cn`` and both supplier degrees ``d1``/``d2`` over the
+    hot-basket-capped projection, ready to score with
+    ``F.expr(_JACCARD_PPM)``. The cap (never binding at test scale;
+    pytest pins both the bound and the no-op case) also bounds the
+    degrees, so Jaccard stays exact over the capped universe."""
     e0 = cap_hot_keys(_supplier_projection(spark, sf_dir), "c", 10_000)
     deg = e0.groupBy("s").agg(F.count("*").alias("d"))
     # renames above one explicit customer-keyed repartition: both
     # self-join sides reuse a single shuffle stage, so the
-    # scan⋈distinct⋈cap subtree derives once (the kNN-builder shape)
+    # scan⋈distinct⋈cap subtree derives once, and the pair stage runs
+    # at full width
     e0r = e0.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "c"
     )
@@ -81,20 +99,28 @@ def _strong_tie_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s1", "s2")
         .agg(F.count("*").alias("cn"))
     )
-    e = (
-        cn.join(deg.select(F.col("s").alias("s1"), F.col("d").alias("d1")), "s1")
-        .join(deg.select(F.col("s").alias("s2"), F.col("d").alias("d2")), "s2")
-        .orderBy(
-            F.desc(F.expr("cn * 1000000 div (d1 + d2 - cn)")), "s1", "s2"
-        )
+    return cn.join(
+        deg.select(F.col("s").alias("s1"), F.col("d").alias("d1")), "s1"
+    ).join(deg.select(F.col("s").alias("s2"), F.col("d").alias("d2")), "s2")
+
+
+def _strong_tie_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark twin of _STRONG_TIE_CTES's ``e``: the top-2000 supplier
+    pairs by Jaccard with a full tie-break, lazy."""
+    return (
+        _supplier_pairs(spark, sf_dir)
+        .orderBy(F.desc(F.expr(_JACCARD_PPM)), "s1", "s2")
         .limit(2000)
-        .select("s1", "s2")
-        .persist()
     )
-    return e
 
 
-def _pr_unroll_sql(iters: int, scale: int) -> tuple[str, str]:
+def _strong_tie_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The strong-tie cut as (s1, s2) with s1 < s2, persisted
+    (downstream graph ops re-read the cut several times)."""
+    return _strong_tie_cut(spark, sf_dir).select("s1", "s2").persist()
+
+
+def _pr_unroll_sql(iters: int) -> tuple[str, str]:
     """The unrolled integer-PageRank CTE chain (twin of
     operators.graph.pagerank's loop, DuckDB `//` arithmetic).
     Expects CTEs ``edges(src,dst)``, ``nodes(node)``, ``deg(src,d)``,
@@ -109,7 +135,8 @@ def _pr_unroll_sql(iters: int, scale: int) -> tuple[str, str]:
             f"FROM edges e JOIN {prev} r ON e.src = r.node "
             f"JOIN deg d ON e.src = d.src GROUP BY e.dst), "
             f"r{i} AS (SELECT nodes.node, "
-            f"(15 * {scale}) // (100 * n.n) + (85 * COALESCE(i{i}.s, 0)) // 100 "
+            f"({100 - PR_DAMPING_PCT} * {PR_SCALE}) // (100 * n.n) "
+            f"+ ({PR_DAMPING_PCT} * COALESCE(i{i}.s, 0)) // 100 "
             f"AS r FROM nodes CROSS JOIN n "
             f"LEFT JOIN i{i} ON nodes.node = i{i}.node)"
         )
@@ -117,10 +144,10 @@ def _pr_unroll_sql(iters: int, scale: int) -> tuple[str, str]:
     return ", ".join(its), prev
 
 
-def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
+def _pagerank_oracle_sql(iters: int = 3) -> str:
     """Unrolled integer-PageRank twin of operators.graph.pagerank:
     same teleport/damping integral arithmetic with DuckDB's `//`."""
-    unroll, last = _pr_unroll_sql(iters, scale)
+    unroll, last = _pr_unroll_sql(iters)
     return (
         f"WITH e0 AS ({_BIPROJ_SQL}), "
         "pairs AS (SELECT DISTINCT 'c' || CAST(c AS VARCHAR) AS c, "
@@ -130,7 +157,7 @@ def _pagerank_oracle_sql(iters: int = 3, scale: int = 10**12) -> str:
         "nodes AS (SELECT DISTINCT src AS node FROM edges), "
         "deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src), "
         "n AS (SELECT COUNT(*) AS n FROM nodes), "
-        f"r0 AS (SELECT node, {scale} // n.n AS r FROM nodes CROSS JOIN n), "
+        f"r0 AS (SELECT node, {PR_SCALE} // n.n AS r FROM nodes CROSS JOIN n), "
         + unroll
         + f" SELECT node, CAST(r AS BIGINT) AS pr_scaled FROM {last} "
         "ORDER BY pr_scaled DESC, node LIMIT 20"
@@ -185,15 +212,13 @@ def _knn_edges_ctes(k: int = 3) -> str:
     )
 
 
-def _ppr_oracle_sql(
-    iters: int = 3, scale: int = 10**12, n_seeds: int = 3
-) -> str:
+def _ppr_oracle_sql(iters: int = 3, n_seeds: int = 3) -> str:
     """Unrolled integer personalized-PageRank twin of operators.
-    graph.personalized_pagerank over the co-purchase graph: teleport
+    graph.pagerank with seeds over the co-purchase graph: teleport
     mass returns ONLY to the seed set (the n_seeds smallest supplier
     keys in the projection). edges/nodes/deg/sd are MATERIALIZED —
     every unrolled iteration re-reads them."""
-    tele = f"(15 * {scale}) // (100 * k)"
+    tele = f"({100 - PR_DAMPING_PCT} * {PR_SCALE}) // (100 * k)"
     parts = [
         f"WITH e0 AS ({_BIPROJ_SQL}), "
         "pairs AS (SELECT DISTINCT 'c' || CAST(c AS VARCHAR) AS c, "
@@ -207,7 +232,7 @@ def _ppr_oracle_sql(
         f"FROM (SELECT DISTINCT s FROM e0 ORDER BY s LIMIT {n_seeds})), "
         "ns AS (SELECT COUNT(*) AS k FROM sd), "
         "r0 AS (SELECT nodes.node, CASE WHEN sd.node IS NOT NULL THEN "
-        f"{scale} // k ELSE 0 END AS r FROM nodes CROSS JOIN ns "
+        f"{PR_SCALE} // k ELSE 0 END AS r FROM nodes CROSS JOIN ns "
         "LEFT JOIN sd ON nodes.node = sd.node)"
     ]
     prev = "r0"
@@ -218,7 +243,7 @@ def _ppr_oracle_sql(
             "JOIN deg d ON e.src = d.src GROUP BY e.dst)"
             f", r{i} AS (SELECT nodes.node, "
             f"CASE WHEN sd.node IS NOT NULL THEN {tele} ELSE 0 END "
-            f"+ (85 * COALESCE(i{i}.s, 0)) // 100 AS r "
+            f"+ ({PR_DAMPING_PCT} * COALESCE(i{i}.s, 0)) // 100 AS r "
             "FROM nodes CROSS JOIN ns "
             "LEFT JOIN sd ON nodes.node = sd.node "
             f"LEFT JOIN i{i} ON nodes.node = i{i}.node)"
@@ -234,7 +259,7 @@ def _ppr_oracle_sql(
 @register("ppr_related_entities", _ppr_oracle_sql())
 def ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank / random-walk-with-restart from a seed
-    set (graph.personalized_pagerank): proximity of every
+    set (graph.pagerank with seeds): proximity of every
     customer/supplier node to the 3 smallest-key suppliers over the
     co-purchase graph, top-20 — the graph-based "related entities"
     recommender (Tong et al. 2006 RWR; at corpus scale: documents /
@@ -247,7 +272,7 @@ def ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-table contract. At 100 TB: identical shuffle shape to
     pagerank — node-keyed joins + map-combinable sums; the seed flag
     is a broadcast left join."""
-    from .operators.graph import personalized_pagerank
+    from .operators.graph import pagerank
 
     proj = _supplier_projection(spark, sf_dir)
     pairs = proj.select(
@@ -264,8 +289,12 @@ def ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(3)
         .select(F.concat(F.lit("s"), F.col("s")).alias("node"))
     )
-    pr = personalized_pagerank(edges, "src", "dst", seeds, iters=3)
-    return pr.orderBy(F.desc("ppr_scaled"), "node").limit(20)
+    pr = pagerank(edges, "src", "dst", seeds, iters=3)
+    return (
+        pr.orderBy(F.desc("pr_scaled"), "node")
+        .limit(20)
+        .withColumnRenamed("pr_scaled", "ppr_scaled")
+    )
 
 
 def _lpa_oracle_sql(
@@ -347,35 +376,25 @@ def _supplier_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mutual-kNN supplier graph (symmetrized top-3 integer-ppm
     common-customer Jaccard ties) shared by
     community_detection_suppliers and community_modularity."""
-    e0 = cap_hot_keys(_supplier_projection(spark, sf_dir), "c", 10_000)
-    deg = e0.groupBy("s").agg(F.count("*").alias("d"))
-    # ordered pairs once (halves the user-keyed join fan-out — the
-    # dominant cost: Σ per-user-degree² rows), mirror the small
-    # aggregated table for the per-node window. The renames sit
-    # ABOVE one explicit customer-keyed repartition so both self-join
-    # sides reuse a single shuffle stage — the scan⋈distinct⋈cap
-    # subtree derives once, not once per side (the CF-family shape).
-    e0r = e0.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "c"
+    # score the ordered pairs once (the pair join is the dominant
+    # cost: Σ per-customer-degree² rows), then emit both directions of
+    # each scored pair for the per-node window — Jaccard is symmetric.
+    # inline, not a union: a union would carry the whole pair subtree
+    # twice through analysis and planning
+    sc = _supplier_pairs(spark, sf_dir).select(
+        "s1", "s2", F.expr(_JACCARD_PPM).alias("j")
     )
-    cno = (
-        e0r.select("c", F.col("s").alias("s1"))
-        .join(e0r.select("c", F.col("s").alias("s2")), "c")
-        .filter(F.col("s1") < F.col("s2"))
-        .groupBy("s1", "s2")
-        .agg(F.count("*").alias("cn"))
-    )
-    cnp = cno.union(cno.select(F.col("s2"), F.col("s1"), F.col("cn")))
-    sc = (
-        cnp.join(
-            deg.select(F.col("s").alias("s1"), F.col("d").alias("d1")), "s1"
+    scp = sc.select(
+        F.inline(
+            F.array(
+                F.struct("s1", "s2", "j"),
+                F.struct(F.col("s2").alias("s1"), F.col("s1").alias("s2"), "j"),
+            )
         )
-        .join(deg.select(F.col("s").alias("s2"), F.col("d").alias("d2")), "s2")
-        .withColumn("j", F.expr("cn * 1000000 div (d1 + d2 - cn)"))
     )
     w = Window.partitionBy("s1").orderBy(F.desc("j"), "s2")
     knn = (
-        sc.withColumn("rn", F.row_number().over(w))
+        scp.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("s1", "s2")
     )
@@ -536,12 +555,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _n2v_oracle_sql(
-    steps: int = 4,
-    w_return: int = 500,
-    w_near: int = 1000,
-    w_far: int = 2000,
-) -> str:
+def _n2v_oracle_sql(steps: int = 4) -> str:
     """Unrolled second-order node2vec twin of operators.graph.
     node2vec_walks: per step, candidate fan-out ⋈ near-flag left
     join ⋈ per-walk cumulative-weight window ⋈ md5 interval pick —
@@ -573,9 +587,9 @@ def _n2v_oracle_sql(
             f", c{t} AS (SELECT s.walk, s.prev, s.cur, a.dst AS x "
             f"FROM {prev} s JOIN adj a ON a.src = s.cur)"
             f", n{t} AS (SELECT c.walk, c.prev, c.cur, c.x, "
-            f"CASE WHEN c.x = c.prev THEN {w_return} "
-            f"WHEN ef.src IS NOT NULL THEN {w_near} "
-            f"ELSE {w_far} END AS wt "
+            f"CASE WHEN c.x = c.prev THEN {N2V_W_RETURN} "
+            f"WHEN ef.src IS NOT NULL THEN {N2V_W_NEAR} "
+            f"ELSE {N2V_W_FAR} END AS wt "
             f"FROM c{t} c LEFT JOIN edges ef "
             "ON ef.src = c.prev AND ef.dst = c.x)"
             f", st{t} AS MATERIALIZED (SELECT walk, cur AS prev, x AS cur "
@@ -713,22 +727,15 @@ def skipgram_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
             "center",
             "r",
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("neg-v1:"),
-                                F.col("center").cast("string"),
-                                F.lit(":"),
-                                F.col("r").cast("string"),
-                            )
-                        ),
-                        1,
-                        12,
+                md5_int(
+                    F.concat(
+                        F.lit("neg-v1:"),
+                        F.col("center").cast("string"),
+                        F.lit(":"),
+                        F.col("r").cast("string"),
                     ),
-                    16,
-                    10,
-                ).cast("long"),
+                    12,
+                ),
                 F.col("tw"),
             ).alias("d"),
         )
@@ -770,6 +777,59 @@ _SKIPGRAM_FINAL = (
 )
 
 
+def _walk_pmi(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Walk corpus -> ±2-window skip-gram pairs -> PMI over an (s1, s2)
+    edge table. Returns (corpus, pmi): the eager-checkpointed
+    random_walks corpus (the pair self-join reads it twice) and
+    (center, context, n_ab, pmi_milli), the pair counts scored in
+    integer milli-nats — one double ratio ln'd and rounded per pair
+    (the NB recipe)."""
+    from .operators.graph import random_walks
+
+    corpus = random_walks(edges, "s1", "s2", steps=4).localCheckpoint(
+        eager=True
+    )
+    a, b = corpus.alias("a"), corpus.alias("b")
+    pr = a.join(
+        b,
+        (F.col("a.walk") == F.col("b.walk"))
+        & (F.col("a.step") != F.col("b.step"))
+        & (F.abs(F.col("a.step") - F.col("b.step")) <= 2),
+    ).select(
+        F.col("a.node").alias("center"), F.col("b.node").alias("context")
+    )
+    pc = pr.groupBy("center", "context").agg(F.count("*").alias("n_ab"))
+    # the ±window pair relation is symmetric ((a,b) ⟺ (b,a) with the
+    # same count), so the center marginal IS the context marginal —
+    # one aggregation serves both joins (the oracle computes ctr and
+    # ctx separately; they are equal row sets by the same symmetry)
+    ctr = pc.groupBy("center").agg(F.sum("n_ab").alias("n_a"))
+    ctx = ctr.select(
+        F.col("center").alias("context"), F.col("n_a").alias("n_b")
+    )
+    tot = F.broadcast(pc.agg(F.sum("n_ab").alias("n")))
+    pmi = (
+        pc.join(ctr, "center")
+        .join(ctx, "context")
+        .join(tot)
+        .select(
+            "center",
+            "context",
+            "n_ab",
+            F.round(
+                F.lit(1000)
+                * F.log(
+                    (F.col("n_ab").cast("double") * F.col("n"))
+                    / (F.col("n_a").cast("double") * F.col("n_b"))
+                )
+            )
+            .cast("long")
+            .alias("pmi_milli"),
+        )
+    )
+    return corpus, pmi
+
+
 @register("walk_skipgram_pmi", _rw_oracle_sql(final=_SKIPGRAM_FINAL))
 def walk_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skip-gram training pairs + PMI over the deterministic walk
@@ -789,48 +849,12 @@ def walk_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe); TakeOrderedAndProject top-k. At 100 TB: pair volume =
     walks × window — linear in corpus, never quadratic in nodes;
     everything shuffles on walk id or node id."""
-    from .operators.graph import random_walks
-
-    edges = _supplier_knn_edges(spark, sf_dir)
-    corpus = random_walks(edges, "s1", "s2", steps=4).localCheckpoint(
-        eager=True
-    )
-    a, b = corpus.alias("a"), corpus.alias("b")
-    pr = a.join(
-        b,
-        (F.col("a.walk") == F.col("b.walk"))
-        & (F.col("a.step") != F.col("b.step"))
-        & (F.abs(F.col("a.step") - F.col("b.step")) <= 2),
-    ).select(
-        F.col("a.node").alias("center"), F.col("b.node").alias("context")
-    )
-    pc = pr.groupBy("center", "context").agg(F.count("*").alias("n_ab"))
-    # symmetric pair relation: the center marginal IS the context
-    # marginal — one aggregation serves both joins (the oracle's
-    # separate ctr/ctx CTEs compute the identical table)
-    ctr = pc.groupBy("center").agg(F.sum("n_ab").alias("n_a"))
-    ctx = ctr.select(
-        F.col("center").alias("context"), F.col("n_a").alias("n_b")
-    )
-    tot = F.broadcast(pc.agg(F.sum("n_ab").alias("n")))
-    sc = (
-        pc.join(ctr, "center")
-        .join(ctx, "context")
-        .join(tot)
-        .select(
-            F.col("center").cast("long").alias("center"),
-            F.col("context").cast("long").alias("context"),
-            F.col("n_ab").cast("long").alias("n_ab"),
-            F.round(
-                F.lit(1000)
-                * F.log(
-                    (F.col("n_ab").cast("double") * F.col("n"))
-                    / (F.col("n_a").cast("double") * F.col("n_b"))
-                )
-            )
-            .cast("long")
-            .alias("pmi_milli"),
-        )
+    _, pmi = _walk_pmi(_supplier_knn_edges(spark, sf_dir))
+    sc = pmi.select(
+        F.col("center").cast("long").alias("center"),
+        F.col("context").cast("long").alias("context"),
+        F.col("n_ab").cast("long").alias("n_ab"),
+        "pmi_milli",
     )
     return sc.orderBy(F.desc("pmi_milli"), "center", "context").limit(50)
 
@@ -930,46 +954,12 @@ def _pmi_embedding_from_edges(spark: SparkSession, edges: DataFrame):
     """walks -> PMI -> subspace iteration over an arbitrary (s1, s2)
     edge table — parameterized so the literal-Python twin in
     test_graph can replay the whole chain on a planted graph."""
-    from .operators.graph import random_walks
-
-    corpus = random_walks(edges, "s1", "s2", steps=4).localCheckpoint(
-        eager=True
-    )
-    a, b = corpus.alias("a"), corpus.alias("b")
-    pr = a.join(
-        b,
-        (F.col("a.walk") == F.col("b.walk"))
-        & (F.col("a.step") != F.col("b.step"))
-        & (F.abs(F.col("a.step") - F.col("b.step")) <= 2),
-    ).select(
-        F.col("a.node").alias("center"), F.col("b.node").alias("context")
-    )
-    pc = pr.groupBy("center", "context").agg(F.count("*").alias("n_ab"))
-    # the ±window pair relation is symmetric ((a,b) ⟺ (b,a) with the
-    # same count), so the center marginal IS the context marginal —
-    # one aggregation serves both joins (the oracle computes ctr and
-    # ctx separately; they are equal row sets by the same symmetry)
-    ctr = pc.groupBy("center").agg(F.sum("n_ab").alias("n_a"))
-    ctx = ctr.select(
-        F.col("center").alias("context"), F.col("n_a").alias("n_b")
-    )
-    tot = F.broadcast(pc.agg(F.sum("n_ab").alias("n")))
+    corpus, pmi = _walk_pmi(edges)
     mat = (
-        pc.join(ctr, "center")
-        .join(ctx, "context")
-        .join(tot)
-        .select(
+        pmi.select(
             F.col("center").alias("i"),
             F.col("context").alias("j"),
-            F.round(
-                F.lit(1000)
-                * F.log(
-                    (F.col("n_ab").cast("double") * F.col("n"))
-                    / (F.col("n_a").cast("double") * F.col("n_b"))
-                )
-            )
-            .cast("long")
-            .alias("w"),
+            F.col("pmi_milli").alias("w"),
         )
         .filter(F.col("w") > 0)
         .localCheckpoint(eager=True)
@@ -984,22 +974,15 @@ def _pmi_embedding_from_edges(spark: SparkSession, edges: DataFrame):
         "r",
         (
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("emb-v1:"),
-                                F.col("node").cast("string"),
-                                F.lit(":"),
-                                F.col("r").cast("string"),
-                            )
-                        ),
-                        1,
-                        12,
+                md5_int(
+                    F.concat(
+                        F.lit("emb-v1:"),
+                        F.col("node").cast("string"),
+                        F.lit(":"),
+                        F.col("r").cast("string"),
                     ),
-                    16,
-                    10,
-                ).cast("long"),
+                    12,
+                ),
                 F.lit(2001),
             )
             - 1000
@@ -1141,6 +1124,37 @@ def embedding_edge_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _capped_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer–part interaction table (u, i) shared by the
+    item-CF and butterfly queries: distinct orders⋈lineitem pairs,
+    baskets above 10k parts dropped by cap_hot_keys (the oracles
+    mirror the cap), materialized by an eager local checkpoint.
+
+    Materialized once because the degree agg, both self-join sides
+    and the hot-key semi-join's broadcast build each re-derive the
+    orders⋈lineitem distinct otherwise: broadcast boundaries block
+    exchange reuse (bench_subset sf0.1 best-of-3: CF family total
+    30.5 -> 27.1 s, item_item_recs_dimsum 9.41 -> 8.19 s)."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    ia = (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
+        .distinct()
+    )
+    # hash-partition by the join key BEFORE checkpointing: the
+    # checkpoint freezes partitioning, so a user-keyed self-join over
+    # it needs NO exchange, and the pair-gen map stage runs at full
+    # width instead of the AQE-coalesced ~11 partitions an un-keyed
+    # checkpoint froze (explicit count: a column-only repartition is
+    # AQE-coalescable, round-8 gotcha)
+    return (
+        cap_hot_keys(ia, "u", 10_000)
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "u")
+        .localCheckpoint(eager=True)
+    )
+
+
 def _item_cf_sql(min_co: int = 1) -> str:
     cofilter = f"HAVING COUNT(*) >= {min_co} " if min_co > 1 else ""
     return (
@@ -1177,29 +1191,7 @@ def item_item_recs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize."""
     from .operators.recommend import item_item_topk
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ia = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    # materialize the capped interaction table once: the degree agg,
-    # both self-join sides, and the hot-key semi-join's broadcast build
-    # each re-derive the orders x lineitem distinct otherwise (broadcast
-    # boundaries block exchange reuse) - bench_subset sf0.1 best-of-3:
-    # CF family total 30.5 -> 27.1s
-    # hash-partition by the join key BEFORE checkpointing: the
-    # checkpoint freezes partitioning, so the user-keyed self-join
-    # below reuses it with NO exchange, and the pair-gen map stage
-    # runs at full width instead of the AQE-coalesced ~11 partitions
-    # the un-keyed checkpoint froze (explicit count: a column-only
-    # repartition is AQE-coalescable, round-8 gotcha)
-    ia = (
-        cap_hot_keys(ia, "u", 10_000)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "u")
-        .localCheckpoint(eager=True)
-    )
+    ia = _capped_interactions(spark, sf_dir)
     return item_item_topk(ia, "u", "i", k=3)
 
 
@@ -1223,29 +1215,7 @@ def item_item_recs_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     count itself is map-side-combined anyway)."""
     from .operators.recommend import item_item_topk
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ia = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    # materialize the capped interaction table once: the degree agg,
-    # both self-join sides, and the hot-key semi-join's broadcast build
-    # each re-derive the orders x lineitem distinct otherwise (broadcast
-    # boundaries block exchange reuse) - bench_subset sf0.1 best-of-3:
-    # CF family total 30.5 -> 27.1s
-    # hash-partition by the join key BEFORE checkpointing: the
-    # checkpoint freezes partitioning, so the user-keyed self-join
-    # below reuses it with NO exchange, and the pair-gen map stage
-    # runs at full width instead of the AQE-coalesced ~11 partitions
-    # the un-keyed checkpoint froze (explicit count: a column-only
-    # repartition is AQE-coalescable, round-8 gotcha)
-    ia = (
-        cap_hot_keys(ia, "u", 10_000)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "u")
-        .localCheckpoint(eager=True)
-    )
+    ia = _capped_interactions(spark, sf_dir)
     return item_item_topk(ia, "u", "i", k=3, min_co=2)
 
 
@@ -1303,28 +1273,7 @@ def item_item_recs_dimsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair count is Σdeg² while this one is Σ(p·deg)² = O(items·γ²)."""
     from .operators.recommend import item_item_dimsum
 
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ia = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    # materialize the capped interaction table once (the exact-CF
-    # lesson: the degree broadcast build, the ia2 probe, and the
-    # hot-key semi-join each re-derived the distinct otherwise -
-    # bench_subset sf0.1 best-of-3: 9.41 -> 8.19s)
-    # hash-partition by the join key BEFORE checkpointing: the
-    # checkpoint freezes partitioning, so the user-keyed self-join
-    # below reuses it with NO exchange, and the pair-gen map stage
-    # runs at full width instead of the AQE-coalesced ~11 partitions
-    # the un-keyed checkpoint froze (explicit count: a column-only
-    # repartition is AQE-coalescable, round-8 gotcha)
-    ia = (
-        cap_hot_keys(ia, "u", 10_000)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "u")
-        .localCheckpoint(eager=True)
-    )
+    ia = _capped_interactions(spark, sf_dir)
     return item_item_dimsum(ia, "u", "i", k=3, gamma=6)
 
 
@@ -1452,24 +1401,7 @@ def butterfly_counts_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(items·γ²) wedge mass survives fixed task memory. co_s >= 2
     prune before the per-item explode (the exact query's contract);
     top-20 with the global total riding a 1-row broadcast."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ia = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    # hash-partition by the join key BEFORE checkpointing: the
-    # checkpoint freezes partitioning, so the user-keyed self-join
-    # below reuses it with NO exchange, and the pair-gen map stage
-    # runs at full width instead of the AQE-coalesced ~11 partitions
-    # the un-keyed checkpoint froze (explicit count: a column-only
-    # repartition is AQE-coalescable, round-8 gotcha)
-    ia = (
-        cap_hot_keys(ia, "u", 10_000)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "u")
-        .localCheckpoint(eager=True)
-    )
+    ia = _capped_interactions(spark, sf_dir)
     # Materialize the post-prune pair estimates ONCE: three consumers
     # read bf (the 1-row global total, and both sides of the per-item
     # union), and the total additionally rides in as a BROADCAST —
@@ -1502,8 +1434,8 @@ def butterfly_counts_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_n(out, [F.desc("bf_milli"), F.asc("item")], 20)
 
 
-def _textrank_sql(iters: int = 3, scale: int = 10**12) -> str:
-    unroll, last = _pr_unroll_sql(iters, scale)
+def _textrank_sql(iters: int = 3) -> str:
+    unroll, last = _pr_unroll_sql(iters)
     return (
         "WITH tok AS (SELECT doc_id, list_filter(string_split(text, ' '), "
         f"w -> len(w) > 2 AND NOT list_contains({STOPWORDS_SQL}, w)) AS t "
@@ -1523,7 +1455,7 @@ def _textrank_sql(iters: int = 3, scale: int = 10**12) -> str:
         "nodes AS (SELECT DISTINCT src AS node FROM edges), "
         "deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src), "
         "n AS (SELECT COUNT(*) AS n FROM nodes), "
-        f"r0 AS (SELECT node, {scale} // n.n AS r FROM nodes CROSS JOIN n), "
+        f"r0 AS (SELECT node, {PR_SCALE} // n.n AS r FROM nodes CROSS JOIN n), "
         + unroll
         + f" SELECT node AS word, CAST(r AS BIGINT) AS pr_scaled FROM {last} "
         "ORDER BY pr_scaled DESC, word LIMIT 20"
@@ -2126,33 +2058,8 @@ def link_prediction_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the join is AQE-skew-splittable; extreme hubs ARE df-capped
     via cap_hot_keys before pair generation) → pair-count agg → two degree joins
     → TakeOrderedAndProject top-20."""
-    # hot-basket cap (never binds at test scale — adversarial pytest
-    # pins both the bound and the no-op case); degrees computed on
-    # the same capped universe so Jaccard stays exact over it
-    e = cap_hot_keys(_supplier_projection(spark, sf_dir), "c", 10_000)
-    deg = e.groupBy("s").agg(F.count("*").alias("d"))
-    # shared explicit exchange for the self-join (renames above it) —
-    # one derivation of the projection subtree, full-width pair stage
-    er = e.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "c"
-    )
-    a = er.select("c", F.col("s").alias("s1"))
-    b = er.select("c", F.col("s").alias("s2"))
-    cn = (
-        a.join(b, "c")
-        .filter(F.col("s1") < F.col("s2"))
-        .groupBy("s1", "s2")
-        .agg(F.count("*").alias("cn"))
-    )
-    scored = (
-        cn.join(deg.select(F.col("s").alias("s1"), F.col("d").alias("d1")), "s1")
-        .join(deg.select(F.col("s").alias("s2"), F.col("d").alias("d2")), "s2")
-        .select(
-            "s1",
-            "s2",
-            "cn",
-            F.expr("cn * 1000000 div (d1 + d2 - cn)").alias("jaccard_ppm"),
-        )
+    scored = _supplier_pairs(spark, sf_dir).select(
+        "s1", "s2", "cn", F.expr(_JACCARD_PPM).alias("jaccard_ppm")
     )
     return scored.orderBy(F.desc("jaccard_ppm"), "s1", "s2").limit(20)
 
@@ -2277,31 +2184,9 @@ def shortest_paths_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation — state stays distributed, no driver reads."""
     from .operators.graph import bounded_shortest_paths
 
-    e0 = cap_hot_keys(_supplier_projection(spark, sf_dir), "c", 10_000)
-    deg = e0.groupBy("s").agg(F.count("*").alias("d"))
-    # shared explicit exchange for the self-join (renames above it)
-    e0r = e0.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")), "c"
-    )
-    cn = (
-        e0r.select("c", F.col("s").alias("s1"))
-        .join(e0r.select("c", F.col("s").alias("s2")), "c")
-        .filter(F.col("s1") < F.col("s2"))
-        .groupBy("s1", "s2")
-        .agg(F.count("*").alias("cn"))
-    )
     cut = (
-        cn.join(deg.select(F.col("s").alias("s1"), F.col("d").alias("d1")), "s1")
-        .join(deg.select(F.col("s").alias("s2"), F.col("d").alias("d2")), "s2")
-        .orderBy(
-            F.desc(F.expr("cn * 1000000 div (d1 + d2 - cn)")), "s1", "s2"
-        )
-        .limit(2000)
-        .select(
-            "s1",
-            "s2",
-            F.expr("1000001 - cn * 1000000 div (d1 + d2 - cn)").alias("w"),
-        )
+        _strong_tie_cut(spark, sf_dir)
+        .select("s1", "s2", F.expr(f"1000001 - {_JACCARD_PPM}").alias("w"))
         # each of the 4 unrolled hops re-reads the 2000-row edge cut;
         # persist it rather than re-running the projection build per
         # hop
@@ -3487,7 +3372,7 @@ def table_fingerprint_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100, 0).cast("long").cast("string"),
         R.epoch_us("o_orderdate").cast("string"),
     )
-    rh = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("long")
+    rh = md5_int(canon, 15)
     return orders.select(rh.alias("rh")).agg(
         F.count("*").alias("n_rows"),
         F.expr("bit_xor(rh)").cast("long").alias("fingerprint"),
@@ -3902,24 +3787,7 @@ def butterfly_counts_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     item-keyed sum, TakeOrderedAndProject. At 100 TB identical to
     the wedge-count phase of distributed rectangle counting: SUM
     C(co,2) never materializes a 4-cycle."""
-    orders = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    ia = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("u"), F.col("l_partkey").alias("i"))
-        .distinct()
-    )
-    # hash-partition by the join key BEFORE checkpointing: the
-    # checkpoint freezes partitioning, so the user-keyed self-join
-    # below reuses it with NO exchange, and the pair-gen map stage
-    # runs at full width instead of the AQE-coalesced ~11 partitions
-    # the un-keyed checkpoint froze (explicit count: a column-only
-    # repartition is AQE-coalescable, round-8 gotcha)
-    ia = (
-        cap_hot_keys(ia, "u", 10_000)
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "u")
-        .localCheckpoint(eager=True)
-    )
+    ia = _capped_interactions(spark, sf_dir)
     # one explicit user-keyed exchange, renames above it (ReusedExchange;
     # full-width pair stage — the recommend.item_item_topk shape)
     iar = ia.repartition(

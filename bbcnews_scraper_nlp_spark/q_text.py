@@ -13,6 +13,7 @@ from .functions.tokenize import BPE_ISH_PATTERN, bpe_ish_tokens
 from .operators import similarity as S
 from .operators import textstats as TS
 from .operators.dedup import MERSENNE31, content_hash, ngram_jaccard_pairs
+from .operators.traindata import md5_int
 from .queries_base import register, _sql_str_list, STOPWORDS_SQL
 
 
@@ -903,10 +904,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.col("text"), " ")
     hashed = F.transform(
         toks,
-        lambda w: F.pmod(
-            F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"),
-            F.lit(MERSENNE31),
-        ),
+        lambda w: F.pmod(md5_int(w, 8), F.lit(MERSENNE31)),
     )
     fp = F.aggregate(
         hashed,

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from .catalog import load_table
 from .operators import relational as R
 from .operators import textstats as TS
+from .operators.traindata import md5_int
 from .queries_base import register
 from .q_certificates import _MINHASH_PAIR_SELECT, _minhash_pair_ctes  # noqa: F401
 
@@ -1339,22 +1340,15 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
     ).withColumn(
         "u",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("boot-v1:"),
-                        F.col("event_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                12,
+        md5_int(
+            F.concat(
+                F.lit("boot-v1:"),
+                F.col("event_id").cast("string"),
+                F.lit(":"),
+                F.col("b").cast("string"),
             ),
-            16,
-            10,
-        ).cast("long")
+            12,
+        )
         % 1000000,
     )
     wexpr = F.lit(8)
@@ -1819,22 +1813,15 @@ def lsa_embed_documents(spark: SparkSession, docs: DataFrame) -> DataFrame:
         "r",
         (
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("lsa-v1:"),
-                                F.col("w"),
-                                F.lit(":"),
-                                F.col("r").cast("string"),
-                            )
-                        ),
-                        1,
-                        12,
+                md5_int(
+                    F.concat(
+                        F.lit("lsa-v1:"),
+                        F.col("w"),
+                        F.lit(":"),
+                        F.col("r").cast("string"),
                     ),
-                    16,
-                    10,
-                ).cast("long"),
+                    12,
+                ),
                 F.lit(2001),
             )
             - 1000

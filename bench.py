@@ -53,10 +53,13 @@ def time_query(spark, name: str, sf_dir: str) -> dict:
     and ``exec_s`` only reads the result. It
     also records ``rows``, the ``jobs`` it started (the job-id range
     from ``first_job``, which counts streaming micro-batch jobs too) and
-    the codegen ``compiles``/``compile_s`` it paid. The record is the
-    best run's fields plus ``best_s`` = build_s + exec_s and every run
-    under ``runs``. If any run raises, the record is ``{"error": ...}``
-    with no timing: a query that fails half the time is not benched.
+    the codegen ``compiles``/``compile_s`` it paid. The runs' jobs carry
+    ``name`` as their Spark job description, cleared when the runs end
+    (a stream's micro-batch jobs keep Spark's per-batch description).
+    The record is the best run's fields plus ``best_s`` = build_s +
+    exec_s and every run under ``runs``. If any run raises, the record
+    is ``{"error": ...}`` with no timing: a query that fails half the
+    time is not benched.
     Bookkeeping runs outside the timed regions. The query's blocks are
     released (untimed) in a ``finally`` so the next query starts from an
     empty storage pool: accumulated blocks otherwise push mid-run
@@ -67,6 +70,7 @@ def time_query(spark, name: str, sf_dir: str) -> dict:
     sc = spark.sparkContext
     runs = []
     try:
+        sc.setJobDescription(name)
         for _ in range(REPS):
             job0, (compiles0, compile_s0) = last_job_id(sc), codegen_stats(spark)
             t0 = time.perf_counter()
@@ -91,6 +95,7 @@ def time_query(spark, name: str, sf_dir: str) -> dict:
         rec = {"error": f"{type(e).__name__}: {e}"[:300]}
         print(f"# {name}: FAILED ({rec['error'][:160]})", file=sys.stderr)
     finally:
+        sc.setLocalProperty("spark.job.description", None)
         try:
             release_blocks(spark)
         except Exception:  # noqa: BLE001

@@ -55,3 +55,13 @@ def test_time_query_partial_failure_is_an_error(spark, monkeypatch):
     assert records["_steady"]["rows"] == 100
     assert records["_steady"]["best_s"] > 0
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
+def test_time_query_names_its_jobs(spark, sf_dir):
+    rec = bench.time_query(spark, "w1_rolling_trend", sf_dir)
+    store = spark.sparkContext._jsc.sc().statusStore()
+    for run in rec["runs"]:
+        for job_id in range(run["first_job"], run["first_job"] + run["jobs"]):
+            desc = store.job(job_id).description()
+            assert desc.isDefined() and desc.get() == "w1_rolling_trend", job_id
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None

@@ -19,6 +19,12 @@ QUERIES = [
     "link_prediction_suppliers", # ppm jaccard over self-join pairs
     "ols_trend_per_type",        # integer-rational regression
     "concurrent_sessions_sweep", # sweep-line running sum
+    # shared graph inputs; the first three freeze a width-dependent
+    # repartition into a checkpoint
+    "item_item_recs_topk",       # capped interaction table
+    "community_detection_suppliers",  # supplier Jaccard kNN + LPA
+    "walk_skipgram_pmi",         # walk corpus -> skip-gram PMI
+    "ppr_related_entities",      # seeded pagerank
 ]
 
 

@@ -377,10 +377,7 @@ def test_node2vec_bias_literal_python_replay(spark):
 
 
 def test_personalized_pagerank_mass_concentrates_at_seeds(spark):
-    from bbcnews_scraper_nlp_spark.operators.graph import (
-        pagerank,
-        personalized_pagerank,
-    )
+    from bbcnews_scraper_nlp_spark.operators.graph import pagerank
 
     # star: hub h connected to spokes a..e both ways; seed = {a}
     spokes = ["a", "b", "c", "d", "e"]
@@ -388,8 +385,8 @@ def test_personalized_pagerank_mass_concentrates_at_seeds(spark):
     df = spark.createDataFrame(pairs, "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "node string")
     got = {
-        r["node"]: r["ppr_scaled"]
-        for r in personalized_pagerank(df, "src", "dst", seeds).collect()
+        r["node"]: r["pr_scaled"]
+        for r in pagerank(df, "src", "dst", seeds).collect()
     }
     # seed and hub hold nearly all mass; a beats every other spoke
     assert got["a"] > got["b"] == got["c"] == got["d"] == got["e"]
@@ -400,20 +397,25 @@ def test_personalized_pagerank_mass_concentrates_at_seeds(spark):
         for r in pagerank(df, "src", "dst").collect()
     }
     assert gl["a"] == gl["b"]
+    # every node a seed: the restart mass and teleport are exactly
+    # global pagerank's
+    every = spark.createDataFrame([(x,) for x in ["h"] + spokes], "node string")
+    assert {
+        r["node"]: r["pr_scaled"]
+        for r in pagerank(df, "src", "dst", every).collect()
+    } == gl
 
 
 def test_personalized_pagerank_unreachable_gets_zero(spark):
-    from bbcnews_scraper_nlp_spark.operators.graph import (
-        personalized_pagerank,
-    )
+    from bbcnews_scraper_nlp_spark.operators.graph import pagerank
 
     # two disconnected components; seed in one -> the other gets 0
     pairs = [("a", "b"), ("b", "a"), ("x", "y"), ("y", "x")]
     df = spark.createDataFrame(pairs, "src string, dst string")
     seeds = spark.createDataFrame([("a",)], "node string")
     got = {
-        r["node"]: r["ppr_scaled"]
-        for r in personalized_pagerank(df, "src", "dst", seeds).collect()
+        r["node"]: r["pr_scaled"]
+        for r in pagerank(df, "src", "dst", seeds).collect()
     }
     assert got["x"] == 0 and got["y"] == 0
     assert got["a"] > 0 and got["b"] > 0

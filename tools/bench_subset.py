@@ -7,7 +7,9 @@ tail, or one query under study) against any sf directory, e.g. one
 generated by tools/make_sf1.py. Each query goes through
 ``bench.time_query``, the same best-of-2 loop bench.py uses. Stdout is
 one JSON line; stderr shows, per query, each run's build/exec split,
-jobs and codegen compiles, then the job list of the best run.
+jobs and codegen compiles, then the job list of the best run (each
+job's description, which ``time_query`` sets to the query name, and
+its call site).
 
     python tools/bench_subset.py <sf_dir> <query> [query ...]
 """
@@ -45,8 +47,10 @@ def main() -> None:
             )
         for job_id in range(rec["first_job"], rec["first_job"] + rec["jobs"]):
             job = store.job(job_id)
+            desc = job.description()
             print(
-                f"   job {job_id:>4} tasks={job.numTasks():>4} {job.name()[:70]}",
+                f"   job {job_id:>4} tasks={job.numTasks():>4} "
+                f"[{desc.get() if desc.isDefined() else ''}] {job.name()[:70]}",
                 file=sys.stderr,
             )
     out = {
