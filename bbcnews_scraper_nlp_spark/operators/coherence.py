@@ -42,7 +42,27 @@ def umass_coherence(
     topics_terms: (topic, term, rank) — rank 0 = highest weight.
     Returns (topic, coherence, n_pairs).
     """
-    # distinct (doc, term) pairs, restricted to terms any topic uses
+    _, _, scored = _umass_frames(docs_tokens, topics_terms, id_col, tokens_col)
+    return scored.groupBy("topic").agg(
+        F.avg("score").alias("coherence"), F.count("*").alias("n_pairs")
+    )
+
+
+def _umass_frames(
+    docs_tokens: DataFrame,
+    topics_terms: DataFrame,
+    id_col: str,
+    tokens_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared UMass pair scoring: returns (doc_term, term_df, scored).
+
+    doc_term is the distinct (doc, term) pairs restricted to terms
+    any topic uses, term_df each term's doc-freq (term, df); scored
+    has one row per ordered topic pair
+    (topic, term_i, term_j, rank_i, rank_j, co_df, df_j, score) with
+    score = log((D(wi,wj)+1)/D(wj)). umass_coherence averages it;
+    umass_certificate caches doc_term (its three consumers) before
+    its one action and audits the counts."""
     wanted = topics_terms.select("term").distinct()
     doc_term = (
         docs_tokens.select(
@@ -76,16 +96,15 @@ def umass_coherence(
 
     scored = (
         pairs.join(co, ["topic", "term_i", "term_j"], "left")
-        .join(term_df.select(F.col("term").alias("term_j"), "df"), "term_j", "left")
-        .withColumn("co_df", F.coalesce("co_df", F.lit(0)))
-        .withColumn(
-            "score",
-            F.log((F.col("co_df") + 1) / F.col("df")),
+        .join(
+            term_df.select(F.col("term").alias("term_j"), F.col("df").alias("df_j")),
+            "term_j",
+            "left",
         )
+        .withColumn("co_df", F.coalesce("co_df", F.lit(0)))
+        .withColumn("score", F.log((F.col("co_df") + 1) / F.col("df_j")))
     )
-    return scored.groupBy("topic").agg(
-        F.avg("score").alias("coherence"), F.count("*").alias("n_pairs")
-    )
+    return doc_term, term_df, scored
 
 
 def umass_certificate(
@@ -120,59 +139,25 @@ def umass_certificate(
                                    df_j ≥ 2 ⇒ score ≤ log((df+1)/df)
                                    ≤ log(3/2))
 
-    Plan shape matches ``umass_coherence`` (one doc-term explode
-    keyed shuffle, broadcast pair probe). The certificate is
-    finalized EAGERLY: doc_term is cached, the ≤ 6k+1 summary rows
-    are collected, the cache is released, and the result returns as
-    a literal DataFrame — so one corpus pass serves all three
-    doc_term consumers and the caller can safely unpersist its own
-    token cache as soon as this returns (the caching-contract
-    release path lives inside this function).
+    The pair scoring is ``umass_coherence``'s own (``_umass_frames``:
+    one doc-term explode keyed shuffle, broadcast pair probe). The
+    certificate is finalized EAGERLY: doc_term is cached, the
+    ≤ 6k+1 summary rows are collected, the cache is released, and
+    the result returns as a literal DataFrame — so one corpus pass
+    serves all three doc_term consumers.
     """
     import math
 
     n_docs = docs_tokens.count()
 
-    wanted = topics_terms.select("term").distinct()
-    doc_term = docs_tokens.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(F.col(tokens_col))).alias("term"),
-    ).join(F.broadcast(wanted), "term", "left_semi").cache()
-
-    term_df = doc_term.groupBy("term").agg(F.count("*").alias("df"))
-
-    ti = topics_terms.select(
-        "topic", F.col("term").alias("term_i"), F.col("rank").alias("rank_i")
+    doc_term, term_df, scored = _umass_frames(
+        docs_tokens, topics_terms, id_col, tokens_col
     )
-    tj = topics_terms.select(
-        "topic", F.col("term").alias("term_j"), F.col("rank").alias("rank_j")
-    )
-    pairs = ti.join(tj, "topic").filter(F.col("rank_i") > F.col("rank_j"))
-
-    dt_i = doc_term.select(F.col("term").alias("term_i"), "doc")
-    dt_j = doc_term.select(F.col("term").alias("term_j"), "doc")
-    co = (
-        pairs.select("topic", "term_i", "term_j")
-        .join(dt_i, "term_i")
-        .join(dt_j, ["term_j", "doc"])
-        .groupBy("topic", "term_i", "term_j")
-        .agg(F.count("*").alias("co_df"))
-    )
-
-    scored = (
-        pairs.join(co, ["topic", "term_i", "term_j"], "left")
-        .join(
-            term_df.select(F.col("term").alias("term_j"), F.col("df").alias("df_j")),
-            "term_j",
-            "left",
-        )
-        .join(
-            term_df.select(F.col("term").alias("term_i"), F.col("df").alias("df_i")),
-            "term_i",
-            "left",
-        )
-        .withColumn("co_df", F.coalesce("co_df", F.lit(0)))
-        .withColumn("score", F.log((F.col("co_df") + 1) / F.col("df_j")))
+    doc_term.cache()
+    scored = scored.join(
+        term_df.select(F.col("term").alias("term_i"), F.col("df").alias("df_i")),
+        "term_i",
+        "left",
     )
 
     n_terms = topics_terms.groupBy("topic").agg(

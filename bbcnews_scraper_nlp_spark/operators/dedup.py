@@ -679,23 +679,14 @@ def remove_dup_spans(
     Plan: per-doc position-grams from one array slice projection (no
     self-join); ONE corpus-wide gram-count shuffle; duplicated
     positions explode to covered token indices (n rows per dup gram,
-    bounded); an anti-join drops covered tokens; ordered reassembly
-    is a max-struct-free sort-in-array aggregate (array_sort of
-    (idx, word) structs), exact in any aggregation order. High-count
-    grams (boilerplate) are the natural skew — they fan out n covered
-    indices per INSTANCE (linear, not quadratic like pair joins), so
-    no cap is needed.
+    bounded); ``remove_covered`` drops covered tokens and reassembles
+    the survivors in order. High-count grams (boilerplate) are the
+    natural skew — they fan out n covered indices per INSTANCE
+    (linear, not quadratic like pair joins), so no cap is needed.
 
     Returns (id, clean_text, n_removed).
     """
-    toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
-        lambda t: t != "",
-    )
-    base = df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
-    tok = base.select(
-        "__id", F.posexplode("__toks").alias("idx", "word")
-    )
+    base = token_frame(df, id_col, text_col)
     gram_arr = F.when(
         F.size("__toks") >= n,
         F.transform(
@@ -709,7 +700,9 @@ def remove_dup_spans(
         ),
     ).otherwise(F.array().cast("array<struct<pos:int,gram:string>>"))
     g = base.select("__id", F.explode(gram_arr).alias("g")).select(
-        "__id", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram")
+        "__id",
+        F.col("g.pos").cast("long").alias("pos"),
+        F.col("g.gram").alias("gram"),
     )
     dup = (
         g.groupBy("gram")
@@ -727,6 +720,34 @@ def remove_dup_spans(
         )
         .distinct()
     )
+    return remove_covered(base, cov, id_col)
+
+
+def token_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(__id, __toks): each document's whitespace tokens, empty
+    tokens dropped — the token positions every span operator
+    (``remove_dup_spans``, ``suffixarray``) indexes."""
+    toks = F.filter(
+        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
+        lambda t: t != "",
+    )
+    return df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
+
+
+def remove_covered(base: DataFrame, cov: DataFrame, id_col: str) -> DataFrame:
+    """Delete covered tokens and reassemble each document in order.
+
+    ``base`` is a ``token_frame``; ``cov`` holds the covered token
+    positions (__id, idx: bigint), one row per covered token. An
+    anti-join drops them, and ordered reassembly is a max-struct-free
+    sort-in-array aggregate (array_sort of (idx, word) structs),
+    exact in any aggregation order.
+
+    Returns (id, clean_text, n_removed) for EVERY document of base
+    (clean_text = the original tokens when nothing was removed)."""
+    tok = base.select(
+        "__id", F.posexplode("__toks").alias("idx", "word")
+    ).withColumn("idx", F.col("idx").cast("long"))
     keep = tok.join(cov, ["__id", "idx"], "left_anti")
     clean = keep.groupBy("__id").agg(
         F.array_join(

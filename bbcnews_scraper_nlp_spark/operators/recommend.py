@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .traindata import md5_int
+
 PPM = 1_000_000
 
 
@@ -120,6 +122,53 @@ def item_item_topk(
     )
 
 
+def dimsum_draw(ia: DataFrame, gamma: int) -> tuple[DataFrame, DataFrame]:
+    """The DIMSUM per-entry draw over (u, i) interactions, shared by
+    ``item_item_dimsum`` and ``q_graph.butterfly_sampled_counts``:
+    entry (u, i) is kept iff n_i <= γ² or H²·n_i < γ²·2⁴⁰, where H is
+    the 20-bit draw ``md5_int('dimsum-v1:u:i', 5)``.
+
+    Returns ``(deg, keptr)``: deg (i, n) the item degrees, keptr
+    (u, i) the kept entries on ONE explicit user-keyed exchange, so a
+    self-join of keptr reuses it (rename above it → ReusedExchange),
+    the md5 draw runs once per entry, and the compute-bound pair
+    stage keeps full parallelism (ENSURE_REQUIREMENTS off a
+    stats-free checkpoint scan was AQE-coalesced to 9 tasks at
+    sf0.1)."""
+    g2 = gamma * gamma
+    deg = ia.groupBy("i").agg(F.count("*").alias("n"))
+    # BROADCAST the item-degree table onto the entries: deg is
+    # items-sized but carries unknown stats off a checkpointed scan,
+    # so the un-hinted join planned as a sort-merge — an extra
+    # exchange+sort of the full entry table per self-join side, with
+    # the draw filter evaluated inside the merge as a join residual
+    ia2 = ia.join(F.broadcast(deg), "i").select("u", "i", "n")
+    # The draw predicate H²·n < γ²·2⁴⁰ evaluated in the threshold
+    # form H² < (γ²·2⁴⁰ − 1) div n + 1: identical kept set for every
+    # positive integer n (a·n < C ⟺ a ≤ (C−1) div n ⟺ a <
+    # (C−1) div n + 1), but every operand now fits int64 at ANY
+    # degree (H² < 2⁴⁰ since H is 20 bits; the per-row threshold is
+    # ≤ γ²·2⁴⁰ < 2⁴⁶), so the hot entry filter runs in pure BIGINT
+    # codegen instead of Decimal128 interpretation — measured ~2x on
+    # the 600k-entry filter at sf0.1 — while staying bit-equal to
+    # the DuckDB HUGEINT oracle predicate at every degree.
+    h = md5_int(
+        F.concat(
+            F.lit("dimsum-v1:"),
+            F.col("u").cast("string"),
+            F.lit(":"),
+            F.col("i").cast("string"),
+        ),
+        5,
+    )
+    kept = ia2.filter(
+        (F.col("n") <= g2)
+        | (h * h < F.expr(f"{g2 * (1 << 40) - 1} div n + 1"))
+    )
+    npart = int(ia.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return deg, kept.select("u", "i").repartition(npart, "u")
+
+
 def item_item_dimsum(
     interactions: DataFrame,
     user_col: str = "user",
@@ -171,36 +220,9 @@ def item_item_dimsum(
     genuinely unbiased one) and may exceed 10⁶.
     """
     g2 = gamma * gamma
-    ia = interactions.select(
-        F.col(user_col).alias("u"), F.col(item_col).alias("i")
-    )
-    deg = ia.groupBy("i").agg(F.count("*").alias("n"))
-    # BROADCAST the item-degree table onto the entries: deg is
-    # items-sized but carries unknown stats off a checkpointed scan,
-    # so the un-hinted join planned as a sort-merge — an extra
-    # exchange+sort of the full entry table per self-join side, with
-    # the draw filter evaluated inside the merge as a join residual
-    ia2 = ia.join(F.broadcast(deg), "i").select("u", "i", "n")
-    # The draw predicate H²·n < γ²·2⁴⁰ evaluated in the threshold
-    # form H² < (γ²·2⁴⁰ − 1) div n + 1: identical kept set for every
-    # positive integer n (a·n < C ⟺ a ≤ (C−1) div n ⟺ a <
-    # (C−1) div n + 1), but every operand now fits int64 at ANY
-    # degree (H² < 2⁴⁰ since H is 20 bits; the per-row threshold is
-    # ≤ γ²·2⁴⁰ < 2⁴⁶), so the hot entry filter runs in pure BIGINT
-    # codegen instead of Decimal128 interpretation — measured ~2x on
-    # the 600k-entry filter at sf0.1 — while staying bit-equal to
-    # the DuckDB HUGEINT oracle predicate at every degree.
-    kept = ia2.filter(
-        F.expr(
-            f"n <= {g2}"
-            " or (cast(conv(substring(md5(concat('dimsum-v1:',"
-            " cast(u as string), ':', cast(i as string))), 1, 5),"
-            " 16, 10) as bigint)"
-            " * cast(conv(substring(md5(concat('dimsum-v1:',"
-            " cast(u as string), ':', cast(i as string))), 1, 5),"
-            " 16, 10) as bigint))"
-            f" < ((cast({g2} as bigint) * {1 << 40} - 1) div n + 1)"
-        )
+    deg, keptr = dimsum_draw(
+        interactions.select(F.col(user_col).alias("u"), F.col(item_col).alias("i")),
+        gamma,
     )
     # degrees do NOT ride the pair stream: n is a function of i, so
     # MAX(n) per (i, j) group equals a post-count degree join — but
@@ -208,15 +230,7 @@ def item_item_dimsum(
     # Σ(p·deg)² partial rows and fattened the (i, j) exchange ~40%
     # (profiled 363 MB at sf0.1, the query's dominant stage).
     # Re-attach degrees to the aggregated pairs via broadcast
-    # instead. The self-join reuses ONE explicit user-keyed exchange
-    # (rename above it), so the kept-filter md5 runs once per entry
-    # and the compute-bound pair stage keeps full parallelism
-    # (ENSURE_REQUIREMENTS off a stats-free checkpoint scan was
-    # AQE-coalesced to 9 tasks at sf0.1).
-    npart = int(
-        interactions.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    keptr = kept.select("u", "i").repartition(npart, "u")
+    # instead.
     co = (
         keptr.join(keptr.select("u", F.col("i").alias("j")), "u")
         .filter(F.col("i") != F.col("j"))

@@ -444,6 +444,76 @@ def cosine_pairs(
     )
 
 
+def _cos6(a: str, na: str, b: str, nb: str) -> Column:
+    """ROUND-6 cosine from two array columns and their hoisted norms:
+    dot/(norm·norm), cosine()'s own expression tree, so the value is
+    bit-identical to the un-hoisted form the oracles pin."""
+    return F.round(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _forgy_cells(
+    df: DataFrame, vec_col: str, id_col: str, n_centroids: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Deterministic Forgy cells, the one cell assigner of
+    ``ivf_fixed_topk``, ``semdedup`` and ``ivfadc_topk``: the
+    centroids are the vectors of the ``n_centroids`` smallest ids, and
+    each vector goes to the argmax of its ROUND-6 cosine to a
+    centroid, ties to the lower cell id — bit-stable across engines.
+
+    Returns ``(emb, cent, assigned)``: emb (vid, ev, ne) with the
+    per-vector norm hoisted below the centroid fan-out (computed once
+    per vector, not once per centroid), cent (cell, cv, nc), and
+    assigned (vid, cell). The centroid table broadcasts; the argmax
+    is a map-side-combined max-struct aggregate."""
+    cent = (
+        df.orderBy(id_col)
+        .limit(n_centroids)
+        .select(
+            F.col(id_col).alias("cell"),
+            F.col(vec_col).cast("array<double>").alias("cv"),
+            norm(F.col(vec_col).cast("array<double>")).alias("nc"),
+        )
+    )
+    emb = df.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).cast("array<double>").alias("ev"),
+        norm(F.col(vec_col).cast("array<double>")).alias("ne"),
+    )
+    assigned = (
+        emb.crossJoin(F.broadcast(cent))
+        .groupBy("vid")
+        .agg(
+            F.max(
+                F.struct(
+                    _cos6("ev", "ne", "cv", "nc").alias("s"),
+                    (-F.col("cell")).alias("negc"),
+                )
+            ).alias("m")
+        )
+        .select("vid", (-F.col("m.negc")).alias("cell"))
+    )
+    return emb, cent, assigned
+
+
+def _probe_cells(
+    emb: DataFrame, cent: DataFrame, query_id: int, n_probe: int
+) -> tuple[DataFrame, DataFrame]:
+    """The query vector and its ``n_probe`` nearest cells: returns
+    ``(q, probe)``, q (qv, nq) one row, probe (cell, cv) ordered by
+    ROUND-6 cosine to the query, ties to the lower cell id."""
+    q = emb.filter(F.col("vid") == query_id).select(
+        F.col("ev").alias("qv"), F.col("ne").alias("nq")
+    )
+    probe = (
+        cent.crossJoin(F.broadcast(q))
+        .select("cell", "cv", _cos6("cv", "nc", "qv", "nq").alias("qs"))
+        .orderBy(F.desc("qs"), F.col("cell"))
+        .limit(n_probe)
+        .select("cell", "cv")
+    )
+    return q, probe
+
+
 def ivf_fixed_topk(
     df: DataFrame,
     vec_col: str,
@@ -474,66 +544,16 @@ def ivf_fixed_topk(
     needs learned centroids — keep KMeans for quality, use this for
     cross-engine verification and as the partition-pruned layout.
     """
-    cent = (
-        df.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-            norm(F.col(vec_col).cast("array<double>")).alias("nc"),
-        )
-    )
-    # per-vector norm hoisted below the centroid fan-out (computed
-    # once, not once per centroid) and reused by the probe scoring —
-    # bit-identical to cosine()'s own expression tree
-    emb = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("ev"),
-        norm(F.col(vec_col).cast("array<double>")).alias("ne"),
-    )
-    sim = F.round(
-        dot(F.col("ev"), F.col("cv")) / (F.col("ne") * F.col("nc")), 6
-    )
-    assigned = (
-        emb.crossJoin(F.broadcast(cent))
-        .groupBy("vid")
-        .agg(
-            F.max(
-                F.struct(sim.alias("s"), (-F.col("cell")).alias("negc"))
-            ).alias("m")
-        )
-        .select("vid", (-F.col("m.negc")).alias("cell"))
-    )
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        norm(F.col(vec_col).cast("array<double>")).alias("nq"),
-    )
-    probe = (
-        cent.crossJoin(F.broadcast(q))
-        .select(
-            "cell",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (F.col("nc") * F.col("nq")),
-                6,
-            ).alias("qs"),
-        )
-        .orderBy(F.desc("qs"), F.col("cell"))
-        .limit(n_probe)
-        .select("cell")
-    )
+    emb, cent, assigned = _forgy_cells(df, vec_col, id_col, n_centroids)
+    q, probe = _probe_cells(emb, cent, query_id, n_probe)
     scored = (
-        assigned.join(F.broadcast(probe), "cell", "left_semi")
+        assigned.join(F.broadcast(probe.select("cell")), "cell", "left_semi")
         .join(emb, "vid")
         .crossJoin(F.broadcast(q))
         .filter(F.col("vid") != query_id)
         .select(
             F.col("vid").alias(id_col),
-            F.round(
-                dot(F.col("ev"), F.col("qv"))
-                / (F.col("ne") * F.col("nq")),
-                6,
-            ).alias("cosine"),
+            _cos6("ev", "ne", "qv", "nq").alias("cosine"),
         )
     )
     return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
@@ -582,37 +602,7 @@ def semdedup(
             "when max_cell capping is enabled; it cannot be derived from "
             "an array<float> schema without running a job"
         )
-    cent = (
-        df.orderBy(id_col)
-        .limit(n_centroids)
-        .select(
-            F.col(id_col).alias("cell"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-            norm(F.col(vec_col).cast("array<double>")).alias("nc"),
-        )
-    )
-    # per-row norm hoisted below the centroid fan-out AND the pair
-    # join: computed once per vector instead of once per centroid /
-    # once per in-cell partner (bit-identical — dot/(ne*nc) with the
-    # norms hoisted is cosine's own expression tree)
-    emb = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("ev"),
-        norm(F.col(vec_col).cast("array<double>")).alias("ne"),
-    )
-    sim = F.round(
-        dot(F.col("ev"), F.col("cv")) / (F.col("ne") * F.col("nc")), 6
-    )
-    assigned = (
-        emb.crossJoin(F.broadcast(cent))
-        .groupBy("vid")
-        .agg(
-            F.max(
-                F.struct(sim.alias("s"), (-F.col("cell")).alias("negc"))
-            ).alias("m")
-        )
-        .select("vid", (-F.col("m.negc")).alias("cell"))
-    )
+    emb, _, assigned = _forgy_cells(df, vec_col, id_col, n_centroids)
     # one row per vector (id, semantic cell, vector) — persisted
     # because the self-join's two branches and the output projection
     # would otherwise each recompute the assignment agg (same policy
@@ -654,12 +644,7 @@ def semdedup(
     )
     dups = (
         a.join(b, (F.col("c1") == F.col("c2")) & (F.col("id_1") < F.col("id_2")))
-        .filter(
-            F.round(
-                dot(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")), 6
-            )
-            >= threshold
-        )
+        .filter(_cos6("v1", "n1", "v2", "n2") >= threshold)
         .select(F.col("id_2").alias("vid"))
         .distinct()
         .withColumn("__dup", F.lit(True))
@@ -668,6 +653,71 @@ def semdedup(
         F.col("vid").alias(id_col),
         F.col("cell"),
         F.coalesce(F.col("__dup"), F.lit(False)).alias("is_dup"),
+    )
+
+
+def _d2s(a: Column, b: Column) -> Column:
+    """Squared distance built from ROUND-6 dot products and
+    integer-scaled (ROUND(d2·1e6) as BIGINT), so argmins and sums
+    over it are exact integer arithmetic in any aggregation order."""
+    d2 = F.round(dot(a, a), 6) + F.round(dot(b, b), 6) - 2 * F.round(dot(a, b), 6)
+    return F.round(d2 * F.lit(1e6)).cast("long")
+
+
+def _pq_adc(
+    vecs: DataFrame,
+    queries: DataFrame,
+    arr: str,
+    id_col: str,
+    query_id: int,
+    m: int,
+    dsub: int,
+    ksub: int,
+    k: int,
+) -> DataFrame:
+    """PQ encode + ADC top-k, shared by ``pq_adc_topk`` and
+    ``ivfadc_topk``. ``vecs`` is (vid, *keys, arr) — the vectors to
+    encode; ``queries`` is (*keys, arr) — the query vector once per
+    key (IVFADC keys by ``cell``: the query residual per probed
+    cell). Each vector splits into ``m`` subvectors of ``dsub`` dims;
+    the Forgy codebook is the subvectors of the ``ksub`` smallest
+    vids; a code is the min-struct argmin of ``_d2s`` (code
+    tie-break); the query distance table is (*keys, j, code, ds), and
+    a vector's ADC distance sums it over its codes."""
+    keys = [c for c in vecs.columns if c not in ("vid", arr)]
+
+    def _subs(frame):
+        cols = [c for c in frame.columns if c != arr]
+        jcol = F.explode(F.array([F.lit(j) for j in range(m)])).alias("j")
+        return frame.select(*cols, jcol, arr).select(
+            *cols, "j", F.slice(arr, F.col("j") * dsub + 1, dsub).alias("sv")
+        )
+
+    cb = _subs(vecs.orderBy("vid").limit(ksub).select("vid", arr)).select(
+        F.col("vid").alias("code"), "j", F.col("sv").alias("cw")
+    )
+    dist = _d2s(F.col("sv"), F.col("cw")).alias("ds")
+    codes = (
+        _subs(vecs)
+        .join(F.broadcast(cb), "j")
+        .groupBy("vid", *keys, "j")
+        .agg(F.min(F.struct(dist, F.col("code").alias("code"))).alias("mn"))
+        .select("vid", *keys, "j", F.col("mn.code").alias("code"))
+    )
+    qdist = (
+        _subs(queries).join(F.broadcast(cb), "j").select(*keys, "j", "code", dist)
+    )
+    return (
+        codes.filter(F.col("vid") != query_id)
+        .join(F.broadcast(qdist), [*keys, "j", "code"])
+        .groupBy("vid")
+        .agg(F.sum("ds").alias("ss"))
+        .select(
+            F.col("vid").alias(id_col),
+            (F.col("ss") / F.lit(1e6)).alias("adc_dist"),
+        )
+        .orderBy("adc_dist", id_col)
+        .limit(k)
     )
 
 
@@ -711,57 +761,8 @@ def pq_adc_topk(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    jcol = F.explode(F.array([F.lit(j) for j in range(m)])).alias("j")
-
-    def _subs(frame):
-        return frame.select("vid", jcol, "v").select(
-            "vid",
-            "j",
-            F.slice("v", F.col("j") * dsub + 1, dsub).alias("sv"),
-        )
-
-    def _d2s(a, b):
-        d2 = (
-            F.round(dot(a, a), 6)
-            + F.round(dot(b, b), 6)
-            - 2 * F.round(dot(a, b), 6)
-        )
-        return F.round(d2 * F.lit(1e6)).cast("long")
-
-    cb = _subs(emb.orderBy("vid").limit(ksub)).select(
-        F.col("vid").alias("code"), "j", F.col("sv").alias("cw")
-    )
-    codes = (
-        _subs(emb)
-        .join(F.broadcast(cb), "j")
-        .groupBy("vid", "j")
-        .agg(
-            F.min(
-                F.struct(
-                    _d2s(F.col("sv"), F.col("cw")).alias("ds"),
-                    F.col("code").alias("code"),
-                )
-            ).alias("mn")
-        )
-        .select("vid", "j", F.col("mn.code").alias("code"))
-    )
-    qdist = (
-        _subs(emb.filter(F.col("vid") == query_id))
-        .join(F.broadcast(cb), "j")
-        .select("j", "code", _d2s(F.col("sv"), F.col("cw")).alias("ds"))
-    )
-    return (
-        codes.filter(F.col("vid") != query_id)
-        .join(F.broadcast(qdist), ["j", "code"])
-        .groupBy("vid")
-        .agg(F.sum("ds").alias("ss"))
-        .select(
-            F.col("vid").alias(id_col),
-            (F.col("ss") / F.lit(1e6)).alias("adc_dist"),
-        )
-        .orderBy("adc_dist", id_col)
-        .limit(k)
-    )
+    query = emb.filter(F.col("vid") == query_id).select("v")
+    return _pq_adc(emb, query, "v", id_col, query_id, m, dsub, ksub, k)
 
 
 def ivfadc_topk(
@@ -797,114 +798,22 @@ def ivfadc_topk(
     n_probe·m·ksub rows, and reduces with one integer groupBy. No
     raw-vector shuffle anywhere after the one-time encode.
     """
-    emb = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        norm(F.col(vec_col).cast("array<double>")).alias("nv"),
-    )
-    cent = (
-        emb.orderBy("vid")
-        .limit(n_centroids)
-        .select(
-            F.col("vid").alias("cell"),
-            F.col("v").alias("cv"),
-            F.col("nv").alias("ncv"),
-        )
-    )
-    # per-vector norm hoisted below the centroid fan-out — computed
-    # once per vector, not once per centroid (bit-identical values)
-    sim = F.round(
-        dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6
-    )
-    assigned = (
-        emb.crossJoin(F.broadcast(cent))
-        .groupBy("vid")
-        .agg(
-            F.max(F.struct(sim.alias("s"), (-F.col("cell")).alias("negc"))).alias("mx")
-        )
-        .select("vid", (-F.col("mx.negc")).alias("cell"))
-    )
+    emb, cent, assigned = _forgy_cells(df, vec_col, id_col, n_centroids)
     resid = (
         assigned.join(emb, "vid")
         .join(F.broadcast(cent), "cell")
         .select(
             "vid",
             "cell",
-            F.zip_with("v", "cv", lambda a, b: a - b).alias("rv"),
+            F.zip_with("ev", "cv", lambda a, b: a - b).alias("rv"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    jcol = F.explode(F.array([F.lit(j) for j in range(m)])).alias("j")
-
-    def _subs(frame, arr):
-        return frame.select("*", jcol).select(
-            frame.columns[0],
-            *(c for c in frame.columns[1:] if c != arr),
-            "j",
-            F.slice(arr, F.col("j") * dsub + 1, dsub).alias("sv"),
-        )
-
-    def _d2s(a, b):
-        d2 = (
-            F.round(dot(a, a), 6)
-            + F.round(dot(b, b), 6)
-            - 2 * F.round(dot(a, b), 6)
-        )
-        return F.round(d2 * F.lit(1e6)).cast("long")
-
-    cb = _subs(
-        resid.orderBy("vid").limit(ksub).select("vid", "rv"), "rv"
-    ).select(F.col("vid").alias("code"), "j", F.col("sv").alias("cw"))
-    codes = (
-        _subs(resid.select("vid", "cell", "rv"), "rv")
-        .join(F.broadcast(cb), "j")
-        .groupBy("vid", "cell", "j")
-        .agg(
-            F.min(
-                F.struct(
-                    _d2s(F.col("sv"), F.col("cw")).alias("ds"),
-                    F.col("code").alias("code"),
-                )
-            ).alias("mn")
-        )
-        .select("vid", "cell", "j", F.col("mn.code").alias("code"))
-    )
-    q = emb.filter(F.col("vid") == query_id).select(
-        F.col("v").alias("qv"), F.col("nv").alias("nqv")
-    )
-    probe = (
-        cent.crossJoin(F.broadcast(q))
-        .select(
-            "cell", "cv",
-            F.round(
-                dot(F.col("cv"), F.col("qv"))
-                / (F.col("ncv") * F.col("nqv")),
-                6,
-            ).alias("qs"),
-        )
-        .orderBy(F.desc("qs"), F.col("cell"))
-        .limit(n_probe)
-    )
+    q, probe = _probe_cells(emb, cent, query_id, n_probe)
     qres = probe.crossJoin(F.broadcast(q)).select(
-        "cell", F.zip_with("qv", "cv", lambda a, b: a - b).alias("qr")
+        "cell", F.zip_with("qv", "cv", lambda a, b: a - b).alias("rv")
     )
-    qdist = (
-        _subs(qres.select("cell", "qr"), "qr")
-        .join(F.broadcast(cb), "j")
-        .select("cell", "j", "code", _d2s(F.col("sv"), F.col("cw")).alias("ds"))
-    )
-    return (
-        codes.filter(F.col("vid") != query_id)
-        .join(F.broadcast(qdist), ["cell", "j", "code"])
-        .groupBy("vid")
-        .agg(F.sum("ds").alias("ss"))
-        .select(
-            F.col("vid").alias(id_col),
-            (F.col("ss") / F.lit(1e6)).alias("adc_dist"),
-        )
-        .orderBy("adc_dist", id_col)
-        .limit(k)
-    )
+    return _pq_adc(resid, qres, "rv", id_col, query_id, m, dsub, ksub, k)
 
 
 def cosine_topk_batch(

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import remove_covered, token_frame
+
 
 def _two_level_rank(
     df: DataFrame,
@@ -177,11 +179,7 @@ def suffix_window_ranks(
     optimization only."""
     assert seed_log2 <= window_log2
     seed = 1 << seed_log2
-    toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
-        lambda t: t != "",
-    )
-    base = df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
+    base = token_frame(df, id_col, text_col)
     g = base.select(
         "__id",
         F.size("__toks").alias("n_toks"),
@@ -353,9 +351,9 @@ def remove_duplicated_spans(
     suffix-array version). Coverage comes from the merged island
     intervals — one row per covered TOKEN (linear fanout; islands
     are disjoint per document by construction, so no distinct is
-    needed) — an anti-join drops covered tokens, and ordered
-    reassembly is the sort-in-array aggregate (array_sort of
-    (idx, word) structs), exact in any aggregation order.
+    needed) — and ``dedup.remove_covered`` drops covered tokens and
+    reassembles the survivors in order (the n-gram sibling's own
+    reassembly).
 
     Returns (id, clean_text, n_removed) for EVERY input document
     (clean_text = original text's tokens when nothing was removed).
@@ -364,42 +362,13 @@ def remove_duplicated_spans(
         df, id_col, text_col, span_len=span_len,
         min_count=min_count, buckets=buckets,
     )
-    toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
-        lambda t: t != "",
-    )
-    base = df.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
-    tok = base.select(
-        "__id", F.posexplode("__toks").alias("idx", "word")
-    ).withColumn("idx", F.col("idx").cast("long"))
     cov = spans.select(
         F.col(id_col).alias("__id"),
         F.explode(
             F.sequence(F.col("span_start"), F.col("span_end") - 1)
         ).alias("idx"),
     )
-    keep = tok.join(cov, ["__id", "idx"], "left_anti")
-    clean = keep.groupBy("__id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("idx", "word"))),
-                lambda s: s["word"],
-            ),
-            " ",
-        ).alias("clean_text"),
-        F.count("*").alias("__nk"),
-    )
-    return (
-        base.select("__id", F.size("__toks").alias("__nt"))
-        .join(clean, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
-            (F.col("__nt") - F.coalesce(F.col("__nk"), F.lit(0)))
-            .cast("long")
-            .alias("n_removed"),
-        )
-    )
+    return remove_covered(token_frame(df, id_col, text_col), cov, id_col)
 
 
 def contaminated_spans(

@@ -62,6 +62,34 @@ def fit_count_vectorizer(
     return cv.fit(df)
 
 
+def vectorize(
+    df: DataFrame,
+    tokens_col: str = "tokens",
+    min_df: float = 10.0,
+    max_df: float = 0.9,
+) -> tuple[CountVectorizerModel, DataFrame]:
+    """The one vectorize step before every LDA fit: returns
+    ``(cv_model, vectors)``, the fitted CountVectorizer and df plus
+    its doc-term ``features``, coalesced to ``fit_partitions``.
+
+    Both the token frame and the vectors are cached: the CV fit, the
+    CV transform and each of the online optimizer's minibatch
+    iterations would otherwise recompute the upstream tokenize/clean
+    chain, and the caller's own action (transform, coherence counts)
+    reads the same blocks. The runner that runs the action releases
+    them (``session.release_blocks``)."""
+    df = df.cache()
+    n_docs = df.count()
+    cv_model = fit_count_vectorizer(
+        df, tokens_col=tokens_col, min_df=min_df, max_df=max_df
+    )
+    vectors = cv_model.transform(df)
+    target = fit_partitions(df, n_docs)
+    if target < vectors.rdd.getNumPartitions():
+        vectors = vectors.coalesce(target)
+    return cv_model, vectors.cache()
+
+
 def fit_lda(
     vectorized: DataFrame,
     k: int = 12,
@@ -134,24 +162,11 @@ def lda_pipeline(
 
     The label join is J1: a broadcast left join against a k-row dim
     (topic_modelling.ipynb:1692-1696, cell 29)."""
-    # cache the token arrays: CV fit, CV transform, and the LDA
-    # minibatch iterations would otherwise each recompute the
-    # upstream tokenize/clean chain
-    df = df.cache()
-    n_docs = df.count()
-    cv_model = fit_count_vectorizer(
+    cv_model, vectorized = vectorize(
         df, tokens_col=tokens_col, min_df=min_df, max_df=max_df
     )
-    target = fit_partitions(df, n_docs)
-    vectorized = cv_model.transform(df)
-    if target < vectorized.rdd.getNumPartitions():
-        vectorized = vectorized.coalesce(target)
-    vectorized = vectorized.cache()
     model = fit_lda(vectorized, k=k, max_iter=max_iter, seed=seed)
-    transformed = model.transform(vectorized)
-    dom = dominant_topics(transformed, id_col)
-    vectorized.unpersist(blocking=False)
-    df.unpersist(blocking=False)
+    dom = dominant_topics(model.transform(vectorized), id_col)
     kw = topic_keywords(model, cv_model.vocabulary, num_words)
     out = dom.join(
         F.broadcast(kw), dom.dominant_topic == kw.topic_num, "left"

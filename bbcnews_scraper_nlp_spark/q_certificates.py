@@ -881,6 +881,37 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The one corpus and model the three LDA certificates share: clean
+# tokens of every document with a nonempty token chain, fit at k=4.
+_LDA_K, _LDA_ITERS, _LDA_MIN_DF, _LDA_SEED = 4, 10, 2.0, 42
+
+
+def _lda_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tokens) for every document with a nonempty clean-token
+    chain, read through the predicate-bound barrier scan."""
+    from .functions.text_clean import clean_tokens
+
+    docs = load_table(spark, sf_dir, "documents", widen="barrier")
+    return docs.select(
+        "doc_id", clean_tokens(F.col("text")).alias("tokens")
+    ).filter(F.size("tokens") > 0)
+
+
+def _lda_topic_terms(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Fit the shared LDA model and return ``(toks, terms)``: the
+    cached corpus and each topic's 10 top terms (topic, term, rank),
+    the input both coherence certificates score."""
+    from .operators.coherence import topics_terms_from_model
+    from .operators.topics import fit_lda, vectorize
+
+    toks = _lda_corpus(spark, sf_dir)
+    cv, vectors = vectorize(toks, min_df=_LDA_MIN_DF)
+    model = fit_lda(vectors, k=_LDA_K, max_iter=_LDA_ITERS, seed=_LDA_SEED)
+    return toks, topics_terms_from_model(model, cv.vocabulary, num_words=10)
+
+
 _LDA_CERT_SQL = f"""
 WITH toks AS (SELECT {_sql_tokens_expr('text')} AS t FROM documents)
 SELECT 'n_docs_scored' AS chk, CAST(count(*) AS BIGINT) AS val
@@ -907,16 +938,11 @@ def lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic). The per-doc relation itself stays available via
     operators/topics.lda_pipeline; pytest covers planted-cluster
     recovery and seed stability."""
-    from .functions.text_clean import clean_tokens
     from .operators.topics import lda_pipeline
 
-    docs = load_table(spark, sf_dir, "documents", widen="barrier")
-    toks = docs.select(
-        "doc_id", clean_tokens(F.col("text")).alias("tokens")
-    ).filter(F.size("tokens") > 0)
     out = lda_pipeline(
-        toks, id_col="doc_id", tokens_col="tokens", k=4, max_iter=10,
-        min_df=2.0, seed=42,
+        _lda_corpus(spark, sf_dir), id_col="doc_id", tokens_col="tokens",
+        k=_LDA_K, max_iter=_LDA_ITERS, min_df=_LDA_MIN_DF, seed=_LDA_SEED,
     )
     agg = out.agg(
         F.count("*").cast("long").alias("n_rows"),
@@ -972,30 +998,10 @@ def m3_coherence_umass(spark: SparkSession, sf_dir: str) -> DataFrame:
     [-ln n_docs, ln 1.5]). See operators/coherence.umass_certificate;
     the raw (topic, coherence, n_pairs) relation stays available via
     umass_coherence + a 1e-9 literal-Python pytest oracle."""
-    from .functions.text_clean import clean_tokens
-    from .operators.coherence import topics_terms_from_model, umass_certificate
-    from .operators.topics import fit_count_vectorizer, fit_lda, fit_partitions
+    from .operators.coherence import umass_certificate
 
-    docs = load_table(spark, sf_dir, "documents", widen="barrier")
-    toks = docs.select(
-        "doc_id", clean_tokens(F.col("text")).alias("tokens")
-    ).filter(F.size("tokens") > 0).cache()
-    n_docs = toks.count()
-    cv = fit_count_vectorizer(toks, min_df=2.0)
-    feat = cv.transform(toks)
-    target = fit_partitions(feat, n_docs)
-    if target < feat.rdd.getNumPartitions():
-        feat = feat.coalesce(target)
-    # cache the doc-term vectors: each of the online optimizer's
-    # minibatch iterations re-pays the CountVectorizer transform
-    # otherwise (the lda_pipeline contract)
-    feat = feat.cache()
-    model = fit_lda(feat, k=4, max_iter=10, seed=42)
-    feat.unpersist(blocking=False)
-    terms = topics_terms_from_model(model, cv.vocabulary, num_words=10)
-    out = umass_certificate(toks, terms, min_df=2)
-    toks.unpersist(blocking=False)
-    return out
+    toks, terms = _lda_topic_terms(spark, sf_dir)
+    return umass_certificate(toks, terms, min_df=2)
 
 
 _CV_CERT_SQL = f"""
@@ -1033,30 +1039,10 @@ def m3_coherence_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cv_certificate); the raw (topic, coherence, n_terms) relation
     stays available via cv_coherence + its 1e-9 literal-Python
     pytest oracle."""
-    from .functions.text_clean import clean_tokens
-    from .operators.coherence import cv_certificate, topics_terms_from_model
-    from .operators.topics import fit_count_vectorizer, fit_lda, fit_partitions
+    from .operators.coherence import cv_certificate
 
-    docs = load_table(spark, sf_dir, "documents", widen="barrier")
-    toks = docs.select(
-        "doc_id", clean_tokens(F.col("text")).alias("tokens")
-    ).filter(F.size("tokens") > 0).cache()
-    n_docs = toks.count()
-    cv = fit_count_vectorizer(toks, min_df=2.0)
-    feat = cv.transform(toks)
-    target = fit_partitions(feat, n_docs)
-    if target < feat.rdd.getNumPartitions():
-        feat = feat.coalesce(target)
-    # cache the doc-term vectors: each of the online optimizer's
-    # minibatch iterations re-pays the CountVectorizer transform
-    # otherwise (the lda_pipeline contract)
-    feat = feat.cache()
-    model = fit_lda(feat, k=4, max_iter=10, seed=42)
-    feat.unpersist(blocking=False)
-    terms = topics_terms_from_model(model, cv.vocabulary, num_words=10)
-    out = cv_certificate(toks, terms, window=110)
-    toks.unpersist(blocking=False)
-    return out
+    toks, terms = _lda_topic_terms(spark, sf_dir)
+    return cv_certificate(toks, terms, window=110)
 
 
 @register(

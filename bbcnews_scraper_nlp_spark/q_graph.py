@@ -1286,39 +1286,15 @@ def butterfly_sampled_counts(ia: DataFrame, gamma: int = 6) -> DataFrame:
     correction 1/(p_i·p_j)² = (n_i·n_j)/(min(n_i,γ²)·min(n_j,γ²)) is
     an exact integer rational: est_milli = co_s·(co_s−1)·500·n_i·n_j
     div (min·min), DECIMAL(38,0) lane."""
+    from .operators.recommend import dimsum_draw
+
     g2 = gamma * gamma
-    deg = ia.groupBy("i").agg(F.count("*").alias("n"))
-    # broadcast deg: unknown stats off the checkpointed scan
-    # otherwise plan a sort-merge join (extra exchange + sort of the
-    # whole entry table) — the recommend.item_item_dimsum lesson
-    ia2 = ia.join(F.broadcast(deg), "i").select("u", "i", "n")
-    # threshold form of H²·n < γ²·2⁴⁰ (see recommend.item_item_dimsum):
-    # identical kept set, every operand int64-safe at any degree,
-    # pure BIGINT codegen instead of Decimal128 interpretation
-    kept = ia2.filter(
-        F.expr(
-            f"n <= {g2}"
-            " or (cast(conv(substring(md5(concat('dimsum-v1:',"
-            " cast(u as string), ':', cast(i as string))), 1, 5),"
-            " 16, 10) as bigint)"
-            " * cast(conv(substring(md5(concat('dimsum-v1:',"
-            " cast(u as string), ':', cast(i as string))), 1, 5),"
-            " 16, 10) as bigint))"
-            f" < ((cast({g2} as bigint) * {1 << 40} - 1) div n + 1)"
-        )
-    )
+    deg, keptr = dimsum_draw(ia, gamma)
     # degrees re-attach AFTER the (i, j) count via broadcast joins —
     # n is a function of the item, so this equals the oracle's
     # MAX(n) per group while keeping the pair exchange to
     # (i, j, count) partials only (the recommend.item_item_dimsum
     # lesson: riding degrees fattened the dominant shuffle ~40%).
-    # ONE explicit user-keyed exchange feeds both self-join sides
-    # (rename above it → ReusedExchange, md5 draw runs once, full
-    # parallelism on the compute-bound pair stage).
-    npart = int(
-        ia.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    keptr = kept.select("u", "i").repartition(npart, "u")
     co = (
         keptr.join(keptr.select("u", F.col("i").alias("j")), "u")
         .filter(F.col("i") < F.col("j"))

@@ -25,6 +25,11 @@ QUERIES = [
     "community_detection_suppliers",  # supplier Jaccard kNN + LPA
     "walk_skipgram_pmi",         # walk corpus -> skip-gram PMI
     "ppr_related_entities",      # seeded pagerank
+    # shared text and vector stages
+    "semdedup_embeddings",       # Forgy cells + within-cell pairs
+    "similarity_ivfadc_topk",    # Forgy cells + PQ encode/ADC
+    "suffix_span_removal",       # suffix coverage + shared reassembly
+    "item_item_recs_dimsum",     # shared DIMSUM md5 draw
 ]
 
 

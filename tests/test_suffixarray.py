@@ -136,6 +136,31 @@ def test_span_removal_matches_python_twin_on_testdata(spark, sf_dir):
     assert len(got) == docs.count()
 
 
+def test_suffix_removal_equals_ngram_removal_on_testdata(spark, sf_dir):
+    """Suffix-array removal at span_len=16 deletes exactly the tokens
+    n-gram removal at n=16, min_count=2 deletes (the
+    suffix_span_removal oracle's claim): island coverage is the union
+    of duplicated 16-gram windows. Both feed dedup.remove_covered, so
+    this pins the shared reassembly from both coverage steps."""
+    from bbcnews_scraper_nlp_spark.operators.dedup import remove_dup_spans
+
+    docs = load_table(spark, sf_dir, "documents")
+    suffix = sorted(
+        tuple(r)
+        for r in remove_duplicated_spans(
+            docs, "doc_id", "text", span_len=16, min_count=2
+        ).collect()
+    )
+    ngram = sorted(
+        tuple(r)
+        for r in remove_dup_spans(
+            docs, "doc_id", "text", n=16, min_count=2
+        ).collect()
+    )
+    assert suffix == ngram
+    assert any(n > 0 for _, _, n in suffix)
+
+
 def test_rank_is_bijective_with_window_content(spark, tiny):
     ranked = suffix_window_ranks(tiny, "doc_id", "text", window_log2=4)
     rows = ranked.collect()

@@ -119,6 +119,27 @@ def test_sweep_k_cv_metric_prefers_true_k(spark, planted):
     assert scores[3] > scores[2]
 
 
+def test_lda_topics_reads_its_cache(spark, sf_dir):
+    """lda_topics' final job reads the cached doc-term vectors: the
+    vectorize step's blocks live until the runner releases them, so
+    the certificate's action does not recompute tokenize -> CV
+    transform. Its rows still equal the DuckDB oracle's."""
+    import duckdb
+
+    from bbcnews_scraper_nlp_spark.queries import REGISTRY
+
+    q = REGISTRY["lda_topics"]
+    df = q.fn(spark, sf_dir)
+    got = sorted(tuple(r) for r in df.collect())
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, plan[:800]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
+    )
+    assert got == sorted(con.execute(q.sql).fetchall())
+
+
 def test_topics_html_sink(spark, tmp_path):
     # S11: the pyLDAvis artifact slot — train a tiny model, write the
     # self-contained HTML, assert the data feed landed in it
