@@ -19,6 +19,8 @@ What is REAL here:
   RGB, RGBA and palette images. Returns an (H, W, C) uint8 array.
 - ``encode_png``: the matching encoder; cycles filter types per row
   so a round-trip exercises every unfilter branch.
+- ``riff_chunks``: the one RIFF chunk walker (word-aligned), under
+  every WAV and AVI reader here and in ``multimodal``.
 - ``decode_wav_samples``: RIFF chunk walk + PCM sample extraction
   (8/16/32-bit int) to an (n_frames, channels) int32 array.
 - ``nearest_resize``: integer nearest-neighbor resample, the
@@ -42,12 +44,12 @@ What is REAL here:
   companding expansion and IMA ADPCM block decode, with encoder
   twins.
 
-Progressive JPEG (SOF2) is supported for the spectral-selection
-mode (multi-scan DC + per-component AC bands with EOB-run codes, in
-both directions). What remains a declared slot
-(``NotImplementedError``): progressive successive approximation
-(Ah > 0), perceptual compressed audio (MP3/AAC) and compressed video
-streams ('00dc') — the last two genuinely need codec libraries.
+Progressive JPEG (SOF2) is supported in both directions, for
+spectral selection (multi-scan DC + per-component AC bands with
+EOB-run codes) and successive approximation (refinement scans). What
+remains a declared slot (``NotImplementedError``): perceptual
+compressed audio (MP3/AAC) and compressed video streams ('00dc'),
+which genuinely need codec libraries.
 
 Reference parity: the reference pipeline is text-only
 (BBCNews-scraper-nlp has no media path); this module is part of the
@@ -58,6 +60,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -564,18 +567,38 @@ def encode_wav_g711(
     if samples.ndim == 2:
         samples = samples[:, 0]
     codes = (ulaw_encode if law == "ulaw" else alaw_encode)(samples)
-    body = codes.tobytes()
+    return g711_wav(codes.tobytes(), law, rate)
+
+
+def g711_wav(codes: bytes, law: str = "ulaw", rate: int = 8000) -> bytes:
+    """Wrap G.711 code bytes in a WAV container: 18-byte fmt chunk
+    (fmt 7 = mu-law, fmt 6 = A-law, mono, 8 bits) and a data chunk
+    that is not word-padded."""
     fmt_tag = 7 if law == "ulaw" else 6
     return (
         b"RIFF"
-        + struct.pack("<I", 38 + len(body))
+        + struct.pack("<I", 38 + len(codes))
         + b"WAVEfmt "
         + struct.pack("<IHHIIHH", 18, fmt_tag, 1, rate, rate, 1, 8)
         + struct.pack("<H", 0)
         + b"data"
-        + struct.pack("<I", len(body))
-        + body
+        + struct.pack("<I", len(codes))
+        + codes
     )
+
+
+def riff_chunks(
+    data: bytes, start: int = 12
+) -> Iterator[tuple[bytes, int, bytes]]:
+    """Walk RIFF chunks from ``start`` (12 skips the RIFF header and
+    form type, 4 skips a LIST body's list type) and yield (chunk id,
+    declared size, body). A body is cut short where ``data`` ends;
+    chunks are word-aligned, so an odd size skips one pad byte."""
+    i = start
+    while i + 8 <= len(data):
+        (size,) = struct.unpack("<I", data[i + 4 : i + 8])
+        yield data[i : i + 4], size, data[i + 8 : i + 8 + size]
+        i += 8 + size + (size & 1)
 
 
 def decode_wav_samples(data: bytes) -> tuple[np.ndarray, int]:
@@ -585,18 +608,14 @@ def decode_wav_samples(data: bytes) -> tuple[np.ndarray, int]:
     (fmt 6) expansion, and IMA ADPCM (fmt 0x11) block decode. Raises
     ValueError for non-WAV and NotImplementedError for formats that
     need real codec libraries (MP3/AAC/etc.)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a WAV payload")
-    i = 12
     rate = ch = bits = fmt = None
     block_align = 0
     fmt_extra = b""
     body = b""
     n_fact = None
-    while i + 8 <= len(data):
-        cid = data[i : i + 4]
-        (size,) = struct.unpack("<I", data[i + 4 : i + 8])
-        chunk = data[i + 8 : i + 8 + size]
+    for cid, _, chunk in riff_chunks(data):
         if cid == b"fmt " and len(chunk) >= 16:
             fmt, ch, rate, _, block_align, bits = struct.unpack(
                 "<HHIIHH", chunk[:16]
@@ -606,7 +625,6 @@ def decode_wav_samples(data: bytes) -> tuple[np.ndarray, int]:
             (n_fact,) = struct.unpack("<I", chunk[:4])
         elif cid == b"data":
             body = chunk
-        i += 8 + size + (size & 1)
     if rate is None:
         raise ValueError("WAV without fmt chunk")
     if fmt == 1:
@@ -1776,12 +1794,12 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     DCT, chroma upsampling and YCbCr -> RGB. Restart intervals (DRI
     + RST0-7) split the entropy stream into independent byte-aligned
     segments with DC predictors reset. Progressive JPEG (SOF2) is
-    decoded for the spectral-selection mode: multiple scans
-    accumulate coefficients — interleaved or single-component DC
-    scans, single-component AC band scans with EOB-run codes — and
-    the IDCT runs once at the end. Raises JpegError for non-JPEG and
-    NotImplementedError for successive approximation (Ah > 0, the
-    remaining declared slot)."""
+    decoded in both modes: multiple scans accumulate coefficients —
+    interleaved or single-component DC scans, single-component AC
+    band scans with EOB-run codes, and successive-approximation
+    refinement scans (Ah > 0) — and the IDCT runs once at the end.
+    Raises JpegError for non-JPEG and NotImplementedError for SOF1/
+    SOF3 and for component counts other than 1 or 3."""
     if data[:2] != b"\xff\xd8":
         raise JpegError("not a JPEG payload")
     i = 2
@@ -2013,48 +2031,41 @@ def encode_dib_frame(px: np.ndarray) -> bytes:
     return rows.tobytes()
 
 
+def avi_main_header(data: bytes) -> tuple[int, int, int, int] | None:
+    """(width, height, us_per_frame, total_frames) from the 56-byte
+    avih main header in a RIFF/AVI payload's LIST-hdrl; None if the
+    payload is not an AVI or carries no avih."""
+    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
+        return None
+    for cid, _, body in riff_chunks(data):
+        if cid == b"LIST" and body[:4] == b"hdrl":
+            for sid, size, avih in riff_chunks(body, 4):
+                if sid == b"avih" and size >= 56:
+                    f = struct.unpack("<14I", avih[:56])
+                    return f[8], f[9], f[0], f[4]
+    return None
+
+
 def avi_dib_frames(data: bytes) -> tuple[int, int, list[np.ndarray]]:
     """Walk a RIFF/AVI container and decode every uncompressed
     '00db' video frame: returns (width, height, [RGB arrays]). Real
-    work: hdrl/avih dims, LIST-movi chunk walk with word alignment,
+    work: avih dims, LIST-movi chunk walk with word alignment,
     per-frame DIB decode. Compressed '00dc' chunks raise
     NotImplementedError (the video-codec slot)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise AviError("not an AVI payload")
-    width = height = None
+    hdr = avi_main_header(data)
+    if hdr is None:
+        raise AviError("not an AVI payload with an avih header")
+    width, height = hdr[:2]
     frames: list[np.ndarray] = []
-    i = 12
-    while i + 8 <= len(data):
-        cid = data[i : i + 4]
-        (size,) = struct.unpack("<I", data[i + 4 : i + 8])
-        body = data[i + 8 : i + 8 + size]
-        if cid == b"LIST" and body[:4] == b"hdrl":
-            j = 4
-            while j + 8 <= len(body):
-                sid = body[j : j + 4]
-                (ssize,) = struct.unpack("<I", body[j + 4 : j + 8])
-                if sid == b"avih" and ssize >= 56:
-                    fields = struct.unpack("<14I", body[j + 8 : j + 64])
-                    width, height = fields[8], fields[9]
-                j += 8 + ssize + (ssize & 1)
-        elif cid == b"LIST" and body[:4] == b"movi":
-            if width is None:
-                raise AviError("movi before avih")
-            j = 4
-            while j + 8 <= len(body):
-                sid = body[j : j + 4]
-                (ssize,) = struct.unpack("<I", body[j + 4 : j + 8])
-                chunk = body[j + 8 : j + 8 + ssize]
+    for cid, _, body in riff_chunks(data):
+        if cid == b"LIST" and body[:4] == b"movi":
+            for sid, _, chunk in riff_chunks(body, 4):
                 if sid == b"00db":
                     frames.append(decode_dib_frame(chunk, width, height))
                 elif sid == b"00dc":
                     raise NotImplementedError(
                         "compressed video stream: codec slot"
                     )
-                j += 8 + ssize + (ssize & 1)
-        i += 8 + size + (size & 1)
-    if width is None:
-        raise AviError("AVI without avih header")
     return width, height, frames
 
 

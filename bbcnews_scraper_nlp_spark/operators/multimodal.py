@@ -4,52 +4,170 @@ metadata, processed via Arrow-batched ``mapInPandas``.
 Design (the 100 TB contract — this part is real and tested):
 - media rides as a ``binary`` column next to typed metadata
   (media_type, byte length, checksum); Spark never interprets it.
-- decode / feature-extract / resize / frame-sample are per-partition
-  ``mapInPandas`` stages: Arrow moves the bytes to Python in batches,
-  output schema is declared up front, partitioning is inherited (no
-  shuffle), and per-executor decoder state initializes once.
+- every stage (meta extract, frame sampling, pixel/sample decode) is
+  one per-partition ``mapInPandas`` (``_map_rows``): Arrow moves the
+  bytes to Python in batches, a per-payload row function emits the
+  output rows, the output schema is declared up front, and
+  partitioning is inherited (no shuffle).
+- every synthesized test payload comes from one ``pandas_udf``
+  (``_synth``) over the row id (and text), so synth -> stage is two
+  consecutive narrow map stages.
 - batch size is bounded by ``spark.sql.execution.arrow.
   maxRecordsPerBatch`` — set it low (e.g. 64) for multi-MB payloads.
 
-Codec status (round 7): REAL decode for PNG (all bit depths, Adam7),
-GIF (LZW), JPEG in grayscale and color — baseline and progressive
-spectral selection (Huffman+IDCT, 4:2:0/4:4:4 chroma, YCbCr<->RGB),
-WAV PCM, G.711 mu-law/A-law, IMA ADPCM and uncompressed AVI DIB
-video frames — ``operators/codecs.py``, surfaced through
-``decode_image_pixels`` / ``decode_audio_samples`` /
-``decode_video_frame_pixels`` — plus all container/header walks.
-The remaining NotImplementedError slots cover only formats that
-genuinely need codec libraries not in this container (JPEG
-successive approximation, MP3/AAC, compressed video streams)
-behind ``strict=True``; non-strict paths yield deterministic fake
-features to keep pipelines testable end-to-end.
+Codec status: REAL decode for PNG (all bit depths, Adam7), GIF (LZW),
+JPEG in grayscale and color — baseline and progressive, spectral
+selection and successive approximation (Huffman+IDCT, 4:2:0/4:4:4
+chroma, YCbCr<->RGB), WAV PCM, G.711 mu-law/A-law, IMA ADPCM and
+uncompressed AVI DIB video frames — ``operators/codecs.py``,
+surfaced through ``decode_image_pixels`` / ``decode_audio_samples``
+/ ``decode_video_frame_pixels``, which raise on a payload they
+cannot decode. The meta stages parse container headers; a payload
+they cannot parse gets deterministic fake fields keyed to its md5,
+or raises NotImplementedError with ``strict=True`` (the slot for
+codecs this container lacks: MP3/AAC, compressed video streams).
 """
 
 from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
+from . import codecs
 
 IMAGE_META_SCHEMA = (
     "doc_id bigint, media_type string, n_bytes int, sha1 string, "
     "width int, height int, format string"
 )
 
+AUDIO_META_SCHEMA = (
+    "doc_id bigint, media_type string, n_bytes int, sha1 string, "
+    "sample_rate int, channels int, bits_per_sample int, "
+    "n_frames bigint, duration_ms bigint, format string"
+)
+
+VIDEO_META_SCHEMA = (
+    "doc_id bigint, media_type string, n_bytes int, sha1 string, "
+    "width int, height int, us_per_frame int, n_frames bigint, "
+    "duration_ms bigint, format string"
+)
+
 FRAME_SAMPLE_SCHEMA = (
     "doc_id bigint, frame_idx int, frame_sha1 string"
 )
 
+PIXEL_STATS_SCHEMA = (
+    "doc_id bigint, width int, height int, channels int, "
+    "px_sum bigint, px_min int, px_max int"
+)
+
+FRAME_PIXEL_SCHEMA = (
+    "doc_id bigint, frame_idx int, width int, height int, "
+    "px_sum bigint, px_min int, px_max int"
+)
+
+AUDIO_STATS_SCHEMA = (
+    "doc_id bigint, n_frames bigint, channels int, sample_rate int, "
+    "sample_sum bigint, sample_min int, sample_max int"
+)
+
+# video_frame_samples keeps every FRAME_STEP-th frame index
+FRAME_STEP = 10
+
+
+def _map_rows(
+    df: DataFrame,
+    schema: str,
+    row_fn: Callable[..., Iterable[tuple]],
+    cols: tuple[str, ...] = ("doc_id", "payload"),
+) -> DataFrame:
+    """The one mapInPandas stage: ``row_fn`` gets each input row's
+    ``cols`` (the payload as ``bytes``, null -> b"") and yields zero,
+    one or many output rows in ``schema`` column order."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf["payload"] = [bytes(p or b"") for p in pdf["payload"]]
+            rows = [
+                out
+                for row in zip(*(pdf[c] for c in cols))
+                for out in row_fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
+def _synth(
+    df: DataFrame,
+    media_type: str | Column,
+    build: Callable[..., bytes],
+    *cols: str,
+) -> DataFrame:
+    """The one payload synthesizer: (doc_id, media_type, payload) with
+    payload = build(*row) over ``cols`` (the id column first), in one
+    Arrow-batched pandas_udf."""
+
+    def payloads(*series: pd.Series) -> pd.Series:
+        return pd.Series([build(*row) for row in zip(*series)])
+
+    return df.select(
+        F.col(cols[0]).alias("doc_id"),
+        F.lit(media_type).alias("media_type"),
+        pandas_udf(payloads, "binary")(*cols).alias("payload"),
+    )
+
+
+# ---------------------------------------------------------------------
+# metadata: header parse, md5-keyed fallback
+# ---------------------------------------------------------------------
+
+
+def _meta(
+    df: DataFrame,
+    schema: str,
+    strict: bool,
+    parse: Callable[[bytes], tuple | None],
+    fake: Callable[[int], tuple],
+    derive: Callable[..., tuple] = lambda *fields: fields,
+) -> DataFrame:
+    """Shared meta stage over (doc_id, media_type, payload): the
+    (doc_id, media_type, n_bytes, sha1) prefix, then ``derive`` of the
+    parsed header fields. An unparseable payload raises under
+    ``strict`` (the codec slot); else its fields are ``fake`` of the
+    first 32 bits of its md5 (the repo's cross-engine hash, so a
+    DuckDB oracle can recompute them)."""
+
+    def row(doc_id, mtype, data):
+        parsed = parse(data)
+        if parsed is None:
+            if strict:
+                raise NotImplementedError(
+                    f"no codec for {mtype} payload; plug in a decoder "
+                    "or run with strict=False"
+                )
+            parsed = fake(int(hashlib.md5(data).hexdigest()[:8], 16))
+        yield (
+            doc_id, mtype, len(data), hashlib.sha1(data).hexdigest(),
+            *derive(*parsed),
+        )
+
+    return _map_rows(df, schema, row, ("doc_id", "media_type", "payload"))
+
 
 def attach_binary_payload(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Testing aid: synthesize a deterministic binary payload column
-    from a text column (UTF-8 bytes prefixed with a fake PNG header
-    carrying derived dimensions), so the mapInPandas plumbing runs on
-    real ``binary`` data end-to-end without codec libs."""
+    """Testing aid: the payload is the text column's UTF-8 bytes cast
+    to binary, with no container header, so ``image_meta`` takes its
+    md5-keyed fallback (the ``multimodal_image_meta`` oracle relies on
+    that)."""
     payload = F.col(text_col).cast("binary")
     return df.select(
         F.col(id_col),
@@ -85,169 +203,14 @@ def _parse_dims(data: bytes) -> tuple[int, int, str] | None:
     return None
 
 
-def make_image_meta_extractor(strict: bool = False):
-    """mapInPandas stage: binary payload -> typed image metadata.
-
-    Real work: magic-byte sniffing + header parsing (PNG/GIF/JPEG).
-    Unknown formats: strict -> NotImplementedError (the slot where a
-    real codec plugs in); else deterministic fake dims derived from
-    the payload hash (keeps pipelines testable end-to-end).
-    """
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mtype, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                data = bytes(payload or b"")
-                sha1 = hashlib.sha1(data).hexdigest()
-                parsed = _parse_dims(data)
-                if parsed is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "no codec available for payload; install a "
-                            "decoder or run with strict=False"
-                        )
-                    # fake dims keyed to md5 (the repo's cross-engine
-                    # hash), so the DuckDB oracle can recompute them
-                    h = int(hashlib.md5(data).hexdigest()[:8], 16)
-                    parsed = (h % 1920 + 1, h // 1920 % 1080 + 1, "unknown")
-                w, hgt, fmt = parsed
-                rows.append((doc_id, mtype, len(data), sha1, w, hgt, fmt))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_type", "n_bytes", "sha1",
-                    "width", "height", "format",
-                ],
-            )
-
-    return extract
-
-
 def image_meta(df: DataFrame, strict: bool = False) -> DataFrame:
-    """Run the metadata extractor over (doc_id, media_type, payload)."""
-    return df.mapInPandas(make_image_meta_extractor(strict), IMAGE_META_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "doc_id bigint, media_type string, payload binary, width int, height int"
-)
-
-FEATURES_SCHEMA = "doc_id bigint, features array<float>"
-
-
-def _try_decode_pixels(data: bytes):
-    """Magic-byte dispatch to the real decoders; None if the payload
-    is not a decodable container (the caller picks the fallback)."""
-    from .codecs import (
-        GifError,
-        JpegError,
-        PngError,
-        decode_gif,
-        decode_jpeg,
-        decode_png,
+    """Image metadata over (doc_id, media_type, payload): magic-byte
+    sniffing + PNG/GIF/JPEG header parse; fallback dims
+    (h % 1920 + 1, h // 1920 % 1080 + 1, 'unknown')."""
+    return _meta(
+        df, IMAGE_META_SCHEMA, strict, _parse_dims,
+        lambda h: (h % 1920 + 1, h // 1920 % 1080 + 1, "unknown"),
     )
-
-    try:
-        if data[:3] == b"GIF":
-            return decode_gif(data)
-        if data[:2] == b"\xff\xd8":
-            return decode_jpeg(data)
-        return decode_png(data)
-    except (PngError, GifError, JpegError, NotImplementedError):
-        return None
-
-
-def make_resizer(target_w: int = 224, target_h: int = 224):
-    """mapInPandas stage: image resize. Decodable payloads
-    (PNG/GIF/JPEG) take the REAL path — pixel decode,
-    nearest-neighbor resample (codecs.nearest_resize), re-encode as
-    PNG; undecodable payloads fall back to a deterministic
-    truncation so text-byte test pipelines stay runnable end-to-end.
-    An interpolating resizer (PIL/libvips) swaps in at the same slot
-    without plan changes."""
-
-    def resize_one(data: bytes) -> bytes:
-        from .codecs import encode_png, nearest_resize
-
-        px = _try_decode_pixels(data)
-        if px is not None:
-            if px.dtype != "uint8":  # 16-bit PNG: scale to 8 for output
-                px = (px // 257).astype("uint8")
-            return encode_png(nearest_resize(px, target_w, target_h))
-        keep = max(1, min(len(data), target_w * target_h // 512))
-        return data[:keep]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": [resize_one(bytes(p or b"")) for p in pdf["payload"]],
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return run
-
-
-def resize_images(df: DataFrame, target_w: int = 224, target_h: int = 224) -> DataFrame:
-    return df.select("doc_id", "media_type", "payload").mapInPandas(
-        make_resizer(target_w, target_h), RESIZE_SCHEMA
-    )
-
-
-def make_feature_extractor(dim: int = 16):
-    """mapInPandas stage shaped like an image embedding model:
-    binary payload -> fixed-dim float vector. Decodable payloads
-    (PNG/GIF/JPEG) take the REAL path — a normalized histogram of
-    actual decoded pixel intensities; undecodable payloads fall back
-    to the deterministic byte histogram. A learned encoder swaps in
-    at the same slot (per-executor model init would live at this
-    closure's module level)."""
-
-    def embed(data: bytes) -> list[float]:
-        px = _try_decode_pixels(data)
-        if px is not None:
-            import numpy as np
-
-            vals = px.astype("int64").reshape(-1)
-            scale = 65536 if px.dtype != "uint8" else 256
-            hist = np.bincount(vals * dim // scale, minlength=dim)
-            return (hist / max(1, vals.size)).tolist()
-        hist = [0] * dim
-        for b in data:
-            hist[b % dim] += 1
-        total = max(1, len(data))
-        return [h / total for h in hist]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "features": [embed(bytes(p or b"")) for p in pdf["payload"]],
-                }
-            )
-
-    return run
-
-
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    return df.select("doc_id", "payload").mapInPandas(
-        make_feature_extractor(dim), FEATURES_SCHEMA
-    )
-
-
-AUDIO_META_SCHEMA = (
-    "doc_id bigint, media_type string, n_bytes int, sha1 string, "
-    "sample_rate int, channels int, bits_per_sample int, "
-    "n_frames bigint, duration_ms bigint, format string"
-)
 
 
 def _wav_header(
@@ -277,24 +240,17 @@ def _parse_wav(data: bytes) -> tuple[int, int, int, int, str] | None:
     """Parse a RIFF/WAVE container (pure Python, real format walk):
     returns (sample_rate, channels, bits_per_sample, n_frames, 'wav').
     Walks chunks rather than assuming the 44-byte canonical layout,
-    so LIST/fact chunks before 'data' parse correctly."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    so LIST/fact chunks before 'data' parse correctly; n_frames comes
+    from the data chunk's declared size."""
+    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         return None
-    i = 12
     rate = ch = bits = None
     n_frames = 0
-    while i + 8 <= len(data):
-        cid = data[i : i + 4]
-        size = struct.unpack("<I", data[i + 4 : i + 8])[0]
-        body = data[i + 8 : i + 8 + size]
+    for cid, size, body in codecs.riff_chunks(data):
         if cid == b"fmt " and len(body) >= 16:
-            _, ch, rate, _, block_align, bits = struct.unpack(
-                "<HHIIHH", body[:16]
-            )
+            _, ch, rate, _, _, bits = struct.unpack("<HHIIHH", body[:16])
         elif cid == b"data" and ch:
-            block_align = ch * (bits or 8) // 8
-            n_frames = size // max(block_align, 1)
-        i += 8 + size + (size & 1)  # chunks are word-aligned
+            n_frames = size // max(ch * (bits or 8) // 8, 1)
     if rate is None:
         return None
     return rate, ch or 0, bits or 0, n_frames, "wav"
@@ -302,123 +258,37 @@ def _parse_wav(data: bytes) -> tuple[int, int, int, int, str] | None:
 
 def attach_audio_payload(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Testing aid (audio twin of attach_binary_payload): synthesize a
-    REAL RIFF/WAVE container per row — header with rate/width derived
-    from the row id, 'data' chunk filled with the UTF-8 text bytes —
-    so the audio plumbing runs on honestly-parseable payloads."""
-    from pyspark.sql.functions import pandas_udf
+    REAL RIFF/WAVE container per row — 44-byte header with rate
+    doc_id % 3 * 8000 + 8000, mono 16-bit, n_frames = body_bytes // 2,
+    then the UTF-8 text bytes as the (unpadded) data body — so the
+    audio plumbing runs on honestly-parseable payloads."""
 
-    rate = (F.pmod(F.col(id_col), F.lit(3)) * 8000 + 8000).cast("int")
+    def wav(i: int, text: str | None) -> bytes:
+        body = (text or "").encode("utf-8")
+        return _wav_header(i % 3 * 8000 + 8000, 1, 16, len(body) // 2) + body
 
-    def _headers(rates: pd.Series, sizes: pd.Series) -> pd.Series:
-        # Arrow-batched (this file's only header synth; keeps the repo
-        # free of row-at-a-time Python UDFs)
-        return pd.Series(
-            [
-                _wav_header(int(r), 1, 16, int(n) // 2)
-                for r, n in zip(rates, sizes)
-            ]
-        )
-
-    header = pandas_udf(_headers, "binary")
-    body = F.col(text_col).cast("binary")
-    n = F.length(body)
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("audio/wav").alias("media_type"),
-        F.concat(header(rate, n), body).alias("payload"),
-    )
-
-
-def make_audio_meta_extractor(strict: bool = False):
-    """mapInPandas stage: binary payload -> typed audio metadata.
-
-    Real work: RIFF chunk walk (sample rate, channels, bit depth,
-    frame count -> duration). Non-WAV payloads: strict raises (the
-    codec slot for mp3/flac/ogg demuxers); else deterministic fake
-    parameters from the payload hash, same policy as image_meta."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mtype, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                data = bytes(payload or b"")
-                sha1 = hashlib.sha1(data).hexdigest()
-                parsed = _parse_wav(data)
-                if parsed is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "no audio codec for payload; plug in a demuxer "
-                            "or run with strict=False"
-                        )
-                    h = int(hashlib.md5(data).hexdigest()[:8], 16)
-                    parsed = (
-                        (8000, 16000, 44100)[h % 3], h % 2 + 1, 16,
-                        h % 100000, "unknown",
-                    )
-                rate, ch, bits, n_frames, fmt = parsed
-                dur_ms = n_frames * 1000 // max(rate, 1)
-                rows.append(
-                    (doc_id, mtype, len(data), sha1, rate, ch, bits,
-                     n_frames, dur_ms, fmt)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_type", "n_bytes", "sha1",
-                    "sample_rate", "channels", "bits_per_sample",
-                    "n_frames", "duration_ms", "format",
-                ],
-            )
-
-    return extract
+    return _synth(df, "audio/wav", wav, id_col, text_col)
 
 
 def audio_meta(df: DataFrame, strict: bool = False) -> DataFrame:
-    """Run the audio metadata extractor over (doc_id, media_type,
-    payload) — same no-shuffle mapInPandas contract as image_meta."""
-    return df.mapInPandas(make_audio_meta_extractor(strict), AUDIO_META_SCHEMA)
-
-
-def make_frame_sampler(every_n: int = 10, max_frames: int = 4):
-    """mapInPandas stage shaped like video frame sampling: emits
-    deterministic per-'frame' rows (payload chunk hashes). A real
-    decoder replaces the chunking with container demux; the Spark
-    contract (1->N row fan-out, declared schema) is identical."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload or b"")
-                chunk = max(1, every_n)
-                for k, idx in enumerate(range(0, len(data), chunk)):
-                    if k >= max_frames:
-                        break
-                    out.append(
-                        (doc_id, k, hashlib.sha1(data[idx : idx + chunk]).hexdigest())
-                    )
-            yield pd.DataFrame(out, columns=["doc_id", "frame_idx", "frame_sha1"])
-
-    return sample
-
-
-def frame_samples(df: DataFrame, every_n: int = 10, max_frames: int = 4) -> DataFrame:
-    return df.select("doc_id", "payload").mapInPandas(
-        make_frame_sampler(every_n, max_frames), FRAME_SAMPLE_SCHEMA
+    """Audio metadata over (doc_id, media_type, payload): RIFF chunk
+    walk (sample rate, channels, bit depth, frame count -> duration);
+    the fallback (mp3/flac/ogg demuxer slot) draws the parameters from
+    the md5."""
+    return _meta(
+        df, AUDIO_META_SCHEMA, strict, _parse_wav,
+        lambda h: (
+            (8000, 16000, 44100)[h % 3], h % 2 + 1, 16, h % 100000, "unknown"
+        ),
+        lambda rate, ch, bits, n, fmt: (
+            rate, ch, bits, n, n * 1000 // max(rate, 1), fmt
+        ),
     )
 
 
 # ---------------------------------------------------------------------
 # video (RIFF/AVI container)
 # ---------------------------------------------------------------------
-
-VIDEO_META_SCHEMA = (
-    "doc_id bigint, media_type string, n_bytes int, sha1 string, "
-    "width int, height int, us_per_frame int, n_frames bigint, "
-    "duration_ms bigint, format string"
-)
 
 
 def _avi_payload(
@@ -446,29 +316,11 @@ def _avi_payload(
 
 
 def _parse_avi(data: bytes) -> tuple[int, int, int, int, str] | None:
-    """RIFF/AVI chunk walk (pure Python, real format walk): returns
-    (width, height, us_per_frame, total_frames, 'avi') from the avih
-    main header, or None if the payload is not an AVI container."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        return None
-    i = 12
-    while i + 8 <= len(data):
-        cid = data[i : i + 4]
-        size = struct.unpack("<I", data[i + 4 : i + 8])[0]
-        body = data[i + 8 : i + 8 + size]
-        if cid == b"LIST" and body[:4] == b"hdrl":
-            j = 4
-            while j + 8 <= len(body):
-                sid = body[j : j + 4]
-                ssize = struct.unpack("<I", body[j + 4 : j + 8])[0]
-                if sid == b"avih" and ssize >= 56:
-                    fields = struct.unpack(
-                        "<14I", body[j + 8 : j + 8 + 56]
-                    )
-                    return fields[8], fields[9], fields[0], fields[4], "avi"
-                j += 8 + ssize + (ssize & 1)
-        i += 8 + size + (size & 1)
-    return None
+    """(width, height, us_per_frame, total_frames, 'avi') from the
+    avih main header (codecs.avi_main_header), or None if the payload
+    is not an AVI container."""
+    hdr = codecs.avi_main_header(data)
+    return None if hdr is None else (*hdr, "avi")
 
 
 def attach_video_payload(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -480,136 +332,69 @@ def attach_video_payload(df: DataFrame, text_col: str, id_col: str) -> DataFrame
     us_per_frame = doc_id % 3 * 8334 + 33333 (30/24/20 fps),
     width = doc_id % 3 * 160 + 320, height = width * 3 // 4,
     n_frames = body_bytes % 240 + 24."""
-    from pyspark.sql.functions import pandas_udf
 
-    def _containers(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        out = []
-        for i, t in zip(ids, texts):
-            body = (t or "").encode("utf-8")
-            upf = int(i) % 3 * 8334 + 33333
-            w = int(i) % 3 * 160 + 320
-            out.append(
-                _avi_payload(upf, len(body) % 240 + 24, w, w * 3 // 4, body)
-            )
-        return pd.Series(out)
+    def avi(i: int, text: str | None) -> bytes:
+        body = (text or "").encode("utf-8")
+        w = i % 3 * 160 + 320
+        return _avi_payload(
+            i % 3 * 8334 + 33333, len(body) % 240 + 24, w, w * 3 // 4, body
+        )
 
-    container = pandas_udf(_containers, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("video/avi").alias("media_type"),
-        container(F.col(id_col), F.col(text_col)).alias("payload"),
-    )
-
-
-def make_video_meta_extractor(strict: bool = False):
-    """mapInPandas stage: binary payload -> typed video metadata.
-
-    Real work: RIFF/AVI chunk walk (dimensions, frame timing, frame
-    count -> duration). Non-AVI payloads: strict raises (the codec
-    slot for mp4/mkv/webm demuxers); else deterministic fake
-    parameters from the payload hash, same policy as image/audio."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, mtype, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                data = bytes(payload or b"")
-                sha1 = hashlib.sha1(data).hexdigest()
-                parsed = _parse_avi(data)
-                if parsed is None:
-                    if strict:
-                        raise NotImplementedError(
-                            "no video demuxer for payload; plug in a "
-                            "decoder or run with strict=False"
-                        )
-                    h = int(hashlib.md5(data).hexdigest()[:8], 16)
-                    parsed = (
-                        (320, 640, 1280)[h % 3], (240, 480, 720)[h % 3],
-                        33333, h % 3600, "unknown",
-                    )
-                w, hgt, upf, n_frames, fmt = parsed
-                dur_ms = n_frames * upf // 1000
-                rows.append(
-                    (doc_id, mtype, len(data), sha1, w, hgt, upf,
-                     n_frames, dur_ms, fmt)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "media_type", "n_bytes", "sha1", "width",
-                    "height", "us_per_frame", "n_frames", "duration_ms",
-                    "format",
-                ],
-            )
-
-    return extract
+    return _synth(df, "video/avi", avi, id_col, text_col)
 
 
 def video_meta(df: DataFrame, strict: bool = False) -> DataFrame:
-    """Run the video metadata extractor over (doc_id, media_type,
-    payload) — same no-shuffle mapInPandas contract as image/audio."""
-    return df.mapInPandas(make_video_meta_extractor(strict), VIDEO_META_SCHEMA)
-
-
-def make_video_frame_sampler(every_n: int = 10):
-    """mapInPandas stage: demux-driven frame sampling — the avih
-    header's TotalFrames drives a 1->N fan-out of every ``every_n``-th
-    frame index; the per-frame 'decode' is stubbed as a deterministic
-    content hash of (payload, frame_idx). A real decoder replaces the
-    hash with pixel extraction; the Spark contract (declared schema,
-    inherited partitioning, Arrow batching) is identical."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: list[tuple] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload or b"")
-                parsed = _parse_avi(data)
-                if parsed is None:
-                    continue
-                n_frames = parsed[3]
-                for idx in range(0, n_frames, max(every_n, 1)):
-                    out.append(
-                        (
-                            doc_id,
-                            idx,
-                            hashlib.sha1(
-                                data + struct.pack("<I", idx)
-                            ).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "frame_sha1"]
-            )
-
-    return sample
-
-
-def video_frame_samples(df: DataFrame, every_n: int = 10) -> DataFrame:
-    return df.select("doc_id", "payload").mapInPandas(
-        make_video_frame_sampler(every_n), FRAME_SAMPLE_SCHEMA
+    """Video metadata over (doc_id, media_type, payload): RIFF/AVI
+    chunk walk (dimensions, frame timing, frame count -> duration);
+    the fallback (mp4/mkv/webm demuxer slot) draws the parameters from
+    the md5."""
+    return _meta(
+        df, VIDEO_META_SCHEMA, strict, _parse_avi,
+        lambda h: (
+            (320, 640, 1280)[h % 3], (240, 480, 720)[h % 3], 33333,
+            h % 3600, "unknown",
+        ),
+        lambda w, h, upf, n, fmt: (w, h, upf, n, n * upf // 1000, fmt),
     )
 
 
+def video_frame_samples(df: DataFrame) -> DataFrame:
+    """Demux-driven frame sampling: the avih header's TotalFrames
+    drives a 1->N fan-out of every FRAME_STEP-th frame index; the
+    per-frame 'decode' is a deterministic content hash
+    frame_sha1 = sha1(payload + uint32le(frame_idx)). Payloads that
+    are not AVI emit no rows."""
+
+    def row(doc_id, data):
+        parsed = _parse_avi(data)
+        for idx in range(0, parsed[3] if parsed else 0, FRAME_STEP):
+            sha1 = hashlib.sha1(data + struct.pack("<I", idx)).hexdigest()
+            yield doc_id, idx, sha1
+
+    return _map_rows(df.select("doc_id", "payload"), FRAME_SAMPLE_SCHEMA, row)
+
+
 # ---------------------------------------------------------------------
-# REAL pixel/sample decode (round 7): PNG and WAV-PCM payloads decode
-# honestly via operators/codecs.py — zlib inflate + full unfilter for
-# PNG, PCM extraction for WAV. The NotImplementedError slots above now
-# cover only formats that genuinely need codec libraries (JPEG, GIF
-# pixels, compressed audio, video codecs).
+# REAL pixel/sample decode over payloads with closed-form content
+# (operators/codecs.py); each decode stage raises on a payload it
+# cannot decode.
 # ---------------------------------------------------------------------
 
-PIXEL_STATS_SCHEMA = (
-    "doc_id bigint, width int, height int, channels int, "
-    "px_sum bigint, px_min int, px_max int"
-)
 
-AUDIO_STATS_SCHEMA = (
-    "doc_id bigint, n_frames bigint, channels int, sample_rate int, "
-    "sample_sum bigint, sample_min int, sample_max int"
-)
+def _stats(a: np.ndarray) -> tuple[int, int, int]:
+    return int(a.sum(dtype="int64")), int(a.min()), int(a.max())
+
+
+def _gradient_grid(i: int) -> np.ndarray:
+    """Row and column index grids of the gradient test image for id
+    ``i``: width = i % 5 * 8 + 16, height = i % 7 * 4 + 12."""
+    return np.mgrid[0 : i % 7 * 4 + 12, 0 : i % 5 * 8 + 16]
+
+
+def _gray_gradient(i: int) -> np.ndarray:
+    """px[r, c] = (i * 31 + r * 7 + c * 13) % 256 (mod-256 sawtooth)."""
+    r, c = _gradient_grid(i)
+    return ((i * 31 + r * 7 + c * 13) % 256).astype(np.uint8)
 
 
 def attach_gradient_image_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -623,136 +408,27 @@ def attach_gradient_image_payload(df: DataFrame, id_col: str) -> DataFrame:
 
     Decoding it back requires real inflate + unfilter work, so any
     hash match downstream certifies the decoder, not the synthesizer."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from .codecs import encode_png
-
-    def _pngs(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = i % 5 * 8 + 16, i % 7 * 4 + 12
-            r, c = np.mgrid[0:h, 0:w]
-            px = ((i * 31 + r * 7 + c * 13) % 256).astype(np.uint8)
-            out.append(encode_png(px))
-        return pd.Series(out)
-
-    png = pandas_udf(_pngs, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("image/png").alias("media_type"),
-        png(F.col(id_col)).alias("payload"),
+    return _synth(
+        df, "image/png", lambda i: codecs.encode_png(_gray_gradient(i)), id_col
     )
 
 
-def make_pixel_stats(
-    out_w: int | None = None,
-    out_h: int | None = None,
-    strict: bool = True,
-):
-    """mapInPandas stage: PNG or GIF payload -> REAL decoded pixel
-    stats (magic-byte dispatch: GIF -> LZW decode, else PNG ->
-    inflate+unfilter), optionally after a nearest-neighbor resize
-    (out[r, c] = in[r*H//H', c*W//W'] — closed-form checkable).
-    strict raises on undecodable payloads (default: this stage exists
-    to prove real decode); strict=False skips them."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codecs import (
-            GifError,
-            PngError,
-            decode_gif,
-            decode_png,
-            nearest_resize,
-        )
-
-        from .codecs import JpegError, decode_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload or b"")
-                try:
-                    if data[:3] == b"GIF":
-                        px = decode_gif(data)
-                    elif data[:2] == b"\xff\xd8":
-                        px = decode_jpeg(data)
-                    else:
-                        px = decode_png(data)
-                except (PngError, GifError, JpegError, NotImplementedError):
-                    if strict:
-                        raise
-                    continue
-                if out_w and out_h:
-                    px = nearest_resize(px, out_w, out_h)
-                h, w, ch = px.shape
-                rows.append(
-                    (doc_id, w, h, ch, int(px.sum(dtype="int64")),
-                     int(px.min()), int(px.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels",
-                    "px_sum", "px_min", "px_max",
-                ],
-            )
-
-    return stats
-
-
-def decode_image_pixels(
-    df: DataFrame,
-    out_w: int | None = None,
-    out_h: int | None = None,
-    strict: bool = True,
-) -> DataFrame:
-    """Decode PNG payloads to pixel stats (optionally resized) — the
-    same no-shuffle mapInPandas contract as image_meta, but the pixel
-    work is REAL (codecs.decode_png)."""
-    return df.select("doc_id", "payload").mapInPandas(
-        make_pixel_stats(out_w, out_h, strict), PIXEL_STATS_SCHEMA
-    )
+_GRAY_PALETTE = np.stack([np.arange(256)] * 3, 1).astype(np.uint8)
 
 
 def attach_gradient_gif_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Synthesize a REAL GIF89a per row — LZW-compressed index
     stream, grayscale palette (palette[i] = (i, i, i)), interlaced
-    for odd ids so both row orders are exercised — with the same
-    closed-form gradient as the PNG twin:
-
-        width  = id % 5 * 8 + 16
-        height = id % 7 * 4 + 12
-        idx[r, c] = (id * 31 + r * 7 + c * 13) % 256
-
-    Decoding requires real variable-width LZW work + de-interlacing,
-    so a downstream hash match certifies the GIF decoder."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from .codecs import encode_gif
-
-    pal = None
-
-    def _gifs(ids: pd.Series) -> pd.Series:
-        nonlocal pal
-        if pal is None:
-            pal = np.stack([np.arange(256)] * 3, 1).astype(np.uint8)
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = i % 5 * 8 + 16, i % 7 * 4 + 12
-            r, c = np.mgrid[0:h, 0:w]
-            idx = ((i * 31 + r * 7 + c * 13) % 256).astype(np.uint8)
-            out.append(encode_gif(idx, pal, interlace=bool(i % 2)))
-        return pd.Series(out)
-
-    gif = pandas_udf(_gifs, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("image/gif").alias("media_type"),
-        gif(F.col(id_col)).alias("payload"),
+    for odd ids so both row orders are exercised — with the PNG
+    twin's closed-form gradient as the index plane. Decoding requires
+    real variable-width LZW work + de-interlacing, so a downstream
+    hash match certifies the GIF decoder."""
+    return _synth(
+        df, "image/gif",
+        lambda i: codecs.encode_gif(
+            _gray_gradient(i), _GRAY_PALETTE, interlace=bool(i % 2)
+        ),
+        id_col,
     )
 
 
@@ -761,11 +437,10 @@ def attach_gradient_jpeg_payload(
 ) -> DataFrame:
     """Synthesize a REAL baseline JPEG per row (8x8 DCT, Annex-K
     quantization at quality 95, Huffman entropy coding) carrying a
-    smooth closed-form plane — JPEG is lossy, so the plane is chosen
-    wrap-free and the downstream contract is a BOUNDED error vs:
+    smooth closed-form plane on the gradient grid — JPEG is lossy, so
+    the plane is chosen wrap-free and the downstream contract is a
+    BOUNDED error vs:
 
-        width  = id % 5 * 8 + 16
-        height = id % 7 * 4 + 12
         px[r, c] = id % 128 + r + c      (max 127+35+47 < 255)
 
     ``successive=True`` emits full successive-approximation
@@ -774,63 +449,60 @@ def attach_gradient_jpeg_payload(
     same bound (the refinement pass restores full coefficient
     precision, codecs tests pin bit-equality with the plain
     progressive decode)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    from .codecs import encode_jpeg
+    def jpeg(i: int) -> bytes:
+        r, c = _gradient_grid(i)
+        px = (i % 128 + r + c).astype(np.uint8)
+        return codecs.encode_jpeg(px, quality=95, successive=successive)
 
-    def _jpegs(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = i % 5 * 8 + 16, i % 7 * 4 + 12
-            r, c = np.mgrid[0:h, 0:w]
-            px = (i % 128 + r + c).astype(np.uint8)
-            out.append(encode_jpeg(px, quality=95, successive=successive))
-        return pd.Series(out)
-
-    jpg = pandas_udf(_jpegs, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("image/jpeg").alias("media_type"),
-        jpg(F.col(id_col)).alias("payload"),
-    )
+    return _synth(df, "image/jpeg", jpeg, id_col)
 
 
 def attach_gradient_color_jpeg_payload(df: DataFrame, id_col: str) -> DataFrame:
     """Synthesize a REAL baseline COLOR JPEG per row (YCbCr, 4:2:0
     chroma subsampling, Annex-K luma+chroma tables, quality 95)
-    carrying three smooth wrap-free planes:
+    carrying three smooth wrap-free planes on the gradient grid:
 
-        width  = id % 5 * 8 + 16     height = id % 7 * 4 + 12
         R[r, c] = id % 80 + 20 + r + c
         G[r, c] = id % 90 + 30 + r + c
         B[r, c] = id % 70 + 40 + r + c   (max 119+35+47 < 255)"""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    from .codecs import encode_jpeg
+    def jpeg(i: int) -> bytes:
+        r, c = _gradient_grid(i)
+        grad = r + c
+        px = np.stack(
+            [i % 80 + 20 + grad, i % 90 + 30 + grad, i % 70 + 40 + grad],
+            axis=2,
+        ).astype(np.uint8)
+        return codecs.encode_jpeg(px, quality=95, subsample="420")
 
-    def _jpegs(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = i % 5 * 8 + 16, i % 7 * 4 + 12
-            r, c = np.mgrid[0:h, 0:w]
-            grad = r + c
-            px = np.stack(
-                [i % 80 + 20 + grad, i % 90 + 30 + grad, i % 70 + 40 + grad],
-                axis=2,
-            ).astype(np.uint8)
-            out.append(encode_jpeg(px, quality=95, subsample="420"))
-        return pd.Series(out)
+    return _synth(df, "image/jpeg", jpeg, id_col)
 
-    jpg = pandas_udf(_jpegs, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("image/jpeg").alias("media_type"),
-        jpg(F.col(id_col)).alias("payload"),
-    )
+
+def decode_image_pixels(
+    df: DataFrame,
+    out_w: int | None = None,
+    out_h: int | None = None,
+) -> DataFrame:
+    """PNG, GIF or JPEG payload -> REAL decoded pixel stats
+    (magic-byte dispatch: GIF -> LZW decode, JPEG -> Huffman+IDCT,
+    else PNG -> inflate+unfilter), optionally after a nearest-neighbor
+    resize (out[r, c] = in[r*H//H', c*W//W'] — closed-form
+    checkable)."""
+
+    def row(doc_id, data):
+        if data[:3] == b"GIF":
+            px = codecs.decode_gif(data)
+        elif data[:2] == b"\xff\xd8":
+            px = codecs.decode_jpeg(data)
+        else:
+            px = codecs.decode_png(data)
+        if out_w and out_h:
+            px = codecs.nearest_resize(px, out_w, out_h)
+        h, w, ch = px.shape
+        yield (doc_id, w, h, ch, *_stats(px))
+
+    return _map_rows(df.select("doc_id", "payload"), PIXEL_STATS_SCHEMA, row)
 
 
 def attach_pcm_audio_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -839,26 +511,13 @@ def attach_pcm_audio_payload(df: DataFrame, id_col: str) -> DataFrame:
 
         n_frames  = id % 300 + 50
         sample[i] = (id * 31 + i * 7) % 65536 - 32768"""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    from .codecs import encode_wav_pcm16
+    def wav(i: int) -> bytes:
+        n = np.arange(i % 300 + 50, dtype=np.int64)
+        s = (i * 31 + n * 7) % 65536 - 32768
+        return codecs.encode_wav_pcm16(s.astype(np.int32), 16000)
 
-    def _wavs(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            n = i % 300 + 50
-            s = (i * 31 + np.arange(n, dtype=np.int64) * 7) % 65536 - 32768
-            out.append(encode_wav_pcm16(s.astype(np.int32), 16000))
-        return pd.Series(out)
-
-    wav = pandas_udf(_wavs, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("audio/wav").alias("media_type"),
-        wav(F.col(id_col)).alias("payload"),
-    )
+    return _synth(df, "audio/wav", wav, id_col)
 
 
 def attach_g711_code_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -871,45 +530,32 @@ def attach_g711_code_payload(df: DataFrame, id_col: str) -> DataFrame:
     The decoder must run the actual ITU expansion to recover the
     samples; an oracle can mirror that expansion relationally, so a
     downstream hash match certifies the companding math itself."""
-    import struct as _struct
 
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    def wav(i: int) -> bytes:
+        codes = ((i + np.arange(i % 400 + 100)) % 256).astype(np.uint8)
+        law = "ulaw" if i % 2 == 0 else "alaw"
+        return codecs.g711_wav(codes.tobytes(), law)
 
-    def _wavs(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            n = i % 400 + 100
-            codes = ((i + np.arange(n)) % 256).astype(np.uint8)
-            fmt_tag = 7 if i % 2 == 0 else 6
-            body = codes.tobytes()
-            out.append(
-                b"RIFF"
-                + _struct.pack("<I", 38 + len(body))
-                + b"WAVEfmt "
-                + _struct.pack("<IHHIIHH", 18, fmt_tag, 1, 8000, 8000, 1, 8)
-                + _struct.pack("<H", 0)
-                + b"data"
-                + _struct.pack("<I", len(body))
-                + body
-            )
-        return pd.Series(out)
-
-    wav = pandas_udf(_wavs, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
+    media_type = (
         F.when(F.col(id_col) % 2 == 0, F.lit("audio/ulaw"))
         .otherwise(F.lit("audio/alaw"))
-        .alias("media_type"),
-        wav(F.col(id_col)).alias("payload"),
     )
+    return _synth(df, media_type, wav, id_col)
 
 
-FRAME_PIXEL_SCHEMA = (
-    "doc_id bigint, frame_idx int, width int, height int, "
-    "px_sum bigint, px_min int, px_max int"
-)
+def decode_audio_samples(df: DataFrame) -> DataFrame:
+    """WAV payload -> REAL decoded sample stats
+    (codecs.decode_wav_samples: PCM, G.711, IMA ADPCM)."""
+
+    def row(doc_id, data):
+        samples, rate = codecs.decode_wav_samples(data)
+        n_frames, ch = samples.shape
+        yield (
+            doc_id, n_frames, ch, rate,
+            *(_stats(samples) if samples.size else (0, 0, 0)),
+        )
+
+    return _map_rows(df.select("doc_id", "payload"), AUDIO_STATS_SCHEMA, row)
 
 
 def attach_dib_video_payload(df: DataFrame, id_col: str) -> DataFrame:
@@ -920,114 +566,27 @@ def attach_dib_video_payload(df: DataFrame, id_col: str) -> DataFrame:
         width    = id % 3 * 8 + 8     height = id % 2 * 4 + 8
         n_frames = id % 6 + 2
         px[f, r, c] = (id + f*5 + r*7 + c*11) % 256  (B = G = R)"""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
 
-    from .codecs import encode_avi_dib
+    def avi(i: int) -> bytes:
+        r, c = np.mgrid[0 : i % 2 * 4 + 8, 0 : i % 3 * 8 + 8]
+        frames = []
+        for f in range(i % 6 + 2):
+            v = ((i + f * 5 + r * 7 + c * 11) % 256).astype(np.uint8)
+            frames.append(np.repeat(v[:, :, None], 3, axis=2))
+        return codecs.encode_avi_dib(frames)
 
-    def _avis(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            i = int(i)
-            w, h = i % 3 * 8 + 8, i % 2 * 4 + 8
-            n = i % 6 + 2
-            r, c = np.mgrid[0:h, 0:w]
-            frames = []
-            for f in range(n):
-                v = ((i + f * 5 + r * 7 + c * 11) % 256).astype(np.uint8)
-                frames.append(np.repeat(v[:, :, None], 3, axis=2))
-            out.append(encode_avi_dib(frames))
-        return pd.Series(out)
-
-    avi = pandas_udf(_avis, "binary")
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.lit("video/avi").alias("media_type"),
-        avi(F.col(id_col)).alias("payload"),
-    )
+    return _synth(df, "video/avi", avi, id_col)
 
 
-def make_frame_pixel_stats(strict: bool = True):
-    """mapInPandas stage: AVI payload -> REAL decoded per-frame pixel
-    stats (codecs.avi_dib_frames: hdrl dims, movi chunk walk, DIB
-    bottom-up/BGR/stride decode). 1->N frame fan-out with a declared
-    schema; compressed '00dc' streams raise (the video-codec slot)."""
+def decode_video_frame_pixels(df: DataFrame) -> DataFrame:
+    """AVI payload -> REAL decoded per-frame pixel stats
+    (codecs.avi_dib_frames: avih dims, movi chunk walk, DIB
+    bottom-up/BGR/stride decode): a 1->N frame fan-out; compressed
+    '00dc' streams raise (the video-codec slot)."""
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codecs import AviError, avi_dib_frames
+    def row(doc_id, data):
+        w, h, frames = codecs.avi_dib_frames(data)
+        for k, px in enumerate(frames):
+            yield (doc_id, k, w, h, *_stats(px))
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, frames = avi_dib_frames(bytes(payload or b""))
-                except (AviError, NotImplementedError):
-                    if strict:
-                        raise
-                    continue
-                for k, px in enumerate(frames):
-                    rows.append(
-                        (doc_id, k, w, h, int(px.sum(dtype="int64")),
-                         int(px.min()), int(px.max()))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "width", "height",
-                    "px_sum", "px_min", "px_max",
-                ],
-            )
-
-    return stats
-
-
-def decode_video_frame_pixels(df: DataFrame, strict: bool = True) -> DataFrame:
-    """Decode AVI '00db' frames to per-frame pixel stats — the same
-    no-shuffle mapInPandas contract as the image/audio decode stages,
-    with a real 1->N demux fan-out."""
-    return df.select("doc_id", "payload").mapInPandas(
-        make_frame_pixel_stats(strict), FRAME_PIXEL_SCHEMA
-    )
-
-
-def make_audio_sample_stats(strict: bool = True):
-    """mapInPandas stage: WAV payload -> REAL decoded PCM sample
-    stats (codecs.decode_wav_samples). strict raises on undecodable
-    payloads; strict=False skips them."""
-
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .codecs import decode_wav_samples
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    samples, rate = decode_wav_samples(bytes(payload or b""))
-                except (ValueError, NotImplementedError):
-                    if strict:
-                        raise
-                    continue
-                n_frames, ch = samples.shape
-                rows.append(
-                    (doc_id, n_frames, ch, rate,
-                     int(samples.sum(dtype="int64")),
-                     int(samples.min()) if samples.size else 0,
-                     int(samples.max()) if samples.size else 0)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "channels", "sample_rate",
-                    "sample_sum", "sample_min", "sample_max",
-                ],
-            )
-
-    return stats
-
-
-def decode_audio_samples(df: DataFrame, strict: bool = True) -> DataFrame:
-    """Decode WAV-PCM payloads to sample stats — same no-shuffle
-    mapInPandas contract as audio_meta, with REAL sample extraction."""
-    return df.select("doc_id", "payload").mapInPandas(
-        make_audio_sample_stats(strict), AUDIO_STATS_SCHEMA
-    )
+    return _map_rows(df.select("doc_id", "payload"), FRAME_PIXEL_SCHEMA, row)

@@ -1051,7 +1051,7 @@ def m3_coherence_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the extractor's deterministic fallback fires: fake dims keyed to
     # md5(payload) — recomputable in SQL, making the whole Arrow
     # binary-column round trip hash-checkable (the sha1 content-id
-    # column stays pytest-checked; DuckDB lacks sha1)
+    # column is checked in tests/test_multimodal.py; DuckDB lacks sha1)
     "WITH h AS (SELECT doc_id, octet_length(encode(text)) AS n_bytes, "
     "CAST(('0x' || substr(md5(text), 1, 8)) AS UBIGINT) AS hv FROM documents) "
     "SELECT doc_id, 'image/png' AS media_type, n_bytes, "
@@ -1092,7 +1092,8 @@ def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse real — rate/channels/bit depth/duration; non-WAV codecs
     stubbed — see operators/multimodal.py). Oracle = the synthesis
     parameters recomputed (parse must recover exactly what the WAV
-    writer embedded); the sha1 content id stays pytest-checked."""
+    writer embedded); the sha1 content id is checked in
+    tests/test_multimodal.py."""
     from .operators.multimodal import attach_audio_payload, audio_meta
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
@@ -1109,7 +1110,8 @@ def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunk-walk demux is verifiable against ground truth: n_bytes =
     # 100-byte container + body (+1 word-align pad when odd),
     # duration = frames * us_per_frame // 1000 (integer math in both
-    # engines); the sha1 content id stays pytest-checked
+    # engines); the sha1 content id is checked in
+    # tests/test_multimodal.py
     "WITH b AS (SELECT doc_id, octet_length(encode(text)) AS body, "
     "CAST(doc_id % 3 * 8334 + 33333 AS INT) AS upf, "
     "CAST(doc_id % 3 * 160 + 320 AS INT) AS w FROM documents) "
@@ -1140,9 +1142,10 @@ def multimodal_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_video_frames",
     # the demux-driven 1->N fan-out is the Spark-side logic under
-    # test: every 10th frame index of the avih TotalFrames count.
-    # The stub per-frame hash (sha1 over payload+idx — a codec slot)
-    # stays pytest-checked; DuckDB lacks sha1
+    # test: every 10th frame index (multimodal.FRAME_STEP) of the avih
+    # TotalFrames count. The stub per-frame hash (sha1 over
+    # payload+idx — a codec slot) is checked in
+    # tests/test_multimodal.py; DuckDB lacks sha1
     "WITH b AS (SELECT doc_id, "
     "octet_length(encode(text)) % 240 + 24 AS nf FROM documents) "
     "SELECT doc_id, CAST(unnest(range(0, nf, 10)) AS INT) AS frame_idx "
@@ -1153,23 +1156,22 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out (every 10th frame index), per-frame decode stubbed as a
     deterministic content hash. The fan-out (doc_id, frame_idx) is
     hash-oracled against the synthesis ground truth; frame_sha1 is
-    pytest-checked (operators/multimodal.py)."""
+    checked in tests/test_multimodal.py."""
     from .operators.multimodal import attach_video_payload, video_frame_samples
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
     return video_frame_samples(
-        attach_video_payload(docs, "text", "doc_id"), every_n=10
+        attach_video_payload(docs, "text", "doc_id")
     ).select("doc_id", "frame_idx")
 
 
-@register(
-    "multimodal_image_decode",
-    # REAL pixel decode (round 7): payloads are genuine zlib-deflated
-    # PNGs (CRC'd chunks, row filters cycling all five types) whose
-    # gradient pixels follow a closed form. Spark recovers the stats
-    # by actually inflating + unfiltering (operators/codecs.py);
-    # DuckDB recomputes them from the formula — a hash match
-    # certifies the decoder end to end.
+# REAL pixel decode (round 7): payloads are genuine zlib-deflated PNGs
+# (CRC'd chunks, row filters cycling all five types) whose gradient
+# pixels follow a closed form. Spark recovers the stats by actually
+# inflating + unfiltering (operators/codecs.py); DuckDB recomputes
+# them from the formula — a hash match certifies the decoder end to
+# end. Shared by the batch query and its streaming twin.
+_PNG_GRADIENT_SQL = (
     "WITH dims AS (SELECT doc_id, doc_id % 5 * 8 + 16 AS w, "
     "doc_id % 7 * 4 + 12 AS h FROM documents), "
     "rws AS (SELECT doc_id, w, h, unnest(range(0, h)) AS r FROM dims), "
@@ -1179,8 +1181,11 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "CAST(SUM((doc_id*31 + r*7 + c*13) % 256) AS BIGINT) AS px_sum, "
     "CAST(MIN((doc_id*31 + r*7 + c*13) % 256) AS INT) AS px_min, "
     "CAST(MAX((doc_id*31 + r*7 + c*13) % 256) AS INT) AS px_max "
-    "FROM cells GROUP BY doc_id, w, h",
+    "FROM cells GROUP BY doc_id, w, h"
 )
+
+
+@register("multimodal_image_decode", _PNG_GRADIENT_SQL)
 def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL PNG pixel decode at scale: synthesize a genuine PNG per
     document (zlib IDAT, all five filter types), then decode it back
@@ -1195,11 +1200,7 @@ def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return decode_image_pixels(
-        attach_gradient_image_payload(docs, "doc_id")
-    ).select(
-        "doc_id", "width", "height", "channels", "px_sum", "px_min", "px_max"
-    )
+    return decode_image_pixels(attach_gradient_image_payload(docs, "doc_id"))
 
 
 @register(
@@ -1234,8 +1235,6 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", widen=True)
     return decode_image_pixels(
         attach_gradient_image_payload(docs, "doc_id"), out_w=8, out_h=6
-    ).select(
-        "doc_id", "width", "height", "channels", "px_sum", "px_min", "px_max"
     )
 
 
@@ -1270,75 +1269,77 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return decode_image_pixels(
-        attach_gradient_gif_payload(docs, "doc_id")
-    ).select(
-        "doc_id", "width", "height", "channels", "px_sum", "px_min", "px_max"
-    )
+    return decode_image_pixels(attach_gradient_gif_payload(docs, "doc_id"))
 
 
-@register(
-    "multimodal_jpeg_decode",
-    # REAL baseline JPEG decode (round 7): payloads are genuine
-    # DCT/Huffman JPEGs carrying a smooth closed-form plane. JPEG is
-    # lossy, so this is a certificate in per-doc rows: dimensions are
-    # exact (the marker walk must recover SOF0), and booleans bound
-    # the decoded stats against the plane (|px_sum - exact| <= 2*w*h
-    # from a <=2/pixel reconstruction error at quality 95; min/max
-    # within 2). DuckDB recomputes the closed forms; a hash match
-    # certifies the Huffman+IDCT pipeline lands within tolerance on
-    # EVERY document.
-    "WITH dims AS (SELECT doc_id, doc_id % 5 * 8 + 16 AS w, "
-    "doc_id % 7 * 4 + 12 AS h FROM documents) "
-    "SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height, "
-    "1 AS channels, CAST(1 AS BIGINT) AS sum_ok, 1 AS min_ok, 1 AS max_ok "
-    "FROM dims",
-)
-def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline JPEG decode at scale: synthesize a genuine JPEG
-    per document (DCT, Annex-K quantization, Huffman), decode it back
-    in the shared mapInPandas pixel stage (codecs.decode_jpeg_gray:
-    marker walk, canonical Huffman reconstruction, entropy decode
-    with unstuffing, dequant, IDCT) and certify the decoded stats
-    against the closed-form plane within the lossy-codec tolerance."""
-    from .operators.multimodal import (
-        attach_gradient_jpeg_payload,
-        decode_image_pixels,
-    )
+def _jpeg_certificate(
+    payloads: DataFrame, offsets: list[Column], tol: int
+) -> DataFrame:
+    """Decode gradient JPEG payloads (one plane per offset column,
+    plane[r, c] = offset + r + c on the gradient grid) and certify the
+    stats per doc within the lossy tolerance ``tol`` per pixel per
+    channel: |px_sum - exact| <= tol * planes * w * h, px_min within
+    tol of least(offsets), px_max within tol of greatest(offsets) +
+    h-1 + w-1. Columns: exact dims, sum_ok long, min_ok/max_ok int."""
+    from .operators.multimodal import decode_image_pixels
 
-    docs = load_table(spark, sf_dir, "documents", widen=True)
-    decoded = decode_image_pixels(
-        attach_gradient_jpeg_payload(docs, "doc_id")
-    )
-    a = F.col("doc_id") % 128
+    n = len(offsets)
     w = F.col("width").cast("long")
     h = F.col("height").cast("long")
-    exact_sum = (
-        w * h * a + w * (h * (h - 1) / 2).cast("long")
+    grad = (
+        w * (h * (h - 1) / 2).cast("long")
         + h * (w * (w - 1) / 2).cast("long")
     )
-    return decoded.select(
+    exact_sum = w * h * sum(offsets[1:], offsets[0]) + n * grad
+    lo = F.least(*offsets) if n > 1 else offsets[0]
+    hi = F.greatest(*offsets) if n > 1 else offsets[0]
+    return decode_image_pixels(payloads).select(
         "doc_id", "width", "height", "channels",
-        (F.abs(F.col("px_sum") - exact_sum) <= 2 * w * h)
+        (F.abs(F.col("px_sum") - exact_sum) <= tol * n * w * h)
         .cast("long").alias("sum_ok"),
-        (F.abs(F.col("px_min") - a) <= 2).cast("int").alias("min_ok"),
-        (F.abs(F.col("px_max") - (a + h - 1 + w - 1)) <= 2)
+        (F.abs(F.col("px_min") - lo) <= tol).cast("int").alias("min_ok"),
+        (F.abs(F.col("px_max") - (hi + h - 1 + w - 1)) <= tol)
         .cast("int").alias("max_ok"),
     )
 
 
-@register(
-    "multimodal_jpeg_sa_decode",
-    # Successive-approximation JPEG decode (r9, the former strict-mode
-    # slot): same closed-form plane and lossy-codec certificate as
-    # multimodal_jpeg_decode — the refinement scans restore full
-    # coefficient precision, so the bound is identical.
+# REAL gray JPEG decode (round 7): payloads are genuine DCT/Huffman
+# JPEGs carrying a smooth closed-form plane. JPEG is lossy, so this is
+# a certificate in per-doc rows: dimensions are exact (the marker walk
+# must recover the SOF), and booleans bound the decoded stats against
+# the plane (|px_sum - exact| <= 2*w*h from a <=2/pixel reconstruction
+# error at quality 95; min/max within 2). DuckDB recomputes the closed
+# forms; a hash match certifies the Huffman+IDCT pipeline lands within
+# tolerance on EVERY document. Shared by the baseline and the
+# successive-approximation query: the refinement scans restore full
+# coefficient precision, so the bound is identical.
+_JPEG_GRAY_SQL = (
     "WITH dims AS (SELECT doc_id, doc_id % 5 * 8 + 16 AS w, "
     "doc_id % 7 * 4 + 12 AS h FROM documents) "
     "SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height, "
     "1 AS channels, CAST(1 AS BIGINT) AS sum_ok, 1 AS min_ok, 1 AS max_ok "
-    "FROM dims",
+    "FROM dims"
 )
+
+
+@register("multimodal_jpeg_decode", _JPEG_GRAY_SQL)
+def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL baseline JPEG decode at scale: synthesize a genuine JPEG
+    per document (DCT, Annex-K quantization, Huffman), decode it back
+    in the shared mapInPandas pixel stage (codecs.decode_jpeg: marker
+    walk, canonical Huffman reconstruction, entropy decode with
+    unstuffing, dequant, IDCT) and certify the decoded stats against
+    the closed-form plane within the lossy-codec tolerance."""
+    from .operators.multimodal import attach_gradient_jpeg_payload
+
+    docs = load_table(spark, sf_dir, "documents", widen=True)
+    return _jpeg_certificate(
+        attach_gradient_jpeg_payload(docs, "doc_id"),
+        [F.col("doc_id") % 128], 2,
+    )
+
+
+@register("multimodal_jpeg_sa_decode", _JPEG_GRAY_SQL)
 def multimodal_jpeg_sa_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL successive-approximation JPEG decode at scale: per
     document a genuine T.81 G.1.2 progressive JPEG (DC first scan at
@@ -1348,30 +1349,13 @@ def multimodal_jpeg_sa_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared Arrow-batched mapInPandas pixel stage and certified
     against the closed-form plane within the lossy tolerance — the
     default output mode of real progressive encoders (libjpeg's
-    standard scan script), formerly a declared strict-mode slot."""
-    from .operators.multimodal import (
-        attach_gradient_jpeg_payload,
-        decode_image_pixels,
-    )
+    standard scan script)."""
+    from .operators.multimodal import attach_gradient_jpeg_payload
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    decoded = decode_image_pixels(
-        attach_gradient_jpeg_payload(docs, "doc_id", successive=True)
-    )
-    a = F.col("doc_id") % 128
-    w = F.col("width").cast("long")
-    h = F.col("height").cast("long")
-    exact_sum = (
-        w * h * a + w * (h * (h - 1) / 2).cast("long")
-        + h * (w * (w - 1) / 2).cast("long")
-    )
-    return decoded.select(
-        "doc_id", "width", "height", "channels",
-        (F.abs(F.col("px_sum") - exact_sum) <= 2 * w * h)
-        .cast("long").alias("sum_ok"),
-        (F.abs(F.col("px_min") - a) <= 2).cast("int").alias("min_ok"),
-        (F.abs(F.col("px_max") - (a + h - 1 + w - 1)) <= 2)
-        .cast("int").alias("max_ok"),
+    return _jpeg_certificate(
+        attach_gradient_jpeg_payload(docs, "doc_id", successive=True),
+        [F.col("doc_id") % 128], 2,
     )
 
 
@@ -1396,33 +1380,13 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-component dequant+IDCT, chroma upsampling, YCbCr->RGB) and
     certify the decoded stats against the closed-form planes within
     the lossy tolerance."""
-    from .operators.multimodal import (
-        attach_gradient_color_jpeg_payload,
-        decode_image_pixels,
-    )
+    from .operators.multimodal import attach_gradient_color_jpeg_payload
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    decoded = decode_image_pixels(
-        attach_gradient_color_jpeg_payload(docs, "doc_id")
-    )
-    a = F.col("doc_id") % 80 + 20
-    b = F.col("doc_id") % 90 + 30
-    cch = F.col("doc_id") % 70 + 40
-    w = F.col("width").cast("long")
-    h = F.col("height").cast("long")
-    grad = (
-        w * (h * (h - 1) / 2).cast("long")
-        + h * (w * (w - 1) / 2).cast("long")
-    )
-    exact_sum = w * h * (a + b + cch) + 3 * grad
-    exact_min = F.least(a, b, cch)
-    exact_max = F.greatest(a, b, cch) + h - 1 + w - 1
-    return decoded.select(
-        "doc_id", "width", "height", "channels",
-        (F.abs(F.col("px_sum") - exact_sum) <= 18 * w * h)
-        .cast("long").alias("sum_ok"),
-        (F.abs(F.col("px_min") - exact_min) <= 6).cast("int").alias("min_ok"),
-        (F.abs(F.col("px_max") - exact_max) <= 6).cast("int").alias("max_ok"),
+    d = F.col("doc_id")
+    return _jpeg_certificate(
+        attach_gradient_color_jpeg_payload(docs, "doc_id"),
+        [d % 80 + 20, d % 90 + 30, d % 70 + 40], 6,
     )
 
 
@@ -1459,31 +1423,14 @@ def multimodal_video_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return decode_video_frame_pixels(
-        attach_dib_video_payload(docs, "doc_id")
-    ).select(
-        "doc_id", "frame_idx", "width", "height",
-        "px_sum", "px_min", "px_max"
-    )
+    return decode_video_frame_pixels(attach_dib_video_payload(docs, "doc_id"))
 
 
-@register(
-    "streaming_image_decode",
-    # the codec decode stage riding Structured Streaming: stateless
-    # 1:1 mapInPandas per micro-batch, so the AvailableNow drain is
-    # deterministic regardless of batch splits and the BATCH decode
-    # query's closed-form oracle applies unchanged
-    "WITH dims AS (SELECT doc_id, doc_id % 5 * 8 + 16 AS w, "
-    "doc_id % 7 * 4 + 12 AS h FROM documents), "
-    "rws AS (SELECT doc_id, w, h, unnest(range(0, h)) AS r FROM dims), "
-    "cells AS (SELECT doc_id, w, h, r, unnest(range(0, w)) AS c FROM rws) "
-    "SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height, "
-    "1 AS channels, "
-    "CAST(SUM((doc_id*31 + r*7 + c*13) % 256) AS BIGINT) AS px_sum, "
-    "CAST(MIN((doc_id*31 + r*7 + c*13) % 256) AS INT) AS px_min, "
-    "CAST(MAX((doc_id*31 + r*7 + c*13) % 256) AS INT) AS px_max "
-    "FROM cells GROUP BY doc_id, w, h",
-)
+# the codec decode stage riding Structured Streaming: stateless 1:1
+# mapInPandas per micro-batch, so the AvailableNow drain is
+# deterministic regardless of batch splits and the BATCH decode
+# query's closed-form oracle applies unchanged
+@register("streaming_image_decode", _PNG_GRADIENT_SQL)
 def streaming_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL codec decode inside Structured Streaming (SURVEY 2.10 x
     multimodal): the PNG inflate+unfilter stage runs per micro-batch
@@ -1492,9 +1439,7 @@ def streaming_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is stateless and 1:1 (streaming/ingest.streaming_decode_batch)."""
     from .streaming.ingest import streaming_decode_batch
 
-    return streaming_decode_batch(spark, sf_dir).select(
-        "doc_id", "width", "height", "channels", "px_sum", "px_min", "px_max"
-    )
+    return streaming_decode_batch(spark, sf_dir)
 
 
 @register(
@@ -1537,12 +1482,7 @@ def multimodal_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return decode_audio_samples(
-        attach_g711_code_payload(docs, "doc_id")
-    ).select(
-        "doc_id", "n_frames", "channels", "sample_rate",
-        "sample_sum", "sample_min", "sample_max"
-    )
+    return decode_audio_samples(attach_g711_code_payload(docs, "doc_id"))
 
 
 @register(
@@ -1572,12 +1512,7 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return decode_audio_samples(
-        attach_pcm_audio_payload(docs, "doc_id")
-    ).select(
-        "doc_id", "n_frames", "channels", "sample_rate",
-        "sample_sum", "sample_min", "sample_max"
-    )
+    return decode_audio_samples(attach_pcm_audio_payload(docs, "doc_id"))
 
 
 @register(

@@ -46,8 +46,8 @@ CODEGEN_CACHE_ENTRIES = 16384
 # session-window state stores outgrow executor heaps (the default
 # HDFSBackedStateStoreProvider keeps every version in memory);
 # RocksDB spills to local SSD with incremental checkpointing. It is a
-# per-QUERY-START conf, so it can also be flipped at runtime via
-# spark.conf.set before .start().
+# per-QUERY-START conf: set spark.sql.streaming.stateStore.providerClass
+# to it (spark.conf.set, or extra_conf) before .start().
 ROCKSDB_STATE_STORE = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
@@ -59,11 +59,11 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    state_store: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
-    ``state_store``: streaming state-store provider class; pass
+    The streaming state-store provider is the
+    ``spark.sql.streaming.stateStore.providerClass`` conf; set it to
     ``ROCKSDB_STATE_STORE`` for the disk-backed provider (production
     default at scale; smoke-tested in tests/test_streaming.py).
     """
@@ -102,10 +102,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
     )
-    if state_store:
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", state_store
-        )
     # deployment-specific overrides without code edits (cluster sizing,
     # A/B measurement): semicolon-separated key=value pairs, applied
     # before per-call extra_conf so callers still win

@@ -1,5 +1,6 @@
 """Multimodal plumbing: header parsing is real; codec fallback is
-deterministic; frame sampler fan-out shape."""
+deterministic; content ids match their definition; frame sampler
+fan-out shape."""
 
 from __future__ import annotations
 
@@ -40,25 +41,6 @@ def test_strict_mode_raises(spark):
     with pytest.raises(Exception) as exc:
         M.image_meta(df, strict=True).collect()
     assert "NotImplementedError" in str(exc.value) or "no codec" in str(exc.value)
-
-
-def test_resize_and_features_chain(spark):
-    rows = [(1, "image/png", M._png_header(100, 50) + b"payload-bytes" * 20)]
-    df = spark.createDataFrame(rows, "doc_id long, media_type string, payload binary")
-    resized = M.resize_images(df, 224, 224)
-    r = resized.first()
-    assert (r["width"], r["height"]) == (224, 224)
-    assert len(bytes(r["payload"])) >= 1
-    feats = M.extract_features(resized, dim=8).first()["features"]
-    assert len(feats) == 8
-    assert abs(sum(feats) - 1.0) < 1e-6  # histogram normalized
-
-
-def test_frame_sampler(spark):
-    df = spark.createDataFrame([(1, b"0123456789" * 5)], "doc_id long, payload binary")
-    out = M.frame_samples(df, every_n=10, max_frames=3).collect()
-    assert [r["frame_idx"] for r in out] == [0, 1, 2]
-    assert all(len(r["frame_sha1"]) == 40 for r in out)
 
 
 def test_wav_header_parse_roundtrip():
@@ -158,7 +140,7 @@ def test_attach_video_payload_demux_end_to_end(spark):
     assert out[5]["n_frames"] == 300 % 240 + 24
     assert out[5]["n_bytes"] == 100 + 300  # even body, no pad
 
-    frames = M.video_frame_samples(payloads, every_n=10).collect()
+    frames = M.video_frame_samples(payloads).collect()
     by_doc: dict[int, list] = {}
     for r in frames:
         by_doc.setdefault(r["doc_id"], []).append(r)
@@ -170,9 +152,43 @@ def test_attach_video_payload_demux_end_to_end(spark):
     assert all(len(s) == 40 for s in shas) and len(set(shas)) == len(shas)
     again = {
         (r["doc_id"], r["frame_idx"]): r["frame_sha1"]
-        for r in M.video_frame_samples(payloads, every_n=10).collect()
+        for r in M.video_frame_samples(payloads).collect()
     }
     assert all(again[(r["doc_id"], r["frame_idx"])] == r["frame_sha1"] for r in frames)
+
+
+def test_content_ids_match_their_definition(spark):
+    # the sha1 / frame_sha1 columns no oracle can check (DuckDB lacks
+    # sha1), recomputed from the synthesized payload bytes: odd and
+    # even byte lengths, multi-byte UTF-8
+    import hashlib
+    import struct
+
+    df = spark.createDataFrame(
+        [(i, "caf\u00e9 news " * i + "x" * (i % 2)) for i in range(6)],
+        "doc_id long, text string",
+    )
+    for attach, stage in [
+        (M.attach_binary_payload, M.image_meta),
+        (M.attach_audio_payload, M.audio_meta),
+        (M.attach_video_payload, M.video_meta),
+    ]:
+        payloads = attach(df, "text", "doc_id")
+        raw = {r["doc_id"]: bytes(r["payload"]) for r in payloads.collect()}
+        out = stage(payloads).collect()
+        assert sorted(r["doc_id"] for r in out) == list(range(6))
+        for r in out:
+            p = raw[r["doc_id"]]
+            assert r["sha1"] == hashlib.sha1(p).hexdigest()
+            assert r["n_bytes"] == len(p)
+
+    video = M.attach_video_payload(df, "text", "doc_id")
+    raw = {r["doc_id"]: bytes(r["payload"]) for r in video.collect()}
+    frames = M.video_frame_samples(video).collect()
+    assert {r["doc_id"] for r in frames} == set(range(6))
+    for r in frames:
+        p = raw[r["doc_id"]] + struct.pack("<I", r["frame_idx"])
+        assert r["frame_sha1"] == hashlib.sha1(p).hexdigest()
 
 
 from hypothesis import given

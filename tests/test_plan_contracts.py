@@ -335,10 +335,12 @@ def test_textrank_no_python_uses_takeordered(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "name",
-    ["multimodal_image_decode", "multimodal_gif_decode",
-     "multimodal_jpeg_decode", "multimodal_jpeg_color_decode",
+    ["multimodal_image_decode", "multimodal_image_resize",
+     "multimodal_gif_decode", "multimodal_jpeg_decode",
+     "multimodal_jpeg_sa_decode", "multimodal_jpeg_color_decode",
      "multimodal_audio_decode", "multimodal_g711_decode",
-     "multimodal_video_frame_decode"],
+     "multimodal_audio_meta", "multimodal_video_meta",
+     "multimodal_video_frames", "multimodal_video_frame_decode"],
 )
 def test_codec_decode_payloads_never_shuffle(spark, sf_dir, name):
     plan = _plan(spark, sf_dir, name)

@@ -2,7 +2,13 @@
 
     python tools/dump_plans.py <out_dir> <suffix> [sf_dir] <query> [query ...]
 
-Writes <out_dir>/<query>_<suffix>.txt for each query. Queries whose
+Writes <out_dir>/<query>_<suffix>.txt for each query. The numbers a
+process-global counter hands out are stripped (expression ids
+``doc_id#12L`` -> ``doc_id#L``, ``plan_id=``, ``RDD[]``, lambda
+variables ``lambda x_303`` -> ``lambda x_``), and each query's blocks
+are released after its explain, so a dump does not depend on which
+queries were built before it: two checkouts' dumps (same suffix,
+different out_dirs) compare with a plain ``diff -r``. Queries whose
 DataFrame cannot be built (e.g. streaming drains that need a live
 run) record the exception instead so the failure is visible.
 """
@@ -10,12 +16,29 @@ run) record the exception instead so the failure is visible.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bbcnews_scraper_nlp_spark.queries import REGISTRY  # noqa: E402
-from bbcnews_scraper_nlp_spark.session import get_spark  # noqa: E402
+from bbcnews_scraper_nlp_spark.session import (  # noqa: E402
+    get_spark,
+    release_blocks,
+)
+
+_GLOBAL_NUMBERS = [
+    (re.compile(r"#\d+"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"(lambda \w+)_\d+"), r"\1_"),
+]
+
+
+def strip_global_numbers(plan: str) -> str:
+    for pattern, repl in _GLOBAL_NUMBERS:
+        plan = pattern.sub(repl, plan)
+    return plan
 
 
 def main() -> None:
@@ -32,11 +55,15 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         try:
             df = q.fn(spark, sf_dir)
-            txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            txt = strip_global_numbers(
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             )
         except Exception as e:  # noqa: BLE001
             txt = f"EXPLAIN FAILED: {type(e).__name__}: {e}\n"
+        finally:
+            release_blocks(spark)
         with open(path, "w") as f:
             f.write(txt)
         print(f"# wrote {path}", file=sys.stderr)
