@@ -3,17 +3,21 @@
 TextBlob's PatternAnalyzer is a lexicon lookup averaged over matched
 words with negation/intensifier modifiers
 (sentiment_analysis.ipynb:262-263, cell 7). The engine provides the
-same surface three ways, fastest first:
+same surface four ways, fastest first:
 
 1. ``polarity_expr``/``subjectivity_expr`` — pure Catalyst column
    expressions over a small lexicon (map literal in the plan). The
    100 TB default: whole-stage codegen, zero Python, no shuffle.
 2. ``score_with_lexicon_join`` — explode tokens + broadcast-join a
-   lexicon DataFrame + re-aggregate. For large lexicons that don't
-   belong in a plan literal. One shuffle (the re-agg by doc key),
-   map-side combined.
-3. ``sentiment_pandas_udf`` — Arrow-vectorized escape hatch with the
-   negation rule (TextBlob-style "not X" -> -0.5 * polarity(X)),
+   milli-unit lexicon DataFrame (``full_lexicon_df``) + re-aggregate
+   with an exact integer sum. For large lexicons that don't belong
+   in a plan literal. One shuffle (the re-agg by doc key), map-side
+   combined.
+3. ``pattern_scores`` — the PatternAnalyzer chunk rules (negation and
+   intensifier windows) as one relational plan: one broadcast join
+   of the same full lexicon, windows over each doc's tokens.
+4. ``make_sentiment_pandas_udf`` — Arrow-vectorized escape hatch with
+   the negation rule (TextBlob-style "not X" -> -0.5 * polarity(X)),
    for semantics the pure-DF forms can't express.
 
 No TextBlob/NLTK dependency: the default lexicon is a deterministic
@@ -80,23 +84,37 @@ def subjectivity_expr(
 
 def score_with_lexicon_join(
     df: DataFrame,
-    text_tokens_col: str,
+    tokens: Column | str,
     key_cols: list[str],
     lexicon_df: DataFrame,
 ) -> DataFrame:
-    """Large-lexicon path: posexplode tokens -> broadcast join lexicon
-    (word, polarity, subjectivity) -> groupBy doc key -> avg.
+    """Large-lexicon path: explode ``tokens`` -> broadcast left join
+    the (word, p_milli, s_milli) lexicon (``full_lexicon_df``) ->
+    groupBy doc key -> mean over matched tokens.
 
-    Scale: lexicon broadcasts (it's small vs the corpus); the single
-    shuffle is the per-document re-aggregation with map-side partial
-    aggregation. Docs with zero matched tokens keep score 0.0 via the
-    left join + coalesce.
+    Exactness: scores are integer milli-units, so the per-doc mean is
+    an exact integer SUM divided ONCE by (n·1000.0) — order-free in
+    any fold, and the identical IEEE op in DuckDB (no ROUND on a
+    computed double). Scale: the lexicon broadcasts (it's small vs
+    the corpus); the single shuffle is the per-document
+    re-aggregation with map-side partial aggregation. Docs with zero
+    matched tokens (or no tokens) score 0.0, as TextBlob does.
     """
-    exploded = df.select(*key_cols, F.explode_outer(text_tokens_col).alias("word"))
+    exploded = df.select(*key_cols, F.explode_outer(tokens).alias("word"))
     joined = exploded.join(F.broadcast(lexicon_df), "word", "left")
-    return joined.groupBy(*key_cols).agg(
-        F.coalesce(F.avg("polarity"), F.lit(0.0)).alias("polarity"),
-        F.coalesce(F.avg("subjectivity"), F.lit(0.0)).alias("subjectivity"),
+    agg = joined.groupBy(*key_cols).agg(
+        F.count("p_milli").alias("__n"),
+        F.sum("p_milli").alias("__p"),
+        F.sum("s_milli").alias("__s"),
+    )
+    return agg.select(
+        *key_cols,
+        F.when(
+            F.col("__n") > 0, F.col("__p") / (F.col("__n") * 1000.0)
+        ).otherwise(F.lit(0.0)).alias("polarity"),
+        F.when(
+            F.col("__n") > 0, F.col("__s") / (F.col("__n") * 1000.0)
+        ).otherwise(F.lit(0.0)).alias("subjectivity"),
     )
 
 

@@ -1,7 +1,7 @@
 """Spark 4 Python UDTFs — the table-function escape hatch of the
 §2.9 UDF surface (scalar pandas_udf / mapInPandas / applyInPandas /
-applyInPandasWithState / transformWithStateInPandas / Python
-DataSource are covered elsewhere; this completes the set).
+applyInPandasWithState / Python DataSource are covered
+elsewhere; this completes the set).
 
 A UDTF is the right slot when one input row expands into a variable
 number of rows AND the expansion logic genuinely needs Python (a

@@ -74,24 +74,12 @@ def nb_train_predict(
     (``nb_model`` + ``nb_predict``) costs one explode per frame the
     same way.
     """
-    tfc = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.col(label_col).alias("cls"),
-            F.explode(F.split(F.col(text_col), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .withColumn("w", _nb_feature(F.col("w"), hash_buckets))
-        .groupBy("id", "cls", "w")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    tfc = _nb_tf(
+        docs, text_col, [F.col(id_col).alias("id"), F.col(label_col).alias("cls")],
+        hash_buckets,
+    ).localCheckpoint(eager=False)
     wc = tfc.groupBy("w", "cls").agg(F.sum("tf").alias("cnt"))
-    ndocs = docs.groupBy(F.col(label_col).alias("cls")).agg(
-        F.count("*").alias("n_c")
-    )
-    n_all = docs.agg(F.count("*").alias("n"))
-    model, classes = _nb_model_from_counts(wc, ndocs, n_all)
+    model, classes = _nb_model_from_counts(wc, _nb_class_counts(docs, label_col, wc))
     base = docs.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("label")
     )
@@ -100,6 +88,20 @@ def nb_train_predict(
 
 def _nb_feature(w: Column, hash_buckets: int | None) -> Column:
     return feature_hash(w, hash_buckets) if hash_buckets else w
+
+
+def _nb_tf(
+    docs: DataFrame, text_col: str, keys: list[Column], hash_buckets: int | None
+) -> DataFrame:
+    """THE token pass: the space-split tokens of ``text_col`` (empty
+    tokens dropped, hashed when ``hash_buckets``) counted per
+    (``keys``, token). Returns (*keys, w, tf)."""
+    tok = (
+        docs.select(*keys, F.explode(F.split(F.col(text_col), " ")).alias("w"))
+        .filter(F.col("w") != "")
+        .withColumn("w", _nb_feature(F.col("w"), hash_buckets))
+    )
+    return tok.groupBy(*tok.columns).agg(F.count("*").alias("tf"))
 
 
 def nb_model(
@@ -121,55 +123,59 @@ def nb_model(
     token explode; class totals and |V| are its marginals (the same
     integers a direct pass would count).
     """
-    tok = (
-        docs.select(
-            F.col(label_col).alias("cls"),
-            F.explode(F.split(F.col(text_col), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .withColumn("w", _nb_feature(F.col("w"), hash_buckets))
-    )
-    wc = tok.groupBy("w", "cls").agg(F.count("*").alias("cnt"))
+    wc = _nb_tf(
+        docs, text_col, [F.col(label_col).alias("cls")], hash_buckets
+    ).withColumnRenamed("tf", "cnt")
+    return _nb_model_from_counts(wc, _nb_class_counts(docs, label_col, wc))
+
+
+def _nb_class_counts(docs: DataFrame, label_col: str, wc: DataFrame) -> DataFrame:
+    """(cls, tot, v, n_c, n) for a model trained on all of ``docs``:
+    class token totals and vocabulary size are marginals of the
+    (w, cls, cnt) table, so however ``wc`` was produced the token
+    stream is read exactly once."""
+    totals = wc.groupBy("cls").agg(F.sum("cnt").alias("tot"))
+    vocab = wc.agg(F.countDistinct("w").alias("v"))
     ndocs = docs.groupBy(F.col(label_col).alias("cls")).agg(
         F.count("*").alias("n_c")
     )
     n_all = docs.agg(F.count("*").alias("n"))
-    return _nb_model_from_counts(wc, ndocs, n_all)
-
-
-def _nb_model_from_counts(
-    wc: DataFrame, ndocs: DataFrame, n_all: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Derive (model, classes) from the (w, cls, cnt) table: class
-    token totals and vocabulary size are marginals of it, so however
-    ``wc`` was produced the token stream is read exactly once."""
-    totals = wc.groupBy("cls").agg(F.sum("cnt").alias("tot"))
-    vocab = wc.agg(F.countDistinct("w").alias("v"))
-
-    classes = (
+    return (
         totals.join(ndocs, "cls")
         .crossJoin(F.broadcast(vocab))
         .crossJoin(F.broadcast(n_all))
-        .select(
-            "cls",
-            "tot",
-            "v",
-            F.round(
-                F.lit(MILLI) * F.log(F.col("n_c") / F.col("n"))
-            )
-            .cast("long")
-            .alias("prior_milli"),
-            F.round(
-                F.lit(MILLI)
-                * F.log(F.lit(1.0) / (F.col("tot") + F.col("v")))
-            )
-            .cast("long")
-            .alias("miss_milli"),
-        )
     )
-    model = wc.join(F.broadcast(classes.select("cls", "tot", "v")), "cls").select(
+
+
+def _nb_model_from_counts(
+    wc: DataFrame, counts: DataFrame, keys: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """Derive (model, classes) from the (w, cls, *keys, cnt) token
+    counts and the (cls, *keys, tot, v, n_c, n) class counts, one
+    model per value of ``keys`` (none for a single model, ``["fold"]``
+    for the k-fold models): ``model`` = (w, cls, *keys, ll_milli),
+    ``classes`` = (cls, *keys, prior_milli, miss_milli)."""
+    classes = counts.select(
+        "cls",
+        *keys,
+        "tot",
+        "v",
+        F.round(F.lit(MILLI) * F.log(F.col("n_c") / F.col("n")))
+        .cast("long")
+        .alias("prior_milli"),
+        F.round(
+            F.lit(MILLI)
+            * F.log(F.lit(1.0) / (F.col("tot") + F.col("v")))
+        )
+        .cast("long")
+        .alias("miss_milli"),
+    )
+    model = wc.join(
+        F.broadcast(classes.select("cls", *keys, "tot", "v")), ["cls", *keys]
+    ).select(
         "w",
         "cls",
+        *keys,
         F.round(
             F.lit(MILLI)
             * F.log((F.col("cnt") + 1.0) / (F.col("tot") + F.col("v")))
@@ -177,7 +183,7 @@ def _nb_model_from_counts(
         .cast("long")
         .alias("ll_milli"),
     )
-    return model, classes.select("cls", "prior_milli", "miss_milli")
+    return model, classes.select("cls", *keys, "prior_milli", "miss_milli")
 
 
 def nb_predict(
@@ -198,46 +204,45 @@ def nb_predict(
     base = docs.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("label")
     )
-    tf = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .withColumn("w", _nb_feature(F.col("w"), hash_buckets))
-        .groupBy("id", "w")
-        .agg(F.count("*").alias("tf"))
-    )
+    tf = _nb_tf(docs, text_col, [F.col(id_col).alias("id")], hash_buckets)
     return _nb_score(base, tf, model, classes)
 
 
 def _nb_score(
-    base: DataFrame, tf: DataFrame, model: DataFrame, classes: DataFrame
+    base: DataFrame,
+    tf: DataFrame,
+    model: DataFrame,
+    classes: DataFrame,
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
-    """The scoring tail shared by the fused and split paths: fan the
-    (id, w, tf) table out by the few classes (broadcast), left-join
-    the model on (token, class) with the per-class unseen default,
-    one (doc, class) integer sum, row_number argmax."""
+    """The scoring tail shared by the fused, split and k-fold paths:
+    fan the (id, *keys, w, tf) table out by the few classes of its
+    ``keys`` model (broadcast), left-join the model on (token, class,
+    *keys) with the per-class unseen default, one (doc, class)
+    integer sum, row_number argmax. ``base`` is (id, label, *keys);
+    returns (*keys, id, label, pred, score_milli)."""
     cls = F.broadcast(classes)
     scored = (
-        tf.crossJoin(cls.select("cls", "miss_milli"))
-        .join(model, ["w", "cls"], "left")
+        tf.join(cls.select("cls", *keys, "miss_milli"), list(keys) or None)
+        .join(model, ["w", "cls", *keys], "left")
         .select(
             "id",
             "cls",
+            *keys,
             (
                 F.col("tf") * F.coalesce(F.col("ll_milli"), F.col("miss_milli"))
             ).alias("s"),
         )
-        .groupBy("id", "cls")
+        .groupBy("id", "cls", *keys)
         .agg(F.sum("s").alias("tok_milli"))
     )
     full = (
-        base.crossJoin(cls.select("cls", "prior_milli"))
-        .join(scored, ["id", "cls"], "left")
+        base.join(cls.select("cls", *keys, "prior_milli"), list(keys) or None)
+        .join(scored, ["id", "cls", *keys], "left")
         .select(
             "id",
             "label",
+            *keys,
             "cls",
             (F.col("prior_milli") + F.coalesce("tok_milli", F.lit(0))).alias(
                 "score_milli"
@@ -248,8 +253,26 @@ def _nb_score(
     return (
         full.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("id", "label", F.col("cls").alias("pred"), "score_milli")
+        .select(*keys, "id", "label", F.col("cls").alias("pred"), "score_milli")
     )
+
+
+def _leave_one_out(
+    part: DataFrame, keys: list[str], val: str, out: str, folds: DataFrame
+) -> DataFrame:
+    """Per-fold training-complement value from the per-(keys, fold)
+    parts: ``out`` = total of ``val`` over all folds minus the fold's
+    own part (0 where the key has no rows in that fold), one row per
+    (keys, fold) over the k-row ``folds`` grid."""
+    total = part.groupBy(*keys).agg(F.sum(val).alias("__t"))
+    return (
+        total.join(folds)
+        .join(part, [*keys, "fold"], "left")
+        .select(
+            *keys, "fold", (F.col("__t") - F.coalesce(val, F.lit(0))).alias(out)
+        )
+    )
+
 
 def nb_kfold_predict(
     docs: DataFrame,
@@ -291,18 +314,11 @@ def nb_kfold_predict(
     # along (both are functions of the doc id, so the added grouping
     # keys do not change the groups). Everything below is a marginal
     # of this table — the explode never re-runs.
-    tfc = (
-        d.select(
-            F.col(id_col).alias("id"),
-            F.col(label_col).alias("cls"),
-            "fold",
-            F.explode(F.split(F.col(text_col), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .groupBy("id", "cls", "fold", "w")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    tfc = _nb_tf(
+        d, text_col,
+        [F.col(id_col).alias("id"), F.col(label_col).alias("cls"), F.col("fold")],
+        None,
+    ).localCheckpoint(eager=False)
 
     # (token, class): per-fold counts once, totals derived from them
     # (the second agg reads the already-Heaps-bounded first, and the
@@ -312,41 +328,21 @@ def nb_kfold_predict(
         .agg(F.sum("tf").alias("cnt_f"))
         .localCheckpoint(eager=False)
     )
-    wct = wcf.groupBy("w", "cls").agg(F.sum("cnt_f").alias("cnt_t"))
-    model_cnt = (
-        wct.join(folds)
-        .join(wcf, ["w", "cls", "fold"], "left")
-        .select(
-            "w",
-            "cls",
-            "fold",
-            (F.col("cnt_t") - F.coalesce("cnt_f", F.lit(0))).alias("cnt"),
-        )
-        .filter(F.col("cnt") > 0)
+    model_cnt = _leave_one_out(wcf, ["w", "cls"], "cnt_f", "cnt", folds).filter(
+        F.col("cnt") > 0
     )
 
     # class token totals per training complement (classes × k rows) —
     # a marginal of wcf, not a second token pass
     tcf = wcf.groupBy("cls", "fold").agg(F.sum("cnt_f").alias("t_f"))
-    tct = tcf.groupBy("cls").agg(F.sum("t_f").alias("t_t"))
-    tot = (
-        tct.join(folds)
-        .join(tcf, ["cls", "fold"], "left")
-        .select(
-            "cls",
-            "fold",
-            (F.col("t_t") - F.coalesce("t_f", F.lit(0))).alias("tot"),
-        )
-    )
+    tot = _leave_one_out(tcf, ["cls"], "t_f", "tot", folds)
 
     # per-fold training vocabulary: a token counts for fold i's model
     # iff it occurs OUTSIDE fold i — again a marginal of wcf
     wf = wcf.groupBy("w", "fold").agg(F.sum("cnt_f").alias("u_f"))
-    wt = wf.groupBy("w").agg(F.sum("u_f").alias("u_t"))
     voc = (
-        wt.join(folds)
-        .join(wf, ["w", "fold"], "left")
-        .filter(F.col("u_t") > F.coalesce("u_f", F.lit(0)))
+        _leave_one_out(wf, ["w"], "u_f", "u", folds)
+        .filter(F.col("u") > 0)
         .groupBy("fold")
         .agg(F.count("*").alias("v"))
     )
@@ -355,67 +351,23 @@ def nb_kfold_predict(
     ncf = d.groupBy(F.col(label_col).alias("cls"), F.col("fold")).agg(
         F.count("*").alias("m_f")
     )
-    nct = ncf.groupBy("cls").agg(F.sum("m_f").alias("m_t"))
-    nc = (
-        nct.join(folds)
-        .join(ncf, ["cls", "fold"], "left")
-        .select(
-            "cls",
-            "fold",
-            (F.col("m_t") - F.coalesce("m_f", F.lit(0))).alias("n_c"),
-        )
-    )
+    nc = _leave_one_out(ncf, ["cls"], "m_f", "n_c", folds)
     nf = d.groupBy("fold").agg(F.count("*").alias("q_f"))
-    na = d.agg(F.count("*").alias("q_t"))
-    nn = (
-        folds.join(F.broadcast(na))
-        .join(nf, ["fold"], "left")
-        .select(
-            "fold",
-            (F.col("q_t") - F.coalesce("q_f", F.lit(0))).alias("n"),
-        )
-    )
+    nn = _leave_one_out(nf, [], "q_f", "n", folds)
 
-    # a class is a candidate for fold i only if it has training docs
-    classes = (
+    # a class is a candidate for fold i only if it has training docs.
+    # ≤ classes × k rows, read by three consumers (the model and both
+    # scoring broadcasts): eager-materialize once so each broadcast
+    # build does not re-run the count chain (broadcast builds never
+    # see ReusedExchange)
+    counts = (
         nc.join(tot, ["cls", "fold"])
         .join(voc, "fold")
         .join(nn, "fold")
         .filter(F.col("n_c") > 0)
-        .select(
-            "cls",
-            "fold",
-            "tot",
-            "v",
-            F.round(F.lit(MILLI) * F.log(F.col("n_c") / F.col("n")))
-            .cast("long")
-            .alias("prior_milli"),
-            F.round(
-                F.lit(MILLI)
-                * F.log(F.lit(1.0) / (F.col("tot") + F.col("v")))
-            )
-            .cast("long")
-            .alias("miss_milli"),
-        )
+        .localCheckpoint(eager=True)
     )
-    # ≤ classes × k rows, read by three consumers: eager-materialize
-    # once so each broadcast build does not re-run the count chain
-    # (broadcast builds never see ReusedExchange)
-    classes = classes.localCheckpoint(eager=True)
-
-    model = model_cnt.join(
-        F.broadcast(classes.select("cls", "fold", "tot", "v")), ["cls", "fold"]
-    ).select(
-        "w",
-        "cls",
-        "fold",
-        F.round(
-            F.lit(MILLI)
-            * F.log((F.col("cnt") + 1.0) / (F.col("tot") + F.col("v")))
-        )
-        .cast("long")
-        .alias("ll_milli"),
-    )
+    model, classes = _nb_model_from_counts(model_cnt, counts, ("fold",))
 
     # predict: each document scored against ITS OWN fold's held-out
     # model (the fold column rides the tf table, so the model join is
@@ -425,41 +377,6 @@ def nb_kfold_predict(
     base = d.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("label"), "fold"
     )
-    tf = tfc.select("id", "fold", "w", "tf")
-    scored = (
-        tf.join(F.broadcast(classes.select("cls", "fold", "miss_milli")), "fold")
-        .join(model, ["w", "cls", "fold"], "left")
-        .select(
-            "id",
-            "cls",
-            "fold",
-            (
-                F.col("tf") * F.coalesce(F.col("ll_milli"), F.col("miss_milli"))
-            ).alias("s"),
-        )
-        .groupBy("id", "cls", "fold")
-        .agg(F.sum("s").alias("tok_milli"))
-    )
-    full = (
-        base.join(
-            F.broadcast(classes.select("cls", "fold", "prior_milli")), "fold"
-        )
-        .join(scored, ["id", "cls", "fold"], "left")
-        .select(
-            "id",
-            "label",
-            "fold",
-            "cls",
-            (F.col("prior_milli") + F.coalesce("tok_milli", F.lit(0))).alias(
-                "score_milli"
-            ),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("score_milli"), "cls")
-    return (
-        full.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "fold", "id", "label", F.col("cls").alias("pred"), "score_milli"
-        )
+    return _nb_score(
+        base, tfc.select("id", "fold", "w", "tf"), model, classes, ("fold",)
     )

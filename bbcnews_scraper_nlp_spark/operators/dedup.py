@@ -180,6 +180,21 @@ def minhash_lsh_pairs(
         df, id_col, text_col, num_hashes, shingle_mode, shingle_n, shingle_hash
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
+    return lsh_pairs(base, id_col, num_hashes, bands, jaccard_threshold)
+
+
+def lsh_pairs(
+    base: DataFrame,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """Near-dup pairs within one signatures frame (``lsh_signatures``
+    output): band self-join, candidate dedup (id_1 < id_2), then the
+    exact Jaccard verify of ``_verify_jaccard``. Returns (id_1, id_2,
+    jaccard) with jaccard >= threshold. ``base`` is read three times
+    (band explode + two set fetches): callers persist it."""
     # Band join on (band, bhash, id) ONLY — the shingle sets stay
     # behind. Shuffling them through the 16x band explode (on both
     # join sides) was the dominant cost: bands x 2 copies of every
@@ -202,14 +217,23 @@ def minhash_lsh_pairs(
     ).join(
         sets.select(F.col(id_col).alias("id_2"), F.col("__sh").alias("sh_2")), "id_2"
     )
+    return _verify_jaccard(cand, "id_1", "id_2", jaccard_threshold)
 
+
+def _verify_jaccard(
+    pairs: DataFrame, a: str, b: str, jaccard_threshold: float
+) -> DataFrame:
+    """Exact Jaccard of the candidate pairs' hashed shingle sets
+    ``sh_1`` and ``sh_2``, via array_intersect on candidates only.
+    Keeps pairs with jaccard >= threshold (compared unrounded);
+    returns (a, b, jaccard rounded to 6 places)."""
     inter = F.size(F.array_intersect("sh_1", "sh_2"))
     union = F.size("sh_1") + F.size("sh_2") - inter
     jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
     return (
-        cand.withColumn("jaccard", jac)
+        pairs.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_1", "id_2", F.round("jaccard", 6).alias("jaccard"))
+        .select(a, b, F.round("jaccard", 6).alias("jaccard"))
     )
 
 
@@ -872,72 +896,82 @@ def save_lsh_index(
     partition (dynamic overwrite), making streaming epoch replays
     idempotent — use it from the first save, and in every append, or
     not at all (mixed layouts fail partition discovery)."""
-    spark = df.sparkSession
-    _check_base_params(
-        base, base_params,
-        {"num_hashes": num_hashes, "shingle_mode": shingle_mode,
-         "shingle_n": shingle_n, "shingle_hash": shingle_hash},
-        "save_lsh_index",
+    params = {
+        "num_hashes": num_hashes, "bands": bands, "shingle_mode": shingle_mode,
+        "shingle_n": shingle_n, "shingle_hash": shingle_hash,
+    }
+    _write_lsh_index(
+        df, id_col, text_col, path, params, base, base_params, batch_id,
+        lineage, first=True,
     )
+
+
+def _write_lsh_index(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    path: str,
+    params: dict,
+    base: DataFrame | None,
+    base_params: dict | None,
+    batch_id: int | None,
+    lineage: str | None,
+    first: bool,
+) -> None:
+    """The one index writer behind ``save_lsh_index`` (``first``) and
+    ``append_lsh_index``: check a caller-supplied ``base`` against
+    ``params``, build (and persist) the signatures otherwise, write
+    bands/ + sets/, and on save write meta/ after them.
+
+    Unpartitioned: save overwrites, append appends (an epoch replay
+    duplicates — the caller owns idempotency). Batch-partitioned:
+    BOTH paths are dynamic partition overwrites of
+    `__batch={batch_id}` only, so re-running a batch replaces exactly
+    its own rows. ``lineage`` scopes the batch key to one checkpoint
+    lineage (foreachBatch ids restart at 0 per checkpoint):
+    partitions become (__lineage, __batch), so a SECOND pipeline — or
+    a restart with a fresh checkpoint — writes its own partitions
+    instead of silently overwriting the first lineage's __batch=0.
+    Streaming callers (near_dedup_stream) always pass it; use the
+    same convention from the first save onward (mixed layouts fail
+    partition discovery)."""
+    fn = "save_lsh_index" if first else "append_lsh_index"
+    _check_base_params(base, base_params, params, fn)
     own = base is None
     if own:
         base = lsh_signatures(
-            df, id_col, text_col, num_hashes, shingle_mode, shingle_n,
-            shingle_hash,
+            df, id_col, text_col, params["num_hashes"], params["shingle_mode"],
+            params["shingle_n"], params["shingle_hash"],
         ).persist(StorageLevel.MEMORY_AND_DISK)
-    bands_df = lsh_banded(base, id_col, num_hashes, bands).withColumnRenamed(
-        id_col, "id"
-    )
-    sets_df = base.select(F.col(id_col).alias("id"), "__sh")
-    _write_index_tables(bands_df, sets_df, path, batch_id, first=True, lineage=lineage)
-    spark.createDataFrame(
-        [(num_hashes, bands, shingle_mode, shingle_n, shingle_hash)],
-        _LSH_META_COLS,
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    if own:
-        base.unpersist()
-
-
-def _write_index_tables(
-    bands_df: DataFrame,
-    sets_df: DataFrame,
-    path: str,
-    batch_id: int | None,
-    first: bool,
-    lineage: str | None = None,
-) -> None:
-    """bands/ + sets/ writer shared by save/append. Unpartitioned:
-    save overwrites, append appends (an epoch replay duplicates —
-    the caller owns idempotency). Batch-partitioned: BOTH paths are
-    dynamic partition overwrites of `__batch={batch_id}` only, so
-    re-running a batch replaces exactly its own rows.
-
-    ``lineage`` scopes the batch key to one checkpoint lineage
-    (foreachBatch ids restart at 0 per checkpoint): partitions become
-    (__lineage, __batch), so a SECOND pipeline — or a restart with a
-    fresh checkpoint — writes its own partitions instead of silently
-    overwriting the first lineage's __batch=0. Streaming callers
-    (near_dedup_stream) always pass it; use the same convention from
-    the first save onward (mixed layouts fail partition discovery)."""
-    if batch_id is None:
-        mode = "overwrite" if first else "append"
-        bands_df.write.mode(mode).parquet(f"{path}/bands")
-        sets_df.write.mode(mode).parquet(f"{path}/sets")
-        return
-    part_cols = ["__batch"]
-    for tbl, d in (("bands", bands_df), ("sets", sets_df)):
+    tables = {
+        "bands": lsh_banded(
+            base, id_col, params["num_hashes"], params["bands"]
+        ).withColumnRenamed(id_col, "id"),
+        "sets": base.select(F.col(id_col).alias("id"), "__sh"),
+    }
+    for tbl, d in tables.items():
+        if batch_id is None:
+            mode = "overwrite" if first else "append"
+            d.write.mode(mode).parquet(f"{path}/{tbl}")
+            continue
+        cols = ["__batch"]
         d = d.withColumn("__batch", F.lit(int(batch_id)))
         if lineage is not None:
             d = d.withColumn("__lineage", F.lit(str(lineage)))
-            cols = ["__lineage", *part_cols]
-        else:
-            cols = part_cols
+            cols = ["__lineage", "__batch"]
         (
             d.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*cols)
             .parquet(f"{path}/{tbl}")
         )
+    if first:
+        keys = ("num_hashes", "bands", "shingle_mode", "shingle_n", "shingle_hash")
+        df.sparkSession.createDataFrame(
+            [tuple(params[k] for k in keys)], _LSH_META_COLS
+        ).write.mode("overwrite").parquet(f"{path}/meta")
+    if own:
+        base.unpersist()
 
 
 def lsh_index_meta(spark, path: str) -> dict:
@@ -963,22 +997,10 @@ def append_lsh_index(
     With ``batch_id`` (on an index saved with one) the append is a
     dynamic overwrite of that batch's partition: replaying an epoch
     replaces its own rows instead of duplicating them."""
-    spark = df.sparkSession
-    m = lsh_index_meta(spark, path)
-    _check_base_params(base, base_params, m, "append_lsh_index")
-    own = base is None
-    if own:
-        base = lsh_signatures(
-            df, id_col, text_col, m["num_hashes"], m["shingle_mode"],
-            m["shingle_n"], m["shingle_hash"],
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    bands_df = lsh_banded(base, id_col, m["num_hashes"], m["bands"]).withColumnRenamed(
-        id_col, "id"
+    _write_lsh_index(
+        df, id_col, text_col, path, lsh_index_meta(df.sparkSession, path), base,
+        base_params, batch_id, lineage, first=False,
     )
-    sets_df = base.select(F.col(id_col).alias("id"), "__sh")
-    _write_index_tables(bands_df, sets_df, path, batch_id, first=False, lineage=lineage)
-    if own:
-        base.unpersist()
 
 
 def query_lsh_index(
@@ -1029,11 +1051,4 @@ def query_lsh_index(
         F.col("id").alias("index_id"), F.col("__sh").alias("sh_2")
     )
     pairs = cand.join(new_sets, "new_id").join(idx_sets, "index_id")
-    inter = F.size(F.array_intersect("sh_1", "sh_2"))
-    union = F.size("sh_1") + F.size("sh_2") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "index_id", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return _verify_jaccard(pairs, "new_id", "index_id", jaccard_threshold)

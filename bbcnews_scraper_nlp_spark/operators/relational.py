@@ -506,24 +506,43 @@ def range_join_binned(
     return out.drop(*drop)
 
 
-def _range_bucket(df: DataFrame, col: str, buckets: int) -> DataFrame:
-    """Contiguous range-bucket an INTEGRAL key into ``buckets``
-    buckets: ``(key - min) div width`` with ``width`` derived from
-    the broadcast (min, max) SPAN. Normalizing by the min matters:
-    bucketing on the raw key with a max-derived width degenerates to
-    ONE bucket whenever the key span is small relative to its
-    magnitude (epoch-microsecond keys: span hours, magnitude 10^15)
-    — which silently rebuilds the single-task scan the two-level
-    pattern exists to avoid. Adds ``__bucket``."""
-    bounds = df.agg(
-        F.min(F.col(col)).alias("__mn"), F.max(F.col(col)).alias("__mx")
-    )
+def _range_bucket(df: DataFrame, key: str | Column, buckets: int) -> DataFrame:
+    """Contiguous range-bucket an INTEGRAL key (a column name or a
+    Column) into ``buckets`` buckets: ``(key - min) div width`` with
+    ``width`` derived from the broadcast (min, max) SPAN. Normalizing
+    by the min matters: bucketing on the raw key with a max-derived
+    width degenerates to ONE bucket whenever the key span is small
+    relative to its magnitude (epoch-microsecond keys: span hours,
+    magnitude 10^15) — which silently rebuilds the single-task scan
+    the two-level pattern exists to avoid. Adds ``__bucket``."""
+    k = F.col(key) if isinstance(key, str) else key
+    bounds = df.agg(F.min(k).alias("__mn"), F.max(k).alias("__mx"))
     return (
         df.crossJoin(F.broadcast(bounds))
         .withColumn("__w", F.expr(f"((__mx - __mn) div {buckets}) + 1"))
-        .withColumn("__bucket", F.expr(f"({col} - __mn) div __w"))
+        .withColumn(
+            "__bucket", F.call_function("div", k - F.col("__mn"), F.col("__w"))
+        )
         .drop("__mn", "__mx", "__w")
     )
+
+
+def _two_level_scan(
+    df: DataFrame, key: str | Column, buckets: int, total: Column, scan
+) -> DataFrame:
+    """The bucket half of every two-level scan: range-bucket ``key``
+    (``_range_bucket``), aggregate ``total`` per bucket, and run
+    ``scan`` (an aggregate function such as ``F.sum`` or ``F.max``)
+    over the STRICTLY earlier buckets' totals — the one single-task
+    window, over a ``buckets``-row table. Returns ``df`` plus
+    ``__bucket`` and ``__base``, the broadcast-joined exclusive
+    bucket prefix (NULL for the first non-empty bucket); the caller
+    finishes with its own window partitioned by ``__bucket``."""
+    b = _range_bucket(df, key, buckets)
+    totals = b.groupBy("__bucket").agg(total.alias("__t"))
+    wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
+    base = totals.select("__bucket", scan("__t").over(wb).alias("__base"))
+    return b.join(F.broadcast(base), "__bucket")
 
 
 def prefix_sum_two_level(
@@ -559,22 +578,44 @@ def prefix_sum_two_level(
     order_col itself (equal keys see an arbitrary-but-stable split of
     their groupmates' values; use a unique key for full determinism).
     """
-    b = _range_bucket(df, order_col, buckets)
-    totals = b.groupBy("__bucket").agg(F.sum(F.col(val_col)).alias("__t"))
-    wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    base = totals.select(
-        "__bucket", F.coalesce(F.sum("__t").over(wb), F.lit(0)).alias("__base")
-    )
     wi = (
         Window.partitionBy("__bucket")
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
-        b.join(F.broadcast(base), "__bucket")
+        _two_level_scan(df, order_col, buckets, F.sum(F.col(val_col)), F.sum)
         .withColumn(
             "prefix",
-            F.col("__base") + F.coalesce(F.sum(F.col(val_col)).over(wi), F.lit(0)),
+            F.coalesce(F.col("__base"), F.lit(0))
+            + F.coalesce(F.sum(F.col(val_col)).over(wi), F.lit(0)),
+        )
+        .drop("__bucket", "__base")
+    )
+
+
+def two_level_rank(
+    df: DataFrame,
+    bucket_src: Column,
+    order_cols: list[str],
+    buckets: int = 64,
+) -> DataFrame:
+    """Global 1-based rank over ``df`` (rows must be unique on
+    ``order_cols``), ordered by (integer range-bucket of
+    ``bucket_src``, ``order_cols``) — the two-level scan with a row
+    count per bucket as the total and ``row_number`` within it.
+    Deterministic by construction: bucket width comes from a
+    broadcast integer min/max (no sampling), so independent
+    recomputations of any branch assign identical ranks. Adds a
+    ``rank`` column, drops internals."""
+    wi = Window.partitionBy("__bucket").orderBy(*order_cols)
+    return (
+        _two_level_scan(df, bucket_src.cast("long"), buckets, F.count("*"), F.sum)
+        .withColumn(
+            "rank",
+            (
+                F.coalesce(F.col("__base"), F.lit(0)) + F.row_number().over(wi)
+            ).cast("long"),
         )
         .drop("__bucket", "__base")
     )
@@ -681,12 +722,6 @@ def skyline_2d(
     Exact duplicates on both dims are all kept (neither dominates).
     Returns the input rows of the frontier.
     """
-    b = _range_bucket(df, min_col, buckets)
-    totals = b.groupBy("__bucket").agg(F.max(F.col(max_col)).alias("__t"))
-    wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    base = totals.select(
-        "__bucket", F.max("__t").over(wb).alias("__base")
-    )
     win = (
         Window.partitionBy("__bucket")
         .orderBy(min_col)
@@ -694,7 +729,7 @@ def skyline_2d(
     )
     wtie = Window.partitionBy("__bucket", min_col)
     out = (
-        b.join(F.broadcast(base), "__bucket")
+        _two_level_scan(df, min_col, buckets, F.max(F.col(max_col)), F.max)
         .withColumn(
             # greatest() skips NULL args, so this is NULL only when
             # there is no strictly-cheaper row anywhere

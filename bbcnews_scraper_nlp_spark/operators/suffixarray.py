@@ -46,50 +46,6 @@ from pyspark.sql import functions as F
 from .dedup import remove_covered, token_frame
 
 
-def _two_level_rank(
-    df: DataFrame,
-    bucket_src: Column,
-    order_cols: list[str],
-    buckets: int = 64,
-) -> DataFrame:
-    """Global 1-based rank over ``df`` (rows must be unique on
-    ``order_cols``), ordered by (integer range-bucket of
-    ``bucket_src``, ``order_cols``). Deterministic by construction:
-    bucket width comes from a broadcast integer min/max (no
-    sampling), so independent recomputations of any branch assign
-    identical ranks. Adds a ``rank`` column, drops internals."""
-    b = df.withColumn("__bsrc", bucket_src.cast("long"))
-    lim = b.agg(
-        F.min("__bsrc").alias("__lo"), F.max("__bsrc").alias("__hi")
-    )
-    b = b.crossJoin(F.broadcast(lim)).withColumn(
-        "__bucket",
-        F.expr(f"(__bsrc - __lo) div (((__hi - __lo) div {buckets}) + 1)"),
-    )
-    totals = b.groupBy("__bucket").agg(F.count("*").alias("__t"))
-    wb = Window.orderBy("__bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    base = totals.select(
-        "__bucket",
-        F.coalesce(F.sum("__t").over(wb), F.lit(0)).alias("__base"),
-    )
-    wi = Window.partitionBy("__bucket").orderBy(*order_cols)
-    return (
-        b.join(F.broadcast(base), "__bucket")
-        .withColumn(
-            "rank", (F.col("__base") + F.row_number().over(wi)).cast("long")
-        )
-        .drop("__bucket", "__base", "__bsrc", "__lo", "__hi")
-    )
-
-
-# public alias: the deterministic global-rank primitive is useful
-# beyond suffix construction (e.g. exact tercile bucketing in
-# q_text.kn_perplexity_buckets) — same contract, same guarantees.
-two_level_rank = _two_level_rank
-
-
 def _two_level_rank_fixed(
     df: DataFrame,
     bucket_src: Column,
@@ -100,10 +56,11 @@ def _two_level_rank_fixed(
 ) -> tuple[DataFrame, int]:
     """Two-level rank with STATICALLY KNOWN ``[lo, hi]`` bounds on
     ``bucket_src`` — the suffix-doubling fast path. The adaptive form
-    above derives bucket width and base offsets from two aggregates
-    over its own input, and both ride in as broadcasts; exchange
-    reuse never crosses a broadcast boundary, so the input's lineage
-    (a shuffle-derived distinct here) executes THREE times per rank.
+    (``relational.two_level_rank``) derives bucket width and base
+    offsets from two aggregates over its own input, and both ride in
+    as broadcasts; exchange reuse never crosses a broadcast boundary,
+    so the input's lineage (a shuffle-derived distinct here) executes
+    THREE times per rank.
     With the bounds known up front the width is a literal, the
     (unique-keyed) input materializes once (eager localCheckpoint),
     the ≤``buckets`` per-bucket counts collect to the driver

@@ -12,10 +12,10 @@ variables; the two LDA variants fan out from one cached processed DF
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.lemmatize import POS_WHITELIST, make_lemmatize_udf
+from ..functions.lemmatize import POS_WHITELIST, lemmatize_text_expr
 from ..functions.sentiment import make_sentiment_pandas_udf
 from ..functions.text_clean import clean_text, word_count
 from ..operators.relational import rolling_mean_min_periods
@@ -52,26 +52,25 @@ def scrape_articles(
     ).dropDuplicates(["url"])
 
 
-def process(articles_raw: DataFrame, min_words: int = 50, lemmatize: bool = True) -> DataFrame:
+def process(articles_raw: DataFrame, min_words: int = 50) -> DataFrame:
     """process() twin (data_preparation.py:82-102), one lazy chain:
 
     dropna -> n_words -> filter >min_words -> clean (native chain) ->
-    lemmatize (pandas UDF) -> n_words_clean -> projection -> ts cast.
+    lemmatize -> n_words_clean -> projection -> ts cast.
 
-    Cheap native filters run BEFORE the Python lemmatize stage —
-    Catalyst can't reorder around the UDF, so the order is authored
-    (SURVEY §4's design rule)."""
-    df = (
+    Every stage is a native column expression, so the chain runs in
+    the JVM with no Python worker: ``lemmatize_text_expr`` is the
+    registry's lemmatizer (``p13_lemmatize``), pinned token-equal to
+    the pandas-UDF kernel in tests/test_lemmatize.py."""
+    return (
         articles_raw.na.drop("any")
         .withColumn("n_words", word_count(F.col("text")))
         .filter(F.col("n_words") > min_words)
-        .withColumn("article_clean", clean_text(F.col("text")))
-    )
-    if lemmatize:
-        lem = make_lemmatize_udf(POS_WHITELIST)
-        df = df.withColumn("article_clean", lem(F.col("article_clean")))
-    return (
-        df.withColumn("n_words_clean", word_count(F.col("article_clean")))
+        .withColumn(
+            "article_clean",
+            lemmatize_text_expr(clean_text(F.col("text")), POS_WHITELIST),
+        )
+        .withColumn("n_words_clean", word_count(F.col("article_clean")))
         .withColumn("date", F.to_timestamp("date"))
         .drop("images", "topic_name", "topic_url", "link", "authors")
     )

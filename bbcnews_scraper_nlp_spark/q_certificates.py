@@ -1715,7 +1715,7 @@ def streaming_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalized). The total rides as integer cents so the fold is
     exact in any arrival order — which upgrades this from a rows-only
     check to a hash oracle (batch groupBy twin); pytest additionally
-    checks the TWS-API twin matches."""
+    checks the drained stream's final state against it."""
     from .streaming.ingest import user_stats_batch
 
     return user_stats_batch(spark, sf_dir)

@@ -521,35 +521,14 @@ def sentiment_full_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A map-literal plan (the m6_m7 path) stops scaling around a few
     hundred lexicon entries — the expression tree itself bloats — so
-    this is the shape that holds: explode tokens, broadcast-join the
-    lexicon, re-aggregate per doc. Exactness: scores are integer
-    milli-units; the per-doc mean is an exact integer SUM divided
-    ONCE by (n·1000.0) — identical IEEE op in both engines, no
-    ROUND on a computed double anywhere (the repo-wide rounding
-    gotcha).
+    this is the shape that holds: ``sentiment.score_with_lexicon_join``
+    (explode tokens, broadcast-join the lexicon, re-aggregate per doc
+    with an exact integer milli-unit sum divided once).
     """
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    lex = sent.full_lexicon_df(spark)
-    exploded = docs.select(
-        "doc_id",
-        F.explode_outer(
-            F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), " ")
-        ).alias("word"),
-    )
-    joined = exploded.join(F.broadcast(lex), "word", "left")
-    agg = joined.groupBy("doc_id").agg(
-        F.count("p_milli").alias("__n"),
-        F.sum("p_milli").alias("__p"),
-        F.sum("s_milli").alias("__s"),
-    )
-    return agg.select(
-        "doc_id",
-        F.when(
-            F.col("__n") > 0, F.col("__p") / (F.col("__n") * 1000.0)
-        ).otherwise(F.lit(0.0)).alias("polarity"),
-        F.when(
-            F.col("__n") > 0, F.col("__s") / (F.col("__n") * 1000.0)
-        ).otherwise(F.lit(0.0)).alias("subjectivity"),
+    tokens = F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))), " ")
+    return sent.score_with_lexicon_join(
+        docs, tokens, ["doc_id"], sent.full_lexicon_df(spark)
     )
 
 

@@ -1378,36 +1378,42 @@ def butterfly_counts_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune before the per-item explode (the exact query's contract);
     top-20 with the global total riding a 1-row broadcast."""
     ia = _capped_interactions(spark, sf_dir)
-    # Materialize the post-prune pair estimates ONCE: three consumers
-    # read bf (the 1-row global total, and both sides of the per-item
-    # union), and the total additionally rides in as a BROADCAST —
-    # across a broadcast boundary exchange reuse never applies
-    # (stage_io gotcha), so a lazy bf re-ran the entire wedge
-    # self-join once per consumer (measured: the pair stage executed
-    # 3x at sf0.1). bf is the post-co_s>=2 pair table — the bounded
-    # output-sized relation, exactly what a 100 TB run would land
-    # before the rollup.
-    bf = butterfly_sampled_counts(ia, gamma=6).localCheckpoint(eager=True)
-    tot = bf.agg(
-        F.coalesce(F.sum("bfm"), F.lit(0)).cast("long").alias(
-            "total_butterflies_milli"
-        )
+    # the rollup materializes the post-co_s>=2 pair table — the
+    # bounded output-sized relation, exactly what a 100 TB run would
+    # land before the rollup
+    return _pair_rollup(
+        butterfly_sampled_counts(ia, gamma=6), "i", "j", "bfm",
+        "bf_milli", "total_butterflies_milli",
     )
+
+
+def _pair_rollup(
+    pairs: DataFrame, i: str, j: str, val: str, per_col: str, tot_col: str
+) -> DataFrame:
+    """Top-20 items of an (i, j, val) pair table: per item (either pair
+    end) the sum of ``val`` as ``per_col`` and the pair count as
+    ``n_copartners``, with the table's total as ``tot_col``, ordered
+    by (per_col desc, item). The pair table is eager-checkpointed
+    first: three consumers read it (the total and both ends of the
+    union), and the total rides in as a 1-row BROADCAST, across
+    which exchange reuse never applies (stage_io gotcha) — a lazy
+    table re-ran the whole wedge self-join once per consumer
+    (measured: the pair stage executed 3x at sf0.1)."""
+    pairs = pairs.localCheckpoint(eager=True)
+    tot = pairs.agg(F.coalesce(F.sum(val), F.lit(0)).cast("long").alias(tot_col))
     per = (
-        bf.select(F.col("i").alias("item"), "bfm")
-        .unionByName(bf.select(F.col("j").alias("item"), "bfm"))
+        pairs.select(F.col(i).alias("item"), val)
+        .unionByName(pairs.select(F.col(j).alias("item"), val))
         .groupBy("item")
         .agg(
-            F.sum("bfm").cast("long").alias("bf_milli"),
+            F.sum(val).cast("long").alias(per_col),
             F.count("*").alias("n_copartners"),
         )
     )
-    from .operators.relational import top_n
-
     out = per.crossJoin(F.broadcast(tot)).select(
-        "item", "bf_milli", "n_copartners", "total_butterflies_milli"
+        "item", per_col, "n_copartners", tot_col
     )
-    return top_n(out, [F.desc("bf_milli"), F.asc("item")], 20)
+    return R.top_n(out, [F.desc(per_col), F.asc("item")], 20)
 
 
 def _textrank_sql(iters: int = 3) -> str:
@@ -3668,53 +3674,50 @@ def hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cs = pairs.select("c").distinct()
     ss = pairs.select("s").distinct()
-    h = cs.select("c", F.lit(scale).cast("long").alias("h"))
-    a = None
-    # Each half-round's inbound-sum aggregate is eager-checkpointed:
-    # its max rides in as a BROADCAST, and exchange reuse never
-    # crosses a broadcast boundary (stage_io gotcha), so a lazy chain
-    # re-executed the edge join once per max AND re-analyzed a score
-    # tree that embeds every earlier broadcast — the LPA
-    # twice-referenced-frame lesson applied to power iteration. The
-    # checkpointed frame is one score row per node (the |V|-sized
-    # state any distributed HITS carries); per half-round cost is now
-    # exactly one keyed join + agg job.
+    h = cs.select("c", F.lit(scale).cast("long").alias("v"))
     for _ in range(3):
-        ar = (
-            pairs.join(h, "c")
-            .groupBy("s")
-            .agg(F.sum("h").alias("ar"))
-        ).localCheckpoint(eager=True)
-        am = ar.agg(F.greatest(F.max("ar"), F.lit(1)).alias("m"))
-        a = (
-            ss.join(ar, "s", "left")
-            .crossJoin(F.broadcast(am))
-            .select(
-                "s",
-                F.expr(f"coalesce(ar, 0) * {scale} div m").alias("a"),
-            )
-        )
-        hr = (
-            pairs.join(a, "s")
-            .groupBy("c")
-            .agg(F.sum("a").alias("hr"))
-        ).localCheckpoint(eager=True)
-        hm = hr.agg(F.greatest(F.max("hr"), F.lit(1)).alias("m"))
-        h = (
-            cs.join(hr, "c", "left")
-            .crossJoin(F.broadcast(hm))
-            .select(
-                "c",
-                F.expr(f"coalesce(hr, 0) * {scale} div m").alias("h"),
-            )
-        )
+        a = _hits_half_round(pairs, h, "c", ss, "s", scale)
+        h = _hits_half_round(pairs, a, "s", cs, "c", scale)
     return (
-        a.orderBy(F.desc("a"), "s")
+        a.orderBy(F.desc("v"), "s")
         .limit(20)
         .select(
             F.col("s").alias("supplier"),
-            F.col("a").cast("long").alias("authority_micro"),
+            F.col("v").cast("long").alias("authority_micro"),
         )
+    )
+
+
+def _hits_half_round(
+    pairs: DataFrame,
+    score: DataFrame,
+    src: str,
+    nodes: DataFrame,
+    dst: str,
+    scale: int,
+) -> DataFrame:
+    """One HITS half-round over the (c, s) edge table: each ``dst``
+    node's inbound sum of its ``src`` neighbours' scores ``v``, then
+    the max rescale to ``scale`` integer units (truncating division;
+    nodes with no inbound edge score 0). Returns (dst, v) over
+    ``nodes``.
+
+    The inbound-sum aggregate is eager-checkpointed: its max rides in
+    as a BROADCAST, and exchange reuse never crosses a broadcast
+    boundary (stage_io gotcha), so a lazy chain re-executed the edge
+    join once per max AND re-analyzed a score tree that embeds every
+    earlier broadcast — the LPA twice-referenced-frame lesson applied
+    to power iteration. The checkpointed frame is one score row per
+    node (the |V|-sized state any distributed HITS carries); a
+    half-round costs exactly one keyed join + agg job."""
+    raw = (
+        pairs.join(score, src).groupBy(dst).agg(F.sum("v").alias("raw"))
+    ).localCheckpoint(eager=True)
+    m = raw.agg(F.greatest(F.max("raw"), F.lit(1)).alias("m"))
+    return (
+        nodes.join(raw, dst, "left")
+        .crossJoin(F.broadcast(m))
+        .select(dst, F.expr(f"coalesce(raw, 0) * {scale} div m").alias("v"))
     )
 
 
@@ -3780,28 +3783,7 @@ def butterfly_counts_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "i1", "i2", F.expr("co * (co - 1) div 2").alias("bf")
         )
-        # same three-consumer shape as butterfly_counts_sampled: the
-        # broadcast total re-executes the wedge self-join unless the
-        # post-prune pair table is materialized once
-        .localCheckpoint(eager=True)
     )
-    tot = co.agg(
-        F.coalesce(F.sum("bf"), F.lit(0)).cast("long").alias(
-            "total_butterflies"
-        )
+    return _pair_rollup(
+        co, "i1", "i2", "bf", "n_butterflies", "total_butterflies"
     )
-    per = (
-        co.select(F.col("i1").alias("item"), "bf")
-        .unionByName(co.select(F.col("i2").alias("item"), "bf"))
-        .groupBy("item")
-        .agg(
-            F.sum("bf").cast("long").alias("n_butterflies"),
-            F.count("*").alias("n_copartners"),
-        )
-    )
-    from .operators.relational import top_n
-
-    out = per.crossJoin(F.broadcast(tot)).select(
-        "item", "n_butterflies", "n_copartners", "total_butterflies"
-    )
-    return top_n(out, [F.desc("n_butterflies"), F.asc("item")], 20)

@@ -1412,7 +1412,7 @@ def kn_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from .operators.suffixarray import two_level_rank
+    from .operators.relational import two_level_rank
 
     ranked = two_level_rank(doc, F.col("ce_micro"), ["ce_micro", "doc_id"])
     n = doc.agg(F.count("*").cast("long").alias("n"))

@@ -218,51 +218,6 @@ def running_user_stats(stream: DataFrame) -> DataFrame:
     )
 
 
-def running_user_stats_tws(stream: DataFrame) -> DataFrame:
-    """Spark 4 twin of ``running_user_stats`` on the
-    transformWithStateInPandas API (SPARK-49564): the successor to
-    applyInPandasWithState with composite state types, timers, and
-    initial-state handover. Same semantics here — per-user running
-    (count, total) in a ValueState, one row per updated key per
-    micro-batch — so both APIs stay covered and results must match
-    (tests/test_streaming.py; the equivalence test skips where the
-    python ``protobuf`` package is absent — TWS's state-server wire
-    protocol requires it). At scale this is the API that pairs with
-    the RocksDB provider (session.ROCKSDB_STATE_STORE): column-family
-    state layout + changelog checkpointing.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    stream = stream.withColumn(
-        "__cents", F.round(F.col("value") * 100).cast("long")
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle):
-            self._agg = handle.getValueState("agg", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._agg.get() if self._agg.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                total += int(pdf["__cents"].sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [total]}
-            )
-
-        def close(self):
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType=USER_STATS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def user_stats_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drain the stateful per-user stats over all available input and
     return the FINAL state per user as a batch DataFrame. The update-
@@ -573,8 +528,8 @@ def near_dedup_stream(
 
     from ..operators.dedup import (
         append_lsh_index,
-        lsh_banded,
         lsh_index_meta,
+        lsh_pairs,
         lsh_signatures,
         query_lsh_index,
         save_lsh_index,
@@ -609,39 +564,16 @@ def near_dedup_stream(
         new_ids = None
         try:
             # (b) intra-batch near-dedup: min-id survives each pair
-            banded = lsh_banded(
-                base, id_col, params["num_hashes"], params["bands"]
-            )
-            l = banded.select("band", "bhash", F.col(id_col).alias("id_1"))
-            r = banded.select("band", "bhash", F.col(id_col).alias("id_2"))
-            cand = (
-                l.join(r, ["band", "bhash"])
-                .filter(F.col("id_1") < F.col("id_2"))
-                .select("id_1", "id_2")
-                .dropDuplicates(["id_1", "id_2"])
-            )
-            sets = base.select(F.col(id_col), F.col("__sh"))
-            pairs = cand.join(
-                sets.select(F.col(id_col).alias("id_1"), F.col("__sh").alias("sh_1")),
-                "id_1",
-            ).join(
-                sets.select(F.col(id_col).alias("id_2"), F.col("__sh").alias("sh_2")),
-                "id_2",
-            )
-            inter = F.size(F.array_intersect("sh_1", "sh_2"))
-            union = F.size("sh_1") + F.size("sh_2") - inter
-            jac = F.when(union > 0, inter.cast("double") / union).otherwise(
-                F.lit(0.0)
-            )
             losers = (
-                pairs.filter(jac >= jaccard_threshold)
+                lsh_pairs(
+                    base, id_col, params["num_hashes"], params["bands"],
+                    jaccard_threshold,
+                )
                 .select(F.col("id_2").alias(id_col))
                 .distinct()
             )
             kept = batch.join(losers, id_col, "left_anti")
-            kept_base = base.join(
-                losers.withColumnRenamed(id_col, id_col), id_col, "left_anti"
-            )
+            kept_base = base.join(losers, id_col, "left_anti")
             if have_index:
                 # replay/resubmit guard (upsert-skip, the reference's
                 # unique-key insert semantics F6/S7): an id already in

@@ -415,6 +415,42 @@ def test_lsh_index_base_params_contract(spark, tmp_path):
         save_lsh_index(docs, "doc_id", "text", str(tmp_path / "i2"), base=good)
 
 
+def test_lsh_pair_index_and_stream_paths_agree(spark, tmp_path):
+    """The one-shot pair finder, a probe of an index saved from the
+    same docs, and one streaming batch must judge the same pairs: the
+    probe's non-self hits normalized to (min, max) are the finder's
+    pairs, and the stream drops exactly their ``id_2`` side."""
+    from bbcnews_scraper_nlp_spark.streaming.ingest import near_dedup_stream
+
+    df, _ = _corpus(spark)
+    pairs = {
+        (r["id_1"], r["id_2"])
+        for r in D.minhash_lsh_pairs(
+            df, "doc_id", "text", jaccard_threshold=0.5
+        ).collect()
+    }
+    assert pairs
+
+    idx = str(tmp_path / "idx")
+    D.save_lsh_index(df, "doc_id", "text", idx)
+    probed = {
+        (min(r["new_id"], r["index_id"]), max(r["new_id"], r["index_id"]))
+        for r in D.query_lsh_index(df, "doc_id", "text", idx, 0.5).collect()
+        if r["new_id"] != r["index_id"]
+    }
+    assert probed == pairs
+
+    docs_dir = str(tmp_path / "docs")
+    out = str(tmp_path / "accepted")
+    df.coalesce(1).write.parquet(docs_dir)
+    near_dedup_stream(
+        spark, docs_dir, str(tmp_path / "sidx"), out, str(tmp_path / "ckpt"), 0.5
+    ).awaitTermination()
+    accepted = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    all_ids = {r["doc_id"] for r in df.select("doc_id").collect()}
+    assert all_ids - accepted == {b for _, b in pairs}
+
+
 def _sql_actions_in_group(spark, group, fn):
     """Run ``fn`` with its jobs tagged ``group`` and return what it
     returned plus the action names (``count``, ``localCheckpoint``, ...)

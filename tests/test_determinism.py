@@ -30,6 +30,13 @@ QUERIES = [
     "similarity_ivfadc_topk",    # Forgy cells + PQ encode/ADC
     "suffix_span_removal",       # suffix coverage + shared reassembly
     "item_item_recs_dimsum",     # shared DIMSUM md5 draw
+    # shared scan, pair and scoring steps
+    "skyline_pareto_parts",      # two-level max scan
+    "kn_perplexity_buckets",     # two-level global rank
+    "nb_kfold_eval",             # per-fold naive-Bayes model + argmax
+    "sentiment_full_lexicon",    # broadcast lexicon join, milli sums
+    "butterfly_counts_sampled",  # pair-table rollup
+    "hits_copurchase",           # HITS half-rounds
 ]
 
 

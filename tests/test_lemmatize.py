@@ -181,7 +181,7 @@ def test_model_mount_runs_external_lemmatizer(spark):
 def test_model_mount_real_nltk_wordnet(spark):
     """Reference-parity leg: run the ACTUAL WordNetLemmatizer in the
     slot on the irregular-forms fixture (skips where nltk or its
-    wordnet data is absent, like the TWS protobuf skip)."""
+    wordnet data is absent)."""
     nltk = pytest.importorskip("nltk")
     try:
         wnl = nltk.stem.WordNetLemmatizer()

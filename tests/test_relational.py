@@ -767,3 +767,30 @@ def test_cms_sketches_merge_cellwise(spark):
     got = {(r["row_i"], r["col_j"]): r["cnt"] for r in merged.collect()}
     want = {(r["row_i"], r["col_j"]): r["cnt"] for r in whole.collect()}
     assert got == want
+
+
+def test_two_level_rank_matches_global_row_number(spark):
+    # duplicate and negative bucket keys (the order columns break the
+    # ties), and a table whose key takes a single value (zero span)
+    from pyspark.sql import Window
+
+    from bbcnews_scraper_nlp_spark.operators.relational import two_level_rank
+
+    mixed = [((i * 37) % 23 - 11, i) for i in range(150)]
+    single = [(4, i) for i in range(9)]
+    for rows in (mixed, single):
+        df = spark.createDataFrame(rows, "k long, id long").repartition(5)
+        want = {
+            r["id"]: r["rn"]
+            for r in df.select(
+                "id", F.row_number().over(Window.orderBy("k", "id")).alias("rn")
+            ).collect()
+        }
+        for buckets in (1, 4, 256):
+            got = {
+                r["id"]: r["rank"]
+                for r in two_level_rank(
+                    df, F.col("k"), ["k", "id"], buckets=buckets
+                ).collect()
+            }
+            assert got == want, (len(rows), buckets)

@@ -40,8 +40,11 @@ def test_join_path_matches_expr_path(spark):
         "id long, text string",
     )
     toks_df = df.select("id", F.split("text", " ").alias("tokens"))
-    lex_rows = [(w, p, s) for w, (p, s) in S.DEFAULT_LEXICON.items()]
-    lex_df = spark.createDataFrame(lex_rows, "word string, polarity double, subjectivity double")
+    lex_rows = [
+        (w, round(p * 1000), round(s * 1000))
+        for w, (p, s) in S.DEFAULT_LEXICON.items()
+    ]
+    lex_df = spark.createDataFrame(lex_rows, "word string, p_milli long, s_milli long")
     joined = {
         r["id"]: (r["polarity"], r["subjectivity"])
         for r in S.score_with_lexicon_join(toks_df, "tokens", ["id"], lex_df).collect()

@@ -284,52 +284,6 @@ def test_rocksdb_state_store_results_identical(spark, sf_dir):
     assert rocks_sessions == default_sessions and len(rocks_sessions) > 0
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark, sf_dir):
-    # Spark 4 transformWithStateInPandas twin must reproduce the
-    # applyInPandasWithState results key-for-key (final state after a
-    # full AvailableNow drain). The TWS state-server protocol needs
-    # the python protobuf package; skip (not fail) where it is absent
-    # — the operator itself is pure public-API code.
-    import tempfile
-    import uuid
-
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("python protobuf not available: TWS state server unusable")
-
-    from bbcnews_scraper_nlp_spark.streaming.ingest import (
-        event_stream,
-        running_user_stats_tws,
-        user_stats_batch,
-    )
-
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        running_user_stats_tws(event_stream(spark, sf_dir))
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update-mode memory sink: keep the final (max n_events) state
-    tws = {}
-    for r in spark.table(name).orderBy("n_events").collect():
-        tws[r["user_id"]] = (r["n_events"], r["total_cents"])
-    legacy = {
-        r["user_id"]: (r["n_events"], r["total_cents"])
-        for r in user_stats_batch(spark, sf_dir).collect()
-    }
-    assert len(tws) > 0
-    # integer-cents fold -> both APIs must agree EXACTLY
-    assert tws == legacy
-
-
 def test_near_dedup_stream_cross_run_lsh_state(spark, tmp_path):
     """Two streaming runs over a growing docs dir: run 2 must drop a
     near-duplicate of a doc ACCEPTED IN RUN 1 purely via the on-disk

@@ -2,13 +2,15 @@
 
     python tools/dump_plans.py <out_dir> <suffix> [sf_dir] <query> [query ...]
 
-Writes <out_dir>/<query>_<suffix>.txt for each query. The numbers a
-process-global counter hands out are stripped (expression ids
-``doc_id#12L`` -> ``doc_id#L``, ``plan_id=``, ``RDD[]``, lambda
-variables ``lambda x_303`` -> ``lambda x_``), and each query's blocks
-are released after its explain, so a dump does not depend on which
-queries were built before it: two checkouts' dumps (same suffix,
-different out_dirs) compare with a plain ``diff -r``. Queries whose
+Writes <out_dir>/<query>_<suffix>.txt for each query, and its DuckDB
+oracle SQL as <out_dir>/<query>_<suffix>.sql (none for a query without
+an oracle). The numbers a process-global counter hands out are
+stripped (expression ids ``doc_id#12L`` -> ``doc_id#L``, ``plan_id=``,
+``RDD[]``, lambda variables ``lambda x_303`` -> ``lambda x_``), and
+each query's blocks are released after its explain, so a dump does not
+depend on which queries were built before it: two checkouts' dumps
+(same suffix, different out_dirs) compare plans and oracle strings
+with one plain ``diff -r``. Queries whose
 DataFrame cannot be built (e.g. streaming drains that need a live
 run) record the exception instead so the failure is visible.
 """
@@ -66,6 +68,9 @@ def main() -> None:
             release_blocks(spark)
         with open(path, "w") as f:
             f.write(txt)
+        if q.sql is not None:
+            with open(os.path.join(out_dir, f"{name}_{suffix}.sql"), "w") as f:
+                f.write(q.sql)
         print(f"# wrote {path}", file=sys.stderr)
 
 
