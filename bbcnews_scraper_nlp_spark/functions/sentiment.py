@@ -34,7 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Deterministic engine lexicon: word -> (polarity, subjectivity).
-# Stands in for en-sentiment.xml; swap via the `lexicon=` params.
+# Stands in for en-sentiment.xml. The polarity/subjectivity
+# expressions and the pandas scorer read it directly; the large
+# lexicon joins through ``score_with_lexicon_join`` instead.
 DEFAULT_LEXICON: dict[str, tuple[float, float]] = {
     "good": (0.7, 0.6),
     "great": (0.8, 0.75),
@@ -51,9 +53,11 @@ DEFAULT_LEXICON: dict[str, tuple[float, float]] = {
 }
 
 
-def _lexicon_map(lexicon: dict[str, tuple[float, float]], which: int) -> Column:
+def _lexicon_map(which: int) -> Column:
     pairs = list(
-        chain.from_iterable((F.lit(w), F.lit(float(v[which]))) for w, v in lexicon.items())
+        chain.from_iterable(
+            (F.lit(w), F.lit(float(v[which]))) for w, v in DEFAULT_LEXICON.items()
+        )
     )
     return F.create_map(*pairs)
 
@@ -68,18 +72,14 @@ def _avg_score(tokens: Column, lex_map: Column) -> Column:
     )
 
 
-def polarity_expr(
-    tokens: Column, lexicon: dict[str, tuple[float, float]] | None = None
-) -> Column:
+def polarity_expr(tokens: Column) -> Column:
     """Mean lexicon polarity over matched tokens, 0.0 if none (M6)."""
-    return _avg_score(tokens, _lexicon_map(lexicon or DEFAULT_LEXICON, 0))
+    return _avg_score(tokens, _lexicon_map(0))
 
 
-def subjectivity_expr(
-    tokens: Column, lexicon: dict[str, tuple[float, float]] | None = None
-) -> Column:
+def subjectivity_expr(tokens: Column) -> Column:
     """Mean lexicon subjectivity over matched tokens, 0.0 if none (M7)."""
-    return _avg_score(tokens, _lexicon_map(lexicon or DEFAULT_LEXICON, 1))
+    return _avg_score(tokens, _lexicon_map(1))
 
 
 def score_with_lexicon_join(
@@ -150,10 +150,11 @@ _SENT_SCHEMA = T.StructType(
 )
 
 
-def make_sentiment_pandas_udf(lexicon: dict[str, tuple[float, float]] | None = None):
+def make_sentiment_pandas_udf():
     """Arrow-vectorized scorer with TextBlob-style negation:
     "not X" contributes -0.5 * polarity(X)."""
-    lex = lexicon or DEFAULT_LEXICON
+    lex = DEFAULT_LEXICON
+
 
     @F.pandas_udf(_SENT_SCHEMA)
     def sentiment(texts: pd.Series) -> pd.DataFrame:

@@ -89,8 +89,11 @@ def _stopword_map() -> Column:
     )
 
 
-def filter_tokens(tokens: Column, min_len: int = 2) -> Column:
-    """Token filter: len(w) > min_len AND w not a stopword
+MIN_TOKEN_LEN = 2  # tokens must be longer than this
+
+
+def filter_tokens(tokens: Column) -> Column:
+    """Token filter: len(w) > MIN_TOKEN_LEN AND w not a stopword
     (data_preparation.py:54-56, F8/F9).
 
     Membership via map lookup, not array_contains: HOF lambdas are
@@ -99,7 +102,7 @@ def filter_tokens(tokens: Column, min_len: int = 2) -> Column:
     stop = _stopword_map()
     return F.filter(
         tokens,
-        lambda w: (F.length(w) > min_len)
+        lambda w: (F.length(w) > MIN_TOKEN_LEN)
         & ~F.coalesce(F.element_at(stop, w), F.lit(False)),
     )
 

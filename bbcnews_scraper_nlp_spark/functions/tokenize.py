@@ -266,13 +266,16 @@ def _unigram_viterbi(
     return pieces, best[len(w)]
 
 
+# unigram-LM training: longest piece, hard-EM rounds, multi-char seeds
+UNIGRAM_MAX_PIECE_LEN = 6
+UNIGRAM_EM_ITERS = 2
+UNIGRAM_SEED_LIMIT = 200
+
+
 def learn_unigram_vocab(
     docs: DataFrame,
     text_col: str,
     vocab_size: int = 64,
-    max_piece_len: int = 6,
-    em_iters: int = 2,
-    seed_multi_limit: int = 200,
 ) -> dict:
     """Unigram-LM tokenizer training (Kudo 2018: SentencePiece's
     unigram model), the BPE recipe's probabilistic sibling — same
@@ -283,9 +286,9 @@ def learn_unigram_vocab(
     Deterministic Viterbi hard-EM with milli-nat quantized scores
     (the registry's integer-certificate recipe):
 
-    1. Seed: every substring of every word type, 2..max_piece_len
+    1. Seed: every substring of every word type, 2..UNIGRAM_MAX_PIECE_LEN
        chars, weighted by word count per occurrence position; keep
-       the top ``seed_multi_limit`` by (freq desc, piece asc) plus
+       the top ``UNIGRAM_SEED_LIMIT`` by (freq desc, piece asc) plus
        ALL single chars (so segmentation is always total).
     2. E-step: Viterbi-segment each word type under
        logp_milli = round(1000 * ln(count / total)); accumulate
@@ -316,7 +319,7 @@ def learn_unigram_vocab(
     for w, n in types:
         for i in range(len(w)):
             freq_single[w[i]] = freq_single.get(w[i], 0) + n
-            for length in range(2, max_piece_len + 1):
+            for length in range(2, UNIGRAM_MAX_PIECE_LEN + 1):
                 if i + length > len(w):
                     break
                 s = w[i : i + length]
@@ -325,10 +328,10 @@ def learn_unigram_vocab(
     multi_sorted = sorted(freq_multi.items(), key=lambda kv: (-kv[1], kv[0]))
     seed_top = multi_sorted[0][0] if multi_sorted else ""
     counts: dict[str, int] = dict(freq_single)
-    counts.update(multi_sorted[:seed_multi_limit])
+    counts.update(multi_sorted[:UNIGRAM_SEED_LIMIT])
 
     lls: list[int] = []
-    for _ in range(em_iters):
+    for _ in range(UNIGRAM_EM_ITERS):
         total = sum(counts.values())
         logp = {
             p: round(1000 * math.log(c / total)) for p, c in counts.items()
@@ -336,7 +339,7 @@ def learn_unigram_vocab(
         new_counts: dict[str, int] = {}
         ll = 0
         for w, n in types:
-            pieces, score = _unigram_viterbi(w, logp, max_piece_len)
+            pieces, score = _unigram_viterbi(w, logp, UNIGRAM_MAX_PIECE_LEN)
             ll += n * score
             for p in pieces:
                 new_counts[p] = new_counts.get(p, 0) + n

@@ -48,8 +48,10 @@ def automaton_frame(spark: SparkSession, patterns: list[str]) -> DataFrame:
     prefix, root "" excluded): (node, fail, out) where ``fail`` is
     the longest proper suffix of ``node`` that is also a node (""
     when none) and ``out`` is the sorted array of patterns that are
-    suffixes of ``node``."""
-    assert patterns and all(patterns), "patterns must be non-empty strings"
+    suffixes of ``node``. Raises ValueError for an empty pattern list
+    or an empty pattern."""
+    if not patterns or not all(patterns):
+        raise ValueError("patterns must be non-empty strings")
     pats = spark.createDataFrame([(p,) for p in patterns], ["pat"])
     nodes = (
         pats.select(
@@ -179,10 +181,12 @@ def badword_flag(
     ``arrays_overlap`` projection is O(tokens x words), which is the
     scan this operator exists to beat past ~10³ words.
 
-    Returns ``df`` with ``flag_col`` (int 0/1) appended."""
-    assert words and all(w and " " not in w for w in words), (
-        "bad words must be non-empty and space-free (token semantics)"
-    )
+    Returns ``df`` with ``flag_col`` (int 0/1) appended. Raises
+    ValueError for an empty word list or an empty or spaced word."""
+    if not words or not all(w and " " not in w for w in words):
+        raise ValueError(
+            "bad words must be non-empty and space-free (token semantics)"
+        )
     auto = automaton_frame(
         df.sparkSession, [f" {w} " for w in sorted(set(words))]
     )

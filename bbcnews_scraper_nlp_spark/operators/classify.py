@@ -193,9 +193,9 @@ def nb_predict(
     id_col: str = "doc_id",
     text_col: str = "text",
     label_col: str = "lang",
-    hash_buckets: int | None = None,
 ) -> DataFrame:
-    """Score every document against every class and take the integer
+    """Score every document against every class (plain, unhashed
+    tokens) and take the integer
     argmax (ties → minimum class label). Documents with no tokens
     score prior-only. Plan: token explode → (doc, token) tf →
     fan out by the few classes (broadcast) → left join the model on
@@ -204,7 +204,7 @@ def nb_predict(
     base = docs.select(
         F.col(id_col).alias("id"), F.col(label_col).alias("label")
     )
-    tf = _nb_tf(docs, text_col, [F.col(id_col).alias("id")], hash_buckets)
+    tf = _nb_tf(docs, text_col, [F.col(id_col).alias("id")], None)
     return _nb_score(base, tf, model, classes)
 
 

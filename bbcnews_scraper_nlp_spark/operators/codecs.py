@@ -559,27 +559,28 @@ def encode_wav_ima_adpcm(
     )
 
 
-def encode_wav_g711(
-    samples: np.ndarray, law: str = "ulaw", rate: int = 8000
-) -> bytes:
+G711_RATE = 8000  # telephony sample rate of every G.711 WAV written here
+
+
+def encode_wav_g711(samples: np.ndarray, law: str = "ulaw") -> bytes:
     """Encode mono int16 samples as a real WAV G.711 container
     (fmt 7 = mu-law, fmt 6 = A-law), one byte per sample."""
     if samples.ndim == 2:
         samples = samples[:, 0]
     codes = (ulaw_encode if law == "ulaw" else alaw_encode)(samples)
-    return g711_wav(codes.tobytes(), law, rate)
+    return g711_wav(codes.tobytes(), law)
 
 
-def g711_wav(codes: bytes, law: str = "ulaw", rate: int = 8000) -> bytes:
+def g711_wav(codes: bytes, law: str = "ulaw") -> bytes:
     """Wrap G.711 code bytes in a WAV container: 18-byte fmt chunk
-    (fmt 7 = mu-law, fmt 6 = A-law, mono, 8 bits) and a data chunk
-    that is not word-padded."""
+    (fmt 7 = mu-law, fmt 6 = A-law, mono, 8 bits, G711_RATE Hz) and a
+    data chunk that is not word-padded."""
     fmt_tag = 7 if law == "ulaw" else 6
     return (
         b"RIFF"
         + struct.pack("<I", 38 + len(codes))
         + b"WAVEfmt "
-        + struct.pack("<IHHIIHH", 18, fmt_tag, 1, rate, rate, 1, 8)
+        + struct.pack("<IHHIIHH", 18, fmt_tag, 1, G711_RATE, G711_RATE, 1, 8)
         + struct.pack("<H", 0)
         + b"data"
         + struct.pack("<I", len(codes))
@@ -2069,16 +2070,18 @@ def avi_dib_frames(data: bytes) -> tuple[int, int, list[np.ndarray]]:
     return width, height, frames
 
 
-def encode_avi_dib(
-    frames: list[np.ndarray], us_per_frame: int = 33333
-) -> bytes:
+AVI_US_PER_FRAME = 33333  # ~30 fps
+
+
+def encode_avi_dib(frames: list[np.ndarray]) -> bytes:
     """Encode RGB frames as a real RIFF/AVI with uncompressed '00db'
-    DIB chunks (avi_dib_frames' round-trip twin)."""
+    DIB chunks (avi_dib_frames' round-trip twin), AVI_US_PER_FRAME
+    apart."""
     if not frames:
         raise AviError("need at least one frame")
     h, w, _ = frames[0].shape
     avih = struct.pack(
-        "<14I", us_per_frame, 0, 0, 0, len(frames), 0, 1, 0, w, h,
+        "<14I", AVI_US_PER_FRAME, 0, 0, 0, len(frames), 0, 1, 0, w, h,
         0, 0, 0, 0,
     )
     hdrl = b"hdrl" + b"avih" + struct.pack("<I", len(avih)) + avih

@@ -29,6 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+CV_WINDOW = 110  # c_v boolean sliding-window length (gensim's default)
+NPMI_EPS = 1e-12  # smoothing inside c_v's NPMI logarithms
+UMASS_MIN_DF = 2  # the CountVectorizer minDF the UMass certificate checks
+
 
 def umass_coherence(
     docs_tokens: DataFrame,
@@ -110,7 +114,6 @@ def _umass_frames(
 def umass_certificate(
     docs_tokens: DataFrame,
     topics_terms: DataFrame,
-    min_df: int = 2,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
 ) -> DataFrame:
@@ -171,7 +174,9 @@ def umass_certificate(
             F.count("*").alias("n_pairs"),
             F.min(
                 F.when(
-                    (F.col("df_i") >= min_df) & (F.col("df_j") >= min_df), 1
+                    (F.col("df_i") >= UMASS_MIN_DF)
+                    & (F.col("df_j") >= UMASS_MIN_DF),
+                    1,
                 ).otherwise(0)
             ).alias("df_ok"),
             F.min(
@@ -283,8 +288,7 @@ def _intersect_len(a, b):
 def cv_coherence(
     docs_tokens: DataFrame,
     topics_terms: DataFrame,
-    window: int = 110,
-    eps: float = 1e-12,
+    window: int = CV_WINDOW,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
 ) -> DataFrame:
@@ -315,7 +319,7 @@ def cv_coherence(
     Returns (topic, coherence, n_terms).
     """
     total_windows, covers, term_cnt, npmi, cos = _cv_frames(
-        docs_tokens, topics_terms, window, eps, id_col, tokens_col
+        docs_tokens, topics_terms, window, id_col, tokens_col
     )
     out = cos.groupBy("topic").agg(
         F.avg("cos_i").alias("coherence"), F.count("*").alias("n_terms")
@@ -333,7 +337,6 @@ def _cv_frames(
     docs_tokens: DataFrame,
     topics_terms: DataFrame,
     window: int,
-    eps: float,
     id_col: str,
     tokens_col: str,
 ):
@@ -455,10 +458,10 @@ def _cv_frames(
                 (F.coalesce("cnt_a", F.lit(0)) > 0)
                 & (F.coalesce("cnt_b", F.lit(0)) > 0),
                 F.log(
-                    (F.col("co") / w_total + eps)
+                    (F.col("co") / w_total + NPMI_EPS)
                     / ((F.col("cnt_a") / w_total) * (F.col("cnt_b") / w_total))
                 )
-                / -F.log(F.col("co") / w_total + eps),
+                / -F.log(F.col("co") / w_total + NPMI_EPS),
             )
             .otherwise(F.lit(0.0))
             .alias("npmi"),
@@ -497,8 +500,6 @@ def _cv_frames(
 def cv_certificate(
     docs_tokens: DataFrame,
     topics_terms: DataFrame,
-    window: int = 110,
-    eps: float = 1e-12,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
 ) -> DataFrame:
@@ -525,9 +526,10 @@ def cv_certificate(
       ('coherence_in_range', t, 1) — mean cosine also in [-1, 1]
     """
     total_windows, covers, term_cnt, npmi, cos = _cv_frames(
-        docs_tokens, topics_terms, window, eps, id_col, tokens_col
+        docs_tokens, topics_terms, CV_WINDOW, id_col, tokens_col
     )
     w_total = int(total_windows)
+
 
     # npmi carries (co, cnt_a, cnt_b) through from _cv_frames, so
     # every invariant audits the ACTUAL counts the metric consumed.

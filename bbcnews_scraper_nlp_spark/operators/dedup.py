@@ -33,11 +33,23 @@ from .traindata import md5_int
 # Mersenne prime 2^31-1: keeps every affine-hash product within int64.
 MERSENNE31 = 2_147_483_647
 
+# The MinHash signature space (the oracle SQL and the LSH index meta
+# read the same values): word 3-shingles, 64 minima in 16 bands.
+MINHASH_NUM_HASHES = 64
+MINHASH_BANDS = 16
+SHINGLE_MODE = "word"
+SHINGLE_N = 3
+COEFF_SEED = 42
+SPAN_MIN_COUNT = 2  # an n-gram seen this often marks its tokens duplicated
+FUZZY_MAX_DIST = 3  # blocked_fuzzy_pairs' edit-distance cut
+MAX_JUMPS = 20  # pointer-jumping rounds per connected-components round
+
+
 # Deterministic affine coefficients (seed derivation: linear
 # congruential walk from a fixed seed; any fixed odd constants work).
-def _coeffs(k: int, seed: int = 42) -> list[tuple[int, int]]:
+def _coeffs(k: int) -> list[tuple[int, int]]:
     out = []
-    state = seed
+    state = COEFF_SEED
     for _ in range(k):
         state = (state * 1_103_515_245 + 12_345) % MERSENNE31
         a = state | 1  # odd, non-zero
@@ -148,18 +160,15 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_mode: str = "word",
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
     shingle_hash: str = "xxhash64",
 ) -> DataFrame:
-    """MinHash+LSH near-dup pair finder.
+    """MinHash+LSH near-dup pair finder over word SHINGLE_N-shingles,
+    MINHASH_NUM_HASHES signature minima in MINHASH_BANDS bands.
 
     Plan shape (the 100 TB rationale):
       1. signatures: narrow projection (codegen, no shuffle).
-      2. bands: explode to ``bands`` rows/doc; band key = xxhash64 of
+      2. bands: explode to MINHASH_BANDS rows/doc; band key = xxhash64 of
          the signature slice. Shuffle #1 groups docs by band bucket;
          bucket sizes are tiny for non-dup data, and AQE skew-join
          splits pathological buckets.
@@ -177,10 +186,13 @@ def minhash_lsh_pairs(
     # without it each probe re-runs tokenize+shingle+hash end to end.
     # MEMORY_AND_DISK so a 10^9-doc index degrades to spill, not OOM.
     base = lsh_signatures(
-        df, id_col, text_col, num_hashes, shingle_mode, shingle_n, shingle_hash
+        df, id_col, text_col, MINHASH_NUM_HASHES, SHINGLE_MODE, SHINGLE_N,
+        shingle_hash,
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    return lsh_pairs(base, id_col, num_hashes, bands, jaccard_threshold)
+    return lsh_pairs(
+        base, id_col, MINHASH_NUM_HASHES, MINHASH_BANDS, jaccard_threshold
+    )
 
 
 def lsh_pairs(
@@ -340,7 +352,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.5,
     prefix_filter: bool | None = None,
     max_df: int | None = 10_000,
@@ -393,7 +404,7 @@ def ngram_jaccard_pairs(
 
     if prefix_filter is None:
         prefix_filter = threshold >= 0.5
-    shingle_arr = F.array_distinct(word_shingles(F.split(F.col(text_col), " "), n))
+    shingle_arr = F.array_distinct(word_shingles(F.split(F.col(text_col), " "), SHINGLE_N))
     sh = df.select(
         F.col(id_col).alias("id"),
         F.explode(shingle_arr).alias("shingle"),
@@ -517,7 +528,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 12,
-    max_jumps: int = 20,
 ) -> DataFrame:
     """Distributed connected components over an edge list; returns
     ``(node, comp)`` where ``comp`` is the smallest node id in the
@@ -592,7 +602,7 @@ def connected_components(
         # costs a full extra doubling join + checkpoint whenever the
         # fixpoint lands on the unprobed parity (star-contracted
         # forests usually flatten in ONE jump).
-        for j in range(max_jumps):
+        for j in range(MAX_JUMPS):
             jump = Observation()
             nxt = (
                 parent.alias("a")
@@ -650,7 +660,7 @@ def connected_components(
             break
     else:
         # labels are only a partial fixpoint while edges remain; an
-        # exhausted max_jumps is fine (later rounds keep flattening)
+        # exhausted MAX_JUMPS is fine (later rounds keep flattening)
         raise RuntimeError(
             f"connected_components: {left.get['edges']} contracted edges "
             f"left after max_rounds={max_rounds}"
@@ -691,11 +701,10 @@ def remove_dup_spans(
     id_col: str,
     text_col: str,
     n: int = 4,
-    min_count: int = 2,
 ) -> DataFrame:
     """Corpus-wide duplicated-span REMOVAL (Lee et al. 2022, the
     transform behind `dup_ngram_span_score`'s signal): delete every
-    token covered by a word n-gram that occurs at least ``min_count``
+    token covered by a word n-gram that occurs at least ``SPAN_MIN_COUNT``
     times in the corpus (all occurrences counted, so within-document
     repeats qualify too), and reassemble the surviving tokens in
     order.
@@ -731,7 +740,7 @@ def remove_dup_spans(
     dup = (
         g.groupBy("gram")
         .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= min_count)
+        .filter(F.col("c") >= SPAN_MIN_COUNT)
         .select("gram")
     )
     cov = (
@@ -800,7 +809,6 @@ def blocked_fuzzy_pairs(
     df: DataFrame,
     key_col: str,
     block_col: str,
-    max_dist: int = 3,
 ) -> DataFrame:
     """Entity-resolution candidate pairs via blocking + edit distance
     (the classic record-linkage shape: Fellegi-Sunter blocking pass).
@@ -815,7 +823,7 @@ def blocked_fuzzy_pairs(
     Jaccard path. Distance is JVM-side ``levenshtein`` (identical
     semantics in DuckDB, so the pairs are hash-oracle-able).
 
-    Returns (key_1, key_2, dist) with key_1 < key_2, dist <= max_dist.
+    Returns (key_1, key_2, dist) with key_1 < key_2, dist <= FUZZY_MAX_DIST.
     """
     a = df.select(F.col(block_col).alias("__blk"), F.col(key_col).alias("key_1"))
     b = df.select(F.col(block_col).alias("__blk"), F.col(key_col).alias("key_2"))
@@ -827,7 +835,7 @@ def blocked_fuzzy_pairs(
             "key_2",
             F.levenshtein("key_1", "key_2").alias("dist"),
         )
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= FUZZY_MAX_DIST)
     )
 
 
@@ -868,11 +876,8 @@ def save_lsh_index(
     id_col: str,
     text_col: str,
     path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_mode: str = "word",
-    shingle_n: int = 3,
-    shingle_hash: str = "xxhash64",
+    num_hashes: int = MINHASH_NUM_HASHES,
+    bands: int = MINHASH_BANDS,
     base: DataFrame | None = None,
     base_params: dict | None = None,
     batch_id: int | None = None,
@@ -897,8 +902,8 @@ def save_lsh_index(
     idempotent — use it from the first save, and in every append, or
     not at all (mixed layouts fail partition discovery)."""
     params = {
-        "num_hashes": num_hashes, "bands": bands, "shingle_mode": shingle_mode,
-        "shingle_n": shingle_n, "shingle_hash": shingle_hash,
+        "num_hashes": num_hashes, "bands": bands, "shingle_mode": SHINGLE_MODE,
+        "shingle_n": SHINGLE_N, "shingle_hash": "xxhash64",
     }
     _write_lsh_index(
         df, id_col, text_col, path, params, base, base_params, batch_id,

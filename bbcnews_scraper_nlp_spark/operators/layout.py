@@ -179,8 +179,9 @@ def hilbert_d2(df, xcol: str, ycol: str, bits: int = 8, out: str = "hval"):
 
 
 def hilbert_d2_sql(
-    source_sql: str, xcol: str, ycol: str, bits: int = 8, out: str = "hval"
+    source_sql: str, xcol: str, ycol: str, bits: int, out: str = "hval"
 ) -> str:
+
     """DuckDB twin of ``hilbert_d2``: the same steps as a chain of
     nested SELECTs over ``source_sql`` (named intermediates — see
     hilbert_steps on why inlining is forbidden). The final SELECT

@@ -216,10 +216,11 @@ def image_meta(df: DataFrame, strict: bool = False) -> DataFrame:
 def _wav_header(
     sample_rate: int = 16000,
     channels: int = 1,
-    bits: int = 16,
     n_frames: int = 0,
 ) -> bytes:
-    """Minimal canonical RIFF/WAVE header (44 bytes, PCM fmt chunk)."""
+    """Minimal canonical RIFF/WAVE header (44 bytes, 16-bit PCM fmt
+    chunk)."""
+    bits = 16
     block_align = channels * bits // 8
     data_size = n_frames * block_align
     return (
@@ -265,7 +266,8 @@ def attach_audio_payload(df: DataFrame, text_col: str, id_col: str) -> DataFrame
 
     def wav(i: int, text: str | None) -> bytes:
         body = (text or "").encode("utf-8")
-        return _wav_header(i % 3 * 8000 + 8000, 1, 16, len(body) // 2) + body
+        return _wav_header(i % 3 * 8000 + 8000, 1, len(body) // 2) + body
+
 
     return _synth(df, "audio/wav", wav, id_col, text_col)
 

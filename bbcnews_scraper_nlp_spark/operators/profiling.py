@@ -64,8 +64,11 @@ def grouped_quantiles(
     return df.groupBy(*group_cols).agg(*exprs)
 
 
+HLL_LG_K = 12  # log2 of the HLL sketch's register count
+
+
 def distinct_sketches(
-    df: DataFrame, key_col: str, group_cols: list[str], lg_k: int = 12
+    df: DataFrame, key_col: str, group_cols: list[str]
 ) -> DataFrame:
     """Per-group MERGEABLE distinct-count sketches (Datasketches
     HllSketch via ``hll_sketch_agg``): one binary sketch column per
@@ -75,13 +78,13 @@ def distinct_sketches(
     ingest partition (e.g. per day) ONCE at write time, then answer
     "distinct users over any date range" by unioning the range's
     pre-built sketches (``merge_sketches``) — no raw re-scan, error
-    ~1.6%/sqrt(2^lg_k), fixed 2^lg_k-byte state per group regardless
+    ~1.6%/sqrt(2^HLL_LG_K), fixed 2^HLL_LG_K-byte state per group regardless
     of cardinality. approx_count_distinct gives the same estimate but
     returns only the NUMBER — the sketch column is what makes
     incremental maintenance and cross-table roll-ups composable.
     """
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(key_col), F.lit(lg_k)).alias("sketch"),
+        F.hll_sketch_agg(F.col(key_col), F.lit(HLL_LG_K)).alias("sketch"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 

@@ -15,6 +15,10 @@ from pyspark.sql import functions as F
 
 from .traindata import md5_int
 
+SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 idle minutes open a new session
+BLOOM_HASHES = 5  # bit positions per key in the Bloom-filter helpers
+HRW_TAG = "hrw-v1"  # salt of the rendezvous-hash score md5("tag:shard:id")
+
 
 def epoch_us(col: str | Column) -> Column:
     """Epoch microseconds from ANY timestamp flavor.
@@ -122,7 +126,6 @@ def rolling_mean_min_periods(
     order_col: str,
     value_cols: list[str],
     window_rows: int = 10,
-    partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """W1/W2: pandas ``rolling(10).mean()`` semantics — trailing
     10-row mean, NULL for the first window_rows-1 rows (min_periods).
@@ -131,10 +134,9 @@ def rolling_mean_min_periods(
     a row_number guard. Note: an unpartitioned ordered window is a
     single-task bottleneck at scale — the trend query only ever runs
     this over the *daily aggregate* series (≤ a few thousand rows at
-    100 TB), never over raw events; pass partition_cols to shard.
+    100 TB), never over raw events.
     """
-    parts = partition_cols or []
-    w_order = Window.partitionBy(*parts).orderBy(order_col)
+    w_order = Window.orderBy(order_col)
     w_frame = w_order.rowsBetween(-(window_rows - 1), 0)
     rn = F.row_number().over(w_order)
     out = df
@@ -221,9 +223,7 @@ def asof_join(
     return carried.filter(F.col("__side") == 1).drop("__side")
 
 
-def sessionize(
-    df: DataFrame, key: str, ts_col: str, gap_minutes: int = 30
-) -> DataFrame:
+def sessionize(df: DataFrame, key: str, ts_col: str) -> DataFrame:
     """Sessionization: new session when the gap to the previous event
     of the same key exceeds the threshold. lag + conditional cumsum —
     one shuffle on the key; returns rows with a session_id column.
@@ -235,7 +235,7 @@ def sessionize(
     us = epoch_us(ts_col)
     gap = us - F.lag(us).over(w)
     is_new = F.when(
-        gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1
+        gap.isNull() | (gap > SESSION_GAP_US), 1
     ).otherwise(0)
     return df.withColumn(
         "session_id",
@@ -248,7 +248,6 @@ def bloom_semi_join(
     keys_df: DataFrame,
     key: str,
     n_bits: int = 1 << 22,
-    n_hashes: int = 5,
     exact: bool = True,
 ) -> DataFrame:
     """Runtime Bloom-filter semi-join: prune the BIG side with a
@@ -260,7 +259,7 @@ def bloom_semi_join(
     scan: only maybe-matching rows are shuffled.
 
     Bitmap construction is fully distributed: each key explodes to
-    ``n_hashes`` bit positions (JVM xxhash64, seeded), positions
+    ``BLOOM_HASHES`` bit positions (JVM xxhash64, seeded), positions
     group to 64-bit words with BIT_OR partial aggregation, and only
     the ≤ n_bits/64 (word_index, word) rows reach the driver — the
     raw keys never do. The big-side probe computes the same seeded
@@ -279,12 +278,12 @@ def bloom_semi_join(
     the seen-URL probe before fetch (middlewares.py:6-16) — same
     idea, set-membership pushed upstream of the expensive stage.
     """
-    words = _bloom_words(keys_df, key, n_bits, n_hashes).collect()
+    words = _bloom_words(keys_df, key, n_bits, BLOOM_HASHES).collect()
     bitmap = np.zeros(n_bits // 64, dtype=np.uint64)
     for r in words:
         bitmap[r["w"]] = np.uint64(r["word"] & 0xFFFFFFFFFFFFFFFF)
     pruned = big.filter(
-        _bloom_maybe_col(big, key, bitmap, n_bits, n_hashes)
+        _bloom_maybe_col(big, key, bitmap, n_bits, BLOOM_HASHES)
     )
     if not exact:
         return pruned
@@ -353,7 +352,6 @@ def save_bloom(
     key: str,
     path: str,
     n_bits: int = 1 << 22,
-    n_hashes: int = 5,
 ) -> None:
     """Persist a key set's Bloom filter as parquet (w, word, n_bits,
     n_hashes) — the cross-run seen-set for incremental corpus builds.
@@ -362,11 +360,11 @@ def save_bloom(
     the parameter columns ride along so a later run can't probe with
     mismatched hashing."""
     (
-        _bloom_words(keys_df, key, n_bits, n_hashes)
+        _bloom_words(keys_df, key, n_bits, BLOOM_HASHES)
         .select(
             "w", "word",
             F.lit(n_bits).alias("n_bits"),
-            F.lit(n_hashes).alias("n_hashes"),
+            F.lit(BLOOM_HASHES).alias("n_hashes"),
         )
         .write.mode("overwrite")
         .parquet(path)
@@ -801,9 +799,9 @@ def delta_join_legs(
     return out
 
 
-def hrw_shard(id_col: Column, n_shards: int, tag: str = "hrw-v1") -> Column:
+def hrw_shard(id_col: Column, n_shards: int) -> Column:
     """Rendezvous (highest-random-weight) shard assignment (Thaler &
-    Ravishankar 1998): the shard whose md5("tag:shard:id") score is
+    Ravishankar 1998): the shard whose md5("hrw-v1:shard:id") score is
     highest wins. Pure codegen projection — each candidate packs
     (48-bit md5 prefix · 16 + shard) into one BIGINT and GREATEST
     picks the winner, so routing shuffles nothing and adding a shard
@@ -813,7 +811,8 @@ def hrw_shard(id_col: Column, n_shards: int, tag: str = "hrw-v1") -> Column:
     if not 0 < n_shards <= 16:
         raise ValueError("hrw_shard packs shard ids into 4 bits")
     packs = [
-        md5_int(F.concat(F.lit(f"{tag}:{s}:"), id_col.cast("string")), 12) * 16
+        md5_int(F.concat(F.lit(f"{HRW_TAG}:{s}:"), id_col.cast("string")), 12)
+        * 16
         + s
         for s in range(n_shards)
     ]

@@ -25,6 +25,16 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 _M31 = 2_147_483_647
+SEED = 42  # the hyperplane LCG seed and the KMeans seed
+KMEANS_SEED_TAG = "km-v1"  # kmeans_lloyd seeds: smallest md5("km-v1:" || id)
+# the certified ANN probes: top-ANN_K for vector ANN_QUERY_ID over
+# IVF_CENTROIDS deterministic cells (the oracle SQL reads the same)
+ANN_QUERY_ID = 0
+ANN_K = 10
+IVF_CENTROIDS = 16
+IVF_PROBE = 3
+IVFADC_PROBE = 4
+PQ_M, PQ_DSUB, PQ_KSUB = 8, 8, 16  # subspaces, dims each, codewords each
 
 
 def _lcg_floats(n: int, seed: int) -> list[float]:
@@ -88,7 +98,6 @@ def cosine_topk_pandas(
     vec_col: str,
     id_col: str,
     query: list[float],
-    k: int = 10,
 ) -> DataFrame:
     """Arrow-vectorized twin of ``cosine_topk``: the scoring pass is a
     pandas_udf doing one numpy matmul per Arrow batch.
@@ -124,7 +133,7 @@ def cosine_topk_pandas(
     score = pandas_udf(_score, "double")
 
     scored = df.select(F.col(id_col), score(F.col(vec_col)).alias("cosine"))
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(ANN_K)
 
 
 def _bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
@@ -138,7 +147,7 @@ def _bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
     return bucket
 
 
-def make_planes(dim: int, r: int = 8, seed: int = 42) -> list[list[float]]:
+def make_planes(dim: int, r: int = 8, seed: int = SEED) -> list[list[float]]:
     flat = _lcg_floats(dim * r, seed)
     return [flat[i * dim : (i + 1) * dim] for i in range(r)]
 
@@ -148,7 +157,7 @@ _SUBBUCKET_SEED_OFFSET = 7919  # decorrelate sub-planes from base planes
 
 
 def _subbucketed(
-    withb: DataFrame, vec_col: str, dim: int, r: int, seed: int, max_bucket: int
+    withb: DataFrame, vec_col: str, dim: int, r: int, max_bucket: int
 ) -> DataFrame:
     """Bound LSH bucket width: re-hash rows of buckets larger than
     ``max_bucket`` with ``_SUBBUCKET_BITS`` extra hyperplanes.
@@ -170,7 +179,7 @@ def _subbucketed(
     with ``__bucket`` rewritten.
     """
     extra_planes = make_planes(
-        dim, _SUBBUCKET_BITS, seed + _SUBBUCKET_SEED_OFFSET
+        dim, _SUBBUCKET_BITS, SEED + _SUBBUCKET_SEED_OFFSET
     )
     sizes = withb.groupBy("__bucket").agg(F.count("*").alias("__bsz"))
     extra = _bucket_expr(F.col(vec_col), extra_planes)
@@ -198,7 +207,6 @@ def rp_lsh_topk(
     query: list[float],
     k: int = 10,
     r: int = 6,
-    seed: int = 42,
     max_bucket: int | None = 100_000,
 ) -> DataFrame:
     """LSH-pruned top-k: scan only rows whose sign-bucket matches the
@@ -210,7 +218,7 @@ def rp_lsh_topk(
     degenerate hot bucket: oversized buckets are sub-split with extra
     hyperplanes (see ``_subbucketed``) and only the query's sub-bucket
     is scanned. ``None`` disables the cap (exact legacy behavior)."""
-    planes = make_planes(len(query), r, seed)
+    planes = make_planes(len(query), r, SEED)
     qbucket = 0
     for i, p in enumerate(planes):
         if sum(x * y for x, y in zip(query, p)) >= 0:
@@ -219,11 +227,11 @@ def rp_lsh_topk(
     withb = df.withColumn("__bucket", _bucket_expr(F.col(vec_col), planes))
     probe = [qbucket]
     if max_bucket is not None:
-        withb = _subbucketed(withb, vec_col, len(query), r, seed, max_bucket)
+        withb = _subbucketed(withb, vec_col, len(query), r, max_bucket)
         # the query's bucket id under the split scheme (driver-side
         # twin of the executor expression)
         extra_planes = make_planes(
-            len(query), _SUBBUCKET_BITS, seed + _SUBBUCKET_SEED_OFFSET
+            len(query), _SUBBUCKET_BITS, SEED + _SUBBUCKET_SEED_OFFSET
         )
         qextra = 0
         for i, p in enumerate(extra_planes):
@@ -250,7 +258,6 @@ def rp_lsh_topk_batch(
     dim: int,
     k: int = 10,
     r: int = 6,
-    seed: int = 42,
     max_bucket: int | None = 100_000,
 ) -> DataFrame:
     """Batched LSH-pruned top-k: the approximate twin of
@@ -273,15 +280,15 @@ def rp_lsh_topk_batch(
     """
     from pyspark.sql import Window
 
-    planes = make_planes(dim, r, seed)
+    planes = make_planes(dim, r, SEED)
     withb = df.withColumn("__bucket", _bucket_expr(F.col(vec_col), planes))
     qv = F.col(qvec_col).cast("array<double>")
     qbase = _bucket_expr(qv, planes)
     probes = [qbase]
     if max_bucket is not None:
-        withb = _subbucketed(withb, vec_col, dim, r, seed, max_bucket)
+        withb = _subbucketed(withb, vec_col, dim, r, max_bucket)
         extra_planes = make_planes(
-            dim, _SUBBUCKET_BITS, seed + _SUBBUCKET_SEED_OFFSET
+            dim, _SUBBUCKET_BITS, SEED + _SUBBUCKET_SEED_OFFSET
         )
         probes.append(
             qbase * F.lit(1 << _SUBBUCKET_BITS)
@@ -310,10 +317,8 @@ def ivf_topk(
     vec_col: str,
     id_col: str,
     query: list[float],
-    k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 3,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans-partition the vectors, probe
     only the n_probe centroids nearest the query.
@@ -338,7 +343,7 @@ def ivf_topk(
     target = fit_partitions(with_vec, df.count())
     if target < fit_input.rdd.getNumPartitions():
         fit_input = fit_input.coalesce(target)
-    km = KMeans(k=n_centroids, seed=seed, featuresCol="__v", predictionCol="__cell")
+    km = KMeans(k=n_centroids, seed=SEED, featuresCol="__v", predictionCol="__cell")
     model = km.fit(fit_input)
     centers = model.clusterCenters()
     qarr = [float(x) for x in query]
@@ -356,7 +361,7 @@ def ivf_topk(
             F.round(cosine(F.col(vec_col), q), 6).alias("cosine"),
         )
     )
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(ANN_K)
 
 
 def cosine_pairs(
@@ -366,7 +371,6 @@ def cosine_pairs(
     threshold: float = 0.9,
     r: int = 4,
     dim: int | None = None,
-    seed: int = 42,
     brute_force: bool = False,
     max_bucket: int | None = 4096,
 ) -> DataFrame:
@@ -415,10 +419,10 @@ def cosine_pairs(
                 "(dim=...); it cannot be derived from an array<float> "
                 "schema without running a job"
             )
-        planes = make_planes(dim, r, seed)
+        planes = make_planes(dim, r, SEED)
         withb = df.withColumn("__bucket", _bucket_expr(F.col(vec_col), planes))
         if max_bucket is not None:
-            withb = _subbucketed(withb, vec_col, dim, r, seed, max_bucket)
+            withb = _subbucketed(withb, vec_col, dim, r, max_bucket)
         a = withb.select(
             F.col(id_col).alias("id_1"),
             F.col(vec_col).alias("v1"),
@@ -514,20 +518,12 @@ def _probe_cells(
     return q, probe
 
 
-def ivf_fixed_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_id: int = 0,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 3,
-) -> DataFrame:
+def ivf_fixed_topk(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """IVF ANN with DETERMINISTIC centroids — the SQL-portable twin
     of ``ivf_topk`` (whose KMeans cells are seeded-deterministic per
     Spark version but not reproducible in another engine).
 
-    Centroids are the vectors of the ``n_centroids`` smallest ids —
+    Centroids are the vectors of the ``IVF_CENTROIDS`` smallest ids —
     a fixed Forgy-style init. Cell assignment is argmax cosine to a
     centroid, on cosine ROUNDED to 6 decimals with id tie-break, so
     the assignment (and therefore the probe result) is bit-stable
@@ -535,28 +531,28 @@ def ivf_fixed_topk(
     list_cosine_similarity equals the fold-cosine after ROUND 6.
     Probing and scoring then mirror ivf_topk exactly.
 
-    Scale: the centroid table broadcasts (n_centroids rows); the
+    Scale: the centroid table broadcasts (IVF_CENTROIDS rows); the
     argmax is a map-side-combined min/max-struct aggregate (the
-    crossJoin fans out n_centroids skinny rows per vector inside the
+    crossJoin fans out IVF_CENTROIDS skinny rows per vector inside the
     partition, the combiner collapses them before any shuffle); at
     production scale the assignment projection is computed once and
     persisted/partitioned-by, exactly like ivf_topk's. Real recall
     needs learned centroids — keep KMeans for quality, use this for
     cross-engine verification and as the partition-pruned layout.
     """
-    emb, cent, assigned = _forgy_cells(df, vec_col, id_col, n_centroids)
-    q, probe = _probe_cells(emb, cent, query_id, n_probe)
+    emb, cent, assigned = _forgy_cells(df, vec_col, id_col, IVF_CENTROIDS)
+    q, probe = _probe_cells(emb, cent, ANN_QUERY_ID, IVF_PROBE)
     scored = (
         assigned.join(F.broadcast(probe.select("cell")), "cell", "left_semi")
         .join(emb, "vid")
         .crossJoin(F.broadcast(q))
-        .filter(F.col("vid") != query_id)
+        .filter(F.col("vid") != ANN_QUERY_ID)
         .select(
             F.col("vid").alias(id_col),
             _cos6("ev", "ne", "qv", "nq").alias("cosine"),
         )
     )
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(ANN_K)
 
 
 def semdedup(
@@ -567,7 +563,6 @@ def semdedup(
     threshold: float = 0.4,
     max_cell: int | None = 100_000,
     dim: int | None = None,
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
     in embedding space — cluster, then drop any vector whose cosine to
@@ -624,7 +619,6 @@ def semdedup(
                 "ev",
                 dim,
                 r_bits,
-                seed,
                 max_cell,
             )
             .withColumnRenamed("__bucket", "cell")
@@ -725,11 +719,10 @@ def pq_adc_topk(
     df: DataFrame,
     vec_col: str,
     id_col: str,
-    query_id: int = 0,
-    m: int = 8,
-    dsub: int = 8,
-    ksub: int = 16,
-    k: int = 10,
+    m: int = PQ_M,
+    dsub: int = PQ_DSUB,
+    ksub: int = PQ_KSUB,
+    k: int = ANN_K,
 ) -> DataFrame:
     """Product-quantization ANN (Jégou et al. 2011, TPAMI — the PQ
     half of IVFADC): split each vector into ``m`` subvectors of
@@ -761,22 +754,11 @@ def pq_adc_topk(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    query = emb.filter(F.col("vid") == query_id).select("v")
-    return _pq_adc(emb, query, "v", id_col, query_id, m, dsub, ksub, k)
+    query = emb.filter(F.col("vid") == ANN_QUERY_ID).select("v")
+    return _pq_adc(emb, query, "v", id_col, ANN_QUERY_ID, m, dsub, ksub, k)
 
 
-def ivfadc_topk(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    query_id: int = 0,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    m: int = 8,
-    dsub: int = 8,
-    ksub: int = 16,
-    k: int = 10,
-) -> DataFrame:
+def ivfadc_topk(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """IVFADC (Jégou et al. 2011): the production ANN index shape —
     coarse inverted-file cells prune the scan, product quantization
     over CELL RESIDUALS (v - centroid) compresses what remains, and
@@ -785,20 +767,20 @@ def ivfadc_topk(
 
     Deterministic twin conventions throughout (Forgy centroids =
     smallest-id vectors, residual codebooks = residual subvectors of
-    the ksub smallest ids, ROUND-6 integer-scaled distances, id
+    the PQ_KSUB smallest ids, ROUND-6 integer-scaled distances, id
     tie-breaks) so the whole index build + probe is hash-oracled;
     production swaps seeded KMeans coarse/PQ codebooks in without
     touching the plan.
 
     Scale shape: centroids and codebooks broadcast; the persisted
     index is (vid, cell, m codes) — a few bytes per vector; a query
-    touches only n_probe/n_centroids of the codes (cell semi-join =
+    touches only IVFADC_PROBE/IVF_CENTROIDS of the codes (cell semi-join =
     partition pruning when codes are written partitioned by cell),
     scores via a broadcast (cell, j, code) distance table of
-    n_probe·m·ksub rows, and reduces with one integer groupBy. No
+    IVFADC_PROBE·PQ_M·PQ_KSUB rows, and reduces with one integer groupBy. No
     raw-vector shuffle anywhere after the one-time encode.
     """
-    emb, cent, assigned = _forgy_cells(df, vec_col, id_col, n_centroids)
+    emb, cent, assigned = _forgy_cells(df, vec_col, id_col, IVF_CENTROIDS)
     resid = (
         assigned.join(emb, "vid")
         .join(F.broadcast(cent), "cell")
@@ -809,11 +791,13 @@ def ivfadc_topk(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    q, probe = _probe_cells(emb, cent, query_id, n_probe)
+    q, probe = _probe_cells(emb, cent, ANN_QUERY_ID, IVFADC_PROBE)
     qres = probe.crossJoin(F.broadcast(q)).select(
         "cell", F.zip_with("qv", "cv", lambda a, b: a - b).alias("rv")
     )
-    return _pq_adc(resid, qres, "rv", id_col, query_id, m, dsub, ksub, k)
+    return _pq_adc(
+        resid, qres, "rv", id_col, ANN_QUERY_ID, PQ_M, PQ_DSUB, PQ_KSUB, ANN_K
+    )
 
 
 def cosine_topk_batch(
@@ -874,7 +858,6 @@ def kmeans_lloyd(
     k: int = 8,
     iters: int = 3,
     dim: int = 64,
-    seed_tag: str = "km-v1",
 ) -> DataFrame:
     """Lloyd's k-means over embeddings in exact integer micro-units —
     the trained-centroid stage SemDeDup-style pipelines cluster with
@@ -944,7 +927,9 @@ def kmeans_lloyd(
     # heap, the packed-bigint argmin, and the truncating-toward-zero
     # centroid division are bit-identical to the r10 frame algebra
     # (tests/test_similarity.py pins the literal-Python twin).
-    seed_h = F.md5(F.concat(F.lit(seed_tag + ":"), F.col("id").cast("string")))
+    seed_h = F.md5(
+        F.concat(F.lit(KMEANS_SEED_TAG + ":"), F.col("id").cast("string"))
+    )
     seed_rows = (
         pts.withColumn("h", seed_h).orderBy("h", "id").limit(k).collect()
     )

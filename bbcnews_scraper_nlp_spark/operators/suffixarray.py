@@ -7,17 +7,17 @@ in ``dedup.remove_dup_spans``).
 Reference intent: the URL-level dedup in the reference pipeline
 (``BBCNews-scraper-nlp/news_scraping/pipelines.py:33-44``) done to the
 published training-data standard: find every maximal span of >=
-``span_len`` tokens whose text occurs more than once in the corpus,
+``SPAN_LEN`` tokens whose text occurs more than once in the corpus,
 exactly — not by hashed n-gram approximation.
 
 Why prefix doubling and not the n-gram join: materializing one
-``span_len``-token string per position multiplies corpus bytes by
-``span_len`` (a 50-token threshold = 50x write amplification at
+``SPAN_LEN``-token string per position multiplies corpus bytes by
+``SPAN_LEN`` (a 50-token threshold = 50x write amplification at
 100 TB). Prefix doubling keeps every intermediate row at fixed width
 (two integer ranks), reaching window ``2^k`` after k rounds — the
 classic distributed suffix-array construction (log-rounds of
 sort/join, cf. pDC3 / Flick-Aluru), truncated at the first window
->= ``span_len`` because equal-window detection at the threshold
+>= ``SPAN_LEN`` because equal-window detection at the threshold
 length is all ExactSubstr needs (a "bounded-window" suffix ranking).
 
 Determinism: every global rank here is a TWO-LEVEL rank — range-
@@ -25,7 +25,7 @@ bucket the integral bucket key by broadcast min/max integer
 arithmetic (never RangePartitioner sampling, never a partition-id),
 per-bucket ``row_number`` over a unique key, plus the exclusive
 bucket-count prefix as base offset. The only unpartitioned window
-scans the ``buckets``-row totals table, a constant. Rank VALUES are
+scans the ``RANK_BUCKETS``-row totals table, a constant. Rank VALUES are
 therefore a pure function of the data — recomputation of any branch
 agrees, so no checkpoint is needed for consistency (iteration frames
 are still eager-checkpointed to stop the 2x-per-round analysis-tree
@@ -43,7 +43,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import remove_covered, token_frame
+from .dedup import SPAN_MIN_COUNT, remove_covered, token_frame
+
+SPAN_LEN = 16  # the duplicated-span threshold, in tokens (a power of two)
+SPAN_LOG2 = SPAN_LEN.bit_length() - 1  # doubling rounds to reach SPAN_LEN
+SEED_LOG2 = 2  # ranks start from 2^SEED_LOG2-token grams
+RANK_BUCKETS = 64  # range buckets of every two-level rank
 
 
 def _two_level_rank_fixed(
@@ -52,7 +57,6 @@ def _two_level_rank_fixed(
     lo: int,
     hi: int,
     order_cols: list[str],
-    buckets: int = 64,
 ) -> tuple[DataFrame, int]:
     """Two-level rank with STATICALLY KNOWN ``[lo, hi]`` bounds on
     ``bucket_src`` — the suffix-doubling fast path. The adaptive form
@@ -63,7 +67,7 @@ def _two_level_rank_fixed(
     THREE times per rank.
     With the bounds known up front the width is a literal, the
     (unique-keyed) input materializes once (eager localCheckpoint),
-    the ≤``buckets`` per-bucket counts collect to the driver
+    the ≤``RANK_BUCKETS`` per-bucket counts collect to the driver
     (bounded: one row per bucket), and the base offsets attach as a
     literal array lookup — no aggregate broadcasts, no extra joins,
     one execution of the input.
@@ -74,7 +78,7 @@ def _two_level_rank_fixed(
     of which any two-level bucketing preserves. Returns
     ``(ranked_df, n_rows)`` — the row count is free from the totals
     pass and feeds the next round's ``hi``."""
-    width = ((hi - lo) // buckets) + 1
+    width = ((hi - lo) // RANK_BUCKETS) + 1
     b = (
         df.withColumn("__bsrc", bucket_src.cast("long"))
         .withColumn("__bucket", F.expr(f"(__bsrc - {lo}) div {width}"))
@@ -85,7 +89,7 @@ def _two_level_rank_fixed(
         for r in b.groupBy("__bucket").agg(F.count("*").alias("__t")).collect()
     )
     bases, running = [], 0
-    for i in range(buckets):
+    for i in range(RANK_BUCKETS):
         bases.append(running)
         running += counts.get(i, 0)
     wi = Window.partitionBy("__bucket").orderBy(*order_cols)
@@ -107,8 +111,6 @@ def suffix_window_ranks(
     id_col: str,
     text_col: str,
     window_log2: int = 4,
-    seed_log2: int = 2,
-    buckets: int = 64,
 ) -> DataFrame:
     """Bounded-window suffix ranking by prefix doubling: returns
     (id, n_toks, pos, v) where ``v`` is the global rank of the
@@ -122,20 +124,24 @@ def suffix_window_ranks(
     real rank): end-of-string suffix semantics, so v is a genuine
     (truncated) suffix ranking.
 
-    Seeding: ranks start at window ``2^seed_log2`` grams directly
+    Seeding: ranks start at window ``2^SEED_LOG2`` grams directly
     (DC3 seeds with length-3 substrings for the same reason) — the
-    small fixed seed amplification buys ``seed_log2`` fewer rounds of
+    small fixed seed amplification buys ``SEED_LOG2`` fewer rounds of
     shuffle+materialize; doubling then runs rounds
-    ``seed_log2+1..window_log2`` on fixed-width two-integer rows. Per
+    ``SEED_LOG2+1..window_log2`` on fixed-width two-integer rows. Per
     round: one shift self-join on (id, pos+2^(k-1)) keys, one
     distinct-pair shuffle, the constant-size two-level rank, and one
     map-back join — each keyed, none global. Each round's frame is
     eager-checkpointed (the analysis-tree contract: every round
     references the previous frame twice); rank values are
     deterministic, so the checkpoints are a compile-time
-    optimization only."""
-    assert seed_log2 <= window_log2
-    seed = 1 << seed_log2
+    optimization only. Raises ValueError for ``window_log2 <
+    SEED_LOG2``."""
+    if window_log2 < SEED_LOG2:
+        raise ValueError(
+            f"window_log2 must be >= SEED_LOG2 ({SEED_LOG2}), got {window_log2}"
+        )
+    seed = 1 << SEED_LOG2
     base = token_frame(df, id_col, text_col)
     g = base.select(
         "__id",
@@ -176,14 +182,13 @@ def suffix_window_ranks(
         0,
         (1 << 63) - 1,
         ["gram"],
-        buckets,
     )
     cur = (
         g.join(r, "gram")
         .select("__id", "n_toks", "pos", F.col("rank").alias("v"))
         .localCheckpoint(eager=True)
     )
-    for k in range(seed_log2, window_log2):
+    for k in range(SEED_LOG2, window_log2):
         half = 1 << k
         shifted = cur.select(
             "__id",
@@ -207,7 +212,6 @@ def suffix_window_ranks(
             1,
             max(n_prev, 1),
             ["__v1", "__v2"],
-            buckets,
         )
         cur = (
             pairs.join(m, ["__v1", "__v2"])
@@ -217,46 +221,32 @@ def suffix_window_ranks(
     return cur
 
 
-def duplicated_spans(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_len: int = 16,
-    min_count: int = 2,
-    buckets: int = 64,
-) -> DataFrame:
-    """Maximal exactly-duplicated spans of >= ``span_len`` tokens
-    (ExactSubstr): every position whose ``span_len``-token window
-    occurs >= ``min_count`` times corpus-wide (within-document
+def duplicated_spans(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Maximal exactly-duplicated spans of >= ``SPAN_LEN`` tokens
+    (ExactSubstr): every position whose ``SPAN_LEN``-token window
+    occurs >= ``SPAN_MIN_COUNT`` times corpus-wide (within-document
     repeats count) starts a duplicated window; overlapping/adjacent
     windows merge into maximal [span_start, span_end) token
-    intervals per document. ``span_len`` must be a power of two (the
-    doubling truncation point).
+    intervals per document.
 
     Returns (id, span_start, span_end, span_len, n_dup_starts),
     integer-exact. Plan: the doubling rounds above, ONE rank-count
     shuffle, a semi-join, and one doc-keyed gaps-and-islands window —
     duplicated-gram skew fans out one row per instance (linear,
     never pairwise)."""
-    assert span_len & (span_len - 1) == 0, "span_len must be a power of 2"
-    wlog = span_len.bit_length() - 1
-    ranked = suffix_window_ranks(
-        df, id_col, text_col, window_log2=wlog, buckets=buckets
-    )
-    full = ranked.filter(F.col("pos") <= F.col("n_toks") - span_len)
+    ranked = suffix_window_ranks(df, id_col, text_col, window_log2=SPAN_LOG2)
+    full = ranked.filter(F.col("pos") <= F.col("n_toks") - SPAN_LEN)
     dup = (
         full.groupBy("v")
         .agg(F.count("*").alias("__c"))
-        .filter(F.col("__c") >= min_count)
+        .filter(F.col("__c") >= SPAN_MIN_COUNT)
         .select("v")
     )
     starts = full.join(dup, "v", "left_semi").select("__id", "pos")
-    return merge_start_islands(starts, id_col, span_len)
+    return merge_start_islands(starts, id_col)
 
 
-def merge_start_islands(
-    starts: DataFrame, id_col: str, span_len: int
-) -> DataFrame:
+def merge_start_islands(starts: DataFrame, id_col: str) -> DataFrame:
     """Merge (__id, pos) window starts into maximal
     [span_start, span_end) token intervals per document
     (gaps-and-islands on one doc-keyed window: a new island opens
@@ -266,7 +256,7 @@ def merge_start_islands(
     isl = starts.withColumn(
         "__brk",
         F.when(
-            F.col("pos") - F.lag("pos").over(w) > span_len, 1
+            F.col("pos") - F.lag("pos").over(w) > SPAN_LEN, 1
         ).otherwise(0),
     ).withColumn(
         "__isl",
@@ -278,7 +268,7 @@ def merge_start_islands(
         isl.groupBy("__id", "__isl")
         .agg(
             F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(span_len)).alias("span_end"),
+            (F.max("pos") + F.lit(SPAN_LEN)).alias("span_end"),
             F.count("*").alias("n_dup_starts"),
         )
         .select(
@@ -293,14 +283,7 @@ def merge_start_islands(
     )
 
 
-def remove_duplicated_spans(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_len: int = 16,
-    min_count: int = 2,
-    buckets: int = 64,
-) -> DataFrame:
+def remove_duplicated_spans(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The second half of the Lee et al. 2022 ExactSubstr pipeline:
     REMOVE the maximal duplicated spans ``duplicated_spans`` finds
     and reassemble each document from its surviving tokens (the
@@ -315,10 +298,7 @@ def remove_duplicated_spans(
     Returns (id, clean_text, n_removed) for EVERY input document
     (clean_text = original text's tokens when nothing was removed).
     """
-    spans = duplicated_spans(
-        df, id_col, text_col, span_len=span_len,
-        min_count=min_count, buckets=buckets,
-    )
+    spans = duplicated_spans(df, id_col, text_col)
     cov = spans.select(
         F.col(id_col).alias("__id"),
         F.explode(
@@ -333,12 +313,10 @@ def contaminated_spans(
     id_col: str,
     text_col: str,
     bench_col: str,
-    span_len: int = 16,
-    buckets: int = 64,
 ) -> DataFrame:
     """Exact-substring benchmark contamination (the decontamination
     pass of Lee et al. 2022 / the GPT-3 appendix done exactly): every
-    maximal span of >= ``span_len`` tokens in a TRAINING document
+    maximal span of >= ``SPAN_LEN`` tokens in a TRAINING document
     whose text occurs verbatim anywhere in the BENCHMARK partition
     (``bench_col`` boolean). One suffix ranking over the UNION corpus
     (ranks are corpus-global, so train and bench windows land in the
@@ -346,17 +324,13 @@ def contaminated_spans(
     it contains >= 1 bench position, and every train position in such
     a group starts a contaminated window. Returns the span rows of
     ``duplicated_spans`` for train documents only."""
-    assert span_len & (span_len - 1) == 0, "span_len must be a power of 2"
-    wlog = span_len.bit_length() - 1
     tagged = df.select(
         F.col(id_col).alias("__oid"),
         F.col(text_col).alias("__text"),
         F.col(bench_col).cast("boolean").alias("__bench"),
     )
-    ranked = suffix_window_ranks(
-        tagged, "__oid", "__text", window_log2=wlog, buckets=buckets
-    )
-    full = ranked.filter(F.col("pos") <= F.col("n_toks") - span_len).join(
+    ranked = suffix_window_ranks(tagged, "__oid", "__text", window_log2=SPAN_LOG2)
+    full = ranked.filter(F.col("pos") <= F.col("n_toks") - SPAN_LEN).join(
         tagged.select(F.col("__oid").alias("__id"), "__bench"), "__id"
     )
     benched = (
@@ -370,4 +344,4 @@ def contaminated_spans(
         .join(benched, "v", "left_semi")
         .select("__id", "pos")
     )
-    return merge_start_islands(starts, id_col, span_len)
+    return merge_start_islands(starts, id_col)

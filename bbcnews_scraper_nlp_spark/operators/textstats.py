@@ -34,9 +34,12 @@ def lang_hit_ratio(tokens: Column, lang: str) -> Column:
     return hits.cast("double") / F.greatest(F.size(tokens), F.lit(1))
 
 
-def detect_language(tokens: Column, min_ratio: float = 0.01) -> Column:
+LANG_MIN_RATIO = 0.01  # marker-hit ratio a language must clear
+
+
+def detect_language(tokens: Column) -> Column:
     """argmax language by marker-hit ratio; 'und' if nothing clears
-    the floor. Deterministic tie-break: declaration order in
+    LANG_MIN_RATIO. Deterministic tie-break: declaration order in
     LANG_MARKERS (forward fold with strict >).
 
     Built as ONE F.aggregate fold over an array of (ratio, lang)
@@ -58,7 +61,7 @@ def detect_language(tokens: Column, min_ratio: float = 0.01) -> Column:
     best = F.aggregate(
         entries,
         F.struct(
-            F.lit(float(min_ratio)).cast("double").alias("r"),
+            F.lit(float(LANG_MIN_RATIO)).cast("double").alias("r"),
             F.lit("und").alias("l"),
         ),
         lambda acc, e: F.when(e["r"] > acc["r"], e).otherwise(acc),
@@ -93,19 +96,19 @@ def mean_word_length(tokens: Column) -> Column:
     return total.cast("double") / F.greatest(F.size(tokens), F.lit(1))
 
 
-def quality_score(
-    col: Column,
-    stopwords: list[str],
-    min_words: int = 20,
-    max_words: int = 10_000,
-) -> Column:
+QUALITY_MIN_WORDS, QUALITY_MAX_WORDS = 20, 10_000  # in-range length
+
+
+def quality_score(col: Column, stopwords: list[str]) -> Column:
     """Composite [0,1] quality heuristic (Gopher/C4-style rules):
     in-range length, some stopwords (fluency proxy), sane mean word
     length, low symbol ratio. Weighted sum of four indicator-ish
     terms — transparent and cheap."""
     tokens = F.split(col, " ")
     n = F.size(tokens)
-    len_ok = F.when((n >= min_words) & (n <= max_words), 1.0).otherwise(0.0)
+    len_ok = F.when(
+        (n >= QUALITY_MIN_WORDS) & (n <= QUALITY_MAX_WORDS), 1.0
+    ).otherwise(0.0)
     sw = stopword_ratio(tokens, stopwords)
     sw_ok = F.when((sw >= 0.05) & (sw <= 0.6), 1.0).otherwise(0.0)
     mwl = mean_word_length(tokens)
@@ -287,7 +290,10 @@ def build_inverted_index(
     """
     from pyspark.sql import DataFrame, Window
 
-    assert isinstance(docs, DataFrame)
+    if not isinstance(docs, DataFrame):
+        raise TypeError(
+            f"build_inverted_index needs a DataFrame, got {type(docs).__name__}"
+        )
     tok = docs.select(
         F.col(id_col).alias("__d"),
         F.posexplode(F.split(F.col(text_col), " ")).alias("__p", "term"),
@@ -323,9 +329,7 @@ def build_inverted_index(
 LOGREG_WEIGHTS = (-1.5, 0.8, 0.3, 0.002)
 
 
-def logreg_quality_score(
-    col: Column, stopwords: list[str], weights: tuple = LOGREG_WEIGHTS
-) -> Column:
+def logreg_quality_score(col: Column, stopwords: list[str]) -> Column:
     """Logistic-regression quality score in [0, 1000] milli-units:
     sigmoid over engineered features as ONE codegen projection (the
     map-only model-serving shape — no shuffle, no Python). Same
@@ -341,7 +345,7 @@ def logreg_quality_score(
         * 1000
         / F.greatest(n_tok, F.lit(1))
     )
-    w0, w1, w2, w3 = weights
+    w0, w1, w2, w3 = LOGREG_WEIGHTS
     z = F.lit(w0) + F.lit(w1) * (n_tok / F.lit(100.0)) + F.lit(w2) * mwl + F.lit(w3) * swr
     return F.lit(1000.0) / (F.lit(1.0) + F.exp(-z))
 
@@ -351,9 +355,7 @@ def logreg_quality_score(
 GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_stats_columns(
-    text_col: Column, stops: tuple = GOPHER_STOPS
-) -> list[Column]:
+def gopher_stats_columns(text_col: Column) -> list[Column]:
     """The published Gopher word-level quality stats (Rae et al. 2021
     Table A1) as PURE per-row HOF expressions — numerically identical
     to the batch query's explode+groupBy formulation (same integer
@@ -375,7 +377,7 @@ def gopher_stats_columns(
     n_alpha = F.size(
         F.filter(toks, lambda w: w.rlike("[a-zA-Z]"))
     ).cast("long")
-    sw = F.array(*[F.lit(s) for s in stops])
+    sw = F.array(*[F.lit(s) for s in GOPHER_STOPS])
     stop_hits = F.size(
         F.array_distinct(F.filter(toks, lambda w: F.array_contains(sw, w)))
     ).cast("long")

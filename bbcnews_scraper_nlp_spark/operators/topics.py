@@ -28,17 +28,23 @@ from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_DF = 0.9  # drop terms in more than 90% of documents (no_above=0.9)
+VOCAB_SIZE = 1 << 18
+NUM_WORDS = 10  # top terms per topic, for keywords and c_v coherence
+SEED = 42
+ROWS_PER_PARTITION = 512  # target rows per task of an iterative fit
 
-def fit_partitions(df: DataFrame, n_rows: int, rows_per_partition: int = 512) -> int:
+
+def fit_partitions(df: DataFrame, n_rows: int) -> int:
     """Partition count for iterative MLlib fits (LDA/KMeans): each
     iteration launches one job over every partition, so per-job
     scheduling overhead scales with partition count while per-task
-    work scales with rows per partition. Aim ≥ rows_per_partition
+    work scales with rows per partition. Aim ≥ ROWS_PER_PARTITION
     rows/task (measured ~3x faster than 32 near-empty partitions at
     5k docs), capped at cluster width — at real corpus sizes the cap
     binds and the fit runs at full parallelism."""
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    return max(1, min(parallelism, n_rows // rows_per_partition))
+    return max(1, min(parallelism, n_rows // ROWS_PER_PARTITION))
 
 
 def fit_count_vectorizer(
@@ -46,8 +52,6 @@ def fit_count_vectorizer(
     tokens_col: str = "tokens",
     features_col: str = "features",
     min_df: float = 10.0,
-    max_df: float = 0.9,
-    vocab_size: int = 1 << 18,
 ) -> CountVectorizerModel:
     """A4/A5: vocabulary build + prune, doc-term vectors.
     minDF/maxDF mirror Dictionary.filter_extremes(no_below=10,
@@ -56,8 +60,8 @@ def fit_count_vectorizer(
         inputCol=tokens_col,
         outputCol=features_col,
         minDF=min_df,
-        maxDF=max_df,
-        vocabSize=vocab_size,
+        maxDF=MAX_DF,
+        vocabSize=VOCAB_SIZE,
     )
     return cv.fit(df)
 
@@ -66,7 +70,6 @@ def vectorize(
     df: DataFrame,
     tokens_col: str = "tokens",
     min_df: float = 10.0,
-    max_df: float = 0.9,
 ) -> tuple[CountVectorizerModel, DataFrame]:
     """The one vectorize step before every LDA fit: returns
     ``(cv_model, vectors)``, the fitted CountVectorizer and df plus
@@ -80,9 +83,7 @@ def vectorize(
     them (``session.release_blocks``)."""
     df = df.cache()
     n_docs = df.count()
-    cv_model = fit_count_vectorizer(
-        df, tokens_col=tokens_col, min_df=min_df, max_df=max_df
-    )
+    cv_model = fit_count_vectorizer(df, tokens_col=tokens_col, min_df=min_df)
     vectors = cv_model.transform(df)
     target = fit_partitions(df, n_docs)
     if target < vectors.rdd.getNumPartitions():
@@ -110,12 +111,10 @@ def fit_lda(
     return lda.fit(vectorized)
 
 
-def topic_keywords(
-    model: LDAModel, vocab: list[str], num_words: int = 10
-) -> DataFrame:
-    """M4: per-topic top-terms as a ', '-joined string
+def topic_keywords(model: LDAModel, vocab: list[str]) -> DataFrame:
+    """M4: per-topic top-NUM_WORDS terms as a ', '-joined string
     (print_topics/show_topic, topic_modelling.ipynb cells 11/23)."""
-    topics = model.describeTopics(num_words)
+    topics = model.describeTopics(NUM_WORDS)
     vocab_arr = F.lit(vocab)
     words = F.transform(
         F.col("termIndices"), lambda i: F.element_at(vocab_arr, i + 1)
@@ -153,8 +152,6 @@ def lda_pipeline(
     max_iter: int = 20,
     seed: int = 42,
     min_df: float = 10.0,
-    max_df: float = 0.9,
-    num_words: int = 10,
     labels: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end M1-M5: returns (id, dominant_topic, weight,
@@ -162,12 +159,10 @@ def lda_pipeline(
 
     The label join is J1: a broadcast left join against a k-row dim
     (topic_modelling.ipynb:1692-1696, cell 29)."""
-    cv_model, vectorized = vectorize(
-        df, tokens_col=tokens_col, min_df=min_df, max_df=max_df
-    )
+    cv_model, vectorized = vectorize(df, tokens_col=tokens_col, min_df=min_df)
     model = fit_lda(vectorized, k=k, max_iter=max_iter, seed=seed)
     dom = dominant_topics(model.transform(vectorized), id_col)
-    kw = topic_keywords(model, cv_model.vocabulary, num_words)
+    kw = topic_keywords(model, cv_model.vocabulary)
     out = dom.join(
         F.broadcast(kw), dom.dominant_topic == kw.topic_num, "left"
     ).drop("topic_num")
@@ -183,12 +178,9 @@ def sweep_k(
     tokens_col: str,
     ks: list[int],
     max_iter: int = 10,
-    seed: int = 42,
     min_df: float = 10.0,
-    max_df: float = 0.9,
     metric: str = "perplexity",
     id_col: str = "doc_id",
-    coherence_words: int = 10,
 ) -> list[tuple[int, float]]:
     """M2: hyperparameter sweep over k. Mirrors
     topic_modelling.ipynb:347-375 (cell 8), where the reference picks
@@ -198,19 +190,17 @@ def sweep_k(
     metric='cv': mean per-topic c_v coherence (higher=better) via
     coherence.cv_coherence — the faithful reproduction of the
     reference's selection criterion."""
-    cv_model = fit_count_vectorizer(
-        df, tokens_col=tokens_col, min_df=min_df, max_df=max_df
-    )
+    cv_model = fit_count_vectorizer(df, tokens_col=tokens_col, min_df=min_df)
     vectorized = cv_model.transform(df).cache()
     out = []
     try:
         for k in ks:
-            model = fit_lda(vectorized, k=k, max_iter=max_iter, seed=seed)
+            model = fit_lda(vectorized, k=k, max_iter=max_iter, seed=SEED)
             if metric == "cv":
                 from .coherence import cv_coherence, topics_terms_from_model
 
                 terms = topics_terms_from_model(
-                    model, cv_model.vocabulary, num_words=coherence_words
+                    model, cv_model.vocabulary, num_words=NUM_WORDS
                 )
                 score = (
                     cv_coherence(df, terms, id_col=id_col, tokens_col=tokens_col)

@@ -37,6 +37,18 @@ from pyspark.sql import functions as F
 # deterministic split
 # ---------------------------------------------------------------------
 
+SPLIT_BUCKETS = 100
+SPLIT_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
+# md5 draws: rows kept at 1/SAMPLE_BUCKETS granularity, and the salt
+# tag each draw hashes with the key (the oracle SQL reads the same tags)
+SAMPLE_BUCKETS = 10_000
+SHUFFLE_SALT = "shuffle-v1"
+MIX_SALT = "mix-v1"
+CURRICULUM_SALT = "curriculum-v1"
+WSAMPLE_SALT = "wsample-v1"
+CURRICULUM_BANDS = 4
+CURRICULUM_ACCURACY = 10_000  # percentile_approx accuracy of the band edges
+
 
 def md5_int(key: Column, hex_digits: int) -> Column:
     """The engine's md5 draw: the first ``hex_digits`` hex digits of
@@ -54,26 +66,20 @@ def hash_bucket(key: Column, buckets: int = 100) -> Column:
     return F.pmod(md5_int(key.cast("string"), 8), F.lit(buckets))
 
 
-def deterministic_split(
-    df: DataFrame,
-    id_col: str,
-    weights: dict[str, float] | None = None,
-    buckets: int = 100,
-) -> DataFrame:
+def deterministic_split(df: DataFrame, id_col: str) -> DataFrame:
     """Add a ``split`` column by hash-bucketing the id.
 
-    weights are fractions summing to ~1; assignment is by cumulative
-    bucket ranges, e.g. 80/10/10 -> train=[0,80) val=[80,90)
-    test=[90,100). Pure projection: no shuffle, no state, reproducible
-    under any partitioning.
+    SPLIT_WEIGHTS are fractions summing to 1; assignment is by
+    cumulative bucket ranges: train=[0,80) val=[80,90) test=[90,100).
+    Pure projection: no shuffle, no state, reproducible under any
+    partitioning.
     """
-    weights = weights or {"train": 0.8, "val": 0.1, "test": 0.1}
-    bucket = hash_bucket(F.col(id_col), buckets)
+    bucket = hash_bucket(F.col(id_col), SPLIT_BUCKETS)
     expr: Column | None = None
     edge = 0.0
-    names = list(weights)
+    names = list(SPLIT_WEIGHTS)
     for name in names[:-1]:
-        edge += weights[name] * buckets
+        edge += SPLIT_WEIGHTS[name] * SPLIT_BUCKETS
         cond = bucket < F.lit(int(round(edge)))
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     last = F.lit(names[-1])
@@ -160,20 +166,20 @@ PII_RULES: tuple[tuple[str, str], ...] = (
 )
 
 
-def pii_scrub(col: Column, rules: tuple[tuple[str, str], ...] = PII_RULES) -> Column:
+def pii_scrub(col: Column) -> Column:
     """Ordered regex redaction chain (email before ip/id so the local
     part's digits are not half-eaten). Pure codegen projection."""
     out = col
-    for pattern, token in rules:
+    for pattern, token in PII_RULES:
         out = F.regexp_replace(out, pattern, token)
     return out
 
 
-def pii_scrub_sql(expr: str, rules: tuple[tuple[str, str], ...] = PII_RULES) -> str:
+def pii_scrub_sql(expr: str) -> str:
     """The identical chain as ANSI/DuckDB SQL (regexp_replace with the
     global flag — Spark's regexp_replace is global by default)."""
     out = expr
-    for pattern, token in rules:
+    for pattern, token in PII_RULES:
         escaped = pattern.replace("'", "''")
         out = f"regexp_replace({out}, '{escaped}', '{token}', 'g')"
     return out
@@ -232,7 +238,6 @@ def stratified_sample(
     fractions: dict[str, float],
     key_col: str,
     default_fraction: float = 0.0,
-    buckets: int = 10_000,
 ) -> DataFrame:
     """Deterministic per-stratum sampling (domain-mixing for training
     corpora): keep a row iff its md5 hash-bucket falls below the
@@ -241,18 +246,18 @@ def stratified_sample(
     key — stable across runs, engines, and re-partitionings, so a
     re-materialized 100 TB corpus reproduces byte-identically. Pure
     projection + filter: no shuffle, no state."""
-    bucket = hash_bucket(F.col(key_col), buckets)
+    bucket = hash_bucket(F.col(key_col), SAMPLE_BUCKETS)
     thr: Column | None = None
     for stratum, frac in fractions.items():
         cond = F.col(strata_col) == stratum
-        lim = F.lit(int(round(frac * buckets)))
+        lim = F.lit(int(round(frac * SAMPLE_BUCKETS)))
         thr = F.when(cond, lim) if thr is None else thr.when(cond, lim)
-    thr = thr.otherwise(F.lit(int(round(default_fraction * buckets))))
+    thr = thr.otherwise(F.lit(int(round(default_fraction * SAMPLE_BUCKETS))))
     return df.filter(bucket < thr)
 
 
 def deterministic_shuffle(
-    df: DataFrame, key_col: str, shards: int = 1024, salt: str = "shuffle-v1"
+    df: DataFrame, key_col: str, shards: int = 1024, salt: str = SHUFFLE_SALT
 ) -> DataFrame:
     """Deterministic global shuffle for training-data ordering:
     assigns every row a total-order position ``(shard, shard_pos)``
@@ -284,8 +289,6 @@ def mix_sources(
     key_col: str,
     weights: dict[str, float],
     default_weight: float = 0.0,
-    buckets: int = 10_000,
-    salt: str = "mix-v1",
 ) -> DataFrame:
     """Deterministic data-mixing: keep each source at its configured
     sampling rate (the pretraining-mixture knob — e.g. upweight books
@@ -294,26 +297,28 @@ def mix_sources(
     Per-row Bernoulli via salted hash-bucketing of the key, so the
     decision is a pure projection — reproducible on any engine/
     partitioning (no rand()), stable across reruns, and independent
-    across salts (changing ``salt`` redraws the subsample). Sources
+    across salts (a new MIX_SALT redraws the subsample). Sources
     absent from ``weights`` fall back to ``default_weight``. Rates
-    are quantized to 1/buckets (10k buckets -> 0.01% granularity).
+    are quantized to 1/SAMPLE_BUCKETS (0.01% granularity).
 
     Scale: no shuffle, no state; the filter pushes into the scan
     stage alongside any other narrow predicate.
     """
     bucket = F.pmod(
-        md5_int(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")), 8),
-        F.lit(buckets),
+        md5_int(
+            F.concat(F.lit(MIX_SALT + ":"), F.col(key_col).cast("string")), 8
+        ),
+        F.lit(SAMPLE_BUCKETS),
     )
     expr = None
     for src, w in sorted(weights.items()):
         cond = F.col(source_col) == src
-        t = F.lit(int(round(w * buckets)))
+        t = F.lit(int(round(w * SAMPLE_BUCKETS)))
         expr = F.when(cond, t) if expr is None else expr.when(cond, t)
     thr = (
-        expr.otherwise(F.lit(int(round(default_weight * buckets))))
+        expr.otherwise(F.lit(int(round(default_weight * SAMPLE_BUCKETS))))
         if expr is not None
-        else F.lit(int(round(default_weight * buckets)))
+        else F.lit(int(round(default_weight * SAMPLE_BUCKETS)))
     )
     return df.filter(bucket < thr)
 
@@ -464,10 +469,7 @@ def curriculum_order(
     df: DataFrame,
     score_col: str,
     key_col: str,
-    n_bands: int = 4,
-    salt: str = "curriculum-v1",
     method: str = "approx",
-    accuracy: int = 10000,
 ) -> DataFrame:
     """Curriculum ordering for training corpora: quality bands from
     best to worst, with a deterministic content-independent hash
@@ -481,7 +483,7 @@ def curriculum_order(
     ``method`` picks the banding plan:
 
     - ``"approx"`` (default — the 100 TB path): band edges from ONE
-      tiny ``percentile_approx`` aggregate (n_bands-1 doubles to the
+      tiny ``percentile_approx`` aggregate (CURRICULUM_BANDS-1 doubles to the
       driver), banding by broadcast-literal comparison — a map-only
       projection; the only shuffle is the per-band position window,
       which is partitioned by band. No unpartitioned window anywhere.
@@ -501,16 +503,18 @@ def curriculum_order(
     if method not in ("exact", "approx"):
         raise ValueError(f"method must be exact|approx, got {method!r}")
     h = F.md5(
-        F.concat(F.lit(salt + ":"), F.col(key_col).cast("string"))
+        F.concat(F.lit(CURRICULUM_SALT + ":"), F.col(key_col).cast("string"))
     )
     if method == "exact":
-        band = F.ntile(n_bands).over(
+        band = F.ntile(CURRICULUM_BANDS).over(
             Window.orderBy(F.desc(score_col), F.col(key_col))
         )
     else:
-        probs = [1.0 - i / n_bands for i in range(1, n_bands)]
+        probs = [
+            1.0 - i / CURRICULUM_BANDS for i in range(1, CURRICULUM_BANDS)
+        ]
         edges = df.agg(
-            F.percentile_approx(score_col, probs, accuracy).alias("e")
+            F.percentile_approx(score_col, probs, CURRICULUM_ACCURACY).alias("e")
         ).first()["e"]
         band = F.lit(1)
         for e in edges:
@@ -537,7 +541,6 @@ def weighted_sample(
     key_col: str,
     k: int,
     strata_cols: list[str] | None = None,
-    salt: str = "wsample-v1",
 ) -> DataFrame:
     """Exact-size weighted sampling without replacement (Efraimidis &
     Spirakis 2006 A-ES): rank rows by u^(1/w) with u a DETERMINISTIC
@@ -556,7 +559,10 @@ def weighted_sample(
     """
     strata_cols = strata_cols or []
     u = (
-        md5_int(F.concat(F.lit(salt + ":"), F.col(key_col).cast("string")), 13)
+        md5_int(
+            F.concat(F.lit(WSAMPLE_SALT + ":"), F.col(key_col).cast("string")),
+            13,
+        )
         .cast("double")
         + 1.0
     ) / F.lit(float((1 << 52) + 1))

@@ -14,15 +14,16 @@ Stage order is the scale-correct one:
    they're whole-stage-codegen row predicates that cut the corpus
    before anything shuffles;
 2. exact dedup (one hash shuffle on content hash) on the survivors;
-3. optional near-dup clustering (MinHash-LSH + connected components)
-   — the only iterative stage, and the only one that materializes
-   intermediate state (pointer-jumping checkpoints); off by default
-   so the default plan is a single lazy DAG;
-4. decontamination anti-join (benchmark side distinct-aggregated and
+3. decontamination anti-join (benchmark side distinct-aggregated and
    broadcast — the corpus side never shuffles for it);
-5. PII scrub (pure projection — AFTER dedup so the regex chain runs
+4. PII scrub (pure projection — AFTER dedup so the regex chain runs
    once per kept doc, not per duplicate);
-6. deterministic hash split (pure projection, no randomness).
+5. deterministic hash split (pure projection, no randomness).
+
+The whole plan is one lazy DAG. Near-dup clustering
+(``operators.dedup.minhash_lsh_pairs`` + ``keep_cluster_canonical``)
+is not part of it: its connected components checkpoint intermediate
+state, so a caller that wants it runs it on the output.
 
 Output: the cleaned corpus with provenance columns
 (lang, quality, split) — feed ``operators.traindata.pack_sequences``
@@ -37,12 +38,16 @@ from pyspark.sql import functions as F
 from ..functions.text_clean import ALL_STOPWORDS
 from ..functions.tokenize import token_count
 from ..operators import textstats as TS
-from ..operators.dedup import (
-    exact_dedup,
-    keep_cluster_canonical,
-    minhash_lsh_pairs,
-)
+from ..operators.dedup import exact_dedup
 from ..operators.traindata import contamination, deterministic_split, pii_scrub
+
+# The filter settings of the chain: English only, quality score and
+# repetition shares at most 0.5 off, at most 20% benchmark n-grams.
+LANG = "en"
+MIN_QUALITY = 0.5
+MAX_TOP_WORD_SHARE = 0.5
+MAX_DUP_BIGRAM_FRAC = 0.5
+MAX_CONTAMINATION = 0.2
 
 
 def prepare_training_corpus(
@@ -51,39 +56,29 @@ def prepare_training_corpus(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    lang: str | None = "en",
-    min_quality: float = 0.5,
-    max_top_word_share: float = 0.5,
-    max_dup_bigram_frac: float = 0.5,
-    near_dup: bool = False,
     classifier_keep: bool = False,
     min_score_milli: float = 500.0,
     contamination_n: int = 5,
-    max_contamination: float = 0.2,
-    split_weights: dict[str, float] | None = None,
 ) -> DataFrame:
     """Run the full corpus-preparation chain; see module docstring.
 
     Returns the kept documents with ``lang_detected``, ``quality``
     (post-scrub), ``n_tokens`` and ``split`` columns, ``text_col``
-    scrubbed in place. Lazy end to end unless ``near_dup=True``
-    (connected components checkpoints). ``classifier_keep=True`` adds
+    scrubbed in place. Lazy end to end. ``classifier_keep=True`` adds
     the learned logreg quality gate after the heuristic filters.
     """
     tokens = F.split(F.col(text_col), " ")
 
     # 1. narrow per-row filters (codegen predicates, no shuffle)
-    out = docs
-    if lang is not None:
-        out = out.withColumn(
-            "lang_detected", TS.detect_language(tokens)
-        ).filter(F.col("lang_detected") == lang)
+    out = docs.withColumn(
+        "lang_detected", TS.detect_language(tokens)
+    ).filter(F.col("lang_detected") == LANG)
     out = out.filter(
-        TS.quality_score(F.col(text_col), list(ALL_STOPWORDS)) >= min_quality
+        TS.quality_score(F.col(text_col), list(ALL_STOPWORDS)) >= MIN_QUALITY
     )
     top_share, dup_frac = TS.repetition_stats(F.col(text_col))
     out = out.filter(
-        (top_share <= max_top_word_share) & (dup_frac <= max_dup_bigram_frac)
+        (top_share <= MAX_TOP_WORD_SHARE) & (dup_frac <= MAX_DUP_BIGRAM_FRAC)
     )
     # 1.5 optional learned-filter gate (map-only codegen inference;
     # default-off so the certified default plan is unchanged)
@@ -109,17 +104,12 @@ def prepare_training_corpus(
     # 3. exact dedup (content-hash shuffle, min-id keeps determinism)
     out = exact_dedup(out, text_col, id_col)
 
-    # 3. optional near-dup cluster canonicalization (iterative)
-    if near_dup:
-        pairs = minhash_lsh_pairs(out, id_col=id_col, text_col=text_col)
-        out = keep_cluster_canonical(out, id_col, pairs)
-
     # 4. decontamination: drop docs sharing too many verbatim n-grams
     #    with the benchmark (broadcast benchmark side)
     if benchmark is not None:
         dirty = contamination(
             out, benchmark, id_col, text_col, n=contamination_n
-        ).filter(F.col("contamination_ratio") > max_contamination)
+        ).filter(F.col("contamination_ratio") > MAX_CONTAMINATION)
         out = out.join(
             dirty.select(F.col(id_col).alias("__dirty_id")),
             F.col(id_col) == F.col("__dirty_id"),
@@ -133,4 +123,4 @@ def prepare_training_corpus(
     ).withColumn("n_tokens", token_count(F.col(text_col)))
 
     # 6. deterministic split (pure projection, reproducible anywhere)
-    return deterministic_split(out, id_col, split_weights)
+    return deterministic_split(out, id_col)

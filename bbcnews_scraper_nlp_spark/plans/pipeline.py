@@ -21,30 +21,27 @@ from ..functions.text_clean import clean_text, word_count
 from ..operators.relational import rolling_mean_min_periods
 from ..operators.topics import lda_pipeline
 
+MIN_WORDS = 50  # process() keeps articles with more words than this
+TREND_WINDOW_ROWS = 10  # the trend's trailing rolling-mean window
 
-def ingest_links(sitemap_pages: DataFrame, seen_links: DataFrame | None = None) -> DataFrame:
+
+def ingest_links(sitemap_pages: DataFrame) -> DataFrame:
     """get_urls (bbc_news_dag.py:41-58): parse sitemap XML, keep news
-    urls, upsert-skip against the existing links table."""
+    urls, one row per url. The skip of urls already in the links
+    table is the sink's (``stage_io.upsert_skip``)."""
     from ..sources.sitemap import filter_news_links, parse_sitemap
 
     links = filter_news_links(parse_sitemap(sitemap_pages))
-    if seen_links is not None:
-        links = links.join(seen_links.select("url"), "url", "left_anti")
     return links.dropDuplicates(["url"])
 
 
-def scrape_articles(
-    links: DataFrame, html_pages: DataFrame, seen_articles: DataFrame | None = None
-) -> DataFrame:
-    """crawl (§3.2): anti-join BEFORE the expensive parse stage
-    (middlewares.py:6-16 as plan order), extract fields, drop
-    empty-title rows (F5), dedup by url (F6)."""
+def scrape_articles(links: DataFrame, html_pages: DataFrame) -> DataFrame:
+    """crawl (§3.2): extract fields, drop empty-title rows (F5), dedup
+    by url (F6). The skip of urls already scraped is the sink's
+    (``stage_io.upsert_skip``)."""
     from ..sources.html_extract import derive_menu_submenu, extract_article_fields
 
-    frontier = links.select("url")
-    if seen_articles is not None:
-        frontier = frontier.join(seen_articles.select("url"), "url", "left_anti")
-    pages = frontier.join(html_pages, "url")  # offline fetch fixture
+    pages = links.select("url").join(html_pages, "url")  # offline fetch fixture
     fields = extract_article_fields(pages)
     fields = derive_menu_submenu(fields)
     return fields.filter(
@@ -52,10 +49,10 @@ def scrape_articles(
     ).dropDuplicates(["url"])
 
 
-def process(articles_raw: DataFrame, min_words: int = 50) -> DataFrame:
+def process(articles_raw: DataFrame) -> DataFrame:
     """process() twin (data_preparation.py:82-102), one lazy chain:
 
-    dropna -> n_words -> filter >min_words -> clean (native chain) ->
+    dropna -> n_words -> filter >MIN_WORDS -> clean (native chain) ->
     lemmatize -> n_words_clean -> projection -> ts cast.
 
     Every stage is a native column expression, so the chain runs in
@@ -65,7 +62,7 @@ def process(articles_raw: DataFrame, min_words: int = 50) -> DataFrame:
     return (
         articles_raw.na.drop("any")
         .withColumn("n_words", word_count(F.col("text")))
-        .filter(F.col("n_words") > min_words)
+        .filter(F.col("n_words") > MIN_WORDS)
         .withColumn(
             "article_clean",
             lemmatize_text_expr(clean_text(F.col("text")), POS_WHITELIST),
@@ -81,7 +78,6 @@ def topics(
     k: int = 12,
     labels: DataFrame | None = None,
     min_df: float = 10.0,
-    seed: int = 42,
 ) -> DataFrame:
     """topic_modeling stage (notebooks cells 5-31): tokenized clean
     text -> CountVectorizer -> LDA -> dominant topic + keywords +
@@ -91,7 +87,7 @@ def topics(
         "url", F.split(F.col("article_clean"), " ").alias("tokens")
     ).filter(F.size("tokens") > 0)
     return lda_pipeline(
-        toks, id_col="url", tokens_col="tokens", k=k, min_df=min_df, seed=seed,
+        toks, id_col="url", tokens_col="tokens", k=k, min_df=min_df,
         labels=labels,
     )
 
@@ -111,7 +107,7 @@ def sentiments(processed: DataFrame) -> DataFrame:
     )
 
 
-def sentiment_trend(sents: DataFrame, window_rows: int = 10) -> DataFrame:
+def sentiment_trend(sents: DataFrame) -> DataFrame:
     """Trend query (sentiment_analysis.ipynb cell 13): daily means +
     rolling-10 trailing mean with min_periods NULLs (B7 shape)."""
     daily = (
@@ -122,7 +118,8 @@ def sentiment_trend(sents: DataFrame, window_rows: int = 10) -> DataFrame:
         )
     )
     return rolling_mean_min_periods(
-        daily, "date", ["polarity", "subjectivity"], window_rows=window_rows
+        daily, "date", ["polarity", "subjectivity"],
+        window_rows=TREND_WINDOW_ROWS,
     ).select(
         "date", "polarity", "subjectivity",
         "rolling_polarity", "rolling_subjectivity",
@@ -134,7 +131,6 @@ def run_full_pipeline(
     html_pages: DataFrame,
     topic_labels: DataFrame | None = None,
     k_variants: tuple[int, ...] = (12, 32),
-    min_words: int = 50,
     min_df: float = 10.0,
 ) -> dict[str, DataFrame]:
     """The whole DAG, returning every stage output. The processed DF
@@ -142,7 +138,7 @@ def run_full_pipeline(
     (bbc_news_dag.py:148-152's branch parallelism)."""
     links = ingest_links(sitemap_pages)
     raw = scrape_articles(links, html_pages)
-    processed = process(raw, min_words=min_words).cache()
+    processed = process(raw).cache()
     out: dict[str, DataFrame] = {
         "links": links,
         "articles_raw": raw,

@@ -1426,7 +1426,11 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scalar_quant_sql(dim: int = 64) -> str:
+_SQ_DIM = 64  # embedding components quantized
+
+
+def _scalar_quant_sql() -> str:
+    dim = _SQ_DIM
     mins = ", ".join(
         f"CAST(MIN(embedding[{i + 1}]) AS DOUBLE)" for i in range(dim)
     )
@@ -1478,7 +1482,7 @@ def embedding_scalar_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow projection over a 64-step sequence transform. The vector
     table never shuffles."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = 64
+    dim = _SQ_DIM
     xd = lambda i: F.element_at("embedding", i).cast("double")  # noqa: E731
     stats = emb.agg(
         F.array(*[F.min(xd(i + 1)) for i in range(dim)]).alias("mns"),
@@ -1869,7 +1873,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "session_paths_top",
     "WITH g AS (SELECT user_id, ts, event_id, event_type, CASE WHEN "
     "epoch_us(ts) - lag(epoch_us(ts)) OVER w IS NULL OR "
-    "epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END "
+    f"epoch_us(ts) - lag(epoch_us(ts)) OVER w > {R.SESSION_GAP_US} THEN 1 ELSE 0 END "
     "AS is_new FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)), "
     "s AS (SELECT user_id, ts, event_id, event_type, SUM(is_new) OVER "
     "(PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING "
@@ -1887,7 +1891,7 @@ def session_paths_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-session re-sort stage, the sort is per-row over bounded
     session arrays; top-20 is TakeOrderedAndProject."""
     ev = load_table(spark, sf_dir, "events", widen=True)
-    s = R.sessionize(ev, "user_id", "ts", gap_minutes=30)
+    s = R.sessionize(ev, "user_id", "ts")
     paths = s.groupBy("user_id", "session_id").agg(
         F.array_join(
             F.transform(
@@ -1917,7 +1921,7 @@ def session_paths_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     "session_funnel_conversion",
     "WITH g AS (SELECT user_id, ts, event_type, CASE WHEN "
     "epoch_us(ts) - lag(epoch_us(ts)) OVER w IS NULL OR "
-    "epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new "
+    f"epoch_us(ts) - lag(epoch_us(ts)) OVER w > {R.SESSION_GAP_US} THEN 1 ELSE 0 END AS is_new "
     "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)), "
     "s AS (SELECT user_id, ts, event_type, SUM(is_new) OVER "
     "(PARTITION BY user_id ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING "
@@ -1943,7 +1947,7 @@ def session_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny daily agg; conditional MIN-timestamps avoid any per-session
     sort or self-join for the ordering test."""
     ev = load_table(spark, sf_dir, "events")
-    s = R.sessionize(ev, "user_id", "ts", gap_minutes=30)
+    s = R.sessionize(ev, "user_id", "ts")
     f = s.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("session_start"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias(
@@ -2415,6 +2419,9 @@ def scd2_type_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_HILBERT_BITS = 8  # x_cell and y_cell each lie in [0, 2^8)
+
+
 def _hilbert_sql() -> str:
     from .operators.layout import hilbert_d2_sql
 
@@ -2423,7 +2430,7 @@ def _hilbert_sql() -> str:
         "LEAST(CAST(FLOOR(value / 2) AS BIGINT), 255) AS x_cell, "
         "user_id % 256 AS y_cell FROM events"
     )
-    inner = hilbert_d2_sql(src, "x_cell", "y_cell", 8)
+    inner = hilbert_d2_sql(src, "x_cell", "y_cell", _HILBERT_BITS)
     return (
         f"SELECT event_id, x_cell, y_cell, hval FROM ({inner}) "
         "ORDER BY hval, event_id LIMIT 1000"
@@ -2458,7 +2465,7 @@ def hilbert_event_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 256).alias("y_cell"),
     )
     return (
-        hilbert_d2(q, "x_cell", "y_cell", 8)
+        hilbert_d2(q, "x_cell", "y_cell", _HILBERT_BITS)
         .select("event_id", "x_cell", "y_cell", "hval")
         .orderBy("hval", "event_id")
         .limit(1000)

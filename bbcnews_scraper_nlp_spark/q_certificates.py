@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import similarity as S
-from .operators.dedup import MERSENNE31
+from .operators.coherence import CV_WINDOW
+from .operators.dedup import MERSENNE31, MINHASH_BANDS, MINHASH_NUM_HASHES
+
+from .operators.traindata import WSAMPLE_SALT
 from .queries_base import register, _sql_str_list
 from .q_core import _sql_tokens_expr  # noqa: F401
 
@@ -34,7 +37,7 @@ def _docs_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(mutated)
 
 
-def _minhash_oracle_sql(num_hashes: int = 64, bands: int = 16) -> str:
+def _minhash_oracle_sql() -> str:
     """DuckDB twin of minhash_lsh_pairs on the planted-dups fixture.
 
     Recomputes the whole pipeline from first principles: md5-prefix
@@ -44,11 +47,9 @@ def _minhash_oracle_sql(num_hashes: int = 64, bands: int = 16) -> str:
     oracle scale; the Spark side's banded shuffle exists precisely to
     avoid this at real scale), and exact Jaccard verification on the
     hashed shingle sets."""
-    from .operators.dedup import MERSENNE31, _coeffs
-
     return (
         f"WITH {_PLANTED_DOCS_CTE},\n"
-        + _minhash_pair_ctes("alldocs", num_hashes, bands)
+        + _minhash_pair_ctes("alldocs")
         + f"\n{_MINHASH_PAIR_SELECT}"
     )
 
@@ -71,13 +72,13 @@ JOIN sz z2 ON z2.doc_id = id_2
 WHERE CAST(i AS DOUBLE) / (z1.n + z2.n - i) >= 0.5"""
 
 
-def _minhash_pair_ctes(source: str, num_hashes: int = 64, bands: int = 16) -> str:
+def _minhash_pair_ctes(source: str) -> str:
     """The shared CTE chain (shingle → sig → cand → inter) of the
     MinHash oracle, over any (doc_id, text) CTE named ``source``."""
-    from .operators.dedup import MERSENNE31, _coeffs
+    from .operators.dedup import _coeffs
 
-    coeffs = _coeffs(num_hashes)
-    rows_per_band = num_hashes // bands
+    coeffs = _coeffs(MINHASH_NUM_HASHES)
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
     mins = ", ".join(
         f"MIN(({a} * h + {b}) % {MERSENNE31}) AS m{i}"
         for i, (a, b) in enumerate(coeffs)
@@ -89,7 +90,7 @@ def _minhash_pair_ctes(source: str, num_hashes: int = 64, bands: int = 16) -> st
             for i in range(bnd * rows_per_band, (bnd + 1) * rows_per_band)
         )
         + ")"
-        for bnd in range(bands)
+        for bnd in range(MINHASH_BANDS)
     )
     return f"""tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM {source}),
 shingle AS (
@@ -128,8 +129,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs_with_near_dups(spark, sf_dir),
         "doc_id",
         "text",
-        num_hashes=64,
-        bands=16,
         jaccard_threshold=0.5,
         shingle_hash="md5",
     )
@@ -199,7 +198,7 @@ def _lsh_topk_oracle_sql() -> str:
     one to match."""
     from .operators.similarity import make_planes
 
-    planes = make_planes(64, 6, 42)
+    planes = make_planes(64, 6)
 
     def bucket_expr(vec: str) -> str:
         return " + ".join(
@@ -259,11 +258,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_FIXED_SQL = """
+_IVF_FIXED_SQL = f"""
 WITH cent AS (SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cv
-              FROM embeddings ORDER BY vec_id LIMIT 16),
+              FROM embeddings ORDER BY vec_id LIMIT {S.IVF_CENTROIDS}),
 q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings
-      WHERE vec_id = 0),
+      WHERE vec_id = {S.ANN_QUERY_ID}),
 e AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS ev
       FROM embeddings),
 a AS (SELECT vid,
@@ -273,11 +272,11 @@ a AS (SELECT vid,
       FROM e, cent GROUP BY vid),
 probe AS (SELECT cell FROM cent, q
           ORDER BY ROUND(list_cosine_similarity(cv, qv), 6) DESC, cell
-          LIMIT 3)
+          LIMIT {S.IVF_PROBE})
 SELECT e.vid AS vec_id, ROUND(list_cosine_similarity(e.ev, q.qv), 6) AS cosine
 FROM a JOIN e ON a.vid = e.vid, q
-WHERE a.cell IN (SELECT cell FROM probe) AND e.vid <> 0
-ORDER BY cosine DESC, e.vid LIMIT 10
+WHERE a.cell IN (SELECT cell FROM probe) AND e.vid <> {S.ANN_QUERY_ID}
+ORDER BY cosine DESC, e.vid LIMIT {S.ANN_K}
 """
 
 
@@ -291,18 +290,19 @@ def similarity_ivf_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rows-only); this pins the whole IVF probe/score machinery to a
     cross-engine value hash."""
     emb = load_table(spark, sf_dir, "embeddings", widen=True)
-    return S.ivf_fixed_topk(
-        emb, "embedding", "vec_id", query_id=0, k=10, n_centroids=16, n_probe=3
-    )
+    return S.ivf_fixed_topk(emb, "embedding", "vec_id")
 
 
-_PQ_ADC_SQL = """
+# a subvector slice [j*PQ_DSUB+1 : j*PQ_DSUB+PQ_DSUB] of a vector column
+_PQ_SLICE = f"[j*{S.PQ_DSUB}+1 : j*{S.PQ_DSUB}+{S.PQ_DSUB}]"
+
+_PQ_ADC_SQL = f"""
 WITH e AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
            FROM embeddings),
-cent AS (SELECT vid, v FROM e ORDER BY vid LIMIT 16),
-js AS (SELECT unnest(range(0, 8)) AS j),
-cb AS (SELECT cent.vid AS code, j, v[j*8+1 : j*8+8] AS cw FROM cent, js),
-sub AS (SELECT vid, j, v[j*8+1 : j*8+8] AS sv FROM e, js),
+cent AS (SELECT vid, v FROM e ORDER BY vid LIMIT {S.PQ_KSUB}),
+js AS (SELECT unnest(range(0, {S.PQ_M})) AS j),
+cb AS (SELECT cent.vid AS code, j, v{_PQ_SLICE} AS cw FROM cent, js),
+sub AS (SELECT vid, j, v{_PQ_SLICE} AS sv FROM e, js),
 enc AS (SELECT vid, j,
                struct_extract(min((
                    CAST(ROUND((ROUND(list_dot_product(sv, sv), 6)
@@ -316,14 +316,14 @@ qd AS (SELECT j, code,
                         + ROUND(list_dot_product(cw, cw), 6)
                         - 2 * ROUND(list_dot_product(sv, cw), 6)) * 1e6)
                    AS BIGINT) AS ds
-       FROM sub JOIN cb USING (j) WHERE vid = 0)
+       FROM sub JOIN cb USING (j) WHERE vid = {S.ANN_QUERY_ID})
 SELECT enc.vid AS vec_id,
        CAST(SUM(qd.ds) AS BIGINT) / 1e6 AS adc_dist
 FROM enc JOIN qd USING (j, code)
-WHERE enc.vid <> 0
+WHERE enc.vid <> {S.ANN_QUERY_ID}
 GROUP BY enc.vid
 ORDER BY adc_dist, vec_id
-LIMIT 10
+LIMIT {S.ANN_K}
 """
 
 
@@ -337,9 +337,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (codes = m small ints per vector, broadcast distance
     table, no raw-vector shuffle)."""
     emb = load_table(spark, sf_dir, "embeddings", widen=True)
-    return S.pq_adc_topk(
-        emb, "embedding", "vec_id", query_id=0, m=8, dsub=8, ksub=16, k=10
-    )
+    return S.pq_adc_topk(emb, "embedding", "vec_id")
 
 
 @register(
@@ -455,7 +453,7 @@ def hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "weighted_sample_by_length",
     "WITH b AS (SELECT lang, doc_id, n_chars, "
-    "ROUND(LN((CAST('0x' || substr(md5('wsample-v1:' || "
+    f"ROUND(LN((CAST('0x' || substr(md5('{WSAMPLE_SALT}:' || "
     "CAST(doc_id AS VARCHAR)), 1, 13) AS BIGINT) + 1.0) "
     "/ 4503599627370497.0) / n_chars, 6) AS rk "
     "FROM documents WHERE n_chars > 0), "
@@ -684,7 +682,7 @@ def _ivfadc_oracle_sql() -> str:
     return f"""
 WITH e AS (SELECT vec_id AS vid, CAST(embedding AS DOUBLE[]) AS v
            FROM embeddings),
-cent AS (SELECT vid AS cell, v AS cv FROM e ORDER BY vid LIMIT 16),
+cent AS (SELECT vid AS cell, v AS cv FROM e ORDER BY vid LIMIT {S.IVF_CENTROIDS}),
 a AS (SELECT vid,
              -struct_extract(
                  max((ROUND(list_cosine_similarity(v, cv), 6), -cell)), 2)
@@ -694,30 +692,30 @@ r AS (SELECT a.vid, a.cell,
              list_transform(range(1, len(e.v) + 1),
                             i -> e.v[i] - cent.cv[i]) AS rv
       FROM a JOIN e ON a.vid = e.vid JOIN cent ON a.cell = cent.cell),
-js AS (SELECT unnest(range(0, 8)) AS j),
-cbase AS (SELECT vid, rv FROM r ORDER BY vid LIMIT 16),
-cb AS (SELECT cbase.vid AS code, j, rv[j*8+1 : j*8+8] AS cw
+js AS (SELECT unnest(range(0, {S.PQ_M})) AS j),
+cbase AS (SELECT vid, rv FROM r ORDER BY vid LIMIT {S.PQ_KSUB}),
+cb AS (SELECT cbase.vid AS code, j, rv{_PQ_SLICE} AS cw
        FROM cbase, js),
-sub AS (SELECT vid, cell, j, rv[j*8+1 : j*8+8] AS sv FROM r, js),
+sub AS (SELECT vid, cell, j, rv{_PQ_SLICE} AS sv FROM r, js),
 enc AS (SELECT vid, cell, j,
                struct_extract(min(({d2s.format(a='sv', b='cw')}, code)), 2)
                AS code
         FROM sub JOIN cb USING (j) GROUP BY vid, cell, j),
-q AS (SELECT v AS qv FROM e WHERE vid = 0),
+q AS (SELECT v AS qv FROM e WHERE vid = {S.ANN_QUERY_ID}),
 probe AS (SELECT cell, cv FROM cent, q
           ORDER BY ROUND(list_cosine_similarity(cv, qv), 6) DESC, cell
-          LIMIT 4),
+          LIMIT {S.IVFADC_PROBE}),
 qr AS (SELECT cell,
               list_transform(range(1, len(qv) + 1),
                              i -> qv[i] - cv[i]) AS qres
        FROM probe, q),
-qsub AS (SELECT cell, j, qres[j*8+1 : j*8+8] AS sv FROM qr, js),
+qsub AS (SELECT cell, j, qres{_PQ_SLICE} AS sv FROM qr, js),
 qd AS (SELECT cell, j, code, {d2s.format(a='sv', b='cw')} AS ds
        FROM qsub JOIN cb USING (j))
 SELECT enc.vid AS vec_id, CAST(SUM(qd.ds) AS BIGINT) / 1e6 AS adc_dist
 FROM enc JOIN qd USING (cell, j, code)
-WHERE enc.vid <> 0
-GROUP BY enc.vid ORDER BY adc_dist, vec_id LIMIT 10
+WHERE enc.vid <> {S.ANN_QUERY_ID}
+GROUP BY enc.vid ORDER BY adc_dist, vec_id LIMIT {S.ANN_K}
 """
 
 
@@ -730,10 +728,7 @@ def similarity_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole build + probe hash-oracled; see
     operators/similarity.ivfadc_topk for the 100 TB shape."""
     emb = load_table(spark, sf_dir, "embeddings", widen=True)
-    return S.ivfadc_topk(
-        emb, "embedding", "vec_id",
-        query_id=0, n_centroids=16, n_probe=4, m=8, dsub=8, ksub=16, k=10,
-    )
+    return S.ivfadc_topk(emb, "embedding", "vec_id")
 
 
 _IVF_CERT_SQL = """
@@ -775,7 +770,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = emb.filter(F.col("vec_id") == 0).first()["embedding"]
     qarr = [float(x) for x in query]
     corpus = emb.filter(F.col("vec_id") != 0)
-    ivf = ivf_topk(corpus, "embedding", "vec_id", qarr, k=10)
+    ivf = ivf_topk(corpus, "embedding", "vec_id", qarr)
     brute = cosine_topk(corpus, "embedding", "vec_id", qarr, k=10)
 
     q = F.lit(qarr).cast("array<double>")
@@ -1001,14 +996,14 @@ def m3_coherence_umass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.coherence import umass_certificate
 
     toks, terms = _lda_topic_terms(spark, sf_dir)
-    return umass_certificate(toks, terms, min_df=2)
+    return umass_certificate(toks, terms)
 
 
 _CV_CERT_SQL = f"""
 WITH toks AS (SELECT {_sql_tokens_expr('text')} AS t FROM documents),
-tp AS (SELECT CAST(unnest(range(0, 4)) AS BIGINT) AS topic)
+tp AS (SELECT CAST(unnest(range(0, {_LDA_K})) AS BIGINT) AS topic)
 SELECT 'n_windows' AS chk, CAST(-1 AS BIGINT) AS topic,
-       CAST(SUM(GREATEST(1, len(t) - 109)) AS BIGINT) AS val
+       CAST(SUM(GREATEST(1, len(t) - {CV_WINDOW - 1})) AS BIGINT) AS val
 FROM toks WHERE len(t) > 0
 UNION ALL SELECT 'n_terms', topic, 10 FROM tp
 UNION ALL SELECT 'n_ctx_rows', topic, 100 FROM tp
@@ -1042,7 +1037,7 @@ def m3_coherence_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.coherence import cv_certificate
 
     toks, terms = _lda_topic_terms(spark, sf_dir)
-    return cv_certificate(toks, terms, window=110)
+    return cv_certificate(toks, terms)
 
 
 @register(
@@ -1863,9 +1858,9 @@ _WP_CONT = list("abcdefghijklmnopqrstuvwxyz") + [
 _WP_MAX_CHARS = 30
 
 
-def _wp_case(pieces: list[str], rest: str = "rest") -> str:
+def _wp_case(pieces: list[str]) -> str:
     chain = " ".join(
-        f"WHEN starts_with({rest}, '{p}') THEN '{p}'"
+        f"WHEN starts_with(rest, '{p}') THEN '{p}'"
         for p in sorted(pieces, key=lambda p: (-len(p), p))
     )
     return f"CASE {chain} END"

@@ -29,6 +29,22 @@ from .q_traindata import _BUCKET_SQL  # noqa: F401
 # graph analytics / ANN evaluation / scan primitives / CDC (round 5)
 # --------------------------------------------------------------------
 
+# The certified iteration counts and sizes. Each is read by a query's
+# Spark plan and by its unrolled DuckDB oracle, so the two cannot
+# drift apart.
+_PR_ITERS = 3  # PageRank and personalized-PageRank rounds
+_PPR_SEEDS = 3  # personalized-PageRank seed suppliers
+_KNN_K = 3  # strongest ties kept per supplier in the mutual-kNN graph
+_LPA_ITERS = 3  # label-propagation rounds
+_WALK_STEPS = 4  # hops per random / node2vec walk
+_EMB_DIMS = 4  # subspace-iteration embedding dimensions
+_EMB_ITERS = 3  # subspace-iteration rounds
+_TEXTRANK_ITERS = 3
+_KCORE_K = 2
+_KCORE_ROUNDS = 4
+_HITS_ITERS = 3
+_HITS_SCALE = 1_000_000  # HITS scores are integer micro-units
+
 
 # the ONE customer↔supplier bipartite edge set shared by the three
 # graph queries (pagerank / link prediction / triangle count) — Spark
@@ -144,10 +160,10 @@ def _pr_unroll_sql(iters: int) -> tuple[str, str]:
     return ", ".join(its), prev
 
 
-def _pagerank_oracle_sql(iters: int = 3) -> str:
+def _pagerank_oracle_sql() -> str:
     """Unrolled integer-PageRank twin of operators.graph.pagerank:
     same teleport/damping integral arithmetic with DuckDB's `//`."""
-    unroll, last = _pr_unroll_sql(iters)
+    unroll, last = _pr_unroll_sql(_PR_ITERS)
     return (
         f"WITH e0 AS ({_BIPROJ_SQL}), "
         "pairs AS (SELECT DISTINCT 'c' || CAST(c AS VARCHAR) AS c, "
@@ -186,11 +202,11 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    pr = pagerank(edges, "src", "dst", iters=3)
+    pr = pagerank(edges, "src", "dst", iters=_PR_ITERS)
     return pr.orderBy(F.desc("pr_scaled"), "node").limit(20)
 
 
-def _knn_edges_ctes(k: int = 3) -> str:
+def _knn_edges_ctes() -> str:
     """The mutual-kNN supplier graph CTE chain (SQL twin of
     _supplier_knn_edges), ending in the MATERIALIZED ``edges``
     relation. Shared by the LPA-family and random-walk oracles."""
@@ -206,16 +222,16 @@ def _knn_edges_ctes(k: int = 3) -> str:
         "FROM cnp JOIN deg d1 ON s1 = d1.s JOIN deg d2 ON s2 = d2.s), "
         "rk AS (SELECT s1, s2, row_number() OVER "
         "(PARTITION BY s1 ORDER BY j DESC, s2) AS rn FROM sc), "
-        f"knn AS (SELECT s1, s2 FROM rk WHERE rn <= {k}), "
+        f"knn AS (SELECT s1, s2 FROM rk WHERE rn <= {_KNN_K}), "
         "edges AS MATERIALIZED (SELECT s1 AS src, s2 AS dst FROM knn "
         "UNION SELECT s2, s1 FROM knn)"
     )
 
 
-def _ppr_oracle_sql(iters: int = 3, n_seeds: int = 3) -> str:
+def _ppr_oracle_sql() -> str:
     """Unrolled integer personalized-PageRank twin of operators.
     graph.pagerank with seeds over the co-purchase graph: teleport
-    mass returns ONLY to the seed set (the n_seeds smallest supplier
+    mass returns ONLY to the seed set (the _PPR_SEEDS smallest supplier
     keys in the projection). edges/nodes/deg/sd are MATERIALIZED —
     every unrolled iteration re-reads them."""
     tele = f"({100 - PR_DAMPING_PCT} * {PR_SCALE}) // (100 * k)"
@@ -229,14 +245,14 @@ def _ppr_oracle_sql(iters: int = 3, n_seeds: int = 3) -> str:
         "deg AS MATERIALIZED (SELECT src, COUNT(*) AS d FROM edges "
         "GROUP BY src), "
         "sd AS MATERIALIZED (SELECT 's' || CAST(s AS VARCHAR) AS node "
-        f"FROM (SELECT DISTINCT s FROM e0 ORDER BY s LIMIT {n_seeds})), "
+        f"FROM (SELECT DISTINCT s FROM e0 ORDER BY s LIMIT {_PPR_SEEDS})), "
         "ns AS (SELECT COUNT(*) AS k FROM sd), "
         "r0 AS (SELECT nodes.node, CASE WHEN sd.node IS NOT NULL THEN "
         f"{PR_SCALE} // k ELSE 0 END AS r FROM nodes CROSS JOIN ns "
         "LEFT JOIN sd ON nodes.node = sd.node)"
     ]
     prev = "r0"
-    for i in range(1, iters + 1):
+    for i in range(1, _PR_ITERS + 1):
         parts.append(
             f", i{i} AS (SELECT e.dst AS node, SUM(r.r // d.d) AS s "
             f"FROM edges e JOIN {prev} r ON e.src = r.node "
@@ -286,10 +302,10 @@ def ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         proj.select("s")
         .distinct()
         .orderBy("s")
-        .limit(3)
+        .limit(_PPR_SEEDS)
         .select(F.concat(F.lit("s"), F.col("s")).alias("node"))
     )
-    pr = pagerank(edges, "src", "dst", seeds, iters=3)
+    pr = pagerank(edges, "src", "dst", seeds, iters=_PR_ITERS)
     return (
         pr.orderBy(F.desc("pr_scaled"), "node")
         .limit(20)
@@ -297,9 +313,7 @@ def ppr_related_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_oracle_sql(
-    iters: int = 3, k: int = 3, final: str | None = None
-) -> str:
+def _lpa_oracle_sql(final: str | None = None) -> str:
     """Unrolled synchronous-LPA twin of operators.graph.
     label_propagation over the mutual-kNN supplier graph (pure
     integer Jaccard-ppm scores, row_number kNN cut, integer vote
@@ -307,16 +321,16 @@ def _lpa_oracle_sql(
 
     The multiply-referenced CTEs are MATERIALIZED: DuckDB inlines
     CTEs by default, and the unrolled iterations reference ``edges``
-    ``iters`` times and each ``lab`` twice — inlining re-runs the
+    ``_LPA_ITERS`` times and each ``lab`` twice — inlining re-runs the
     ~10⁹-row pair join once per reference and exhausts temp disk at
     sf0.1 (the localCheckpoint lesson, relationally)."""
     parts = [
-        _knn_edges_ctes(k)
+        _knn_edges_ctes()
         + ", lab0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl "
         "FROM edges)"
     ]
     prev = "lab0"
-    for i in range(1, iters + 1):
+    for i in range(1, _LPA_ITERS + 1):
         parts.append(
             f", v{i} AS (SELECT e.dst AS node, l.lbl, COUNT(*) AS cnt "
             f"FROM edges e JOIN {prev} l ON e.src = l.node "
@@ -366,7 +380,7 @@ def community_detection_suppliers(
     from .operators.graph import label_propagation
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    lp = label_propagation(edges, "s1", "s2", iters=3)
+    lp = label_propagation(edges, "s1", "s2", iters=_LPA_ITERS)
     return lp.groupBy("community").agg(
         F.count("*").cast("long").alias("n_members")
     )
@@ -395,7 +409,7 @@ def _supplier_knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("s1").orderBy(F.desc("j"), "s2")
     knn = (
         scp.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
+        .filter(F.col("rn") <= _KNN_K)
         .select("s1", "s2")
     )
     return knn.union(
@@ -445,7 +459,7 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise each re-derive the Σdeg² pair join (measured ~6 s of
     # the 11 s total at sf0.1)
     edges = _supplier_knn_edges(spark, sf_dir).localCheckpoint(eager=True)
-    lab = label_propagation(edges, "s1", "s2", iters=3)
+    lab = label_propagation(edges, "s1", "s2", iters=_LPA_ITERS)
     dg = edges.groupBy(F.col("s1").alias("node")).agg(
         F.count("*").alias("d")
     )
@@ -489,7 +503,7 @@ def community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rw_oracle_sql(steps: int = 4, final: str | None = None) -> str:
+def _rw_oracle_sql(final: str | None = None) -> str:
     """Unrolled deterministic-random-walk twin of operators.graph.
     random_walks over the mutual-kNN supplier graph: same md5 pick
     arithmetic, same id-ordered adjacency ranks. ``adj`` is
@@ -504,7 +518,7 @@ def _rw_oracle_sql(steps: int = 4, final: str | None = None) -> str:
         "src AS node FROM edges)"
     ]
     prev = "w0"
-    for t in range(1, steps + 1):
+    for t in range(1, _WALK_STEPS + 1):
         parts.append(
             f", w{t} AS (SELECT w.walk, a.dst AS node FROM {prev} w "
             "JOIN adj a ON a.src = w.node AND a.rn = "
@@ -514,7 +528,8 @@ def _rw_oracle_sql(steps: int = 4, final: str | None = None) -> str:
         )
         prev = f"w{t}"
     sel = " UNION ALL ".join(
-        f"SELECT walk, {t} AS step, node FROM w{t}" for t in range(steps + 1)
+        f"SELECT walk, {t} AS step, node FROM w{t}"
+        for t in range(_WALK_STEPS + 1)
     )
     parts.append(f", corpus AS MATERIALIZED (SELECT * FROM ({sel}))")
     parts.append(
@@ -547,7 +562,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import random_walks
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    out = random_walks(edges, "s1", "s2", steps=4, walks_per_node=1)
+    out = random_walks(edges, "s1", "s2", steps=_WALK_STEPS, walks_per_node=1)
     return out.select(
         "walk",
         F.col("step").cast("int").alias("step"),
@@ -555,7 +570,7 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _n2v_oracle_sql(steps: int = 4) -> str:
+def _n2v_oracle_sql() -> str:
     """Unrolled second-order node2vec twin of operators.graph.
     node2vec_walks: per step, candidate fan-out ⋈ near-flag left
     join ⋈ per-walk cumulative-weight window ⋈ md5 interval pick —
@@ -578,7 +593,7 @@ def _n2v_oracle_sql(steps: int = 4) -> str:
         + " % a.d)"
     ]
     prev = "st1"
-    for t in range(2, steps + 1):
+    for t in range(2, _WALK_STEPS + 1):
         salt = (
             f"walk || ':{t}:' || CAST(prev AS VARCHAR) || ':' || "
             "CAST(cur AS VARCHAR)"
@@ -604,7 +619,7 @@ def _n2v_oracle_sql(steps: int = 4) -> str:
         ["SELECT walk, 0 AS step, cur AS node FROM w0"]
         + [
             f"SELECT walk, {t} AS step, cur AS node FROM st{t}"
-            for t in range(1, steps + 1)
+            for t in range(1, _WALK_STEPS + 1)
         ]
     )
     parts.append(
@@ -634,7 +649,7 @@ def node2vec_biased_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import node2vec_walks
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    out = node2vec_walks(edges, "s1", "s2", steps=4)
+    out = node2vec_walks(edges, "s1", "s2", steps=_WALK_STEPS)
     return out.select(
         "walk",
         F.col("step").cast("int").alias("step"),
@@ -690,7 +705,7 @@ def skipgram_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import random_walks
 
     edges = _supplier_knn_edges(spark, sf_dir)
-    corpus = random_walks(edges, "s1", "s2", steps=4).localCheckpoint(
+    corpus = random_walks(edges, "s1", "s2", steps=_WALK_STEPS).localCheckpoint(
         eager=True
     )
     uni = corpus.groupBy("node").agg(F.count("*").alias("cnt"))
@@ -786,7 +801,7 @@ def _walk_pmi(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     (the NB recipe)."""
     from .operators.graph import random_walks
 
-    corpus = random_walks(edges, "s1", "s2", steps=4).localCheckpoint(
+    corpus = random_walks(edges, "s1", "s2", steps=_WALK_STEPS).localCheckpoint(
         eager=True
     )
     a, b = corpus.alias("a"), corpus.alias("b")
@@ -859,7 +874,7 @@ def walk_skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sc.orderBy(F.desc("pmi_milli"), "center", "context").limit(50)
 
 
-def _emb_oracle_final(dims: int = 4, iters: int = 3) -> str:
+def _emb_oracle_final() -> str:
     """PPMI-matrix subspace-iteration embedding CTEs appended to the
     walk-corpus oracle: d deterministic signed start vectors pushed
     through K unrolled M·v rounds with a per-dim integer max-abs
@@ -883,13 +898,13 @@ def _emb_oracle_final(dims: int = 4, iters: int = 3) -> str:
         "JOIN ctx ON pc.context = ctx.context CROSS JOIN tot) "
         "WHERE pmi > 0), "
         "vn AS MATERIALIZED (SELECT DISTINCT node FROM corpus), "
-        f"dims AS (SELECT CAST(unnest(range({dims})) AS INT) AS r), "
+        f"dims AS (SELECT CAST(unnest(range({_EMB_DIMS})) AS INT) AS r), "
         "v0 AS (SELECT node, r, "
         "CAST(('0x' || substr(md5('emb-v1:' || CAST(node AS VARCHAR) "
         "|| ':' || CAST(r AS VARCHAR)), 1, 12)) AS BIGINT) % 2001 - 1000 "
         "AS v FROM vn CROSS JOIN dims)"
     ]
-    for t in range(1, iters + 1):
+    for t in range(1, _EMB_ITERS + 1):
         parts.append(
             f", u{t} AS (SELECT m.i AS node, v.r, SUM(m.w * v.v) AS u "
             f"FROM mat m JOIN v{t-1} v ON m.j = v.node GROUP BY 1, 2)"
@@ -903,7 +918,7 @@ def _emb_oracle_final(dims: int = 4, iters: int = 3) -> str:
         )
     parts.append(
         f" SELECT CAST(node AS BIGINT) AS node, r AS dim, "
-        f"CAST(v AS BIGINT) AS val_micro FROM v{iters}"
+        f"CAST(v AS BIGINT) AS val_micro FROM v{_EMB_ITERS}"
     )
     return "".join(parts)
 
@@ -968,7 +983,7 @@ def _pmi_embedding_from_edges(spark: SparkSession, edges: DataFrame):
     # now that intermediate rounds skip the zero-completion — derives
     # from the checkpointed corpus, so no checkpoint of its own
     vn = corpus.select("node").distinct()
-    dims = spark.range(4).select(F.col("id").cast("int").alias("r"))
+    dims = spark.range(_EMB_DIMS).select(F.col("id").cast("int").alias("r"))
     v = vn.join(dims).select(
         "node",
         "r",
@@ -988,7 +1003,7 @@ def _pmi_embedding_from_edges(spark: SparkSession, edges: DataFrame):
             - 1000
         ).alias("v"),
     )
-    for t in range(3):
+    for t in range(_EMB_ITERS):
         u = (
             mat.join(v, mat["j"] == v["node"])
             .groupBy(mat["i"].alias("node"), "r")
@@ -998,7 +1013,7 @@ def _pmi_embedding_from_edges(spark: SparkSession, edges: DataFrame):
         s = u.groupBy("r").agg(
             F.greatest(F.max(F.abs(F.col("u"))), F.lit(1)).alias("s")
         )
-        if t < 2:
+        if t < _EMB_ITERS - 1:
             # intermediate rounds skip the vn×dims zero-completion:
             # a (node, r) absent from u rescales to v = 0, and zero
             # components contribute nothing to the next round's
@@ -1032,7 +1047,7 @@ def _pmi_embedding_from_edges(spark: SparkSession, edges: DataFrame):
 _EMB_RECALL_FINAL = (
     # top-3 neighbors per node by exact integer dot product over the
     # micro-unit vectors, checked against the kNN graph's edge set
-    ", emb AS MATERIALIZED (SELECT node, r, v FROM v3)"
+    f", emb AS MATERIALIZED (SELECT node, r, v FROM v{_EMB_ITERS})"
     ", dots AS (SELECT a.node AS n1, b.node AS n2, SUM(a.v * b.v) AS dp "
     "FROM emb a JOIN emb b ON a.r = b.r AND a.node <> b.node "
     "GROUP BY 1, 2)"
@@ -1053,7 +1068,7 @@ _EMB_RECALL_FINAL = (
     # the embedding CTE chain (everything up to its final SELECT)
     # with the recall evaluation appended
     _rw_oracle_sql(
-        final=_emb_oracle_final(dims=4, iters=3).rsplit(" SELECT ", 1)[0]
+        final=_emb_oracle_final().rsplit(" SELECT ", 1)[0]
         + _EMB_RECALL_FINAL
     ),
 )
@@ -1416,8 +1431,8 @@ def _pair_rollup(
     return R.top_n(out, [F.desc(per_col), F.asc("item")], 20)
 
 
-def _textrank_sql(iters: int = 3) -> str:
-    unroll, last = _pr_unroll_sql(iters)
+def _textrank_sql() -> str:
+    unroll, last = _pr_unroll_sql(_TEXTRANK_ITERS)
     return (
         "WITH tok AS (SELECT doc_id, list_filter(string_split(text, ' '), "
         f"w -> len(w) > 2 AND NOT list_contains({STOPWORDS_SQL}, w)) AS t "
@@ -1509,7 +1524,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = adj.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
         adj.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    ranks = pagerank(edges, "src", "dst", iters=3)
+    ranks = pagerank(edges, "src", "dst", iters=_TEXTRANK_ITERS)
     return (
         ranks.select(F.col("node").alias("word"), "pr_scaled")
         .orderBy(F.desc("pr_scaled"), "word")
@@ -1883,7 +1898,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked = names.withColumn(
         "blk", F.substring_index(F.col("n"), " ", -1)
     )
-    return blocked_fuzzy_pairs(blocked, "n", "blk", max_dist=3).select(
+    return blocked_fuzzy_pairs(blocked, "n", "blk").select(
         F.col("key_1"), F.col("key_2"), F.col("dist").cast("int").alias("dist")
     )
 
@@ -2713,7 +2728,7 @@ def fuzzy_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked = names.withColumn(
         "blk", F.substring_index(F.col("name"), " ", -1)
     )
-    pairs = blocked_fuzzy_pairs(blocked, "name", "blk", max_dist=3).select(
+    pairs = blocked_fuzzy_pairs(blocked, "name", "blk").select(
         F.col("key_1").alias("src"), F.col("key_2").alias("dst")
     )
     return duplicate_clusters(names, "name", pairs, "src", "dst").select(
@@ -2943,7 +2958,7 @@ def mad_outliers_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     "WITH g AS (SELECT user_id, ts, CASE WHEN "
     "epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) "
     "IS NULL OR epoch_us(ts) - lag(epoch_us(ts)) OVER "
-    "(PARTITION BY user_id ORDER BY ts) > 1800000000 THEN 1 ELSE 0 END AS is_new "
+    f"(PARTITION BY user_id ORDER BY ts) > {R.SESSION_GAP_US} THEN 1 ELSE 0 END AS is_new "
     "FROM events), "
     "s AS (SELECT user_id, ts, SUM(is_new) OVER "
     "(PARTITION BY user_id ORDER BY ts) AS sid FROM g), "
@@ -2980,7 +2995,7 @@ def concurrent_sessions_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports it), so every day in [first start, last end] gets a row.
     Output: (epoch day, max concurrency)."""
     ev = load_table(spark, sf_dir, "events")
-    s = R.sessionize(ev, "user_id", "ts", gap_minutes=30)
+    s = R.sessionize(ev, "user_id", "ts")
     iv = s.groupBy("user_id", "session_id").agg(
         F.min(R.epoch_us("ts")).alias("a"), F.max(R.epoch_us("ts")).alias("b")
     )
@@ -3369,7 +3384,7 @@ def table_fingerprint_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _kcore_oracle_sql(k: int = 2, rounds: int = 4) -> str:
+def _kcore_oracle_sql() -> str:
     parts = [
         f"WITH {_STRONG_TIE_CTES}, ",
         # e is referenced by every peel round: inline CTEs would
@@ -3380,20 +3395,20 @@ def _kcore_oracle_sql(k: int = 2, rounds: int = 4) -> str:
         "UNION ALL SELECT s2 AS a, s1 AS b FROM em), ",
         "n0 AS MATERIALIZED (SELECT DISTINCT a AS node FROM und)",
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, _KCORE_ROUNDS + 1):
         parts.append(
             f", d{t} AS MATERIALIZED (SELECT u.a AS node, "
             f"CAST(COUNT(*) AS BIGINT) AS d "
             f"FROM und u JOIN n{t-1} x ON u.a = x.node "
             f"JOIN n{t-1} y ON u.b = y.node GROUP BY 1)"
             f", n{t} AS MATERIALIZED (SELECT node FROM d{t} "
-            f"WHERE d >= {k})"
+            f"WHERE d >= {_KCORE_K})"
         )
     parts.append(
         f" SELECT node, d AS deg_core, "
-        f"(SELECT COUNT(*) FROM n{rounds}) = "
-        f"(SELECT COUNT(*) FROM n{rounds - 1}) AS converged "
-        f"FROM d{rounds} WHERE d >= {k}"
+        f"(SELECT COUNT(*) FROM n{_KCORE_ROUNDS}) = "
+        f"(SELECT COUNT(*) FROM n{_KCORE_ROUNDS - 1}) AS converged "
+        f"FROM d{_KCORE_ROUNDS} WHERE d >= {_KCORE_K}"
     )
     return "".join(parts)
 
@@ -3420,7 +3435,7 @@ def kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import kcore_peel
 
     e = _strong_tie_edges(spark, sf_dir)
-    out = kcore_peel(e, "s1", "s2", k=2, rounds=4)
+    out = kcore_peel(e, "s1", "s2", k=_KCORE_K, rounds=_KCORE_ROUNDS)
     e.unpersist()
     return out
 
@@ -3616,34 +3631,34 @@ def ndcg_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _hits_oracle_sql(iters: int = 3, scale: int = 1_000_000) -> str:
+def _hits_oracle_sql() -> str:
     parts = [
         f"WITH e0 AS ({_BIPROJ_SQL}), ",
         "e AS MATERIALIZED (SELECT c, s FROM e0), ",
         "cs AS MATERIALIZED (SELECT DISTINCT c FROM e), ",
         "ss AS MATERIALIZED (SELECT DISTINCT s FROM e), ",
-        f"h0 AS (SELECT c, CAST({scale} AS BIGINT) AS h FROM cs)",
+        f"h0 AS (SELECT c, CAST({_HITS_SCALE} AS BIGINT) AS h FROM cs)",
     ]
     prev_h = "h0"
-    for t in range(1, iters + 1):
+    for t in range(1, _HITS_ITERS + 1):
         parts.append(
             f", ar{t} AS (SELECT e.s, CAST(SUM(h.h) AS BIGINT) AS a "
             f"FROM e JOIN {prev_h} h ON e.c = h.c GROUP BY e.s)"
             f", am{t} AS (SELECT GREATEST(MAX(a), 1) AS m FROM ar{t})"
             f", a{t} AS MATERIALIZED (SELECT ss.s, "
-            f"COALESCE(ar{t}.a, 0) * {scale} // am{t}.m AS a "
+            f"COALESCE(ar{t}.a, 0) * {_HITS_SCALE} // am{t}.m AS a "
             f"FROM ss LEFT JOIN ar{t} ON ss.s = ar{t}.s CROSS JOIN am{t})"
             f", hr{t} AS (SELECT e.c, CAST(SUM(a.a) AS BIGINT) AS h "
             f"FROM e JOIN a{t} a ON e.s = a.s GROUP BY e.c)"
             f", hm{t} AS (SELECT GREATEST(MAX(h), 1) AS m FROM hr{t})"
             f", h{t} AS MATERIALIZED (SELECT cs.c, "
-            f"COALESCE(hr{t}.h, 0) * {scale} // hm{t}.m AS h "
+            f"COALESCE(hr{t}.h, 0) * {_HITS_SCALE} // hm{t}.m AS h "
             f"FROM cs LEFT JOIN hr{t} ON cs.c = hr{t}.c CROSS JOIN hm{t})"
         )
         prev_h = f"h{t}"
     parts.append(
         f" SELECT s AS supplier, CAST(a AS BIGINT) AS authority_micro "
-        f"FROM a{iters} ORDER BY a DESC, s LIMIT 20"
+        f"FROM a{_HITS_ITERS} ORDER BY a DESC, s LIMIT 20"
     )
     return "".join(parts)
 
@@ -3667,17 +3682,16 @@ def hits_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     final cut is TakeOrderedAndProject. At 100 TB: identical to
     distributed power iteration — edges shuffle on the join key,
     scores ride as skinny (node, int) rows."""
-    scale = 1_000_000
     pairs = (
         _supplier_projection(spark, sf_dir)
         .localCheckpoint(eager=True)
     )
     cs = pairs.select("c").distinct()
     ss = pairs.select("s").distinct()
-    h = cs.select("c", F.lit(scale).cast("long").alias("v"))
-    for _ in range(3):
-        a = _hits_half_round(pairs, h, "c", ss, "s", scale)
-        h = _hits_half_round(pairs, a, "s", cs, "c", scale)
+    h = cs.select("c", F.lit(_HITS_SCALE).cast("long").alias("v"))
+    for _ in range(_HITS_ITERS):
+        a = _hits_half_round(pairs, h, "c", ss, "s")
+        h = _hits_half_round(pairs, a, "s", cs, "c")
     return (
         a.orderBy(F.desc("v"), "s")
         .limit(20)
@@ -3694,11 +3708,10 @@ def _hits_half_round(
     src: str,
     nodes: DataFrame,
     dst: str,
-    scale: int,
 ) -> DataFrame:
     """One HITS half-round over the (c, s) edge table: each ``dst``
     node's inbound sum of its ``src`` neighbours' scores ``v``, then
-    the max rescale to ``scale`` integer units (truncating division;
+    the max rescale to ``_HITS_SCALE`` integer units (truncating division;
     nodes with no inbound edge score 0). Returns (dst, v) over
     ``nodes``.
 
@@ -3717,7 +3730,9 @@ def _hits_half_round(
     return (
         nodes.join(raw, dst, "left")
         .crossJoin(F.broadcast(m))
-        .select(dst, F.expr(f"coalesce(raw, 0) * {scale} div m").alias("v"))
+        .select(
+            dst, F.expr(f"coalesce(raw, 0) * {_HITS_SCALE} div m").alias("v")
+        )
     )
 
 

@@ -165,7 +165,7 @@ def asof_join_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "WITH g AS (SELECT user_id, ts, CASE WHEN "
     "epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) "
     "IS NULL OR epoch_us(ts) - lag(epoch_us(ts)) OVER "
-    "(PARTITION BY user_id ORDER BY ts) > 1800000000 THEN 1 ELSE 0 END AS is_new "
+    f"(PARTITION BY user_id ORDER BY ts) > {R.SESSION_GAP_US} THEN 1 ELSE 0 END AS is_new "
     "FROM events) "
     "SELECT user_id, CAST(SUM(is_new) AS BIGINT) AS n_sessions "
     "FROM g GROUP BY user_id",
@@ -174,7 +174,7 @@ def sessionize_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min gap) -> sessions per user. lag +
     conditional cumsum; one shuffle on the key."""
     events = load_table(spark, sf_dir, "events")
-    with_sessions = R.sessionize(events, "user_id", "ts", gap_minutes=30)
+    with_sessions = R.sessionize(events, "user_id", "ts")
     return with_sessions.groupBy("user_id").agg(
         F.max("session_id").cast("long").alias("n_sessions")
     )

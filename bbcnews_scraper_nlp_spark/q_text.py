@@ -57,7 +57,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard similarity join, fully relational (the exact
     verify stage of MinHash-LSH, runnable standalone)."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.2)
+    return ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.2)
 
 
 @register(

@@ -10,7 +10,19 @@ from pyspark.sql import functions as F
 from .catalog import load_table
 from .operators import relational as R
 from .operators import textstats as TS
-from .operators.traindata import md5_int
+from .operators.relational import HRW_TAG
+from .operators.similarity import KMEANS_SEED_TAG
+from .operators.dedup import SPAN_MIN_COUNT
+from .operators.suffixarray import SPAN_LEN
+from .operators.traindata import (
+    CURRICULUM_BANDS,
+    CURRICULUM_SALT,
+    MIX_SALT,
+    SAMPLE_BUCKETS,
+    SHUFFLE_SALT,
+    SPLIT_BUCKETS,
+    md5_int,
+)
 from .queries_base import register
 from .q_certificates import _MINHASH_PAIR_SELECT, _minhash_pair_ctes  # noqa: F401
 
@@ -24,7 +36,8 @@ _BUCKET_SQL = "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT
 
 @register(
     "split_train_val_test",
-    f"WITH b AS (SELECT doc_id, {_BUCKET_SQL} % 100 AS bucket FROM documents) "
+    f"WITH b AS (SELECT doc_id, {_BUCKET_SQL} % {SPLIT_BUCKETS} AS bucket "
+    "FROM documents) "
     "SELECT CASE WHEN bucket < 80 THEN 'train' WHEN bucket < 90 THEN 'val' "
     "ELSE 'test' END AS split, COUNT(*) AS n_docs FROM b GROUP BY 1",
 )
@@ -579,10 +592,10 @@ _SAMPLE_FRACTIONS = {"src1": 0.5, "src2": 0.5, "src3": 0.25}
 @register(
     "stratified_sample_sources",
     "WITH b AS (SELECT doc_id, source, "
-    f"{_BUCKET_SQL} % 10000 AS bucket FROM documents) "
+    f"{_BUCKET_SQL} % {SAMPLE_BUCKETS} AS bucket FROM documents) "
     "SELECT doc_id, source FROM b WHERE bucket < (CASE "
     + " ".join(
-        f"WHEN source = '{s}' THEN {int(round(f * 10000))}"
+        f"WHEN source = '{s}' THEN {int(round(f * SAMPLE_BUCKETS))}"
         for s, f in _SAMPLE_FRACTIONS.items()
     )
     + " ELSE 1000 END)",
@@ -602,8 +615,8 @@ def stratified_sample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MIX_WEIGHTS = {"src0": 1.0, "src1": 0.5, "src2": 0.25}
 _MIX_BUCKET = (
-    "CAST(('0x' || substr(md5('mix-v1:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-    "AS UBIGINT) % 10000"
+    f"CAST(('0x' || substr(md5('{MIX_SALT}:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
+    f"AS UBIGINT) % {SAMPLE_BUCKETS}"
 )
 
 
@@ -612,7 +625,7 @@ _MIX_BUCKET = (
     f"SELECT doc_id, source FROM documents WHERE {_MIX_BUCKET} < "
     "(CASE source "
     + " ".join(
-        f"WHEN '{s}' THEN {int(round(w * 10_000))}"
+        f"WHEN '{s}' THEN {int(round(w * SAMPLE_BUCKETS))}"
         for s, w in sorted(_MIX_WEIGHTS.items())
     )
     + " ELSE 1000 END)",
@@ -857,8 +870,9 @@ def range_frame_trailing_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "curriculum_order_bands",
     "WITH b AS (SELECT doc_id, n_chars, "
-    "CAST(ntile(4) OVER (ORDER BY n_chars DESC, doc_id) AS INT) AS band, "
-    "md5('curriculum-v1:' || CAST(doc_id AS VARCHAR)) AS h "
+    f"CAST(ntile({CURRICULUM_BANDS}) OVER (ORDER BY n_chars DESC, doc_id) "
+    "AS INT) AS band, "
+    f"md5('{CURRICULUM_SALT}:' || CAST(doc_id AS VARCHAR)) AS h "
     "FROM documents) "
     "SELECT doc_id, band, "
     "CAST(row_number() OVER (PARTITION BY band ORDER BY h, doc_id) AS INT) "
@@ -873,7 +887,7 @@ def curriculum_order_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.traindata import curriculum_order
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return curriculum_order(docs, "n_chars", "doc_id", n_bands=4, method="exact")
+    return curriculum_order(docs, "n_chars", "doc_id", method="exact")
 
 
 @register(
@@ -900,7 +914,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "deterministic_shuffle_order",
-    "WITH h AS (SELECT doc_id, md5('shuffle-v1:' || CAST(doc_id AS VARCHAR)) AS hh "
+    f"WITH h AS (SELECT doc_id, md5('{SHUFFLE_SALT}:' || CAST(doc_id AS VARCHAR)) AS hh "
     "FROM documents), "
     "s AS (SELECT doc_id, CAST(CAST('0x' || substr(hh, 1, 8) AS BIGINT) % 8 AS INT) "
     "AS shard, hh FROM h) "
@@ -985,7 +999,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import remove_dup_spans
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    return remove_dup_spans(docs, "doc_id", "text", n=4, min_count=2)
+    return remove_dup_spans(docs, "doc_id", "text", n=4)
 
 
 _PPL_SQL = """
@@ -1043,18 +1057,25 @@ def perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _kmeans_oracle_sql(k: int = 8, iters: int = 3, dim: int = 64) -> str:
+_KMEANS_K = 8
+_KMEANS_ITERS = 3
+_KMEANS_DIM = 64  # embedding components clustered
+
+
+def _kmeans_oracle_sql() -> str:
     """DuckDB twin of operators/similarity.kmeans_lloyd: same
     micro-unit quantization, md5-ranked seeds, packed-bigint argmin
     with lower-cid tie-break, truncating-division centroid update,
     and empty-cluster COALESCE, unrolled iteration by iteration."""
+    k, iters, dim = _KMEANS_K, _KMEANS_ITERS, _KMEANS_DIM
     q = (
         "WITH pts AS (SELECT vec_id AS id, "
         f"list_transform(range(1, {dim + 1}), i -> "
         "CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)) AS e "
         "FROM embeddings), "
         "sd AS (SELECT id, e, ROW_NUMBER() OVER "
-        "(ORDER BY md5('km-v1:' || CAST(id AS VARCHAR)), id) - 1 AS cid "
+        f"(ORDER BY md5('{KMEANS_SEED_TAG}:' || CAST(id AS VARCHAR)), id) "
+        "- 1 AS cid "
         "FROM pts), "
         f"c0 AS (SELECT cid, e AS c FROM sd WHERE cid < {k})"
     )
@@ -1109,7 +1130,12 @@ def kmeans_lloyd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.kmeans_lloyd(
-        emb, "vec_id", "embedding", k=8, iters=3, dim=64
+        emb,
+        "vec_id",
+        "embedding",
+        k=_KMEANS_K,
+        iters=_KMEANS_ITERS,
+        dim=_KMEANS_DIM,
     ).select(F.col("id").alias("vec_id"), "cluster", "dist2")
 
 
@@ -1119,15 +1145,26 @@ def kmeans_lloyd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _hrw_oracle_sql(k1: int = 8, k2: int = 9) -> str:
-    def pack(s: int) -> str:
-        return (
-            "CAST(('0x' || substr(md5('hrw-v1:" + str(s) + ":' || "
-            "CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) * 16 + " + str(s)
-        )
+# the HRW topology change consistent_hash_shards audits, and the shard
+# count streaming_hrw_route routes to
+_HRW_SHARDS_BEFORE = 8
+_HRW_SHARDS = 9
 
-    g1 = "GREATEST(" + ", ".join(pack(s) for s in range(k1)) + ") % 16"
-    g2 = "GREATEST(" + ", ".join(pack(s) for s in range(k2)) + ") % 16"
+
+def _hrw_shard_sql(n_shards: int) -> str:
+    """DuckDB twin of operators.relational.hrw_shard: the packed
+    (48-bit md5 prefix * 16 + shard) GREATEST over ``n_shards``."""
+    packs = ", ".join(
+        f"CAST(('0x' || substr(md5('{HRW_TAG}:{s}:' || "
+        f"CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) * 16 + {s}"
+        for s in range(n_shards)
+    )
+    return f"GREATEST({packs}) % 16"
+
+
+def _hrw_oracle_sql() -> str:
+    g1 = _hrw_shard_sql(_HRW_SHARDS_BEFORE)
+    g2 = _hrw_shard_sql(_HRW_SHARDS)
     return (
         f"WITH a AS (SELECT {g1} AS a8, {g2} AS a9 FROM documents), "
         "n8 AS (SELECT a8 AS shard, COUNT(*) AS n FROM a GROUP BY 1), "
@@ -1136,7 +1173,7 @@ def _hrw_oracle_sql(k1: int = 8, k2: int = 9) -> str:
         "FROM a GROUP BY 1) "
         f"SELECT t.shard, COALESCE(n8.n, 0) AS n_before, "
         "COALESCE(n9.n, 0) AS n_after, COALESCE(n9.m, 0) AS moved_in "
-        f"FROM (SELECT unnest(range({k2})) AS shard) t "
+        f"FROM (SELECT unnest(range({_HRW_SHARDS})) AS shard) t "
         "LEFT JOIN n8 ON t.shard = n8.shard "
         "LEFT JOIN n9 ON t.shard = n9.shard"
     )
@@ -1162,15 +1199,15 @@ def consistent_hash_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     a = docs.select(
-        hrw_shard(F.col("doc_id"), 8).alias("a8"),
-        hrw_shard(F.col("doc_id"), 9).alias("a9"),
+        hrw_shard(F.col("doc_id"), _HRW_SHARDS_BEFORE).alias("a8"),
+        hrw_shard(F.col("doc_id"), _HRW_SHARDS).alias("a9"),
     )
     n8 = a.groupBy(F.col("a8").alias("shard")).agg(F.count("*").alias("n_b"))
     n9 = a.groupBy(F.col("a9").alias("shard")).agg(
         F.count("*").alias("n_a"),
         F.sum((F.col("a8") != F.col("a9")).cast("long")).alias("m"),
     )
-    spine = spark.range(9).select(F.col("id").alias("shard"))
+    spine = spark.range(_HRW_SHARDS).select(F.col("id").alias("shard"))
     return (
         spine.join(n8, "shard", "left")
         .join(n9, "shard", "left")
@@ -1441,14 +1478,22 @@ def minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY DEFINITION — the LSH index under eval is the scale path),
     while the candidate leg is the production shape itself."""
     from pyspark.sql import functions as F  # noqa: F811
-    from .operators.dedup import lsh_signatures
+    from .operators.dedup import (
+        MINHASH_BANDS,
+        MINHASH_NUM_HASHES,
+        SHINGLE_MODE,
+        SHINGLE_N,
+        lsh_signatures,
+    )
     from .q_certificates import _docs_with_near_dups
     from pyspark.storagelevel import StorageLevel
 
     docs = _docs_with_near_dups(spark, sf_dir)
     base = lsh_signatures(
-        docs, "doc_id", "text", 64, "word", 3, "md5"
+        docs, "doc_id", "text", MINHASH_NUM_HASHES, SHINGLE_MODE, SHINGLE_N,
+        "md5",
     ).persist(StorageLevel.MEMORY_AND_DISK)
+
 
     # Candidates join on the RAW signature slice (not lsh_banded's
     # xxhash64 of it): the oracle's cand CTE requires exact per-row
@@ -1459,15 +1504,19 @@ def minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production bucket key stays hashed (dedup.lsh_banded); the
     # certification artifact pays 4 longs of shuffle-key width for
     # collision-free equality.
+    rows = MINHASH_NUM_HASHES // MINHASH_BANDS
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
             F.concat_ws(
                 ",",
-                *[F.col(f"__m{i}").cast("string") for i in range(b * 4, b * 4 + 4)],
+                *[
+                    F.col(f"__m{i}").cast("string")
+                    for i in range(b * rows, b * rows + rows)
+                ],
             ).alias("bkey"),
         )
-        for b in range(16)
+        for b in range(MINHASH_BANDS)
     ]
     banded = base.select(
         "doc_id", F.explode(F.array(*band_structs)).alias("__b")
@@ -1709,7 +1758,10 @@ def kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------
 
 
-def _lsa_oracle_sql(dims: int = 4) -> str:
+_LSA_DIMS = 4
+
+
+def _lsa_oracle_sql() -> str:
     seed = (
         "CAST(('0x' || substr(md5('lsa-v1:' || w || ':' "
         "|| CAST(r AS VARCHAR)), 1, 12)) AS BIGINT) % 2001 - 1000"
@@ -1725,7 +1777,7 @@ nn AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n FROM tf),
 m AS MATERIALIZED (SELECT tf.doc_id AS d, tf.w, tf.c *
      CAST(ROUND(1000 * ln(CAST(nn.n AS DOUBLE) / df.df)) AS BIGINT) AS wt
      FROM tf JOIN df USING (w) CROSS JOIN nn WHERE df.df < nn.n),
-dims AS (SELECT CAST(unnest(range({dims})) AS INT) AS r),
+dims AS (SELECT CAST(unnest(range({_LSA_DIMS})) AS INT) AS r),
 terms AS (SELECT DISTINCT w FROM m),
 v0 AS (SELECT w, r, {seed} AS v FROM terms CROSS JOIN dims),
 u1r AS (SELECT m.d, v.r, SUM(m.wt * v.v) AS u
@@ -1806,7 +1858,7 @@ def lsa_embed_documents(spark: SparkSession, docs: DataFrame) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    dims = spark.range(4).select(F.col("id").cast("int").alias("r"))
+    dims = spark.range(_LSA_DIMS).select(F.col("id").cast("int").alias("r"))
     terms = m.select("w").distinct()
     v0 = terms.join(dims).select(
         "w",
@@ -1858,18 +1910,10 @@ def lsa_embed_documents(spark: SparkSession, docs: DataFrame) -> DataFrame:
     )
 
 
-def _hrw_route_sql(n: int = 9) -> str:
-    def pack(s: int) -> str:
-        return (
-            "CAST(('0x' || substr(md5('hrw-v1:" + str(s) + ":' || "
-            "CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) * 16 + " + str(s)
-        )
-
-    g = "GREATEST(" + ", ".join(pack(s) for s in range(n)) + ") % 16"
-    return f"SELECT doc_id, {g} AS shard FROM documents"
-
-
-@register("streaming_hrw_route", _hrw_route_sql())
+@register(
+    "streaming_hrw_route",
+    f"SELECT doc_id, {_hrw_shard_sql(_HRW_SHARDS)} AS shard FROM documents",
+)
 def streaming_hrw_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous-hash routing as a STREAMING ingest gate (the
     streaming_quality_gate pattern applied to data placement):
@@ -1882,7 +1926,7 @@ def streaming_hrw_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB."""
     from .streaming.ingest import streaming_hrw_route_batch
 
-    return streaming_hrw_route_batch(spark, sf_dir, n_shards=9).select(
+    return streaming_hrw_route_batch(spark, sf_dir, _HRW_SHARDS).select(
         "doc_id", F.col("shard").cast("long").alias("shard")
     )
 
@@ -1893,26 +1937,26 @@ def streaming_hrw_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (dedup_span_removal / dup_ngram_span_score)
 # --------------------------------------------------------------------
 
-_SUFFIX_SPAN_SQL = """
+_SUFFIX_SPAN_SQL = f"""
 WITH t AS (SELECT doc_id,
         list_filter(string_split_regex(coalesce(text, ''), '\\s+'),
                     x -> x <> '') AS toks FROM documents),
-g AS (SELECT doc_id, pos, array_to_string(toks[pos + 1 : pos + 16], ' ')
+g AS (SELECT doc_id, pos, array_to_string(toks[pos + 1 : pos + {SPAN_LEN}], ' ')
              AS gram
       FROM (SELECT doc_id, toks,
-                   unnest(range(0, greatest(len(toks) - 15, 0))) AS pos
+                   unnest(range(0, greatest(len(toks) - {SPAN_LEN - 1}, 0))) AS pos
             FROM t)),
 dup AS (SELECT gram FROM (SELECT gram, COUNT(*) AS c FROM g GROUP BY gram)
-        WHERE c >= 2),
+        WHERE c >= {SPAN_MIN_COUNT}),
 st AS (SELECT doc_id, pos FROM g SEMI JOIN dup ON g.gram = dup.gram),
 br AS (SELECT doc_id, pos,
-       CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 16
+       CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > {SPAN_LEN}
             THEN 1 ELSE 0 END AS brk FROM st),
 isl AS (SELECT doc_id, pos, SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
         ROWS UNBOUNDED PRECEDING) AS isl FROM br)
 SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-       CAST(MAX(pos) + 16 AS BIGINT) AS span_end,
-       CAST(MAX(pos) + 16 - MIN(pos) AS BIGINT) AS span_len,
+       CAST(MAX(pos) + {SPAN_LEN} AS BIGINT) AS span_end,
+       CAST(MAX(pos) + {SPAN_LEN} - MIN(pos) AS BIGINT) AS span_len,
        CAST(COUNT(*) AS BIGINT) AS n_dup_starts
 FROM isl GROUP BY doc_id, isl
 """
@@ -1943,23 +1987,23 @@ def suffix_array_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
     return duplicated_spans(
-        docs, "doc_id", "text", span_len=16, min_count=2
+        docs, "doc_id", "text"
     )
 
 
-_SUFFIX_REMOVE_SQL = """
+_SUFFIX_REMOVE_SQL = f"""
 WITH t AS (SELECT doc_id,
         list_filter(string_split_regex(coalesce(text, ''), '\\s+'),
                     x -> x <> '') AS toks FROM documents),
-g AS (SELECT doc_id, pos, array_to_string(toks[pos + 1 : pos + 16], ' ')
+g AS (SELECT doc_id, pos, array_to_string(toks[pos + 1 : pos + {SPAN_LEN}], ' ')
              AS gram
       FROM (SELECT doc_id, toks,
-                   unnest(range(0, greatest(len(toks) - 15, 0))) AS pos
+                   unnest(range(0, greatest(len(toks) - {SPAN_LEN - 1}, 0))) AS pos
             FROM t)),
 dup AS (SELECT gram FROM (SELECT gram, COUNT(*) AS c FROM g GROUP BY gram)
-        WHERE c >= 2),
+        WHERE c >= {SPAN_MIN_COUNT}),
 cov AS (SELECT DISTINCT doc_id, pos + u AS idx
-        FROM (SELECT g.doc_id, g.pos, unnest(range(0, 16)) AS u
+        FROM (SELECT g.doc_id, g.pos, unnest(range(0, {SPAN_LEN})) AS u
               FROM g SEMI JOIN dup ON g.gram = dup.gram)),
 tok AS (SELECT doc_id, unnest(range(0, len(toks))) AS idx,
                unnest(toks) AS word FROM t),
@@ -1995,30 +2039,30 @@ def suffix_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
     return remove_duplicated_spans(
-        docs, "doc_id", "text", span_len=16, min_count=2
+        docs, "doc_id", "text"
     )
 
 
-_CONTAM_SPAN_SQL = """
+_CONTAM_SPAN_SQL = f"""
 WITH t AS (SELECT doc_id, doc_id % 13 = 0 AS bench,
         list_filter(string_split_regex(coalesce(text, ''), '\\s+'),
                     x -> x <> '') AS toks FROM documents),
 g AS (SELECT doc_id, bench, pos,
-             array_to_string(toks[pos + 1 : pos + 16], ' ') AS gram
+             array_to_string(toks[pos + 1 : pos + {SPAN_LEN}], ' ') AS gram
       FROM (SELECT doc_id, bench, toks,
-                   unnest(range(0, greatest(len(toks) - 15, 0))) AS pos
+                   unnest(range(0, greatest(len(toks) - {SPAN_LEN - 1}, 0))) AS pos
             FROM t)),
 bg AS (SELECT DISTINCT gram FROM g WHERE bench),
 st AS (SELECT doc_id, pos FROM g SEMI JOIN bg ON g.gram = bg.gram
        WHERE NOT bench),
 br AS (SELECT doc_id, pos,
-       CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > 16
+       CASE WHEN pos - LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) > {SPAN_LEN}
             THEN 1 ELSE 0 END AS brk FROM st),
 isl AS (SELECT doc_id, pos, SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
         ROWS UNBOUNDED PRECEDING) AS isl FROM br)
 SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-       CAST(MAX(pos) + 16 AS BIGINT) AS span_end,
-       CAST(MAX(pos) + 16 - MIN(pos) AS BIGINT) AS span_len,
+       CAST(MAX(pos) + {SPAN_LEN} AS BIGINT) AS span_end,
+       CAST(MAX(pos) + {SPAN_LEN} - MIN(pos) AS BIGINT) AS span_len,
        CAST(COUNT(*) AS BIGINT) AS n_dup_starts
 FROM isl GROUP BY doc_id, isl
 """

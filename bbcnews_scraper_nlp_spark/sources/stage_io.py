@@ -135,8 +135,6 @@ def write_bucketed(
     table: str,
     bucket_cols: list[str],
     num_buckets: int = 64,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed stage-table writer — the co-located-join scale path.
 
@@ -151,32 +149,22 @@ def write_bucketed(
 
     Pick num_buckets ≈ total-table-bytes / 128 MB at the target scale;
     both join sides must use the SAME bucket count (or an integer
-    multiple) for co-location. ``sort_cols`` additionally orders
-    within each bucket file (merge-join without a sort when one file
-    per bucket).
+    multiple) for co-location.
 
     Uses ``saveAsTable`` (bucketing metadata lives in the session
-    catalog; plain ``.parquet(path)`` cannot carry it).
+    catalog; plain ``.parquet(path)`` cannot carry it), so the table
+    is read back with ``spark.table(table)``: the parquet path would
+    discard the bucketing.
     """
-    writer = df.write.mode(mode).format("parquet").bucketBy(
+    df.write.mode("overwrite").format("parquet").bucketBy(
         num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed stage table with its distribution metadata (the
-    plain parquet path would discard bucketing)."""
-    return spark.table(table)
+    ).saveAsTable(table)
 
 
 def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: list[str],
-    mode: str = "overwrite",
 ) -> None:
     """Hive-style partitioned stage writer — the data-SKIPPING scale
     path (complement of ``write_bucketed``'s co-location path).
@@ -196,20 +184,10 @@ def write_partitioned(
     ``tests/test_sources.py::test_partition_pruning_in_plan`` asserts
     both the layout and that a filtered read's plan carries the
     pruned ``PartitionFilters`` with no pushed data filter left.
+    ``spark.read.parquet(path)`` reads it back, rebuilding the
+    partition columns from the directory names.
     """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def read_partitioned(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Read a Hive-partitioned stage dir (partition columns are
-    reconstructed from the directory names; pass ``schema`` to pin
-    partition-column types instead of relying on inference)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_zordered(
@@ -218,7 +196,6 @@ def write_zordered(
     cols: list[str],
     num_files: int | None = None,
     bits_per_col: int = 16,
-    mode: str = "overwrite",
     curve: str = "morton",
 ) -> None:
     """Z-order (Morton-curve) clustered writer — MULTI-column data
@@ -301,7 +278,7 @@ def write_zordered(
         out.repartitionByRange(n, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -346,42 +323,6 @@ def compact_stage(
     os.rename(tmp, src)
     shutil.rmtree(old)
     return n_files
-
-
-def upsert_replace(
-    spark: SparkSession, df: DataFrame, root: str, name: str, key: str
-) -> None:
-    """Unique-key MERGE with last-writer-wins (SCD1): incoming rows
-    REPLACE existing rows with the same key; unmatched existing rows
-    survive; duplicate keys within the batch collapse to one
-    (deterministic arbitrary-but-stable pick via dropDuplicates after
-    a key sort — same convention as upsert_skip).
-
-    Plain-parquet engine, so the merge is a rewrite: existing
-    left-anti incoming (drop superseded) union incoming, staged to a
-    temp dir and swapped — the reason Delta/Iceberg exist is to turn
-    exactly this into a metadata-only MERGE; the logical plan here is
-    the same one their MERGE executes. At real scale pair with
-    write_partitioned and rewrite only the partitions the batch
-    touches (partition-pruned anti-join).
-    """
-    import shutil
-
-    path = os.path.join(root, name)
-    incoming = df.dropDuplicates([key])
-    existing = _read_existing(spark, path)
-    if existing is None:
-        incoming.write.mode("overwrite").parquet(path)
-        return
-    merged = existing.join(
-        incoming.select(key), key, "left_anti"
-    ).unionByName(incoming)
-    tmp = os.path.join(root, f"__merge_{name}")
-    merged.write.mode("overwrite").parquet(tmp)
-    old = os.path.join(root, f"__old_{name}")
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
 
 
 def read_stage_evolving(

@@ -105,14 +105,12 @@ def write_topics_html(
     path: str,
     dist_col: str = "topicDistribution",
     num_words: int = 15,
-    title: str | None = None,
 ) -> str:
-    """Compute the viz feed and write the HTML file; returns the
-    path (reference artifact twin: ldaplot_topics_{k}.html)."""
+    """Compute the viz feed and write the HTML file, titled with the
+    topic count; returns the path (reference artifact twin:
+    ldaplot_topics_{k}.html)."""
     data = topic_viz_data(model, vocab, transformed, dist_col, num_words)
-    html_text = render_topics_html(
-        data, title or f"LDA topics (k={data['k']})"
-    )
+    html_text = render_topics_html(data, f"LDA topics (k={data['k']})")
     with open(path, "w", encoding="utf-8") as fh:
         fh.write(html_text)
     return path

@@ -50,6 +50,17 @@ from ..catalog import read_parquet
 # data into throwaway checkpoints.
 STATE_PARTITIONS = 8
 
+# Event-time settings of the watermarked operators: tumbling windows
+# and sessions close a day behind the newest event; deduplication and
+# the click/view join keep an hour of state.
+WINDOW_LEN = "1 day"
+WINDOW_WATERMARK = "1 day"
+DEDUP_WATERMARK = "1 hour"
+JOIN_LOOKBACK = "30 minutes"  # views a click joins: the preceding 30 min
+JOIN_WATERMARK = "1 hour"
+SESSION_GAP = "30 minutes"
+SESSION_WATERMARK = "1 day"
+
 
 def _hadoop_path(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` for ``path`` via the Hadoop FS API, so
@@ -236,8 +247,6 @@ def user_stats_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def windowed_event_counts(
     stream: DataFrame,
     ts_col: str = "ts",
-    window_len: str = "1 day",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Watermarked tumbling-window aggregation — the canonical
     Structured Streaming shape for late data: counts per (day window,
@@ -246,8 +255,8 @@ def windowed_event_counts(
     once the watermark passes its end, i.e. it can no longer change).
     """
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_len), F.col("event_type"))
+        stream.withWatermark(ts_col, WINDOW_WATERMARK)
+        .groupBy(F.window(F.col(ts_col), WINDOW_LEN), F.col("event_type"))
         .agg(F.count("*").alias("n"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -300,7 +309,6 @@ def dedup_within_watermark(
     stream: DataFrame,
     key: str = "event_id",
     ts_col: str = "ts",
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """dropDuplicatesWithinWatermark: dedup keys whose duplicates
     arrive within the watermark delay of each other. Unlike
@@ -311,20 +319,18 @@ def dedup_within_watermark(
     duplicates are bursty (retries, re-crawls) rather than eternal.
     The reference's unique-url index (bbc_news_dag.py:34-38) is the
     unbounded version; this is what survives years of uptime."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        [key]
-    )
+    return stream.withWatermark(
+        ts_col, DEDUP_WATERMARK
+    ).dropDuplicatesWithinWatermark([key])
 
 
 def interval_join_clicks_views(
     clicks: DataFrame,
     views: DataFrame,
-    lookback: str = "30 minutes",
-    watermark: str = "1 hour",
     how: str = "inner",
 ) -> DataFrame:
     """Watermarked stream-stream interval join: each click joins the
-    same user's views from the preceding ``lookback`` window
+    same user's views from the preceding ``JOIN_LOOKBACK`` window
     (``how``: ``"inner"`` or ``"left_outer"``).
 
     Both sides carry watermarks so the state store can discard rows
@@ -333,13 +339,13 @@ def interval_join_clicks_views(
     join buffers forever). The join condition is an equi-key
     (user_id, shuffled symmetrically) plus the time-range predicate
     evaluated within each key's buffered rows."""
-    c = clicks.withWatermark("click_ts", watermark)
-    v = views.withWatermark("view_ts", watermark)
+    c = clicks.withWatermark("click_ts", JOIN_WATERMARK)
+    v = views.withWatermark("view_ts", JOIN_WATERMARK)
     return c.join(
         v,
         F.expr(
             "c_user_id = v_user_id AND "
-            f"view_ts BETWEEN click_ts - INTERVAL {lookback} AND click_ts"
+            f"view_ts BETWEEN click_ts - INTERVAL {JOIN_LOOKBACK} AND click_ts"
         ),
         how,
     )
@@ -405,18 +411,16 @@ def upsert_foreach_batch(
 def session_window_counts(
     stream: DataFrame,
     ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 day",
 ) -> DataFrame:
     """Streaming sessionization via ``F.session_window`` — DYNAMIC
-    windows that extend while events keep arriving within ``gap`` of
+    windows that extend while events keep arriving within ``SESSION_GAP`` of
     the session's end (vs the fixed grid of ``F.window``). State per
     open session; the watermark closes sessions whose possible-extend
     horizon has passed, so append mode emits each session exactly
     once and state is bounded by (active keys × open sessions).
 
     Semantics note (pinned by the batch-equivalence test): a session
-    window is half-open — an event arriving EXACTLY ``gap`` after the
+    window is half-open — an event arriving EXACTLY ``SESSION_GAP`` after the
     last one starts a NEW session (merge condition is strict `<`).
     The batch twin (`relational.sessionize`) therefore needs `>=` as
     its new-session test to agree on boundary gaps.
@@ -425,8 +429,8 @@ def session_window_counts(
     definition — not the last event's timestamp.
     """
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col("user_id"))
+        stream.withWatermark(ts_col, SESSION_WATERMARK)
+        .groupBy(F.session_window(F.col(ts_col), SESSION_GAP), F.col("user_id"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("session_window.start").alias("session_start"),
@@ -527,6 +531,10 @@ def near_dedup_stream(
     from pyspark import StorageLevel
 
     from ..operators.dedup import (
+        MINHASH_BANDS,
+        MINHASH_NUM_HASHES,
+        SHINGLE_MODE,
+        SHINGLE_N,
         append_lsh_index,
         lsh_index_meta,
         lsh_pairs,
@@ -546,8 +554,9 @@ def near_dedup_stream(
             lsh_index_meta(spark, index_path)
             if have_index
             else {
-                "num_hashes": 64, "bands": 16, "shingle_mode": "word",
-                "shingle_n": 3, "shingle_hash": "xxhash64",
+                "num_hashes": MINHASH_NUM_HASHES, "bands": MINHASH_BANDS,
+                "shingle_mode": SHINGLE_MODE, "shingle_n": SHINGLE_N,
+                "shingle_hash": "xxhash64",
             }
         )
         # ONE signature pass per batch, threaded through intra-batch
@@ -627,7 +636,7 @@ def near_dedup_stream(
                 )
             else:
                 save_lsh_index(
-                    kept, id_col, text_col, index_path, **params,
+                    kept, id_col, text_col, index_path,
                     base=kept_base, base_params=params, batch_id=batch_id,
                     lineage=lineage,
                 )
@@ -649,7 +658,6 @@ def cms_stream(
     key: str,
     depth: int = 5,
     width: int = 256,
-    where: str | None = None,
 ):
     """Streaming frequency tracking with PERSISTENT count-min state:
     each micro-batch builds its own CMS counter delta
@@ -683,7 +691,7 @@ def cms_stream(
     from ..operators.profiling import build_cms
 
     return _sketch_stream(
-        spark, input_dir, sketch_path, checkpoint, where,
+        spark, input_dir, sketch_path, checkpoint, None,
         lambda batch: build_cms(batch, key, depth=depth, width=width),
     )
 
@@ -933,10 +941,7 @@ def streaming_quality_gate_batch(
     return drain(spark, flagged)
 
 
-def streaming_hrw_route_batch(
-    spark, sf_dir: str, n_shards: int = 9,
-    max_files_per_trigger: int | None = None,
-):
+def streaming_hrw_route_batch(spark, sf_dir: str, n_shards: int):
     """Rendezvous-hash ROUTING inside Structured Streaming — the
     ingest-placement gate: every arriving document is assigned its
     shard by the same pure-projection HRW expression the batch
@@ -948,19 +953,14 @@ def streaming_hrw_route_batch(
     compute the identical placement."""
     from ..operators.relational import hrw_shard
 
-    stream = file_stream(
-        spark, os.path.join(sf_dir, "documents.parquet"), max_files_per_trigger
-    )
+    stream = file_stream(spark, os.path.join(sf_dir, "documents.parquet"))
     routed = stream.select(
         "doc_id", hrw_shard(F.col("doc_id"), n_shards).alias("shard")
     )
     return drain(spark, routed)
 
 
-def streaming_blocklist_gate_batch(
-    spark, sf_dir: str, patterns: list[str],
-    max_files_per_trigger: int | None = None,
-):
+def streaming_blocklist_gate_batch(spark, sf_dir: str, patterns: list[str]):
     """Aho-Corasick blocklist matching inside Structured Streaming —
     the ingest-side content gate: every arriving document exits with
     its per-pattern match counts from the SAME goto/fail automaton
@@ -973,8 +973,6 @@ def streaming_blocklist_gate_batch(
     batch audit provably compute identical matches."""
     from ..operators.ahocorasick import automaton_frame, match_counts
 
-    stream = file_stream(
-        spark, os.path.join(sf_dir, "documents.parquet"), max_files_per_trigger
-    )
+    stream = file_stream(spark, os.path.join(sf_dir, "documents.parquet"))
     auto = automaton_frame(spark, patterns)
     return drain(spark, match_counts(stream, "doc_id", "text", auto))

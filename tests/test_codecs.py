@@ -462,7 +462,7 @@ def test_g711_companding_and_container():
         ("ulaw", ulaw_decode(ulaw_encode(s))),
         ("alaw", alaw_decode(alaw_encode(s))),
     ):
-        dec_, rate = decode_wav_samples(encode_wav_g711(s, law, 8000))
+        dec_, rate = decode_wav_samples(encode_wav_g711(s, law))
         assert rate == 8000 and (dec_[:, 0] == direct).all(), law
 
 

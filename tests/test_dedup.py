@@ -42,7 +42,7 @@ def test_exact_dedup_keeps_min_id(spark):
 def test_minhash_lsh_finds_planted_dups(spark):
     df, n_dups = _corpus(spark)
     pairs = D.minhash_lsh_pairs(
-        df, "doc_id", "text", num_hashes=64, bands=16, jaccard_threshold=0.5
+        df, "doc_id", "text", jaccard_threshold=0.5
     ).collect()
     found = {(r["id_1"], r["id_2"]) for r in pairs}
     planted = {(j, 1000 + j) for j in range(n_dups)}
@@ -52,7 +52,7 @@ def test_minhash_lsh_finds_planted_dups(spark):
     # has Jaccard >= threshold per the exact relational oracle
     exact = {
         (r["id_1"], r["id_2"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.0).collect()
+        for r in D.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.0).collect()
     }
     for p in found:
         assert exact.get(p, 0.0) >= 0.5 - 1e-9
@@ -86,7 +86,7 @@ def test_ngram_prefix_filter_output_identical(spark):
             map(
                 tuple,
                 D.ngram_jaccard_pairs(
-                    df, "doc_id", "text", n=3, threshold=thr, prefix_filter=False
+                    df, "doc_id", "text", threshold=thr, prefix_filter=False
                 ).collect(),
             )
         )
@@ -94,7 +94,7 @@ def test_ngram_prefix_filter_output_identical(spark):
             map(
                 tuple,
                 D.ngram_jaccard_pairs(
-                    df, "doc_id", "text", n=3, threshold=thr, prefix_filter=True
+                    df, "doc_id", "text", threshold=thr, prefix_filter=True
                 ).collect(),
             )
         )
@@ -106,7 +106,7 @@ def test_ngram_jaccard_values(spark):
         [(1, "a b c d e"), (2, "a b c d e"), (3, "z y x w v")],
         "doc_id long, text string",
     )
-    out = D.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.5).collect()
+    out = D.ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["id_1"], r["id_2"]) == (1, 2) and abs(r["jaccard"] - 1.0) < 1e-9
@@ -231,7 +231,7 @@ def test_md5_flavor_semantics_match(spark):
     planted = {(j, 1000 + j) for j in range(n_dups)}
 
     mh = D.minhash_lsh_pairs(
-        df, "doc_id", "text", num_hashes=64, bands=16,
+        df, "doc_id", "text",
         jaccard_threshold=0.5, shingle_hash="md5",
     ).collect()
     found = {(r["id_1"], r["id_2"]) for r in mh}
@@ -248,7 +248,7 @@ def test_md5_flavor_semantics_match(spark):
     again = {
         (r["id_1"], r["id_2"])
         for r in D.minhash_lsh_pairs(
-            df, "doc_id", "text", num_hashes=64, bands=16,
+            df, "doc_id", "text",
             jaccard_threshold=0.5, shingle_hash="md5",
         ).collect()
     }
@@ -270,7 +270,7 @@ def test_remove_dup_spans_planted(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r["doc_id"]: (r["clean_text"], r["n_removed"])
-        for r in remove_dup_spans(df, "doc_id", "text", n=4, min_count=2).collect()
+        for r in remove_dup_spans(df, "doc_id", "text", n=4).collect()
     }
     assert out[1] == ("alpha beta gamma", 6)
     assert out[2] == ("delta epsilon zeta", 6)
@@ -280,7 +280,7 @@ def test_remove_dup_spans_planted(spark):
     rep = spark.createDataFrame(
         [(9, "a b c d x y a b c d")], "doc_id long, text string"
     )
-    got = remove_dup_spans(rep, "doc_id", "text", n=4, min_count=2).collect()[0]
+    got = remove_dup_spans(rep, "doc_id", "text", n=4).collect()[0]
     assert got["clean_text"] == "x y"
     assert got["n_removed"] == 8
 
@@ -300,7 +300,7 @@ def test_blocked_fuzzy_pairs_within_block_only(spark):
     df = spark.createDataFrame(rows, "n string, blk string")
     got = {
         (r["key_1"], r["key_2"]): r["dist"]
-        for r in blocked_fuzzy_pairs(df, "n", "blk", max_dist=3).collect()
+        for r in blocked_fuzzy_pairs(df, "n", "blk").collect()
     }
     # cross-check every expected distance with a literal DP oracle
     def lev(s, t):

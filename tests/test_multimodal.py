@@ -44,7 +44,7 @@ def test_strict_mode_raises(spark):
 
 
 def test_wav_header_parse_roundtrip():
-    hdr = M._wav_header(16000, 2, 16, 12345)
+    hdr = M._wav_header(16000, 2, 12345)
     assert M._parse_wav(hdr) == (16000, 2, 16, 12345, "wav")
     # chunk walk: a LIST chunk before fmt/data still parses
     body = b"\x00\x01" * 100  # 100 16-bit mono frames
@@ -64,7 +64,7 @@ def test_wav_header_parse_roundtrip():
 
 
 def test_audio_meta_over_spark(spark):
-    wav = M._wav_header(16000, 1, 16, 8000) + b"\x00\x00" * 8000
+    wav = M._wav_header(16000, 1, 8000) + b"\x00\x00" * 8000
     rows = [(1, "audio/wav", wav), (2, "audio/mp3", b"ID3 not wav")]
     df = spark.createDataFrame(rows, "doc_id long, media_type string, payload binary")
     out = {r["doc_id"]: r for r in M.audio_meta(df).collect()}

@@ -54,7 +54,7 @@ def test_epoch_helpers_both_flavors(spark, flavor):
 
 @pytest.mark.parametrize("flavor", FLAVORS)
 def test_sessionize_both_flavors(spark, flavor):
-    out = R.sessionize(_events(spark, flavor), "user_id", "ts", gap_minutes=30)
+    out = R.sessionize(_events(spark, flavor), "user_id", "ts")
     per_user = {
         r["user_id"]: r["n"]
         for r in out.groupBy("user_id")
@@ -77,7 +77,7 @@ def test_sessionize_subsecond_boundary(spark, flavor):
         ],
         "user_id long, ts timestamp",
     ).withColumn("ts", F.col("ts").cast(flavor))
-    out = R.sessionize(df, "user_id", "ts", gap_minutes=30)
+    out = R.sessionize(df, "user_id", "ts")
     assert out.agg(F.max("session_id")).collect()[0][0] == 2
 
 
@@ -148,7 +148,7 @@ def test_watermark_path_both_flavors(spark, tmp_path, flavor):
 
     stream = event_stream(spark, str(src))
     assert dict(stream.dtypes)["ts"] == "timestamp"
-    deduped = dedup_within_watermark(stream, key="event_id", watermark="1 hour")
+    deduped = dedup_within_watermark(stream, key="event_id")
     assert drain(spark, deduped).count() == 5
 
 

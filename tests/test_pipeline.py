@@ -62,8 +62,7 @@ def stages(spark):
         [(i, f"label_{i}") for i in range(3)], "topic_num int, topic_label string"
     )
     return P.run_full_pipeline(
-        sitemap, html_pages, topic_labels=labels, k_variants=(3,),
-        min_words=50, min_df=2.0,
+        sitemap, html_pages, topic_labels=labels, k_variants=(3,), min_df=2.0,
     )
 
 

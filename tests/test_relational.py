@@ -90,7 +90,7 @@ def test_sessionize(spark):
         (2, base),
     ]
     df = spark.createDataFrame(rows, "user_id int, ts timestamp")
-    out = R.sessionize(df, "user_id", "ts", gap_minutes=30).collect()
+    out = R.sessionize(df, "user_id", "ts").collect()
     sessions = {(r["user_id"], r["ts"]): r["session_id"] for r in out}
     assert sessions[(1, rows[0][1])] == 1
     assert sessions[(1, rows[1][1])] == 1
@@ -401,7 +401,7 @@ def test_bloom_persistence_incremental_dedup(spark, tmp_path):
 
     path = str(tmp_path / "seen_bloom")
     run1 = spark.createDataFrame([(i,) for i in range(200)], "k long")
-    save_bloom(run1, "k", path, n_bits=1 << 16, n_hashes=5)
+    save_bloom(run1, "k", path, n_bits=1 << 16)
 
     run2 = spark.createDataFrame([(i,) for i in range(150, 350)], "k long")
     # without the exact store: no false negatives — every returned key

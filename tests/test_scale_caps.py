@@ -45,19 +45,19 @@ def test_ngram_maxdf_bounds_skewed_fanout(spark, skewed_docs):
     # hot shingle df=200 > max_df=50 -> dropped before pairing; no
     # doc pair shares any other shingle, so zero pairs survive
     out = ngram_jaccard_pairs(
-        skewed_docs, "doc_id", "text", n=3, threshold=0.2, max_df=50
+        skewed_docs, "doc_id", "text", threshold=0.2, max_df=50
     )
     assert out.count() == 0
     # uncapped twin proves the fixture is genuinely adversarial
     uncapped = ngram_jaccard_pairs(
-        skewed_docs.limit(40), "doc_id", "text", n=3, threshold=0.2,
+        skewed_docs.limit(40), "doc_id", "text", threshold=0.2,
         max_df=None,
     )
     assert uncapped.count() == 0  # jaccard 1/7 < 0.2 — threshold kills them
     # ...but the candidate fanout existed: lower the threshold and the
     # hot-shingle pairs all surface
     flood = ngram_jaccard_pairs(
-        skewed_docs.limit(40), "doc_id", "text", n=3, threshold=0.1,
+        skewed_docs.limit(40), "doc_id", "text", threshold=0.1,
         max_df=None,
     )
     assert flood.count() == 40 * 39 // 2
@@ -73,7 +73,7 @@ def test_ngram_maxdf_identical_on_normal_corpus(spark):
         (4, "spark shuffles data across the cluster for joins"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(n=3, threshold=0.3, prefix_filter=False)
+    kw = dict(threshold=0.3, prefix_filter=False)
     capped = ngram_jaccard_pairs(df, "doc_id", "text", **kw).collect()
     uncapped = ngram_jaccard_pairs(
         df, "doc_id", "text", max_df=None, **kw
@@ -93,7 +93,7 @@ def test_ngram_maxdf_jaccard_exact_over_kept_universe(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = ngram_jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.3, max_df=50,
+        df, "doc_id", "text", threshold=0.3, max_df=50,
         prefix_filter=False,
     ).collect()
     assert len(out) == 1
@@ -116,8 +116,8 @@ def skewed_vectors(spark):
 
 
 def test_subbucket_cap_bounds_bucket_width(spark, skewed_vectors):
-    r, seed, dim = 4, 42, 4
-    planes = make_planes(dim, r, seed)
+    r, dim = 4, 4
+    planes = make_planes(dim, r)
     withb = skewed_vectors.withColumn(
         "__bucket", _bucket_expr(F.col("vec"), planes)
     )
@@ -125,7 +125,7 @@ def test_subbucket_cap_bounds_bucket_width(spark, skewed_vectors):
         withb.groupBy("__bucket").count().agg(F.max("count")).collect()[0][0]
     )
     assert base_max >= 100  # fixture really is degenerate
-    capped = _subbucketed(withb, "vec", dim, r, seed, max_bucket=30)
+    capped = _subbucketed(withb, "vec", dim, r, max_bucket=30)
     sizes = {
         r2["__bucket"]: r2["count"]
         for r2 in capped.groupBy("__bucket").count().collect()

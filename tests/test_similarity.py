@@ -52,7 +52,7 @@ def test_ivf_topk_recall(spark):
     ivf = [
         r["vec_id"]
         for r in S.ivf_topk(
-            df, "embedding", "vec_id", q, k=10, n_centroids=8, n_probe=4
+            df, "embedding", "vec_id", q, n_centroids=8, n_probe=4
         ).collect()
     ]
     # probing half the cells should recover most of the true top-10
@@ -109,7 +109,7 @@ def test_cosine_topk_pandas_matches_jvm(spark, sf_dir):
     query = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     base = emb.filter(F.col("vec_id") != 0)
     jvm = cosine_topk(base, "embedding", "vec_id", query, k=10).collect()
-    arrow = cosine_topk_pandas(base, "embedding", "vec_id", query, k=10).collect()
+    arrow = cosine_topk_pandas(base, "embedding", "vec_id", query).collect()
     assert [r["vec_id"] for r in jvm] == [r["vec_id"] for r in arrow]
     for a, b in zip(jvm, arrow):
         assert abs(a["cosine"] - b["cosine"]) <= 1e-6
@@ -119,8 +119,8 @@ def test_ivf_fixed_topk_deterministic_and_recall(spark, sf_dir):
     from bbcnews_scraper_nlp_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings", widen=True)
-    got = S.ivf_fixed_topk(emb, "embedding", "vec_id", query_id=0).collect()
-    again = S.ivf_fixed_topk(emb, "embedding", "vec_id", query_id=0).collect()
+    got = S.ivf_fixed_topk(emb, "embedding", "vec_id").collect()
+    again = S.ivf_fixed_topk(emb, "embedding", "vec_id").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in again]
     assert len(got) == 10
     # recall vs brute force: probing 3/16 cells must still find a
@@ -206,7 +206,7 @@ def test_pq_adc_exact_on_codebook_vectors(spark):
     ]
     df = spark.createDataFrame(base, "vec_id long, embedding array<double>")
     got = S.pq_adc_topk(
-        df, "embedding", "vec_id", query_id=0, m=2, dsub=2, ksub=4, k=6
+        df, "embedding", "vec_id", m=2, dsub=2, ksub=4, k=6
     ).collect()
     assert [r["vec_id"] for r in got][0] == 10  # the exact copy first
     d = {r["vec_id"]: r["adc_dist"] for r in got}
@@ -214,7 +214,7 @@ def test_pq_adc_exact_on_codebook_vectors(spark):
     # orthogonal unit vectors: squared L2 = 2
     assert d[1] == d[11] == d[2] == d[3] == 2.0
     again = S.pq_adc_topk(
-        df, "embedding", "vec_id", query_id=0, m=2, dsub=2, ksub=4, k=6
+        df, "embedding", "vec_id", m=2, dsub=2, ksub=4, k=6
     ).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in again]
 
@@ -225,7 +225,7 @@ def test_pq_adc_recall_on_synthetic(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings", widen=True)
     pq = {
         r["vec_id"]
-        for r in S.pq_adc_topk(emb, "embedding", "vec_id", query_id=0).collect()
+        for r in S.pq_adc_topk(emb, "embedding", "vec_id").collect()
     }
     # true L2 top-10 (same normalization-free metric ADC approximates)
     v0 = emb.filter(F.col("vec_id") == 0).first()["embedding"]
@@ -258,8 +258,8 @@ def test_ivfadc_deterministic_and_probed_recall(spark, sf_dir):
     from bbcnews_scraper_nlp_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings", widen=True)
-    got = S.ivfadc_topk(emb, "embedding", "vec_id", query_id=0).collect()
-    again = S.ivfadc_topk(emb, "embedding", "vec_id", query_id=0).collect()
+    got = S.ivfadc_topk(emb, "embedding", "vec_id").collect()
+    again = S.ivfadc_topk(emb, "embedding", "vec_id").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in again]
     assert len(got) == 10
     assert all(r["adc_dist"] >= 0 for r in got)

@@ -107,10 +107,7 @@ def test_bpe_ish_tokens(spark):
 
 def test_bucketed_join_is_exchange_free(spark, sf_dir):
     from bbcnews_scraper_nlp_spark.catalog import load_table
-    from bbcnews_scraper_nlp_spark.sources.stage_io import (
-        read_bucketed,
-        write_bucketed,
-    )
+    from bbcnews_scraper_nlp_spark.sources.stage_io import write_bucketed
 
     orders = load_table(spark, sf_dir, "orders")
     lineitem = load_table(spark, sf_dir, "lineitem")
@@ -122,8 +119,8 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
     try:
         # force a non-broadcast join so distribution requirements bite
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = read_bucketed(spark, "bkt_orders").join(
-            read_bucketed(spark, "bkt_lineitem"),
+        joined = spark.table("bkt_orders").join(
+            spark.table("bkt_lineitem"),
             F.col("o_orderkey") == F.col("l_orderkey"),
         )
         plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -140,10 +137,7 @@ def test_bucketed_join_is_exchange_free(spark, sf_dir):
 
 def test_partition_pruning_in_plan(spark, sf_dir, tmp_path):
     from bbcnews_scraper_nlp_spark.catalog import load_table
-    from bbcnews_scraper_nlp_spark.sources.stage_io import (
-        read_partitioned,
-        write_partitioned,
-    )
+    from bbcnews_scraper_nlp_spark.sources.stage_io import write_partitioned
 
     events = load_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
@@ -157,7 +151,7 @@ def test_partition_pruning_in_plan(spark, sf_dir, tmp_path):
     )
     assert len(days) == events.select("day").distinct().count()
 
-    back = read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     one_day = back.filter(F.col("day") == "2024-01-05")
     plan = one_day._jdf.queryExecution().executedPlan().toString()
     # the day predicate must be a planning-time PartitionFilter,
@@ -284,32 +278,6 @@ def test_compact_stage_reduces_file_count(spark, tmp_path):
     got = spark.read.parquet(src)
     assert got.count() == 10_000
     assert got.agg({"k": "sum"}).first()[0] == sum(range(10_000))
-
-
-def test_upsert_replace_last_writer_wins(spark, tmp_path):
-    import os
-
-    from bbcnews_scraper_nlp_spark.sources.stage_io import upsert_replace
-
-    root = str(tmp_path)
-    v1 = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-    )
-    upsert_replace(spark, v1, root, "t", "k")
-    v2 = spark.createDataFrame([(2, "B"), (4, "d")], "k long, v string")
-    upsert_replace(spark, v2, root, "t", "k")
-    got = {
-        r["k"]: r["v"]
-        for r in spark.read.parquet(os.path.join(root, "t")).collect()
-    }
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-    # idempotent re-run
-    upsert_replace(spark, v2, root, "t", "k")
-    again = {
-        r["k"]: r["v"]
-        for r in spark.read.parquet(os.path.join(root, "t")).collect()
-    }
-    assert again == got
 
 
 def test_read_stage_evolving_merges_drifted_schema(spark, tmp_path):

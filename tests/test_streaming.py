@@ -143,7 +143,7 @@ def test_dedup_within_watermark_drops_burst_dups(spark, tmp_path):
         spark.readStream.schema("event_id long, ts timestamp")
         .parquet(str(src) + "/*")
     )
-    out = dedup_within_watermark(stream, key="event_id", watermark="1 hour")
+    out = dedup_within_watermark(stream, key="event_id")
     name = f"wmdedup_{uuid.uuid4().hex[:8]}"
     q = (
         out.writeStream.outputMode("append")

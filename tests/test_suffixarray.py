@@ -148,13 +148,13 @@ def test_suffix_removal_equals_ngram_removal_on_testdata(spark, sf_dir):
     suffix = sorted(
         tuple(r)
         for r in remove_duplicated_spans(
-            docs, "doc_id", "text", span_len=16, min_count=2
+            docs, "doc_id", "text"
         ).collect()
     )
     ngram = sorted(
         tuple(r)
         for r in remove_dup_spans(
-            docs, "doc_id", "text", n=16, min_count=2
+            docs, "doc_id", "text", n=16
         ).collect()
     )
     assert suffix == ngram

@@ -288,10 +288,7 @@ def test_corpus_write_partitioned_by_split_roundtrip(spark, sf_dir, tmp_path):
 
     from bbcnews_scraper_nlp_spark.catalog import load_table
     from bbcnews_scraper_nlp_spark.plans.corpus import prepare_training_corpus
-    from bbcnews_scraper_nlp_spark.sources.stage_io import (
-        read_partitioned,
-        write_partitioned,
-    )
+    from bbcnews_scraper_nlp_spark.sources.stage_io import write_partitioned
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = prepare_training_corpus(docs)
@@ -302,7 +299,7 @@ def test_corpus_write_partitioned_by_split_roundtrip(spark, sf_dir, tmp_path):
         d for d in os.listdir(out) if d.startswith("split=")
     ) == ["split=test", "split=train", "split=val"]
 
-    back = read_partitioned(spark, out)
+    back = spark.read.parquet(out)
     train = back.filter(F.col("split") == "train")
     plan = train._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
@@ -426,7 +423,7 @@ def test_curriculum_order_band_monotone_and_deterministic(spark):
     df = spark.createDataFrame(
         [(i, float(100 - i)) for i in range(40)], "doc_id long, score double"
     )
-    out = curriculum_order(df, "score", "doc_id", n_bands=4, method="exact").collect()
+    out = curriculum_order(df, "score", "doc_id", method="exact").collect()
     assert len(out) == 40
     by_band: dict[int, list] = {}
     score = {i: float(100 - i) for i in range(40)}
@@ -447,7 +444,7 @@ def test_curriculum_order_band_monotone_and_deterministic(spark):
         r["doc_id"] for r in sorted(by_band[1], key=lambda r: r["band_pos"])
     ]
     assert ordered_ids != sorted(ordered_ids)  # not id order
-    again = curriculum_order(df, "score", "doc_id", n_bands=4, method="exact").collect()
+    again = curriculum_order(df, "score", "doc_id", method="exact").collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
@@ -466,9 +463,9 @@ def test_curriculum_order_approx_matches_exact_on_separated_bands(spark):
     df = spark.createDataFrame(rows, "doc_id long, score double")
     exact = {
         r["doc_id"]: r["band"]
-        for r in curriculum_order(df, "score", "doc_id", 4, method="exact").collect()
+        for r in curriculum_order(df, "score", "doc_id", method="exact").collect()
     }
-    approx_df = curriculum_order(df, "score", "doc_id", 4, method="approx")
+    approx_df = curriculum_order(df, "score", "doc_id", method="approx")
     approx = {r["doc_id"]: r["band"] for r in approx_df.collect()}
     assert approx == exact
     # the approx plan never runs an unpartitioned ntile window
@@ -477,7 +474,7 @@ def test_curriculum_order_approx_matches_exact_on_separated_bands(spark):
     # determinism across runs
     again = {
         r["doc_id"]: r["band"]
-        for r in curriculum_order(df, "score", "doc_id", 4).collect()
+        for r in curriculum_order(df, "score", "doc_id").collect()
     }
     assert again == approx
 

@@ -100,6 +100,10 @@ def test_merge_into_update_insert_delete(spark, tmp_path):
     got = {r["id"]: r["v"] for r in read_version(spark, root).collect()}
     assert got[3] == 300 and got[99] == 990 and got[0] == 0
     assert len(got) == 6
+    # idempotent re-run: the same upsert again leaves the same state
+    merge_into(spark, root, src, "id")
+    again = {r["id"]: r["v"] for r in read_version(spark, root).collect()}
+    assert again == got
 
     # update-only: matched key updated, unknown key NOT inserted
     src2 = spark.createDataFrame([(4, 400), (77, 770)], "id long, v long")
@@ -117,7 +121,7 @@ def test_merge_into_update_insert_delete(spark, tmp_path):
     assert 0 not in got and 99 not in got and len(got) == 4
 
     # every merge is a version: pre-merge states remain readable
-    assert table_versions(root) == [0, 1, 2, 3]
+    assert table_versions(root) == [0, 1, 2, 3, 4]
     assert read_version(spark, root, version=0).count() == 5
 
 

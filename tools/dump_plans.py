@@ -1,8 +1,9 @@
 """Dump .explain("formatted") for registry queries to files.
 
-    python tools/dump_plans.py <out_dir> <suffix> [sf_dir] <query> [query ...]
+    python tools/dump_plans.py <out_dir> <suffix> [sf_dir] [query ...]
 
-Writes <out_dir>/<query>_<suffix>.txt for each query, and its DuckDB
+With no query names it dumps every registry query. Writes
+<out_dir>/<query>_<suffix>.txt for each query, and its DuckDB
 oracle SQL as <out_dir>/<query>_<suffix>.sql (none for a query without
 an oracle). The numbers a process-global counter hands out are
 stripped (expression ids ``doc_id#12L`` -> ``doc_id#L``, ``plan_id=``,
@@ -50,6 +51,7 @@ def main() -> None:
         sf_dir, names = rest[0], rest[1:]
     else:
         sf_dir, names = "/root/testdata/sf0.1", rest
+    names = names or list(REGISTRY)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plans")
     for name in names:
